@@ -27,7 +27,7 @@ checks explicitly so a protocol bug cannot silently clobber on one impl
 and crash on the other. ``overwrite=True`` (ledger swap only) is
 ``os.replace`` locally — atomic — and delete-then-rename on Hadoop,
 which leaves a crash window with NO ledger file: the replay then
-re-runs every batch, which the name-scoped batch files make idempotent,
+re-runs the in-flight batch, which its batch manifest makes idempotent,
 so the window is safe (documented at the ledger).
 """
 

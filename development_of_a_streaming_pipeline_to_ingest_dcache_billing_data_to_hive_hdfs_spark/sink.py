@@ -13,11 +13,27 @@ Reference parity: the four INSERT-INTO-partitioned-table sinks
   earlier inserts. Here two layers close the gap: a committed-batch
   ledger skips whole replayed batch ids, and every data file a batch
   writes carries the batch id in its NAME (stage → promote-with-rename,
-  ``write_partitioned_batch``), so a replay of a half-written batch
-  first deletes exactly that batch's files and then rewrites them —
-  duplicates cannot survive any crash point. This is the
-  FileOutputCommitter-v1 shape: data lands in a hidden staging dir,
-  promotion is per-file rename (a metadata op on HDFS-like stores).
+  ``write_partitioned_batch``). Before the first promote rename the
+  batch records its intent — the relative paths of the files it will
+  promote — in ``<table>/_batch_manifests/<id>.json``, so a replay of a
+  half-written batch first deletes exactly the files its manifest lists
+  and then rewrites them — duplicates cannot survive any crash point.
+  This is the FileOutputCommitter-v1 shape: data lands in a hidden
+  staging dir, promotion is per-file rename (a metadata op on HDFS-like
+  stores).
+
+Every crash point is covered (the full matrix is at
+``write_partitioned_batch``): before the manifest nothing is visible;
+after it, a replay deletes the listed files, then the manifest — last,
+so a crash mid-undo re-runs it. The caller retires the manifest after
+its ledger commit; a crash in between leaves a stale manifest of a
+committed batch, which the ledger makes harmless and the maintenance
+sweep (``warehouse.remove_orphan_batches``) deletes. The undo costs one
+manifest read plus one delete per file of the batch — flat in table
+history. A table with no ``_batch_manifests/`` dir was written before
+manifests existed and may hold a crashed batch's files with no manifest
+behind them: its first write runs the full-scan ``cleanup_batch_files``
+once, then creates the dir.
 
 All file operations route through the ``fs`` abstraction (fs.py), so
 the exactly-once protocol runs unchanged against bare local paths AND
@@ -49,9 +65,11 @@ class BatchLedger:
     The ledger is tiny (one int per committed batch), read once per
     batch, written via create-temp + rename. On HDFS-like stores the
     overwrite rename is delete-then-rename — a crash in that window
-    leaves NO ledger, which replays every batch; the name-scoped batch
-    files (write_partitioned_batch) make that replay duplicate-free, so
-    the window is safe.
+    leaves NO ledger, so nothing is skipped; the stream re-delivers the
+    batch whose commit was in flight, and that batch's manifest is
+    retired only after the commit (write_partitioned_batch), so its
+    replay undoes the earlier attempt and stays duplicate-free — the
+    window is safe.
     """
 
     def __init__(self, path: str, fs=None):
@@ -83,8 +101,23 @@ def write_partitioned(df: DataFrame, path: str, mode: str = "append") -> None:
     df.write.mode(mode).partitionBy(PARTITION_FIELD).parquet(path)
 
 
+MANIFEST_DIR = "_batch_manifests"
+
+
 def _batch_prefix(batch_id: int) -> str:
     return f"batch{batch_id}-"
+
+
+def batch_staging_dir(path: str, batch_id: int) -> str:
+    """The hidden dir a batch's output lands in before promotion."""
+    return os.path.join(path, f"._batch_staging_{batch_id}")
+
+
+def batch_manifest_path(path: str, batch_id: int) -> str:
+    """Where ``write_partitioned_batch`` records the files a batch
+    promotes into the table at ``path`` (a JSON list of paths relative
+    to the table). The ``_`` dir prefix keeps it out of Spark's reads."""
+    return os.path.join(path, MANIFEST_DIR, f"{batch_id}.json")
 
 
 def cleanup_batch_files(path: str, batch_id: int, fs=None) -> int:
@@ -92,9 +125,11 @@ def cleanup_batch_files(path: str, batch_id: int, fs=None) -> int:
     promoted into the table, plus any leftover staging dir. Returns the
     number of files removed. File membership is name-based — the batch
     id is embedded in every promoted file's name — so no data needs to
-    be read."""
+    be read, but every partition dir of the table is listed: the cost
+    grows with table history. ``write_partitioned_batch`` runs it only
+    once per table, for tables written before batch manifests existed."""
     fs = fs or get_filesystem(path)
-    staging = os.path.join(path, f"._batch_staging_{batch_id}")
+    staging = batch_staging_dir(path, batch_id)
     if fs.is_dir(staging):
         fs.delete(staging, recursive=True)
     removed = 0
@@ -112,6 +147,38 @@ def cleanup_batch_files(path: str, batch_id: int, fs=None) -> int:
     return removed
 
 
+def _undo_batch(path: str, batch_id: int, fs) -> None:
+    """Remove whatever an earlier attempt of this batch left in the
+    table: its staging dir and the files its manifest lists. The
+    manifest goes last, so a crash mid-undo leaves it for the next
+    replay to finish the job."""
+    manifests = os.path.join(path, MANIFEST_DIR)
+    if not fs.is_dir(manifests):
+        # written before manifests existed (or never written): one full
+        # scan catches a crashed attempt's unlisted files, and the dir
+        # then marks every later write as manifest-covered
+        cleanup_batch_files(path, batch_id, fs=fs)
+        fs.mkdirs(manifests)
+        return
+    fs.delete(batch_staging_dir(path, batch_id), recursive=True)
+    manifest = batch_manifest_path(path, batch_id)
+    try:
+        listed = json.loads(fs.read_text(manifest))
+    except FileNotFoundError:
+        return
+    for rel in listed:
+        fs.delete(os.path.join(path, rel))
+    fs.delete(manifest)
+
+
+def retire_batch_manifest(path: str, batch_id: int, fs=None) -> None:
+    """Drop a batch's manifest once the caller's ledger has committed
+    the batch — a committed batch is never replayed, so its manifest
+    has no further use. Missing is fine (an empty batch writes none)."""
+    fs = fs or get_filesystem(path)
+    fs.delete(batch_manifest_path(path, batch_id))
+
+
 def write_partitioned_batch(
     df: DataFrame,
     path: str,
@@ -120,33 +187,50 @@ def write_partitioned_batch(
     partition_field: str = PARTITION_FIELD,
 ) -> None:
     """Idempotent micro-batch append: stage the batch's output under a
-    hidden per-batch dir, then promote each data file into its partition
-    dir under a batch-scoped NAME (``batch<id>-<part-file>``), after
-    removing anything an earlier crashed attempt of the same batch
-    already promoted.
+    hidden per-batch dir, record the files about to be promoted in the
+    batch's manifest, then promote each data file into its partition
+    dir under a batch-scoped NAME (``batch<id>-<part-file>``). Anything
+    an earlier crashed attempt of the same batch left behind is undone
+    first, from that attempt's manifest.
 
     Crash matrix: during staging → nothing visible (hidden dir), replay
-    cleans and rewrites; during promotion → some files visible, replay
-    deletes exactly this batch's files (name match) and re-promotes;
-    after promotion but before the caller's ledger commit → replay
-    rewrites byte-identical content (same checkpointed offset range).
+    deletes the staging dir and rewrites; after the manifest write,
+    before or during promotion → some listed files visible, replay
+    deletes exactly the listed files, then the manifest, and
+    re-promotes; mid-undo → the manifest is still there (deleted last),
+    the next replay repeats the undo; after promotion but before the
+    caller's ledger commit → replay rewrites byte-identical content
+    (same checkpointed offset range). The caller retires the manifest
+    (``retire_batch_manifest``) after its ledger commit; a crash in
+    between leaves a stale manifest the ledger makes harmless.
+
+    FS cost per call is O(files this batch writes): no listing of the
+    table's partitions, except once for a table that has no
+    ``_batch_manifests/`` dir yet (written before manifests existed),
+    whose first write runs the full-scan ``cleanup_batch_files``.
     Promotion is one rename per file — a metadata operation on
     HDFS-like stores, the same pattern FileOutputCommitter v1 uses."""
     fs = fs or get_filesystem(path, df.sparkSession)
-    cleanup_batch_files(path, batch_id, fs=fs)
-    staging = os.path.join(path, f"._batch_staging_{batch_id}")
+    _undo_batch(path, batch_id, fs)
+    staging = batch_staging_dir(path, batch_id)
     df.write.mode("overwrite").partitionBy(partition_field).parquet(staging)
     prefix = _batch_prefix(batch_id)
-    for d, d_is_dir in fs.list_entries(staging):
-        if not d_is_dir:
-            continue  # _SUCCESS and friends
-        sdir = os.path.join(staging, d)
-        dest = os.path.join(path, d)
-        fs.mkdirs(dest)
-        for f, f_is_dir in fs.list_entries(sdir):
-            if f_is_dir or f.startswith(("_", ".")):
-                continue
-            fs.rename(os.path.join(sdir, f), os.path.join(dest, prefix + f))
+    staged = [
+        (d, f)
+        for d, d_is_dir in fs.list_entries(staging)
+        if d_is_dir  # skips _SUCCESS and friends
+        for f, f_is_dir in fs.list_entries(os.path.join(staging, d))
+        if not f_is_dir and not f.startswith(("_", "."))
+    ]
+    if staged:
+        fs.write_text_atomic(
+            batch_manifest_path(path, batch_id),
+            json.dumps([os.path.join(d, prefix + f) for d, f in staged]),
+        )
+    for d in dict.fromkeys(d for d, _f in staged):
+        fs.mkdirs(os.path.join(path, d))
+    for d, f in staged:
+        fs.rename(os.path.join(staging, d, f), os.path.join(path, d, prefix + f))
     fs.delete(staging, recursive=True)
 
 

@@ -13,7 +13,9 @@ Each micro-batch:
    this same batch id committed (see the crash matrix below);
 3. idempotent partitioned APPEND of the surviving documents
    (batch-named files, partitioned by ``partition_field``);
-4. fingerprint COMMIT (batch-tagged) and ledger commit.
+4. fingerprint COMMIT (batch-tagged), ledger commit, then the append's
+   batch manifest is retired (a crash before that leaves a stale
+   manifest the ledger makes harmless).
 
 Crash matrix — the ordering is load-bearing:
 - crash in/after the doc append, before the fp commit → replay cleans
@@ -50,7 +52,7 @@ from pyspark.sql import DataFrame
 
 from ..fs import get_filesystem
 from ..operators.dedup import BandBucketStore, FingerprintStore
-from ..sink import BatchLedger, write_partitioned_batch
+from ..sink import BatchLedger, retire_batch_manifest, write_partitioned_batch
 from .pipeline import drain_available_now
 
 
@@ -193,6 +195,7 @@ class CorpusIngestPipeline:
                     batch_tag=tag,
                 )
             self.ledger.commit(batch_id)
+            retire_batch_manifest(self.docs_path(), batch_id, fs=self.fs)
         finally:
             kept.unpersist()
 

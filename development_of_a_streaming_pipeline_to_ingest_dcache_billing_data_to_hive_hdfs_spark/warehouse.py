@@ -283,6 +283,45 @@ def warehouse_summary(spark: SparkSession, warehouse_dir: str) -> dict:
     return out
 
 
+def _scan_orphan_batches(warehouse_dir: str, fs):
+    """One listing per table: yields ``(table, table dir, committed ids,
+    {uncommitted batch id: [file paths]})`` for every table dir of the
+    warehouse."""
+    import os as _os
+    import re as _re
+
+    from .sink import BatchLedger
+
+    wh_committed = BatchLedger(
+        _os.path.join(warehouse_dir, "_ledger.json"), fs=fs
+    ).committed()
+    for table, is_dir in fs.list_entries(warehouse_dir):
+        if not is_dir or table.startswith(("_", ".")):
+            continue
+        tdir = _os.path.join(warehouse_dir, table)
+        committed = set(wh_committed)
+        local_ledger = _os.path.join(tdir, "_ledger.json")
+        if fs.exists(local_ledger):
+            committed |= BatchLedger(local_ledger, fs=fs).committed()
+        # walk promoted locations only (partition dirs) — a recursive
+        # listing would also surface files inside hidden staging dirs,
+        # which belong to a batch mid-write, not to an orphan
+        orphans: dict[int, list[str]] = {}
+        for d, d_is_dir in fs.list_entries(tdir):
+            if not d_is_dir or d.startswith(("_", ".")):
+                continue
+            pdir = _os.path.join(tdir, d)
+            for f, f_is_dir in fs.list_entries(pdir):
+                if f_is_dir:
+                    continue
+                m = _re.match(r"batch(\d+)-", f)
+                if m and int(m.group(1)) not in committed:
+                    orphans.setdefault(int(m.group(1)), []).append(
+                        _os.path.join(pdir, f)
+                    )
+        yield table, tdir, committed, orphans
+
+
 def audit_orphan_batches(warehouse_dir: str, fs=None) -> dict[str, dict[int, int]]:
     """Find data files whose embedded batch id was never committed to
     the ledger — the residue of a crashed micro-batch whose stream was
@@ -297,42 +336,16 @@ def audit_orphan_batches(warehouse_dir: str, fs=None) -> dict[str, dict[int, int
     its own), matching read-path precedence. Files without a batch
     prefix (compaction rewrites) are never flagged — compaction
     deliberately collapses batch history."""
-    import os as _os
-    import re as _re
-
     from .fs import get_filesystem
-    from .sink import BatchLedger
 
     fs = fs or get_filesystem(warehouse_dir)
-    wh_committed = BatchLedger(
-        _os.path.join(warehouse_dir, "_ledger.json"), fs=fs
-    ).committed()
-    out: dict[str, dict[int, int]] = {}
-    for table, is_dir in fs.list_entries(warehouse_dir):
-        if not is_dir or table.startswith(("_", ".")):
-            continue
-        tdir = _os.path.join(warehouse_dir, table)
-        committed = set(wh_committed)
-        local_ledger = _os.path.join(tdir, "_ledger.json")
-        if fs.exists(local_ledger):
-            committed |= BatchLedger(local_ledger, fs=fs).committed()
-        # walk promoted locations only (partition dirs) — a recursive
-        # listing would also surface files inside hidden staging dirs,
-        # which belong to a batch mid-write, not to an orphan
-        orphans: dict[int, int] = {}
-        for d, d_is_dir in fs.list_entries(tdir):
-            if not d_is_dir or d.startswith(("_", ".")):
-                continue
-            for f, f_is_dir in fs.list_entries(_os.path.join(tdir, d)):
-                if f_is_dir:
-                    continue
-                m = _re.match(r"batch(\d+)-", f)
-                if m and int(m.group(1)) not in committed:
-                    bid = int(m.group(1))
-                    orphans[bid] = orphans.get(bid, 0) + 1
-        if orphans:
-            out[table] = dict(sorted(orphans.items()))
-    return out
+    return {
+        table: {bid: len(files) for bid, files in sorted(orphans.items())}
+        for table, _tdir, _committed, orphans in _scan_orphan_batches(
+            warehouse_dir, fs
+        )
+        if orphans
+    }
 
 
 def remove_orphan_batches(
@@ -343,25 +356,37 @@ def remove_orphan_batches(
     The numerically-LARGEST uncommitted id per table is skipped unless
     ``include_latest=True``: without the shared maintenance lock it may
     be a batch mid-write right now; under the lock (ingest serialized)
-    pass True to clean everything."""
+    pass True to clean everything.
+
+    Deletes from the audit's own listing (one pass over each table, not
+    one per orphan id). The same sweep deletes batch manifests
+    (``sink.batch_manifest_path``) of committed ids — stale ones a
+    crash between a ledger commit and the manifest's retirement left —
+    and those of the orphan ids it removed."""
     import os as _os
+    import re as _re
 
     from .fs import get_filesystem
-    from .sink import cleanup_batch_files
+    from .sink import MANIFEST_DIR, batch_manifest_path, batch_staging_dir
 
     fs = fs or get_filesystem(warehouse_dir)
-    audit = audit_orphan_batches(warehouse_dir, fs=fs)
     removed: dict[str, dict[int, int]] = {}
-    for table, batches in audit.items():
-        ids = sorted(batches)
+    for table, tdir, committed, orphans in _scan_orphan_batches(
+        warehouse_dir, fs
+    ):
+        ids = sorted(orphans)
         if not include_latest:
             ids = ids[:-1]
         for bid in ids:
-            n = cleanup_batch_files(
-                _os.path.join(warehouse_dir, table), bid, fs=fs
-            )
-            if n:
-                removed.setdefault(table, {})[bid] = n
+            for f in orphans[bid]:
+                fs.delete(f)
+            fs.delete(batch_staging_dir(tdir, bid), recursive=True)
+            removed.setdefault(table, {})[bid] = len(orphans[bid])
+        retire = committed | set(ids)
+        for name, is_dir in fs.list_entries(_os.path.join(tdir, MANIFEST_DIR)):
+            m = _re.fullmatch(r"(\d+)\.json", name)
+            if not is_dir and m and int(m.group(1)) in retire:
+                fs.delete(batch_manifest_path(tdir, int(m.group(1))))
     return removed
 
 

@@ -7,12 +7,16 @@ skip, and the real readStream path."""
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
 
 from development_of_a_streaming_pipeline_to_ingest_dcache_billing_data_to_hive_hdfs_spark.operators.textops import (
     token_count_col,
+)
+from development_of_a_streaming_pipeline_to_ingest_dcache_billing_data_to_hive_hdfs_spark.sink import (
+    batch_manifest_path,
 )
 from development_of_a_streaming_pipeline_to_ingest_dcache_billing_data_to_hive_hdfs_spark.streaming.corpus import (
     CorpusIngestPipeline,
@@ -88,10 +92,14 @@ def test_corpus_crash_after_fp_commit_replays_without_losing_docs(
         monkeypatch.setattr(pipe.ledger, "commit", dying)
         with pytest.raises(RuntimeError, match="crash"):
             pipe.process_batch(b1, 1)
-        # fps of batch 1 ARE in the store; batch 1 is NOT committed
+        # fps of batch 1 ARE in the store; batch 1 is NOT committed, so
+        # its manifest is still there for the replay's undo
         assert not pipe.ledger.is_committed(1)
+        manifest = batch_manifest_path(pipe.docs_path(), 1)
+        assert os.path.exists(manifest)
         # replay converges: doc 2 present exactly once, dup doc 3 still out
         pipe.process_batch(b1, 1)
+        assert not os.path.exists(manifest)  # retired after the commit
         got = sorted(
             r.doc_id for r in spark.read.parquet(pipe.docs_path()).collect()
         )

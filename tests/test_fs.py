@@ -5,6 +5,7 @@ deployment takes, no cluster needed."""
 
 from __future__ import annotations
 
+import json
 import os
 
 import pytest
@@ -21,6 +22,7 @@ from development_of_a_streaming_pipeline_to_ingest_dcache_billing_data_to_hive_h
 )
 from development_of_a_streaming_pipeline_to_ingest_dcache_billing_data_to_hive_hdfs_spark.sink import (
     BatchLedger,
+    batch_manifest_path,
     write_partitioned_batch,
 )
 
@@ -158,3 +160,92 @@ def test_rename_refuses_existing_empty_dir_dst_on_both_impls(spark, tmp_path):
         # src intact, dst not silently replaced or nested into
         assert fs.read_text(os.path.join(src, "data.txt")) == "payload"
         assert dict(fs.list_entries(dst)) == {}
+
+
+class _Crash(RuntimeError):
+    pass
+
+
+class _CrashingFS:
+    """Delegates to ``inner``; after ``survive`` calls of ``op`` the next
+    one raises — the process dying right before that FS operation."""
+
+    def __init__(self, inner, op, survive):
+        self._inner, self._op, self._left = inner, op, survive
+
+    def __getattr__(self, name):
+        attr = getattr(self._inner, name)
+        if name != self._op:
+            return attr
+
+        def call(*args, **kwargs):
+            if self._left == 0:
+                raise _Crash(f"simulated crash before {name}{args}")
+            self._left -= 1
+            return attr(*args, **kwargs)
+
+        return call
+
+
+def _batch_files(fs, path, batch_id):
+    """Relative paths of the visible (promoted) files of one batch."""
+    prefix = f"batch{batch_id}-"
+    return sorted(
+        os.path.join(d, f)
+        for d, d_is_dir in fs.list_entries(path)
+        if d_is_dir and not d.startswith(("_", "."))
+        for f, f_is_dir in fs.list_entries(os.path.join(path, d))
+        if not f_is_dir and f.startswith(prefix)
+    )
+
+
+@pytest.mark.parametrize("case", ["a", "b", "c", "d"])
+@pytest.mark.parametrize("impl", ["local", "hadoop"])
+def test_manifest_crash_matrix(spark, tmp_path, impl, case):
+    """Crash points of the manifest protocol, on both FS impls; every
+    case replays to exactly one copy of the batch's rows.
+    (a) after the manifest write, before the first promote rename;
+    (b) after k of n promote renames;
+    (c) mid-undo of (b)'s residue, with some listed files already gone;
+    (d) after the ledger commit, before the manifest is retired: the
+        stale manifest leaves the next batch unaffected."""
+    fs, root = dict(zip(["local", "hadoop"], _impls(spark, tmp_path)))[impl]
+    path = os.path.join(root, "wh", "transfers")
+    manifest = batch_manifest_path(path, 0)
+    df = _events(spark).coalesce(1)  # one file per partition: n = 3
+
+    if case == "d":
+        write_partitioned_batch(df, path, batch_id=0, fs=fs)
+        BatchLedger(os.path.join(root, "wh", "_ledger.json"), fs=fs).commit(0)
+        # crash here: the manifest of committed batch 0 is never retired
+        write_partitioned_batch(df, path, batch_id=1, fs=fs)
+        assert fs.exists(manifest)
+        assert len(_batch_files(fs, path, 0)) == 3
+        assert len(_batch_files(fs, path, 1)) == 3
+        assert spark.read.parquet(path).count() == 80
+        return
+
+    renames_survived = {"a": 0, "b": 1, "c": 2}[case]
+    with pytest.raises(_Crash):
+        write_partitioned_batch(
+            df, path, batch_id=0, fs=_CrashingFS(fs, "rename", renames_survived)
+        )
+    listed = json.loads(fs.read_text(manifest))
+    assert len(listed) == 3
+    visible = _batch_files(fs, path, 0)
+    assert len(visible) == renames_survived and set(visible) <= set(listed)
+    if case == "c":
+        # the replay dies after deleting the staging dir and ONE listed
+        # file: one promoted file is still visible, one listed file
+        # was never promoted, and the manifest survives for the next try
+        with pytest.raises(_Crash):
+            write_partitioned_batch(
+                df, path, batch_id=0, fs=_CrashingFS(fs, "delete", 2)
+            )
+        assert len(_batch_files(fs, path, 0)) == 1
+        assert fs.exists(manifest)
+
+    write_partitioned_batch(df, path, batch_id=0, fs=fs)
+    assert spark.read.parquet(path).count() == 40
+    assert _batch_files(fs, path, 0) == sorted(json.loads(fs.read_text(manifest)))
+    assert not fs.exists(os.path.join(path, "._batch_staging_0"))

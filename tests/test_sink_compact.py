@@ -6,6 +6,10 @@ the reference's partition-list reuse bug `Dcache_kafka_to_hive.py:366-372`)."""
 from __future__ import annotations
 
 import os
+import shutil
+from collections import Counter
+
+from pyspark.sql import functions as F
 
 from development_of_a_streaming_pipeline_to_ingest_dcache_billing_data_to_hive_hdfs_spark.compact import (
     compact_table,
@@ -16,9 +20,13 @@ from development_of_a_streaming_pipeline_to_ingest_dcache_billing_data_to_hive_h
     parse_billing,
 )
 from development_of_a_streaming_pipeline_to_ingest_dcache_billing_data_to_hive_hdfs_spark.route import route
+from development_of_a_streaming_pipeline_to_ingest_dcache_billing_data_to_hive_hdfs_spark import sink as sink_mod
+from development_of_a_streaming_pipeline_to_ingest_dcache_billing_data_to_hive_hdfs_spark.fs import LocalFS
 from development_of_a_streaming_pipeline_to_ingest_dcache_billing_data_to_hive_hdfs_spark.sink import (
+    MANIFEST_DIR,
     BatchLedger,
     write_partitioned,
+    write_partitioned_batch,
 )
 
 from conftest import billing_record
@@ -42,6 +50,74 @@ def test_ledger_idempotence(tmp_path):
     assert not ledger.is_committed(1)
     # re-open: state survives
     assert BatchLedger(str(tmp_path / "ledger.json")).committed() == {0, 3}
+
+
+def _days(spark, n_days, start="2024-03-01"):
+    """One row per day over ``n_days`` day-partitions, one file each."""
+    return spark.range(n_days).select(
+        F.date_add(F.lit(start).cast("date"), F.col("id").cast("int"))
+        .cast("string")
+        .alias("partition_date"),
+        F.col("id").alias("v"),
+    ).coalesce(1)
+
+
+def test_upgrade_from_table_without_manifests(spark, tmp_path, monkeypatch):
+    """A table written before batch manifests existed (no
+    ``_batch_manifests/`` dir) holding promoted files of uncommitted
+    batch 5: the replay of batch 5 finds them by the one-time full scan,
+    leaves one copy, and creates the dir, so the next batch takes the
+    manifest path."""
+    path = str(tmp_path / "transfers")
+    ledger = BatchLedger(str(tmp_path / "_ledger.json"))
+    write_partitioned_batch(_days(spark, 3), path, batch_id=4)
+    ledger.commit(4)
+    write_partitioned_batch(_days(spark, 3), path, batch_id=5)  # crash: no commit
+    shutil.rmtree(os.path.join(path, MANIFEST_DIR))  # the pre-manifest layout
+
+    write_partitioned_batch(_days(spark, 3), path, batch_id=5)
+    assert spark.read.parquet(path).count() == 6
+    assert os.path.isdir(os.path.join(path, MANIFEST_DIR))
+
+    def no_full_scan(*args, **kwargs):
+        raise AssertionError("full-scan cleanup after the upgrade")
+
+    monkeypatch.setattr(sink_mod, "cleanup_batch_files", no_full_scan)
+    write_partitioned_batch(_days(spark, 3), path, batch_id=6)
+    write_partitioned_batch(_days(spark, 3), path, batch_id=6)  # replay
+    assert spark.read.parquet(path).count() == 9
+
+
+class _CountingFS:
+    """Delegates to ``inner`` and counts calls per FS method."""
+
+    def __init__(self, inner):
+        self._inner, self.calls = inner, Counter()
+
+    def __getattr__(self, name):
+        attr = getattr(self._inner, name)
+
+        def call(*args, **kwargs):
+            self.calls[name] += 1
+            return attr(*args, **kwargs)
+
+        return call
+
+
+def test_batch_commit_fs_calls_independent_of_table_history(spark, tmp_path):
+    """One ``write_partitioned_batch`` (and its replay) of the same frame
+    makes the same FS calls into a table with 5 day-partitions as into
+    one with 200: nothing lists the table's history."""
+    counts = []
+    for n_days in (5, 200):
+        path = str(tmp_path / f"t{n_days}")
+        write_partitioned_batch(_days(spark, n_days), path, batch_id=0)
+        fs = _CountingFS(LocalFS())
+        write_partitioned_batch(_days(spark, 3), path, batch_id=1, fs=fs)
+        write_partitioned_batch(_days(spark, 3), path, batch_id=1, fs=fs)
+        assert spark.read.parquet(path).count() == n_days + 3
+        counts.append(fs.calls)
+    assert counts[0] == counts[1]
 
 
 def test_partition_policy():

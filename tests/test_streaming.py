@@ -291,6 +291,46 @@ def test_crash_after_partial_route_writes_no_duplicates(spark, tmp_path, monkeyp
     assert spark.read.parquet(pipe.table_path("requests")).count() == 1
     assert spark.read.parquet(pipe.table_path("storage")).count() == 1
     assert spark.read.parquet(pipe.table_path("removes")).count() == 1
+
+
+def test_crash_before_manifest_retire_leaves_next_batch_unaffected(
+    spark, tmp_path, monkeypatch
+):
+    """Crash after the ledger commit, before the route manifests are
+    retired: the ledger skips the batch's replay, the stale manifest
+    stays harmless, and the next batch appends and retires its own."""
+    import os
+
+    import pytest as _pytest
+
+    from development_of_a_streaming_pipeline_to_ingest_dcache_billing_data_to_hive_hdfs_spark.sink import (
+        batch_manifest_path,
+    )
+    from development_of_a_streaming_pipeline_to_ingest_dcache_billing_data_to_hive_hdfs_spark.streaming import (
+        pipeline as pipeline_mod,
+    )
+
+    warehouse = str(tmp_path / "wh")
+    batch = spark.createDataFrame([(billing_record("transfer"),)], ["value"])
+    pipe = BillingPipeline(source=None, warehouse_dir=warehouse)
+    real_retire = pipeline_mod.retire_batch_manifest
+
+    def dying_retire(*args, **kwargs):
+        raise RuntimeError("simulated crash before manifest retire")
+
+    monkeypatch.setattr(pipeline_mod, "retire_batch_manifest", dying_retire)
+    with _pytest.raises(RuntimeError, match="simulated crash"):
+        pipe.process_batch(batch, 3)
+    assert pipe.ledger.is_committed(3)
+    stale = batch_manifest_path(pipe.table_path("transfers"), 3)
+    assert os.path.exists(stale)
+
+    monkeypatch.setattr(pipeline_mod, "retire_batch_manifest", real_retire)
+    pipe.process_batch(batch, 3)  # replay: skipped by the ledger
+    pipe.process_batch(batch, 4)
+    assert spark.read.parquet(pipe.table_path("transfers")).count() == 2
+    assert os.path.exists(stale)
+    assert not os.path.exists(batch_manifest_path(pipe.table_path("transfers"), 4))
     # third delivery is ledger-skipped outright
     pipe.process_batch(batch, 3)
     assert spark.read.parquet(pipe.table_path("transfers")).count() == 2

@@ -232,6 +232,38 @@ def test_orphan_batch_audit_and_cleanup(spark, tmp_path):
     assert spark.read.parquet(table).count() == 2
 
 
+def test_orphan_sweep_deletes_stale_manifests(spark, tmp_path):
+    """The sweep deletes the manifest of a committed batch (left by a
+    crash between the ledger commit and its retirement) and, with the
+    orphan files, the manifest of the orphan batch; the protected latest
+    uncommitted batch keeps its manifest and files."""
+    import os
+
+    from development_of_a_streaming_pipeline_to_ingest_dcache_billing_data_to_hive_hdfs_spark.sink import (
+        BatchLedger,
+        batch_manifest_path,
+        write_partitioned_batch,
+    )
+    from development_of_a_streaming_pipeline_to_ingest_dcache_billing_data_to_hive_hdfs_spark.warehouse import (
+        remove_orphan_batches,
+    )
+
+    wh = str(tmp_path / "wh")
+    table = os.path.join(wh, "transfers")
+    df = spark.createDataFrame([("2024-03-01", 1)], "partition_date string, v int")
+    for b in range(3):
+        write_partitioned_batch(df, table, batch_id=b)
+    BatchLedger(os.path.join(wh, "_ledger.json")).commit(0)  # never retired
+    manifests = [batch_manifest_path(table, b) for b in range(3)]
+    assert all(os.path.exists(m) for m in manifests)
+
+    assert remove_orphan_batches(wh) == {"transfers": {1: 1}}
+    assert [os.path.exists(m) for m in manifests] == [False, False, True]
+    assert remove_orphan_batches(wh, include_latest=True) == {"transfers": {2: 1}}
+    assert not any(os.path.exists(m) for m in manifests)
+    assert spark.read.parquet(table).count() == 1
+
+
 def test_orphan_audit_respects_table_local_ledger(spark, tmp_path):
     import os
 
