@@ -147,19 +147,24 @@ def cleanup_batch_files(path: str, batch_id: int, fs=None) -> int:
     return removed
 
 
-def _undo_batch(path: str, batch_id: int, fs) -> None:
-    """Remove whatever an earlier attempt of this batch left in the
-    table: its staging dir and the files its manifest lists. The
-    manifest goes last, so a crash mid-undo leaves it for the next
-    replay to finish the job."""
-    manifests = os.path.join(path, MANIFEST_DIR)
-    if not fs.is_dir(manifests):
-        # written before manifests existed (or never written): one full
-        # scan catches a crashed attempt's unlisted files, and the dir
-        # then marks every later write as manifest-covered
-        cleanup_batch_files(path, batch_id, fs=fs)
-        fs.mkdirs(manifests)
-        return
+def batch_manifest_ids(path: str, fs=None) -> set[int]:
+    """Ids of the batches that have a manifest in the table at
+    ``path`` (empty if the table has no manifest dir)."""
+    fs = fs or get_filesystem(path)
+    ids = set()
+    for name, is_dir in fs.list_entries(os.path.join(path, MANIFEST_DIR)):
+        m = re.fullmatch(r"(\d+)\.json", name)
+        if m and not is_dir:
+            ids.add(int(m.group(1)))
+    return ids
+
+
+def undo_batch_attempt(path: str, batch_id: int, fs=None) -> None:
+    """Remove whatever an uncommitted attempt of this batch left in the
+    table: its staging dir and the files its manifest lists (missing
+    ones are fine). The manifest goes last, so a crash mid-undo leaves
+    it for the next undo to finish the job."""
+    fs = fs or get_filesystem(path)
     fs.delete(batch_staging_dir(path, batch_id), recursive=True)
     manifest = batch_manifest_path(path, batch_id)
     try:
@@ -169,6 +174,18 @@ def _undo_batch(path: str, batch_id: int, fs) -> None:
     for rel in listed:
         fs.delete(os.path.join(path, rel))
     fs.delete(manifest)
+
+
+def _undo_batch(path: str, batch_id: int, fs) -> None:
+    manifests = os.path.join(path, MANIFEST_DIR)
+    if not fs.is_dir(manifests):
+        # written before manifests existed (or never written): one full
+        # scan catches a crashed attempt's unlisted files, and the dir
+        # then marks every later write as manifest-covered
+        cleanup_batch_files(path, batch_id, fs=fs)
+        fs.mkdirs(manifests)
+        return
+    undo_batch_attempt(path, batch_id, fs=fs)
 
 
 def retire_batch_manifest(path: str, batch_id: int, fs=None) -> None:

@@ -359,34 +359,38 @@ def remove_orphan_batches(
     pass True to clean everything.
 
     Deletes from the audit's own listing (one pass over each table, not
-    one per orphan id). The same sweep deletes batch manifests
-    (``sink.batch_manifest_path``) of committed ids — stale ones a
-    crash between a ledger commit and the manifest's retirement left —
-    and those of the orphan ids it removed."""
-    import os as _os
-    import re as _re
-
+    one per orphan id). Batch manifests (``sink.batch_manifest_ids``)
+    join the sweep: an uncommitted id with a manifest but no visible
+    files yet (a crash between the manifest write and the first promote
+    rename) counts as an orphan too, so it can be the protected latest
+    id, but it has no data file to count in the result; every removed id loses its staging dir, listed files and
+    manifest (``sink.undo_batch_attempt``). Manifests of committed ids
+    — stale ones a crash between a ledger commit and the manifest's
+    retirement left — are deleted. Not swept: a temp file a crash
+    inside the manifest's own atomic write left in ``_batch_manifests/``
+    (its name carries no usable batch id on every FS), and the staging
+    dir of a batch that crashed before writing its manifest and left no
+    promoted file."""
     from .fs import get_filesystem
-    from .sink import MANIFEST_DIR, batch_manifest_path, batch_staging_dir
+    from .sink import batch_manifest_ids, retire_batch_manifest, undo_batch_attempt
 
     fs = fs or get_filesystem(warehouse_dir)
     removed: dict[str, dict[int, int]] = {}
     for table, tdir, committed, orphans in _scan_orphan_batches(
         warehouse_dir, fs
     ):
-        ids = sorted(orphans)
+        manifested = batch_manifest_ids(tdir, fs)
+        ids = sorted(set(orphans) | (manifested - committed))
         if not include_latest:
             ids = ids[:-1]
         for bid in ids:
-            for f in orphans[bid]:
+            for f in orphans.get(bid, ()):
                 fs.delete(f)
-            fs.delete(batch_staging_dir(tdir, bid), recursive=True)
-            removed.setdefault(table, {})[bid] = len(orphans[bid])
-        retire = committed | set(ids)
-        for name, is_dir in fs.list_entries(_os.path.join(tdir, MANIFEST_DIR)):
-            m = _re.fullmatch(r"(\d+)\.json", name)
-            if not is_dir and m and int(m.group(1)) in retire:
-                fs.delete(batch_manifest_path(tdir, int(m.group(1))))
+            undo_batch_attempt(tdir, bid, fs=fs)
+            if bid in orphans:
+                removed.setdefault(table, {})[bid] = len(orphans[bid])
+        for bid in manifested & committed:
+            retire_batch_manifest(tdir, bid, fs=fs)
     return removed
 
 

@@ -291,6 +291,9 @@ def test_crash_after_partial_route_writes_no_duplicates(spark, tmp_path, monkeyp
     assert spark.read.parquet(pipe.table_path("requests")).count() == 1
     assert spark.read.parquet(pipe.table_path("storage")).count() == 1
     assert spark.read.parquet(pipe.table_path("removes")).count() == 1
+    # third delivery is ledger-skipped outright
+    pipe.process_batch(batch, 3)
+    assert spark.read.parquet(pipe.table_path("transfers")).count() == 2
 
 
 def test_crash_before_manifest_retire_leaves_next_batch_unaffected(
@@ -331,9 +334,6 @@ def test_crash_before_manifest_retire_leaves_next_batch_unaffected(
     assert spark.read.parquet(pipe.table_path("transfers")).count() == 2
     assert os.path.exists(stale)
     assert not os.path.exists(batch_manifest_path(pipe.table_path("transfers"), 4))
-    # third delivery is ledger-skipped outright
-    pipe.process_batch(batch, 3)
-    assert spark.read.parquet(pipe.table_path("transfers")).count() == 2
 
 
 def test_per_batch_metrics_written(spark, tmp_path):

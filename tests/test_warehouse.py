@@ -264,6 +264,55 @@ def test_orphan_sweep_deletes_stale_manifests(spark, tmp_path):
     assert spark.read.parquet(table).count() == 1
 
 
+def test_orphan_sweep_undoes_batches_crashed_before_first_promote(spark, tmp_path):
+    """A batch that crashed after writing its manifest but before its
+    first promote rename has no visible file, only a manifest and a
+    staging dir. The sweep treats it as an orphan: below the newest
+    uncommitted id it is undone, the newest one is kept until
+    ``include_latest``."""
+    import os
+
+    import pytest
+
+    from development_of_a_streaming_pipeline_to_ingest_dcache_billing_data_to_hive_hdfs_spark.fs import (
+        LocalFS,
+    )
+    from development_of_a_streaming_pipeline_to_ingest_dcache_billing_data_to_hive_hdfs_spark.sink import (
+        BatchLedger,
+        batch_manifest_path,
+        batch_staging_dir,
+        write_partitioned_batch,
+    )
+    from development_of_a_streaming_pipeline_to_ingest_dcache_billing_data_to_hive_hdfs_spark.warehouse import (
+        remove_orphan_batches,
+    )
+
+    class NoRenameFS(LocalFS):
+        def rename(self, *args, **kwargs):
+            raise RuntimeError("simulated crash before the first promote")
+
+    wh = str(tmp_path / "wh")
+    table = os.path.join(wh, "transfers")
+    df = spark.createDataFrame([("2024-03-01", 1)], "partition_date string, v int")
+    write_partitioned_batch(df, table, batch_id=0)
+    BatchLedger(os.path.join(wh, "_ledger.json")).commit(0)
+    for b in (1, 2):
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            write_partitioned_batch(df, table, batch_id=b, fs=NoRenameFS())
+    left = [
+        p
+        for b in (1, 2)
+        for p in (batch_manifest_path(table, b), batch_staging_dir(table, b))
+    ]
+    assert all(os.path.exists(p) for p in left)
+
+    assert remove_orphan_batches(wh) == {}  # no data files were visible
+    assert [os.path.exists(p) for p in left] == [False, False, True, True]
+    assert remove_orphan_batches(wh, include_latest=True) == {}
+    assert not any(os.path.exists(p) for p in left)
+    assert spark.read.parquet(table).count() == 1
+
+
 def test_orphan_audit_respects_table_local_ledger(spark, tmp_path):
     import os
 
