@@ -530,58 +530,53 @@ def _record_compacted_as_of(path: str, fs) -> int | None:
     must not make ``compacted_as_of()`` refuse snapshot/change-feed
     reads on a NEVER-compacted sibling whose batch-named files are
     fully intact and perfectly reconstructible. (A flat warehouse-scope
-    value — the pre-round-7 format — did exactly that.)"""
+    value — the pre-round-7 format — did exactly that.)
+
+    A ledger read error other than missing/unparsable propagates
+    (``sink.read_ledger``): skipping the marker on a transient store
+    error would leave it stale, the very hazard it exists to stop."""
     import json as _json
 
+    from .sink import resolve_table_ledger
+
+    found = resolve_table_ledger(path, fs)
+    if not found or not found[1]:
+        return None
+    base, committed = found
+    table_local = base == path.rstrip("/")
     table = os.path.basename(path.rstrip("/"))
-    for level, base in enumerate(
-        (path.rstrip("/"), os.path.dirname(path.rstrip("/")))
-    ):
-        ledger = os.path.join(base, "_ledger.json")
-        try:
-            committed = _json.loads(fs.read_text(ledger))
-        except Exception:  # noqa: BLE001 — no ledger at this level
-            continue
-        if not committed:
-            return None
-        marker = os.path.join(base, COMPACTED_AS_OF_FILE)
-        try:
-            doc = _json.loads(fs.read_text(marker))
-        except Exception:  # noqa: BLE001 — first compaction
-            doc = {}
-        if level == 0:
-            prev = int(doc.get("compacted_as_of", -1))
-        else:
-            prev = max(
-                int(
-                    doc.get("tables", {})
-                    .get(table, {})
-                    .get("compacted_as_of", -1)
-                ),
-                # legacy flat warehouse-scope value: fold it into this
-                # table's entry (it was recorded by compacting SOME
-                # table here, monotonicity must survive the migration)
-                int(doc.get("compacted_as_of", -1)),
-            )
-        val = max(prev, max(int(b) for b in committed))
-        stamp = {
-            "compacted_as_of": val,
-            "recorded_at": dt.datetime.now(dt.timezone.utc).isoformat(),
-        }
-        if level == 0:
-            doc = stamp
-        else:
-            # Keep any legacy flat warehouse-scope value IN PLACE: it
-            # was recorded by compacting SOME table here, so a sibling
-            # table compacted under the old format still needs it as
-            # its floor (the reader takes max(tables[t], flat)).
-            # Popping it would silently reset such siblings to -1 and
-            # let read_table_as_of serve rows from below their real
-            # compaction point.
-            doc.setdefault("tables", {})[table] = stamp
-        fs.write_text_atomic(marker, _json.dumps(doc, sort_keys=True))
-        return val
-    return None
+    marker = os.path.join(base, COMPACTED_AS_OF_FILE)
+    try:
+        doc = _json.loads(fs.read_text(marker))
+    except Exception:  # noqa: BLE001 — first compaction
+        doc = {}
+    if table_local:
+        prev = int(doc.get("compacted_as_of", -1))
+    else:
+        prev = max(
+            int(doc.get("tables", {}).get(table, {}).get("compacted_as_of", -1)),
+            # legacy flat warehouse-scope value: fold it into this
+            # table's entry (it was recorded by compacting SOME table
+            # here, monotonicity must survive the migration)
+            int(doc.get("compacted_as_of", -1)),
+        )
+    val = max(prev, max(int(b) for b in committed))
+    stamp = {
+        "compacted_as_of": val,
+        "recorded_at": dt.datetime.now(dt.timezone.utc).isoformat(),
+    }
+    if table_local:
+        doc = stamp
+    else:
+        # Keep any legacy flat warehouse-scope value IN PLACE: it was
+        # recorded by compacting SOME table here, so a sibling table
+        # compacted under the old format still needs it as its floor
+        # (the reader takes max(tables[t], flat)). Popping it would
+        # silently reset such siblings to -1 and let read_table_as_of
+        # serve rows from below their real compaction point.
+        doc.setdefault("tables", {})[table] = stamp
+    fs.write_text_atomic(marker, _json.dumps(doc, sort_keys=True))
+    return val
 
 
 def expire_snapshots(
@@ -619,13 +614,10 @@ def expire_snapshots(
     """
     import json as _json
 
+    from .sink import batch_metrics_files, ledger_path, read_ledger
+
     fs = fs or get_filesystem(warehouse)
-    try:
-        committed = sorted(
-            _json.loads(fs.read_text(os.path.join(warehouse, "_ledger.json")))
-        )
-    except Exception:
-        committed = []
+    committed = sorted(read_ledger(ledger_path(warehouse), fs) or ())
     if up_to_batch is None:
         if not committed:
             raise ValueError(
@@ -653,13 +645,9 @@ def expire_snapshots(
             f"it from {prev} to {horizon} (the expired metadata is gone)"
         )
     removed = 0
-    metrics_dir = os.path.join(warehouse, "_metrics")
-    import re as _re
-
-    for name, is_dir in fs.list_entries(metrics_dir):
-        m = _re.fullmatch(r"batch-(\d+)\.json", name)
-        if not is_dir and m and int(m.group(1)) < horizon:
-            fs.delete(os.path.join(metrics_dir, name))
+    for bid, metrics in batch_metrics_files(warehouse, fs).items():
+        if bid < horizon:
+            fs.delete(metrics)
             removed += 1
     fs.write_text_atomic(
         horizon_path,

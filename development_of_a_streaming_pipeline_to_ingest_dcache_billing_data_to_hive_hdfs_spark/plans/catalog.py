@@ -6363,7 +6363,7 @@ def q_billing_change_feed_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile as _tempfile
 
     from ..compact import compact_table
-    from ..sink import BatchLedger, write_partitioned_batch
+    from ..sink import BatchLedger, ledger_path, write_partitioned_batch
     from ..sources.tables import read_table_as_of, read_table_changes
 
     events = load_table(spark, sf_dir, "events").select(
@@ -6379,7 +6379,7 @@ def q_billing_change_feed_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the production shape: files promote, THEN the ledger commits —
         # the ledger is what lets compaction pin its _compacted_as_of
         # marker to the max committed batch
-        ledger = BatchLedger(f"{table}/_ledger.json")
+        ledger = BatchLedger(ledger_path(table))
         for b in range(3):
             write_partitioned_batch(
                 events.where(F.pmod("event_id", F.lit(3)) == b), table, b

@@ -35,6 +35,14 @@ manifests existed and may hold a crashed batch's files with no manifest
 behind them: its first write runs the full-scan ``cleanup_batch_files``
 once, then creates the dir.
 
+This module is the one owner of that on-disk layout: the ledger's name,
+format and two-level resolution (``read_ledger``,
+``resolve_table_ledger``), the ``batch<id>-`` file names and the walk
+that groups a table's files by them (``batch_files``,
+``batch_id_column``), the manifests, and the per-batch metrics files
+(``batch_metrics_files``). Readers elsewhere call these and keep only
+their own filters.
+
 All file operations route through the ``fs`` abstraction (fs.py), so
 the exactly-once protocol runs unchanged against bare local paths AND
 ``hdfs://``/``s3a://``/``file://`` URIs — the reference's actual
@@ -59,6 +67,42 @@ from .fs import get_filesystem
 from .schema import PARTITION_FIELD
 
 
+LEDGER_FILE = "_ledger.json"
+
+
+def ledger_path(base: str) -> str:
+    """The committed-batch ledger of the warehouse or table dir ``base``."""
+    return os.path.join(base, LEDGER_FILE)
+
+
+def read_ledger(path: str, fs) -> list[int] | None:
+    """Read the batch ids a ledger file lists, creating nothing.
+
+    Unlike ``BatchLedger``, no directory is made. None when there is no
+    usable ledger at ``path``: the file is missing or does not parse (a
+    torn write). Any other read error propagates — a transient store
+    error read as "no ledger" would silently skip whatever the caller
+    guards with it."""
+    try:
+        return json.loads(fs.read_text(path))
+    except (FileNotFoundError, json.JSONDecodeError):
+        return None
+
+
+def resolve_table_ledger(table_path: str, fs) -> tuple[str, list[int]] | None:
+    """Find the ledger that governs reads of a table.
+
+    That is the table's own ledger if it has one, else the
+    warehouse-level ledger one dir up that route tables share. Returns
+    ``(dir holding it, ids)``, or None when neither level has one."""
+    table = table_path.rstrip("/")
+    for base in (table, os.path.dirname(table)):
+        ids = read_ledger(ledger_path(base), fs)
+        if ids is not None:
+            return base, ids
+    return None
+
+
 class BatchLedger:
     """Crash-safe record of committed (sink, batch_id) pairs.
 
@@ -80,10 +124,7 @@ class BatchLedger:
             self.fs.mkdirs(parent)
 
     def committed(self) -> set[int]:
-        try:
-            return set(json.loads(self.fs.read_text(self.path)))
-        except (FileNotFoundError, json.JSONDecodeError):
-            return set()
+        return set(read_ledger(self.path, self.fs) or ())
 
     def commit(self, batch_id: int) -> None:
         ids = self.committed()
@@ -92,6 +133,29 @@ class BatchLedger:
 
     def is_committed(self, batch_id: int) -> bool:
         return batch_id in self.committed()
+
+
+METRICS_DIR = "_metrics"
+
+
+def batch_metrics_path(warehouse: str, batch_id: int) -> str:
+    """Where the ingest pipeline records a committed batch's metrics."""
+    return os.path.join(warehouse, METRICS_DIR, f"batch-{batch_id}.json")
+
+
+def batch_metrics_files(warehouse: str, fs) -> dict[int, str]:
+    """Map each batch id to its metrics file under ``warehouse``.
+
+    In listing order. Exact ``batch-<id>.json`` names only: a crashed
+    atomic write leaves ``batch-<id>.json.tmp`` beside them, which must
+    never be read as a batch."""
+    mdir = os.path.join(warehouse, METRICS_DIR)
+    out = {}
+    for name, is_dir in fs.list_entries(mdir):
+        m = re.fullmatch(r"batch-(\d+)\.json", name)
+        if m and not is_dir:
+            out[int(m.group(1))] = os.path.join(mdir, name)
+    return out
 
 
 def write_partitioned(df: DataFrame, path: str, mode: str = "append") -> None:
@@ -104,8 +168,51 @@ def write_partitioned(df: DataFrame, path: str, mode: str = "append") -> None:
 MANIFEST_DIR = "_batch_manifests"
 
 
-def _batch_prefix(batch_id: int) -> str:
+def _batch_prefix(batch_id) -> str:
     return f"batch{batch_id}-"
+
+
+# the batch id in a promoted file's name, and the Hadoop glob
+# (``pathGlobFilter``) that admits only batch-named files
+_BATCH_NAME = re.compile("^" + _batch_prefix(r"(\d+)"))
+BATCH_FILE_GLOB = _batch_prefix("*") + "*"
+
+
+def batch_id_column():
+    """The ``_batch_id`` column: each row's batch id, from its file name.
+
+    Parsed JVM-side from ``input_file_name()`` (one regexp per row in
+    the scan stage — no Python, no join)."""
+    return F.regexp_extract(
+        F.element_at(F.split(F.input_file_name(), "/"), -1),
+        _BATCH_NAME.pattern,
+        1,
+    ).cast("long")
+
+
+def batch_files(path: str, fs) -> tuple[dict[int, list[str]], list[str]]:
+    """Group a table's promoted data files by the batch id in their names.
+
+    One walk, returning ``({batch id: [file paths]}, [un-named file
+    paths])``. Only partition dirs are listed; ``_``/``.`` names
+    (staging dirs, manifests, compaction scratch) are skipped, as
+    Spark's reader skips them. The un-named files are compaction
+    rewrites, which carry no batch id."""
+    named: dict[int, list[str]] = {}
+    unnamed: list[str] = []
+    for d, d_is_dir in fs.list_entries(path):
+        if not d_is_dir or d.startswith(("_", ".")):
+            continue
+        pdir = os.path.join(path, d)
+        for f, f_is_dir in fs.list_entries(pdir):
+            if f_is_dir or f.startswith(("_", ".")):
+                continue
+            m = _BATCH_NAME.match(f)
+            if m is None:
+                unnamed.append(os.path.join(pdir, f))
+            else:
+                named.setdefault(int(m.group(1)), []).append(os.path.join(pdir, f))
+    return named, unnamed
 
 
 def batch_staging_dir(path: str, batch_id: int) -> str:
@@ -132,19 +239,12 @@ def cleanup_batch_files(path: str, batch_id: int, fs=None) -> int:
     staging = batch_staging_dir(path, batch_id)
     if fs.is_dir(staging):
         fs.delete(staging, recursive=True)
-    removed = 0
     if not fs.is_dir(path):
-        return removed
-    prefix = _batch_prefix(batch_id)
-    for d, d_is_dir in fs.list_entries(path):
-        if not d_is_dir or d.startswith(("_", ".")):
-            continue
-        pdir = os.path.join(path, d)
-        for f, f_is_dir in fs.list_entries(pdir):
-            if not f_is_dir and f.startswith(prefix):
-                fs.delete(os.path.join(pdir, f))
-                removed += 1
-    return removed
+        return 0
+    files = batch_files(path, fs)[0].get(batch_id, [])
+    for f in files:
+        fs.delete(f)
+    return len(files)
 
 
 def batch_manifest_ids(path: str, fs=None) -> set[int]:

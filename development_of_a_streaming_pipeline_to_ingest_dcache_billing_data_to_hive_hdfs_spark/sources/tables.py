@@ -120,9 +120,8 @@ def table_snapshots(path: str, fs=None) -> list[int]:
     content) that are still READABLE ``as_of`` points — ids below an
     operator-set snapshot horizon (compact.expire_snapshots) are
     excluded, because their history was collapsed by compaction."""
-    import json
-
     from ..fs import get_filesystem
+    from ..sink import resolve_table_ledger
 
     fs = fs or get_filesystem(path)
     # a re-compaction after expiry can advance the unreconstructible
@@ -130,18 +129,11 @@ def table_snapshots(path: str, fs=None) -> list[int]:
     # snapshots that are actually faithful
     horizon = max(snapshot_horizon(path, fs=fs), compacted_as_of(path, fs=fs))
     # route tables share the warehouse-level ledger one dir up; a
-    # table-local ledger (UpsertStreamWriter's) takes precedence
-    candidates = [
-        os.path.join(path, "_ledger.json"),
-        os.path.join(os.path.dirname(path.rstrip("/")), "_ledger.json"),
-    ]
-    for ledger in candidates:
-        try:
-            ids = sorted(json.loads(fs.read_text(ledger)))
-        except Exception:
-            continue
-        return [i for i in ids if i >= horizon]
-    return []
+    # ledger kept inside the table dir by its batch writer takes
+    # precedence (UpsertStreamWriter's _upsert_ledger.json is not a
+    # batch ledger here: merge_into output carries no batch names)
+    found = resolve_table_ledger(path, fs)
+    return [i for i in sorted(found[1]) if i >= horizon] if found else []
 
 
 def read_table_as_of(
@@ -176,9 +168,8 @@ def read_table_as_of(
     - no horizon recorded (H=0) but compacted files present — the
       legacy incidental case: loud failure, same ``allow_compacted``
       opt-in."""
-    import re
-
     from ..fs import get_filesystem
+    from ..sink import batch_files
 
     fs = fs or get_filesystem(path, spark)
     horizon = snapshot_horizon(path, fs=fs)
@@ -204,21 +195,8 @@ def read_table_as_of(
             "expire_snapshots after compacting to make this lifecycle "
             "explicit). Pass allow_compacted=True for a best-effort read."
         )
-    pat = re.compile(r"^batch(\d+)-")
-    keep: list[str] = []
-    compacted: list[str] = []
-    for d, d_is_dir in fs.list_entries(path):
-        if not d_is_dir or d.startswith(("_", ".")):
-            continue
-        pdir = os.path.join(path, d)
-        for f_name, f_is_dir in fs.list_entries(pdir):
-            if f_is_dir or f_name.startswith(("_", ".")):
-                continue
-            m = pat.match(f_name)
-            if m is None:
-                compacted.append(os.path.join(pdir, f_name))
-            elif int(m.group(1)) <= batch_id:
-                keep.append(os.path.join(pdir, f_name))
+    named, compacted = batch_files(path, fs)
+    keep = [f for b, files in named.items() if b <= batch_id for f in files]
     if compacted and not allow_compacted and horizon == 0 and cao < 0:
         raise ValueError(
             f"read_table_as_of: {len(compacted)} file(s) under {path} have "
@@ -261,6 +239,7 @@ def read_table_changes(
     naming it. At 100 TB the cost is one directory listing plus the
     parquet scan of exactly the increment's files."""
     from ..fs import get_filesystem
+    from ..sink import batch_files, batch_id_column
 
     fs = fs or get_filesystem(path, spark)
     horizon = snapshot_horizon(path, fs=fs)
@@ -293,23 +272,13 @@ def read_table_changes(
             "through it. Re-baseline the consumer with read_table_as_of "
             f"at batch {cao}, then stream changes from there."
         )
-    import re
-
-    pat = re.compile(r"^batch(\d+)-")
-    keep: list[str] = []
-    for d, d_is_dir in fs.list_entries(path):
-        if not d_is_dir or d.startswith(("_", ".")):
-            continue
-        pdir = os.path.join(path, d)
-        for f_name, f_is_dir in fs.list_entries(pdir):
-            if f_is_dir or f_name.startswith(("_", ".")):
-                continue
-            m = pat.match(f_name)
-            if m is None:
-                continue  # compacted = pre-horizon state, never an increment
-            b = int(m.group(1))
-            if b > since_batch and (until_batch is None or b <= until_batch):
-                keep.append(os.path.join(pdir, f_name))
+    # un-named (compacted) files are pre-horizon state, never an increment
+    keep = [
+        f
+        for b, files in batch_files(path, fs)[0].items()
+        if b > since_batch and (until_batch is None or b <= until_batch)
+        for f in files
+    ]
     if not keep:
         return (
             spark.read.parquet(path)
@@ -319,14 +288,7 @@ def read_table_changes(
     return (
         spark.read.option("basePath", path)
         .parquet(*keep)
-        .withColumn(
-            "_batch_id",
-            F.regexp_extract(
-                F.element_at(F.split(F.input_file_name(), "/"), -1),
-                r"^batch(\d+)-",
-                1,
-            ).cast("long"),
-        )
+        .withColumn("_batch_id", batch_id_column())
     )
 
 
@@ -338,8 +300,8 @@ def stream_table_changes(
 ) -> DataFrame:
     """Structured-Streaming change feed over a warehouse route table:
     a ``readStream`` whose file source sees ONLY the exactly-once
-    promoted batch files (``pathGlobFilter="batch*"``), plus the same
-    derived ``_batch_id`` column as ``read_table_changes``.
+    promoted batch files (``pathGlobFilter``, ``sink.BATCH_FILE_GLOB``),
+    plus the same derived ``_batch_id`` column as ``read_table_changes``.
 
     Downstream pipelines subscribe to a table the way the billing
     pipeline subscribes to Kafka — checkpointed progress, availableNow
@@ -353,23 +315,18 @@ def stream_table_changes(
     ``schema``: pass the route schema explicitly for a fully streaming
     plan; default infers it with a one-time batch read of the table.
     """
+    from ..sink import BATCH_FILE_GLOB, batch_id_column
+
     if schema is None:
         schema = spark.read.parquet(path).schema
     reader = (
         spark.readStream.schema(schema)
-        .option("pathGlobFilter", "batch*")
+        .option("pathGlobFilter", BATCH_FILE_GLOB)
         .option("basePath", path)
     )
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return reader.parquet(path).withColumn(
-        "_batch_id",
-        F.regexp_extract(
-            F.element_at(F.split(F.input_file_name(), "/"), -1),
-            r"^batch(\d+)-",
-            1,
-        ).cast("long"),
-    )
+    return reader.parquet(path).withColumn("_batch_id", batch_id_column())
 
 
 def register_views(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> None:

@@ -52,7 +52,12 @@ from pyspark.sql import DataFrame
 
 from ..fs import get_filesystem
 from ..operators.dedup import BandBucketStore, FingerprintStore
-from ..sink import BatchLedger, retire_batch_manifest, write_partitioned_batch
+from ..sink import (
+    BatchLedger,
+    ledger_path,
+    retire_batch_manifest,
+    write_partitioned_batch,
+)
 from .pipeline import drain_available_now
 
 
@@ -97,9 +102,7 @@ class CorpusIngestPipeline:
         self.gate = gate
         spark = source.sparkSession if source is not None else None
         self.fs = get_filesystem(corpus_dir, spark)
-        self.ledger = BatchLedger(
-            os.path.join(corpus_dir, "_ledger.json"), fs=self.fs
-        )
+        self.ledger = BatchLedger(ledger_path(corpus_dir), fs=self.fs)
         self._store_table = store_table
         self._store_buckets = store_buckets
         self._near_store_table = near_store_table

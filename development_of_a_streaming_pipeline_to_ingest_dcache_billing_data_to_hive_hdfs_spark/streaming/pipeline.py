@@ -42,7 +42,14 @@ from ..fs import get_filesystem
 from ..parse import parse_billing
 from ..route import route
 from ..schema import REJECTS_ROUTE
-from ..sink import BatchLedger, retire_batch_manifest, write_partitioned_batch
+from ..sink import (
+    BatchLedger,
+    batch_metrics_files,
+    batch_metrics_path,
+    ledger_path,
+    retire_batch_manifest,
+    write_partitioned_batch,
+)
 
 ROUTES = ("transfers", "requests", "storage", "removes", REJECTS_ROUTE)
 
@@ -109,9 +116,7 @@ class BillingPipeline:
         self.fs = get_filesystem(
             warehouse_dir, source.sparkSession if source is not None else None
         )
-        self.ledger = BatchLedger(
-            os.path.join(warehouse_dir, "_ledger.json"), fs=self.fs
-        )
+        self.ledger = BatchLedger(ledger_path(warehouse_dir), fs=self.fs)
 
     def table_path(self, name: str) -> str:
         return os.path.join(self.warehouse, name)
@@ -168,9 +173,6 @@ class BillingPipeline:
 
     # ---- per-batch metrics ------------------------------------------
 
-    def _metrics_dir(self) -> str:
-        return os.path.join(self.warehouse, "_metrics")
-
     def _write_metrics(self, batch_id: int, route_rows: dict[str, int]) -> None:
         """One JSON file per committed batch (atomic write; a replayed
         batch overwrites its own file, so metrics stay exactly-once with
@@ -182,29 +184,18 @@ class BillingPipeline:
             "total_rows": sum(route_rows.values()),
             "written_at": dt.datetime.now(dt.timezone.utc).isoformat(),
         }
-        self.fs.mkdirs(self._metrics_dir())
-        self.fs.write_text_atomic(
-            os.path.join(self._metrics_dir(), f"batch-{batch_id}.json"),
-            json.dumps(payload, sort_keys=True),
-        )
+        path = batch_metrics_path(self.warehouse, batch_id)
+        self.fs.mkdirs(os.path.dirname(path))
+        self.fs.write_text_atomic(path, json.dumps(payload, sort_keys=True))
 
     def metrics(self) -> list[dict]:
         """All committed batches' metrics, ordered by batch id — the
         feed-health surface (a dead feed shows zero-row batches here
         instead of silence)."""
-        import re as _re
-
-        out = []
-        for name, is_dir in self.fs.list_entries(self._metrics_dir()):
-            # exact batch-<n>.json only: a crashed atomic write leaves
-            # batch-<n>.json.tmp beside the real files
-            if is_dir or not _re.fullmatch(r"batch-\d+\.json", name):
-                continue
-            out.append(
-                json.loads(
-                    self.fs.read_text(os.path.join(self._metrics_dir(), name))
-                )
-            )
+        out = [
+            json.loads(self.fs.read_text(path))
+            for path in batch_metrics_files(self.warehouse, self.fs).values()
+        ]
         return sorted(out, key=lambda m: m["batch_id"])
 
     def run_available_now(self, checkpoint_dir: str) -> None:

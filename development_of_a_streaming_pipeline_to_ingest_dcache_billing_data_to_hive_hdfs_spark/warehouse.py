@@ -211,11 +211,10 @@ def warehouse_summary(spark: SparkSession, warehouse_dir: str) -> dict:
     to the summary."""
     import json as _json
     import os as _os
-    import re as _re
 
     from .compact import list_partitions, table_stats
     from .fs import get_filesystem
-    from .sink import BatchLedger
+    from .sink import batch_metrics_files, ledger_path, read_ledger
 
     fs = get_filesystem(warehouse_dir, spark)
     out: dict = {"tables": {}, "batches_committed": 0, "last_batch": None}
@@ -255,29 +254,18 @@ def warehouse_summary(spark: SparkSession, warehouse_dir: str) -> dict:
             "oldest_partition": dated[0] if dated else None,
             "newest_partition": dated[-1] if dated else None,
         }
-    # ledger via BatchLedger: same corrupt-file tolerance as the
-    # pipeline itself (a truncated ledger must not crash the health
-    # surface an operator reads while diagnosing a crash)
+    # same corrupt-file tolerance as the pipeline itself (a truncated
+    # ledger must not crash the health surface an operator reads while
+    # diagnosing a crash)
     out["batches_committed"] = len(
-        BatchLedger(
-            _os.path.join(warehouse_dir, "_ledger.json"), fs=fs
-        ).committed()
+        set(read_ledger(ledger_path(warehouse_dir), fs) or ())
     )
     # last batch by NUMERIC id — a lexicographic name sort reports
-    # batch-9 forever once batch-10 exists — and only exact
-    # batch-<n>.json names (a crashed atomic write leaves
-    # batch-<n>.json.tmp, which must not win)
-    mdir = _os.path.join(warehouse_dir, "_metrics")
-    ids = [
-        int(m.group(1))
-        for n, d in fs.list_entries(mdir)
-        if not d and (m := _re.fullmatch(r"batch-(\d+)\.json", n))
-    ]
-    if ids:
+    # batch-9 forever once batch-10 exists
+    metrics = batch_metrics_files(warehouse_dir, fs)
+    if metrics:
         try:
-            out["last_batch"] = _json.loads(
-                fs.read_text(_os.path.join(mdir, f"batch-{max(ids)}.json"))
-            )
+            out["last_batch"] = _json.loads(fs.read_text(metrics[max(metrics)]))
         except (FileNotFoundError, _json.JSONDecodeError):
             pass
     return out
@@ -288,37 +276,20 @@ def _scan_orphan_batches(warehouse_dir: str, fs):
     {uncommitted batch id: [file paths]})`` for every table dir of the
     warehouse."""
     import os as _os
-    import re as _re
 
-    from .sink import BatchLedger
+    from .sink import batch_files, ledger_path, read_ledger
 
-    wh_committed = BatchLedger(
-        _os.path.join(warehouse_dir, "_ledger.json"), fs=fs
-    ).committed()
+    wh_committed = set(read_ledger(ledger_path(warehouse_dir), fs) or ())
     for table, is_dir in fs.list_entries(warehouse_dir):
         if not is_dir or table.startswith(("_", ".")):
             continue
         tdir = _os.path.join(warehouse_dir, table)
-        committed = set(wh_committed)
-        local_ledger = _os.path.join(tdir, "_ledger.json")
-        if fs.exists(local_ledger):
-            committed |= BatchLedger(local_ledger, fs=fs).committed()
-        # walk promoted locations only (partition dirs) — a recursive
-        # listing would also surface files inside hidden staging dirs,
-        # which belong to a batch mid-write, not to an orphan
-        orphans: dict[int, list[str]] = {}
-        for d, d_is_dir in fs.list_entries(tdir):
-            if not d_is_dir or d.startswith(("_", ".")):
-                continue
-            pdir = _os.path.join(tdir, d)
-            for f, f_is_dir in fs.list_entries(pdir):
-                if f_is_dir:
-                    continue
-                m = _re.match(r"batch(\d+)-", f)
-                if m and int(m.group(1)) not in committed:
-                    orphans.setdefault(int(m.group(1)), []).append(
-                        _os.path.join(pdir, f)
-                    )
+        # the union of both levels, unlike the reads (see the audit)
+        committed = wh_committed | set(read_ledger(ledger_path(tdir), fs) or ())
+        # promoted locations only — files inside hidden staging dirs
+        # belong to a batch mid-write, not to an orphan
+        named = batch_files(tdir, fs)[0]
+        orphans = {b: files for b, files in named.items() if b not in committed}
         yield table, tdir, committed, orphans
 
 
@@ -331,11 +302,14 @@ def audit_orphan_batches(warehouse_dir: str, fs=None) -> dict[str, dict[int, int
 
     Returns {table: {batch_id: n_files}} for uncommitted ids. Pure FS
     metadata (name-scoped batch files + the tiny ledger) — no data
-    read at any scale. Committed ids come from the warehouse-level
-    ledger AND any table-local ledger (the streaming upsert sink keeps
-    its own), matching read-path precedence. Files without a batch
-    prefix (compaction rewrites) are never flagged — compaction
-    deliberately collapses batch history."""
+    read at any scale. Committed ids are the UNION of the
+    warehouse-level ledger and the table's own ledger, if it has one.
+    That is deliberately not the reads' rule (``sink.resolve_table_ledger``:
+    the table-local ledger first, else the warehouse one): this audit
+    feeds deletion, which cannot be undone, so a batch that EITHER
+    ledger records as committed is never flagged and never deleted.
+    Files without a batch prefix (compaction rewrites) are never
+    flagged — compaction deliberately collapses batch history."""
     from .fs import get_filesystem
 
     fs = fs or get_filesystem(warehouse_dir)

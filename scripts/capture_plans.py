@@ -1,15 +1,16 @@
 """Capture .explain("formatted") for every bench query into
-plans/r17/<query>_<tag>.txt — the optimization round's before/after
-plan evidence (r17 deliverable). Usage:
+plans/r<N>/<query>_<tag>.txt — an optimization round's before/after
+plan evidence. Usage:
 
-    python scripts/capture_plans_r17.py before [query ...]
-    python scripts/capture_plans_r17.py after  [query ...]
+    python scripts/capture_plans.py --round N before [query ...]
+    python scripts/capture_plans.py --round N after  [query ...]
 
 With no query names, captures the full BENCH_QUERIES set.
 """
 
 from __future__ import annotations
 
+import argparse
 import sys
 from pathlib import Path
 
@@ -23,9 +24,14 @@ from development_of_a_streaming_pipeline_to_ingest_dcache_billing_data_to_hive_h
 
 
 def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    names = sys.argv[2:] or BENCH_QUERIES
-    out_dir = REPO / "plans" / "r17"
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--round", type=int, required=True, metavar="N")
+    ap.add_argument("tag", nargs="?", default="before")
+    ap.add_argument("queries", nargs="*")
+    args = ap.parse_args()
+    tag = args.tag
+    names = args.queries or BENCH_QUERIES
+    out_dir = REPO / "plans" / f"r{args.round}"
     out_dir.mkdir(parents=True, exist_ok=True)
     spark = get_spark_session(
         app_name=f"plan-capture-{tag}", master="local[8]",

@@ -78,39 +78,46 @@ def sig(obj) -> str:
     return s if len(s) <= 100 else s[:97] + "...)"
 
 
-out = [
-    "# API reference\n",
-    "Generated by `python scripts/gen_api.py` — public functions and",
-    "classes per module, with the first line of each docstring. Full",
-    "semantics, scale notes, and reference-parity citations live in the",
-    "docstrings themselves.\n",
-]
-for title, mod_name in MODULES:
-    mod = importlib.import_module(mod_name)
-    rows = []
-    for name in sorted(vars(mod)):
-        if name.startswith("_"):
-            continue
-        obj = vars(mod)[name]
-        if getattr(obj, "__module__", None) != mod_name:
-            continue  # re-exports documented at their home module
-        if inspect.isfunction(obj):
-            rows.append(f"- `{name}{sig(obj)}` — {first_line(obj)}")
-        elif inspect.isclass(obj):
-            rows.append(f"- `class {name}` — {first_line(obj)}")
-            for m_name, m in sorted(vars(obj).items()):
-                if m_name.startswith("_") or not inspect.isfunction(m):
-                    continue
-                rows.append(f"  - `.{m_name}{sig(m)}` — {first_line(m)}")
-    if rows:
-        out.append(f"\n## {title} (`{mod_name.split(PKG + '.')[-1]}`)\n")
-        out.extend(rows)
+def render() -> str:
+    """The text of docs/API.md for the package as it is imported now."""
+    out = [
+        "# API reference\n",
+        "Generated by `python scripts/gen_api.py` — public functions and",
+        "classes per module, with the first line of each docstring. Full",
+        "semantics, scale notes, and reference-parity citations live in the",
+        "docstrings themselves.\n",
+    ]
+    for title, mod_name in MODULES:
+        mod = importlib.import_module(mod_name)
+        rows = []
+        for name in sorted(vars(mod)):
+            if name.startswith("_"):
+                continue
+            obj = vars(mod)[name]
+            if getattr(obj, "__module__", None) != mod_name:
+                continue  # re-exports documented at their home module
+            if inspect.isfunction(obj):
+                rows.append(f"- `{name}{sig(obj)}` — {first_line(obj)}")
+            elif inspect.isclass(obj):
+                rows.append(f"- `class {name}` — {first_line(obj)}")
+                for m_name, m in sorted(vars(obj).items()):
+                    if m_name.startswith("_") or not inspect.isfunction(m):
+                        continue
+                    rows.append(f"  - `.{m_name}{sig(m)}` — {first_line(m)}")
+        if rows:
+            out.append(f"\n## {title} (`{mod_name.split(PKG + '.')[-1]}`)\n")
+            out.extend(rows)
 
-out.append(
-    "\n## Query catalog (`plans.catalog`)\n\n"
-    "123+ named queries, each a `(Spark DataFrame fn, DuckDB oracle SQL)`"
-    " pair — enumerated in SURVEY.md §2 and exposed through"
-    " `__spark_entry__.queries()` / `oracle_sql()`.\n"
-)
-(Path(ROOT) / "docs" / "API.md").write_text("\n".join(out) + "\n")
-print("written docs/API.md,", sum(len(o) for o in out), "chars")
+    out.append(
+        "\n## Query catalog (`plans.catalog`)\n\n"
+        "123+ named queries, each a `(Spark DataFrame fn, DuckDB oracle SQL)`"
+        " pair — enumerated in SURVEY.md §2 and exposed through"
+        " `__spark_entry__.queries()` / `oracle_sql()`.\n"
+    )
+    return "\n".join(out) + "\n"
+
+
+if __name__ == "__main__":
+    text = render()
+    (ROOT / "docs" / "API.md").write_text(text)
+    print("written docs/API.md,", len(text), "chars")

@@ -190,6 +190,22 @@ def test_query_hashes_artifact_fresh():
     assert not orphans, f"QUERY_HASHES.json records dropped queries: {orphans}"
 
 
+def test_api_md_fresh():
+    """docs/API.md must be what scripts/gen_api.py renders for the live
+    package: red here means a public signature or docstring changed
+    without re-running the generator."""
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location(
+        "gen_api", REPO / "scripts" / "gen_api.py"
+    )
+    gen_api = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(gen_api)
+    assert (REPO / "docs" / "API.md").read_text() == gen_api.render(), (
+        "docs/API.md is stale — run python scripts/gen_api.py"
+    )
+
+
 def test_window_is_computed_and_contains_all_stale():
     """The window is derived from the artifacts (not hand-rotated): it
     must contain EVERY currently-stale query, with the stale set at the

@@ -9,9 +9,12 @@ import os
 import shutil
 from collections import Counter
 
+import pytest
 from pyspark.sql import functions as F
 
 from development_of_a_streaming_pipeline_to_ingest_dcache_billing_data_to_hive_hdfs_spark.compact import (
+    COMPACTED_AS_OF_FILE,
+    compact_partition,
     compact_table,
     list_partitions,
     resolve_partition_policy,
@@ -23,10 +26,15 @@ from development_of_a_streaming_pipeline_to_ingest_dcache_billing_data_to_hive_h
 from development_of_a_streaming_pipeline_to_ingest_dcache_billing_data_to_hive_hdfs_spark import sink as sink_mod
 from development_of_a_streaming_pipeline_to_ingest_dcache_billing_data_to_hive_hdfs_spark.fs import LocalFS
 from development_of_a_streaming_pipeline_to_ingest_dcache_billing_data_to_hive_hdfs_spark.sink import (
+    LEDGER_FILE,
     MANIFEST_DIR,
     BatchLedger,
+    ledger_path,
     write_partitioned,
     write_partitioned_batch,
+)
+from development_of_a_streaming_pipeline_to_ingest_dcache_billing_data_to_hive_hdfs_spark.sources.tables import (
+    compacted_as_of,
 )
 
 from conftest import billing_record
@@ -118,6 +126,30 @@ def test_batch_commit_fs_calls_independent_of_table_history(spark, tmp_path):
         assert spark.read.parquet(path).count() == n_days + 3
         counts.append(fs.calls)
     assert counts[0] == counts[1]
+
+
+def test_compaction_raises_on_ledger_read_error(spark, tmp_path):
+    """A ledger read error that is neither "missing" nor "unparsable" (an
+    ``OSError``, as a transient HDFS failure raises) fails the compaction
+    instead of silently skipping the ``_compacted_as_of`` marker — a
+    marker left stale would let ``read_table_as_of`` serve rows from
+    after the requested snapshot."""
+    wh = tmp_path / "wh"
+    path = str(wh / "transfers")
+    write_partitioned_batch(_days(spark, 1), path, batch_id=0)
+    BatchLedger(ledger_path(str(wh))).commit(0)
+
+    class FlakyLedgerFS(LocalFS):
+        def read_text(self, p):
+            if os.path.basename(p) == LEDGER_FILE:
+                raise OSError("transient ledger read error")
+            return super().read_text(p)
+
+    with pytest.raises(OSError, match="transient ledger read error"):
+        compact_partition(spark, path, "2024-03-01", fs=FlakyLedgerFS())
+    assert not (wh / COMPACTED_AS_OF_FILE).exists()
+    compact_partition(spark, path, "2024-03-01")  # healthy store
+    assert compacted_as_of(path) == 0
 
 
 def test_partition_policy():

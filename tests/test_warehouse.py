@@ -332,6 +332,37 @@ def test_orphan_audit_respects_table_local_ledger(spark, tmp_path):
     assert audit_orphan_batches(wh) == {}
 
 
+def test_two_ledgers_reads_take_table_local_audit_takes_union(spark, tmp_path):
+    """A table with its own ledger beside the warehouse-level one, the two
+    listing different ids: snapshot reads resolve the table-local ledger,
+    while the orphan audit, which feeds deletion, counts a batch
+    committed in either ledger as committed."""
+    import os
+
+    from development_of_a_streaming_pipeline_to_ingest_dcache_billing_data_to_hive_hdfs_spark.sink import (
+        BatchLedger,
+        ledger_path,
+        write_partitioned_batch,
+    )
+    from development_of_a_streaming_pipeline_to_ingest_dcache_billing_data_to_hive_hdfs_spark.sources.tables import (
+        table_snapshots,
+    )
+    from development_of_a_streaming_pipeline_to_ingest_dcache_billing_data_to_hive_hdfs_spark.warehouse import (
+        audit_orphan_batches,
+    )
+
+    wh = str(tmp_path / "wh")
+    table = os.path.join(wh, "cdc")
+    df = spark.createDataFrame([("2024-03-01", 1)], "partition_date string, v int")
+    for b in (1, 2, 3):
+        write_partitioned_batch(df, table, batch_id=b)
+    BatchLedger(ledger_path(table)).commit(1)  # table-local
+    BatchLedger(ledger_path(wh)).commit(2)  # warehouse-level
+    assert table_snapshots(table) == [1]
+    # neither committed set is flagged; the batch in no ledger is
+    assert audit_orphan_batches(wh) == {"cdc": {3: 1}}
+
+
 def test_compact_cli_clean_orphans_flag(spark, tmp_path):
     import os
 
