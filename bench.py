@@ -307,7 +307,9 @@ SCALE_PROBE_OPS = {
 }
 
 
-def bench_scale_probe(spark, sf_dir: str, factor: int = 10) -> dict:
+def bench_scale_probe(
+    spark, sf_dir: str, factor: int = 10, ops: dict[str, str] | None = None
+) -> dict:
     """Shuffle-GROWTH probe: run the heaviest operators at 1× and
     ``factor``× the corpus and record wall-time AND shuffled-byte
     ratios — the measured curve behind every "scales to 100 TB" claim
@@ -347,6 +349,9 @@ def bench_scale_probe(spark, sf_dir: str, factor: int = 10) -> dict:
     also folds in broadcast-build and subquery jobs; for purely lazy
     ops it matches the old plan-walk number (the probe session runs
     nothing else), so pre-r14 rows stay comparable.
+
+    ``ops`` maps each probed op to the table it scans; default
+    ``SCALE_PROBE_OPS``.
     """
     import shutil
     import tempfile
@@ -356,13 +361,14 @@ def bench_scale_probe(spark, sf_dir: str, factor: int = 10) -> dict:
     )
     from pyspark.sql import functions as F
 
+    ops = SCALE_PROBE_OPS if ops is None else ops
     tmp = tempfile.mkdtemp(prefix="bench_scale_")
     out: dict[str, dict] = {}
     try:
         dirs = {1: os.path.join(tmp, "x1"), factor: os.path.join(tmp, "x10")}
         for d in dirs.values():
             os.makedirs(d)
-        for table in sorted(set(SCALE_PROBE_OPS.values())):
+        for table in sorted(set(ops.values())):
             base = load_table(spark, sf_dir, table)
             id_col = {"documents": "doc_id", "embeddings": "vec_id",
                       "lineitem": "l_orderkey"}[table]
@@ -432,7 +438,7 @@ def bench_scale_probe(spark, sf_dir: str, factor: int = 10) -> dict:
             except Exception:  # noqa: BLE001 — internals moved
                 return -1
 
-        for op in SCALE_PROBE_OPS:
+        for op in ops:
             if op not in ALL_QUERIES:
                 continue
             row: dict[str, float] = {}

@@ -532,12 +532,13 @@ def _record_compacted_as_of(path: str, fs) -> int | None:
     fully intact and perfectly reconstructible. (A flat warehouse-scope
     value — the pre-round-7 format — did exactly that.)
 
-    A ledger read error other than missing/unparsable propagates
-    (``sink.read_ledger``): skipping the marker on a transient store
-    error would leave it stale, the very hazard it exists to stop."""
+    A ledger or marker read error other than missing/unparsable
+    propagates (``sink.read_ledger``): skipping the marker on a
+    transient store error would leave it stale, and reading the marker
+    as empty would rewrite it without the siblings' entries."""
     import json as _json
 
-    from .sink import resolve_table_ledger
+    from .sink import read_ledger, resolve_table_ledger
 
     found = resolve_table_ledger(path, fs)
     if not found or not found[1]:
@@ -546,10 +547,7 @@ def _record_compacted_as_of(path: str, fs) -> int | None:
     table_local = base == path.rstrip("/")
     table = os.path.basename(path.rstrip("/"))
     marker = os.path.join(base, COMPACTED_AS_OF_FILE)
-    try:
-        doc = _json.loads(fs.read_text(marker))
-    except Exception:  # noqa: BLE001 — first compaction
-        doc = {}
+    doc = read_ledger(marker, fs) or {}  # {} = first compaction
     if table_local:
         prev = int(doc.get("compacted_as_of", -1))
     else:
@@ -634,11 +632,8 @@ def expire_snapshots(
                 "the CURRENT table state"
             )
     horizon_path = os.path.join(warehouse, SNAPSHOT_HORIZON_FILE)
-    prev = 0
-    try:
-        prev = int(_json.loads(fs.read_text(horizon_path))["horizon"])
-    except Exception:
-        pass
+    prev_doc = read_ledger(horizon_path, fs)
+    prev = int(prev_doc["horizon"]) if prev_doc else 0
     if horizon < prev:
         raise ValueError(
             f"expire_snapshots: horizon is monotonic — refusing to lower "

@@ -8,10 +8,13 @@
   bucket the corpus; candidates come from an equi-join on bucket keys;
   exact cosine reranks within buckets. Recall tuned by tables × bits.
 
-Dot products run as JVM higher-order functions (zip_with + aggregate) —
-no Python in the row path. A Pandas-UDF/numpy variant is a drop-in when
-vector width × row count makes Arrow batching win; for 32-d test vectors
-the expression path wins.
+The brute-force dot products run as JVM higher-order functions
+(zip_with + aggregate) — no Python in the row path. The numpy operators
+(BLAS near-dup, IVF/PQ, k-means, blocked rerank, JL, prototypicality)
+run as ``mapInArrow``/``applyInArrow`` and cross one vector boundary:
+``_read_vectors`` turns an Arrow list column into a float64 matrix and
+``_write_vectors`` turns a matrix back into a list column. Those two
+helpers own the NULL/NaN policy; no operator converts vectors itself.
 """
 
 from __future__ import annotations
@@ -19,6 +22,8 @@ from __future__ import annotations
 import math
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -52,6 +57,62 @@ COSINE_EXPR = (
     "nullif(sqrt(aggregate({a}, 0D, (s, v) -> s + v * v)) * "
     " sqrt(aggregate({b}, 0D, (s, v) -> s + v * v)), 0.0D)"
 )
+
+
+_PAIRS_DDL = "id_a long, id_b long, cos double"
+_PAIRS_SCHEMA = pa.schema(
+    [("id_a", pa.int64()), ("id_b", pa.int64()), ("cos", pa.float64())]
+)
+
+
+def _read_vectors(
+    arr, dim: int | None = None, op: str | None = None, col: str | None = None
+) -> tuple[np.ndarray, np.ndarray]:
+    """Arrow list column (array or chunked) → ``(M, ok)``: the float64
+    ``(ok.sum() × dim)`` matrix of the valid rows, in row order, and the
+    per-row validity mask.
+
+    A row is invalid when its vector is NULL, has a length other than
+    ``dim`` (default: the first non-NULL vector's length) or holds a
+    NULL element. A NaN element is a value and stays one. With ``op``
+    set, any invalid row raises one ValueError naming ``op`` and
+    ``col``; without it the caller gets the mask (the NULL-in →
+    NULL-out operators). Elements widen to float64 exactly (float32,
+    int8), as ``np.asarray(v, dtype=float64)`` does; ``flatten``
+    honours slice offsets, which ``.values`` would not."""
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
+    lens = pc.list_value_length(arr)
+    if dim is None:
+        present = lens.drop_null()
+        dim = present[0].as_py() if len(present) else 0
+    ok = pc.fill_null(pc.equal(lens, dim), False).to_numpy(zero_copy_only=False)
+    flat = (arr if ok.all() else arr.filter(pa.array(ok))).flatten()
+    M = flat.to_numpy(zero_copy_only=False)
+    if flat.null_count:
+        holes = flat.is_null().to_numpy(zero_copy_only=False)
+        holes = holes.reshape(-1, dim).any(axis=1)
+        ok[np.flatnonzero(ok)[holes]] = False
+        M = M.reshape(-1, dim)[~holes]
+    n_ok = int(ok.sum())
+    if op is not None and n_ok < len(ok):
+        raise ValueError(
+            f"{op}: column {col!r} holds {len(ok) - n_ok} NULL, "
+            f"NULL-element or wrong-length vector(s) (expected length {dim})"
+        )
+    return M.astype(np.float64, copy=False).reshape(n_ok, dim), ok
+
+
+def _write_vectors(M: np.ndarray, ok: np.ndarray | None = None) -> pa.ListArray:
+    """Inverse of ``_read_vectors``: the rows of ``M`` as an Arrow list
+    column, NULL where ``ok`` is False (``M`` holds the valid rows only).
+    Values pass through as they are — a NaN stays a NaN, never a NULL."""
+    if ok is None:
+        ok = np.ones(len(M), dtype=bool)
+    offsets = np.r_[0, np.cumsum(np.where(ok, M.shape[1], 0))].astype(np.int32)
+    return pa.ListArray.from_arrays(
+        pa.array(offsets), pa.array(M.reshape(-1)), mask=pa.array(~ok)
+    )
 
 
 def cosine_topk_bruteforce(
@@ -108,7 +169,7 @@ def embedding_near_dup_pairs(
     - ``broadcast`` (exact; small/medium corpora): the corpus is
       L2-normalized, collected, and broadcast as a dense (n × d) index;
       each partition computes its block of the similarity matrix as one
-      BLAS matmul inside Arrow-batched mapInPandas. Exact, but the
+      BLAS matmul inside Arrow-batched mapInArrow. Exact, but the
       index must fit in driver+executor memory — this is the documented
       small-N fast path, NOT the 100 TB path.
     - ``blocked`` (approximate; the scale path): no collect anywhere —
@@ -161,31 +222,35 @@ def embedding_near_dup_pairs(
         )
     if strategy != "broadcast":
         raise ValueError(f"unknown strategy {strategy!r}: auto | broadcast | blocked")
-    import pandas as pd
-
-    pdf = df.select(F.col(id_col), F.col(vec_col)).toPandas()
-    ids = pdf[id_col].to_numpy()
-    index = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-    index /= np.maximum(np.linalg.norm(index, axis=1, keepdims=True), 1e-12)
+    what = "embedding_near_dup_pairs"
+    tbl = df.select(F.col(id_col), F.col(vec_col)).toArrow()
+    ids = tbl.column(id_col).to_numpy()
+    index, _ = _read_vectors(tbl.column(vec_col), op=what, col=vec_col)
+    index = index / np.maximum(np.linalg.norm(index, axis=1, keepdims=True), 1e-12)
     sc = df.sparkSession.sparkContext
     b_ids, b_index = sc.broadcast(ids), sc.broadcast(index)
 
     def op(batches):
-        for batch in batches:
-            if not len(batch):
+        for rb in batches:
+            if not rb.num_rows:
                 continue
-            ids_b = batch[id_col].to_numpy()
-            block = np.stack([np.asarray(v, dtype=np.float64) for v in batch[vec_col]])
-            block /= np.maximum(np.linalg.norm(block, axis=1, keepdims=True), 1e-12)
+            ids_b = rb.column(id_col).to_numpy()
+            block, _ = _read_vectors(
+                rb.column(vec_col), b_index.value.shape[1], op=what, col=vec_col
+            )
+            block = block / np.maximum(
+                np.linalg.norm(block, axis=1, keepdims=True), 1e-12
+            )
             sims = block @ b_index.value.T
             keep = (sims >= threshold) & (ids_b[:, None] < b_ids.value[None, :])
             r, c = np.nonzero(keep)
-            yield pd.DataFrame(
-                {"id_a": ids_b[r], "id_b": b_ids.value[c], "cos": sims[r, c]}
+            yield pa.RecordBatch.from_pydict(
+                {"id_a": ids_b[r], "id_b": b_ids.value[c], "cos": sims[r, c]},
+                schema=_PAIRS_SCHEMA,
             )
 
     scan = spread_partitions(df.select(F.col(id_col), F.col(vec_col)))
-    return scan.mapInPandas(op, "id_a long, id_b long, cos double")
+    return scan.mapInArrow(op, _PAIRS_DDL)
 
 
 def _near_dup_blocked(
@@ -203,7 +268,7 @@ def _near_dup_blocked(
     embedding_near_dup_pairs).
 
     The verify runs INSIDE each (table, signature) bucket as one small
-    matmul over the bucket's members (applyInPandas), so only
+    matmul over the bucket's members (applyInArrow), so only
     threshold-PASSING pairs ever leave a bucket. The alternative —
     expand all in-bucket candidate pairs, distinct, re-attach vectors
     by join, then verify — shuffles two d-dim float64 arrays per
@@ -222,8 +287,6 @@ def _near_dup_blocked(
     blocking varies with the subset); dropDuplicates keeps one
     arbitrarily — well inside the 1e-9 slack every consumer of ``cos``
     already allows for float associativity."""
-    import pandas as pd
-
     if dim is None:
         first = df.select(F.size(F.col(vec_col)).alias("d")).first()
         if first is None:
@@ -239,48 +302,59 @@ def _near_dup_blocked(
     weights = (1 << np.arange(n_bits)).astype(np.int64)
 
     def sig_op(batches):
-        for batch in batches:
-            n = len(batch)
+        for rb in batches:
+            n = rb.num_rows
             if not n:
                 continue
-            M = np.stack([np.asarray(v, dtype=np.float64) for v in batch[vec_col]])
+            M, _ = _read_vectors(
+                rb.column(vec_col), dim, op="embedding_near_dup_pairs", col=vec_col
+            )
             bits = (M @ b_planes.value.T > 0).astype(np.int64)
             sigs = (bits.reshape(n, n_tables, n_bits) * weights).sum(axis=2)
-            yield pd.DataFrame(
-                {
-                    "vid": batch[id_col].to_numpy().repeat(n_tables),
-                    "t": np.tile(np.arange(n_tables), n),
-                    "sig": sigs.ravel(),
-                    "vec": [v for v in batch[vec_col] for _ in range(n_tables)],
-                }
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(rb.column(id_col).to_numpy().repeat(n_tables), pa.int64()),
+                    pa.array(np.tile(np.arange(n_tables, dtype=np.int32), n)),
+                    pa.array(sigs.ravel()),
+                    _write_vectors(np.repeat(M, n_tables, axis=0)),
+                ],
+                names=["vid", "t", "sig", "vec"],
             )
 
-    from .dedup import spread_partitions
-
     scan = spread_partitions(df.select(F.col(id_col), F.col(vec_col)))
-    sigs = scan.mapInPandas(sig_op, "vid long, t int, sig long, vec array<double>")
+    sigs = scan.mapInArrow(sig_op, "vid long, t int, sig long, vec array<double>")
+    verified = sigs.groupBy("t", "sig").applyInArrow(
+        _bucket_pairs(
+            threshold, max_bucket_size, "vid", "embedding_near_dup_pairs", vec_col
+        ),
+        _PAIRS_DDL,
+    )
+    return verified.dropDuplicates(["id_a", "id_b"])
 
-    def bucket_op(pdf: pd.DataFrame) -> pd.DataFrame:
-        n = len(pdf)
-        empty = pd.DataFrame({"id_a": [], "id_b": [], "cos": []}).astype(
-            {"id_a": "int64", "id_b": "int64", "cos": "float64"}
-        )
-        if n < 2 or (max_bucket_size is not None and n > max_bucket_size):
-            return empty
-        ids = pdf["vid"].to_numpy()
-        M = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["vec"]])
+
+def _bucket_pairs(
+    threshold: float, max_size: int | None, id_name: str, op: str, col: str
+):
+    """The ``applyInArrow`` body of a bucket-local BLAS verify (blocked
+    near-dup buckets, semantic-dedup clusters): one bucket's
+    ``(id_name, vec)`` rows → every pair with cosine ≥ ``threshold`` as
+    ``(id_a < id_b, cos)``. A bucket over ``max_size`` rows is skipped,
+    never densified — the skew/memory valve."""
+
+    def verify(tbl: pa.Table) -> pa.Table:
+        if max_size is not None and tbl.num_rows > max_size:
+            tbl = tbl.slice(0, 0)
+        ids = tbl.column(id_name).to_numpy()
+        M, _ = _read_vectors(tbl.column("vec"), op=op, col=col)
         norms = np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
         sims = (M / norms) @ (M / norms).T
         keep = (sims >= threshold) & (ids[:, None] < ids[None, :])
         r, c = np.nonzero(keep)
-        if not len(r):
-            return empty
-        return pd.DataFrame({"id_a": ids[r], "id_b": ids[c], "cos": sims[r, c]})
+        return pa.table(
+            {"id_a": ids[r], "id_b": ids[c], "cos": sims[r, c]}, schema=_PAIRS_SCHEMA
+        )
 
-    verified = sigs.groupBy("t", "sig").applyInPandas(
-        bucket_op, "id_a long, id_b long, cos double"
-    )
-    return verified.dropDuplicates(["id_a", "id_b"])
+    return verify
 
 
 def _fit_centroids_kmeans(
@@ -310,27 +384,27 @@ def ivf_assign(
 ) -> DataFrame:
     """Assign each vector to its ``n_probe`` nearest centroid list(s) by
     cosine. One scan, no shuffle: the (tiny) centroid matrix broadcasts
-    and each partition does a single BLAS matmul in mapInPandas. Output:
+    and each partition does a single BLAS matmul in mapInArrow. Output:
     (id, vec, list_id) with n_probe rows per input vector."""
-    import pandas as pd
-
     sc = df.sparkSession.sparkContext
     b_cent = sc.broadcast(centroids)
+    dim = centroids.shape[1]
 
     def op(batches):
-        for batch in batches:
-            if not len(batch):
+        for rb in batches:
+            if not rb.num_rows:
                 continue
-            M = np.stack([np.asarray(v, dtype=np.float64) for v in batch[vec_col]])
+            M, _ = _read_vectors(rb.column(vec_col), dim, op="ivf_assign", col=vec_col)
             M_n = M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
             sims = M_n @ b_cent.value.T
             order = np.argsort(-sims, axis=1)[:, :n_probe]
-            yield pd.DataFrame(
-                {
-                    id_col: batch[id_col].to_numpy().repeat(n_probe),
-                    vec_col: [row for row in M for _ in range(n_probe)],
-                    "list_id": order.ravel(),
-                }
+            yield pa.RecordBatch.from_arrays(
+                [
+                    rb.column(id_col).take(np.repeat(np.arange(rb.num_rows), n_probe)),
+                    _write_vectors(np.repeat(M, n_probe, axis=0)),
+                    pa.array(order.ravel().astype(np.int32)),
+                ],
+                names=[id_col, vec_col, "list_id"],
             )
 
     # id type follows the input column (see pq_encode) — a hardcoded
@@ -342,7 +416,7 @@ def ivf_assign(
     scan = df.select(F.col(id_col), F.col(vec_col))
     if spread:
         scan = spread_partitions(scan)
-    return scan.mapInPandas(op, out_schema)
+    return scan.mapInArrow(op, out_schema)
 
 
 def ivf_cosine_topk(
@@ -406,40 +480,41 @@ def _lsh_signatures(
     """(id, t, sig) — one row per (vector, table) with the table's
     sign-bit signature. All n_tables × n_bits hyperplane dot products of
     a partition happen as ONE BLAS matmul against the broadcast (T·B × d)
-    plane matrix inside Arrow-batched mapInPandas, then bit-pack per
+    plane matrix inside Arrow-batched mapInArrow, then bit-pack per
     table. Replaces T·B interpreted ``aggregate(zip_with(...))`` dots
     per row (~50× slower at 16 tables × 4 bits × 64 d). Vectors are NOT
     carried through — the downstream bucket join and pair-distinct then
     shuffle only 3 integer columns, and vectors re-attach to the (much
     smaller) candidate set afterwards."""
-    import pandas as pd
-
-    n_tables, n_bits, _ = planes.shape
+    n_tables, n_bits, dim = planes.shape
     sc = df.sparkSession.sparkContext
     b_planes = sc.broadcast(planes.reshape(n_tables * n_bits, -1))
     weights = (1 << np.arange(n_bits)).astype(np.int64)
 
     def op(batches):
-        for batch in batches:
-            n = len(batch)
+        for rb in batches:
+            n = rb.num_rows
             if not n:
                 continue
-            M = np.stack([np.asarray(v, dtype=np.float64) for v in batch[vec_col]])
+            M, _ = _read_vectors(
+                rb.column(vec_col), dim, op="lsh_cosine_topk", col=vec_col
+            )
             bits = (M @ b_planes.value.T > 0).astype(np.int64)
             sigs = (bits.reshape(n, n_tables, n_bits) * weights).sum(axis=2)
-            yield pd.DataFrame(
-                {
-                    id_alias: batch[id_col].to_numpy().repeat(n_tables),
-                    "t": np.tile(np.arange(n_tables), n),
-                    "sig": sigs.ravel(),
-                }
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(rb.column(id_col).to_numpy().repeat(n_tables), pa.int64()),
+                    pa.array(np.tile(np.arange(n_tables, dtype=np.int32), n)),
+                    pa.array(sigs.ravel()),
+                ],
+                names=[id_alias, "t", "sig"],
             )
 
     schema = f"{id_alias} long, t int, sig long"
     scan = df.select(F.col(id_col), F.col(vec_col))
     if spread:
         scan = spread_partitions(scan)
-    return scan.mapInPandas(op, schema)
+    return scan.mapInArrow(op, schema)
 
 
 def cosine_pairs_blas(
@@ -448,24 +523,26 @@ def cosine_pairs_blas(
     """Append ``cos`` = cosine(a_col, b_col) per row, computed as
     vectorized numpy row-wise products per Arrow batch — the rerank
     path for candidate sets (interpreted aggregate/zip_with cosines
-    cost ~µs-per-element; this is ~100 ns per vector)."""
-    import pandas as pd
-
+    cost ~µs-per-element; this is ~100 ns per vector). A NaN element
+    gives a NaN ``cos``, as ``COSINE_EXPR`` does."""
     out_fields = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema)
 
     def op(batches):
-        for batch in batches:
-            if not len(batch):
+        for rb in batches:
+            if not rb.num_rows:
                 continue
-            A = np.stack([np.asarray(v, dtype=np.float64) for v in batch[a_col]])
-            B = np.stack([np.asarray(v, dtype=np.float64) for v in batch[b_col]])
+            A, _ = _read_vectors(rb.column(a_col), op="cosine_pairs_blas", col=a_col)
+            B, _ = _read_vectors(
+                rb.column(b_col), A.shape[1], op="cosine_pairs_blas", col=b_col
+            )
             dots = np.einsum("ij,ij->i", A, B)
             norms = np.linalg.norm(A, axis=1) * np.linalg.norm(B, axis=1)
-            batch = batch.copy()
-            batch["cos"] = dots / np.maximum(norms, 1e-12)
-            yield batch
+            yield pa.RecordBatch.from_arrays(
+                rb.columns + [pa.array(dots / np.maximum(norms, 1e-12))],
+                names=rb.schema.names + ["cos"],
+            )
 
-    return df.mapInPandas(op, f"{out_fields}, cos double")
+    return df.mapInArrow(op, f"{out_fields}, cos double")
 
 
 def _blocked_rerank_scores(
@@ -493,32 +570,29 @@ def _blocked_rerank_scores(
     bucket-matched pair set, which both filters non-candidates and
     restores LSH semantics (a neighbor bucketed with query A only must
     not enter query B's top-k)."""
-    import pandas as pd
-
-    q_arr = np.asarray(q_ids)
     q_norms = np.linalg.norm(Q, axis=1)
 
     def op(batches):
-        for batch in batches:
-            if not len(batch):
+        for rb in batches:
+            if not rb.num_rows:
                 continue
-            C = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in batch["c_vec"]]
+            C, _ = _read_vectors(
+                rb.column("c_vec"), Q.shape[1], op="lsh_cosine_topk", col="c_vec"
             )
             norms = np.linalg.norm(C, axis=1)[:, None] * q_norms[None, :]
             cos = (C @ Q.T) / np.maximum(norms, 1e-12)
             n_c, n_q = cos.shape
-            yield pd.DataFrame(
-                {
-                    "query_id": np.tile(q_arr, n_c),
-                    "neighbor_id": np.repeat(
-                        batch["neighbor_id"].to_numpy(), n_q
-                    ),
-                    "cos": cos.ravel(),
-                }
+            nid = rb.column("neighbor_id")
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(q_ids, type=nid.type).take(np.tile(np.arange(n_q), n_c)),
+                    nid.take(np.repeat(np.arange(n_c), n_q)),
+                    pa.array(cos.ravel()),
+                ],
+                names=["query_id", "neighbor_id", "cos"],
             )
 
-    return cand_vecs.mapInPandas(
+    return cand_vecs.mapInArrow(
         op, f"query_id {id_type}, neighbor_id {id_type}, cos double"
     )
 
@@ -566,7 +640,7 @@ def jl_project(
     — zero joins, shuffles, or Python at any corpus size. The same
     plan-literal budget applies: past ~100k literals (e.g. 4096×64),
     the expression tree is the bottleneck — batch a broadcast ndarray
-    matmul through ``mapInPandas`` instead (the ``ivf_assign`` shape).
+    matmul through ``mapInArrow`` instead (the ``ivf_assign`` shape).
 
     ``in_dim`` is probed from one row when not given (bounded collect).
     Appends ``out_col`` as array<double>; rows whose vector is NULL or
@@ -646,72 +720,29 @@ def _jl_project_blas(
     scale applied to the finished sum), so the two paths are BIT-EQUAL
     per element, not merely close (a single dgemm could re-associate
     the additions; in_dim vectorized accumulations cost the same at
-    these shapes and keep the order deterministic). Same
-    NULL/wrong-length → NULL contract as the literal path, INCLUDING
-    NaN elements (r17, r16 advice): the op is ``mapInArrow`` and the
-    projection is built as an explicitly-masked Arrow ListArray, so a
-    NaN stays a VALUE end to end exactly as the literal fold emits it
-    — a pandas float column would coerce NaN → SQL NULL on the way
-    back. mapInArrow also passes the untouched columns through without
-    a pandas round trip. A NULL ELEMENT inside a vector raises (the
-    previous pandas path crashed on it unintelligibly; the literal
-    path NULL-poisons single coordinates — no caller relies on either,
-    so loud beats a silent contract fork)."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
+    these shapes and keep the order deterministic). A NULL,
+    wrong-length or NULL-element vector projects to NULL and a NaN
+    element stays a NaN value (``_read_vectors``/``_write_vectors``),
+    so the NULL/wrong-length → NULL contract and NaN values match the
+    literal path. (The literal fold NULL-poisons every coordinate of a
+    NULL-element vector instead of the whole row.)"""
     S = np.asarray(jl_sign_matrix(in_dim, out_dim, salt), dtype=np.float64)
     inv_root = 1.0 / math.sqrt(out_dim)
     out_fields = ", ".join(
         f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema
     )
-    vec_idx = df.columns.index(vec_col)
 
     def op(batches):
         for rb in batches:
-            n = rb.num_rows
-            vec = rb.column(vec_idx)
-            if n == 0 or vec.null_count == n:
-                ok = np.zeros(n, dtype=bool)
-            else:
-                lens = pc.list_value_length(vec)
-                ok = pc.fill_null(
-                    pc.equal(lens, in_dim), False
-                ).to_numpy(zero_copy_only=False)
-            n_ok = int(ok.sum())
-            if n_ok:
-                taken = vec.take(pa.array(np.flatnonzero(ok)))
-                if taken.values.null_count:
-                    raise ValueError(
-                        "jl_project(method='blas'): NULL element inside "
-                        "an embedding vector — clean the input or use "
-                        "method='literal' (which NULL-poisons the "
-                        "affected coordinates)"
-                    )
-                X = (
-                    taken.values.to_numpy(zero_copy_only=False)
-                    .astype(np.float64, copy=False)
-                    .reshape(n_ok, in_dim)
-                )
-                Y = np.zeros((n_ok, out_dim), dtype=np.float64)
-                for i in range(in_dim):
-                    # same op order as the literal fold: s + (a_i * b_ij)
-                    Y += X[:, i : i + 1] * S[i, :]
-                Y *= inv_root
-                values = pa.array(Y.reshape(-1))
-            else:
-                values = pa.array(np.empty(0, dtype=np.float64))
-            offsets = pa.array(
-                np.concatenate(
-                    [[0], np.cumsum(np.where(ok, out_dim, 0))]
-                ).astype(np.int32)
-            )
-            proj = pa.ListArray.from_arrays(
-                offsets, values, mask=pa.array(~ok)
-            )
+            X, ok = _read_vectors(rb.column(vec_col), in_dim)
+            Y = np.zeros((len(X), out_dim), dtype=np.float64)
+            for i in range(in_dim):
+                # same op order as the literal fold: s + (a_i * b_ij)
+                Y += X[:, i : i + 1] * S[i, :]
+            Y *= inv_root
             yield pa.RecordBatch.from_arrays(
-                [rb.column(i) for i in range(rb.num_columns)] + [proj],
-                names=list(rb.schema.names) + [out_col],
+                rb.columns + [_write_vectors(Y, ok)],
+                names=rb.schema.names + [out_col],
             )
 
     return df.mapInArrow(op, f"{out_fields}, `{out_col}` array<double>")
@@ -757,10 +788,8 @@ def cosine_topk_quantized(
     """Brute-force cosine top-k over int8-quantized vectors: the same
     plan as cosine_topk_bruteforce but the scan, broadcast and Arrow
     batches all carry tinyint arrays (4× smaller). Dot products run as
-    int32 numpy matmuls per batch; recall vs the float path is
-    pytest-verified."""
-    import pandas as pd
-
+    numpy products per batch (exact: int8 products summed in float64);
+    recall vs the float path is pytest-verified."""
     qc = quantize_embeddings(corpus, vec_col).select(
         F.col(id_col).alias("neighbor_id"), F.col("qvec").alias("c_q")
     )
@@ -774,24 +803,27 @@ def cosine_topk_quantized(
     )
 
     def op(batches):
-        for batch in batches:
-            if not len(batch):
+        for rb in batches:
+            if not rb.num_rows:
                 continue
-            A = np.stack([np.asarray(v, dtype=np.int32) for v in batch["q_q"]])
-            B = np.stack([np.asarray(v, dtype=np.int32) for v in batch["c_q"]])
-            dots = np.einsum("ij,ij->i", A, B).astype(np.float64)
-            norms = np.linalg.norm(A.astype(np.float64), axis=1) * np.linalg.norm(
-                B.astype(np.float64), axis=1
+            A, _ = _read_vectors(
+                rb.column("q_q"), op="cosine_topk_quantized", col=vec_col
             )
-            yield pd.DataFrame(
-                {
-                    "query_id": batch["query_id"],
-                    "neighbor_id": batch["neighbor_id"],
-                    "cos": dots / np.maximum(norms, 1e-12),
-                }
+            B, _ = _read_vectors(
+                rb.column("c_q"), A.shape[1], op="cosine_topk_quantized", col=vec_col
+            )
+            dots = np.einsum("ij,ij->i", A, B)
+            norms = np.linalg.norm(A, axis=1) * np.linalg.norm(B, axis=1)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    rb.column("query_id").cast(pa.int64()),
+                    rb.column("neighbor_id").cast(pa.int64()),
+                    pa.array(dots / np.maximum(norms, 1e-12)),
+                ],
+                names=["query_id", "neighbor_id", "cos"],
             )
 
-    scored = crossed.mapInPandas(op, "query_id long, neighbor_id long, cos double")
+    scored = crossed.mapInArrow(op, "query_id long, neighbor_id long, cos double")
     w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
     return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
 
@@ -851,7 +883,7 @@ def lsh_cosine_topk(
     The rerank is BLOCKED (r15 verdict task 1): raw vectors re-attach
     to the DISTINCT candidate ids only — each corpus vector crosses
     the Arrow channel once — and the query matrix rides the closure
-    of one ``mapInPandas`` (``_blocked_rerank_scores``), whose scalar
+    of one ``mapInArrow`` (``_blocked_rerank_scores``), whose scalar
     scores then join back to the pair set. The previous shape shipped
     BOTH 64-dim vectors per candidate PAIR through Arrow; under the
     low-selectivity defaults candidate pairs are corpus-proportional
@@ -907,12 +939,12 @@ def lsh_cosine_topk(
     # broadcast_max_rows idiom). Collected FIRST so the guard (and the
     # empty-queries early return) fire before the bucket-join pair set
     # is materialized.
-    q_pdf = (
+    q_tbl = (
         queries.select(F.col(id_col), F.col(vec_col))
         .limit(max_query_rows + 1)
-        .toPandas()
+        .toArrow()
     )
-    if len(q_pdf) > max_query_rows:
+    if q_tbl.num_rows > max_query_rows:
         raise ValueError(
             f"lsh_cosine_topk: queries frame exceeds max_query_rows="
             f"{max_query_rows} — the query matrix is collected to the "
@@ -920,14 +952,14 @@ def lsh_cosine_topk(
             "stay serving-scale; raise max_query_rows only if the "
             "driver has the memory, or batch the queries"
         )
-    if not len(q_pdf):
+    if not q_tbl.num_rows:
         return corpus.sparkSession.createDataFrame(
             [],
             f"query_id {id_type}, neighbor_id {id_type}, "
             "cos double, rank int",
         )
-    Q = np.stack([np.asarray(v, dtype=np.float64) for v in q_pdf[vec_col]])
-    q_ids = q_pdf[id_col].tolist()
+    Q, _ = _read_vectors(q_tbl.column(vec_col), dim, op="lsh_cosine_topk", col=vec_col)
+    q_ids = q_tbl.column(id_col).to_pylist()
     # The pair set is materialized once (localCheckpoint): the
     # broadcast gate below needs its COUNT, and counting an
     # unmaterialized subtree would run the bucket join + distinct
@@ -999,7 +1031,7 @@ def kmeans_embeddings(
     Scale shape per iteration (the only sound one for 100 TB):
     - *assign*: one full scan; the (k × d) centroid matrix broadcasts
       and each Arrow batch computes all k squared distances as ONE BLAS
-      matmul (``|x|² − 2xCᵀ + |c|²``) in mapInPandas — no shuffle, no
+      matmul (``|x|² − 2xCᵀ + |c|²``) in mapInArrow — no shuffle, no
       per-row Python.
     - *update*: the SAME Python op partial-aggregates its partition —
       per-cluster count, SSE and coordinate sums accumulate in numpy
@@ -1035,17 +1067,14 @@ def kmeans_embeddings(
     centroids = (k × d) ndarray; history = one post-assignment inertia
     per iteration (length ``iters``).
     """
-    import pandas as pd
-
-    sample_pdf = df.select(vec_col).limit(init_sample).toPandas()
-    if not len(sample_pdf):
+    what = "kmeans_embeddings"
+    sample_tbl = df.select(vec_col).limit(init_sample).toArrow()
+    if not sample_tbl.num_rows:
         raise ValueError(
             "kmeans_embeddings: input frame is empty — nothing to cluster "
             "(an upstream gate dropped every row?)"
         )
-    sample = np.stack(
-        [np.asarray(v, dtype=np.float64) for v in sample_pdf[vec_col]]
-    )
+    sample, _ = _read_vectors(sample_tbl.column(vec_col), op=what, col=vec_col)
     k = min(k, len(sample))
     cent = _farthest_first_seeds(sample, k)
     dim = cent.shape[1]
@@ -1075,28 +1104,23 @@ def kmeans_embeddings(
     if cache:
         scan = scan.persist()
 
-    def _dists(b_cent, batch):
+    def _dists(b_cent, rb):
         C = b_cent.value
         c_sq = (C * C).sum(axis=1)
-        M = np.stack(
-            [np.asarray(v, dtype=np.float64) for v in batch[vec_col]]
-        )
+        M, _ = _read_vectors(rb.column(vec_col), dim, op=what, col=vec_col)
         d2 = (M * M).sum(axis=1)[:, None] - 2.0 * (M @ C.T) + c_sq[None, :]
         cl = np.argmin(d2, axis=1)  # ties → lowest index, deterministic
         return M, cl, np.maximum(d2[np.arange(len(M)), cl], 0.0)
 
     def make_assign(b_cent):
         def op(batches):
-            for batch in batches:
-                if not len(batch):
+            for rb in batches:
+                if not rb.num_rows:
                     continue
-                _M, cl, best = _dists(b_cent, batch)
-                yield pd.DataFrame(
-                    {
-                        id_col: batch[id_col],
-                        "cluster": cl.astype(np.int32),
-                        "dist2": best,
-                    }
+                _M, cl, best = _dists(b_cent, rb)
+                yield pa.RecordBatch.from_arrays(
+                    [rb.column(id_col), pa.array(cl.astype(np.int32)), pa.array(best)],
+                    names=[id_col, "cluster", "dist2"],
                 )
 
         return op
@@ -1107,10 +1131,10 @@ def kmeans_embeddings(
             cnt = np.zeros(n_clusters, dtype=np.int64)
             sse = np.zeros(n_clusters)
             sums = np.zeros((n_clusters, dim))
-            for batch in batches:
-                if not len(batch):
+            for rb in batches:
+                if not rb.num_rows:
                     continue
-                M, cl, best = _dists(b_cent, batch)
+                M, cl, best = _dists(b_cent, rb)
                 cnt += np.bincount(cl, minlength=n_clusters)
                 sse += np.bincount(cl, weights=best, minlength=n_clusters)
                 # contiguous segmented sum (sort + reduceat) instead of
@@ -1123,13 +1147,14 @@ def kmeans_embeddings(
                 starts = np.flatnonzero(np.r_[True, cls[1:] != cls[:-1]])
                 sums[cls[starts]] += np.add.reduceat(M[order], starts, axis=0)
             nz = np.nonzero(cnt)[0]
-            yield pd.DataFrame(
-                {
-                    "cluster": nz.astype(np.int32),
-                    "n": cnt[nz],
-                    "sse": sse[nz],
-                    "sums": list(sums[nz]),
-                }
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(nz.astype(np.int32)),
+                    pa.array(cnt[nz]),
+                    pa.array(sse[nz]),
+                    _write_vectors(sums[nz]),
+                ],
+                names=["cluster", "n", "sse", "sums"],
             )
 
         return op
@@ -1157,7 +1182,7 @@ def kmeans_embeddings(
         ]
     for _ in range(iters):
         b_cent = sc.broadcast(cent)
-        partials = scan.mapInPandas(
+        partials = scan.mapInArrow(
             make_iter(b_cent, k),
             "cluster int, n long, sse double, sums array<double>",
         )
@@ -1166,10 +1191,14 @@ def kmeans_embeddings(
             cnt = np.zeros(k, dtype=np.int64)
             sse = np.zeros(k)
             sums = np.zeros((k, dim))
-            for r in partials.collect():
-                cnt[r[0]] += r[1]
-                sse[r[0]] += r[2]
-                sums[r[0]] += np.asarray(r[3])
+            tbl = partials.toArrow()
+            cl = tbl.column("cluster").to_numpy()
+            # np.add.at adds row by row in collect order, as a Python
+            # loop over the rows would — same float sums, bit for bit
+            np.add.at(cnt, cl, tbl.column("n").to_numpy())
+            np.add.at(sse, cl, tbl.column("sse").to_numpy())
+            S, _ = _read_vectors(tbl.column("sums"), dim, op=what, col="sums")
+            np.add.at(sums, cl, S)
             history.append(float(sse.sum()))
             nz = np.nonzero(cnt)[0]
             new_cent[nz] = sums[nz] / cnt[nz, None]
@@ -1186,7 +1215,7 @@ def kmeans_embeddings(
         b_cent.unpersist()
         cent = new_cent
     b_cent = sc.broadcast(cent)
-    assignments = scan.mapInPandas(
+    assignments = scan.mapInArrow(
         make_assign(b_cent),
         f"`{id_col}` {id_type}, cluster int, dist2 double",
     )
@@ -1235,14 +1264,11 @@ def _sampled_normalized(
     the sampling step shared by PQ (inline + persisted index) and IVF
     training, so the empty-corpus guard, the sampling strategy, and the
     norm floor can never drift apart across the three trainers."""
-    sample_pdf = df.select(vec_col).limit(n).toPandas()
-    if not len(sample_pdf):
+    tbl = df.select(vec_col).limit(n).toArrow()
+    if not tbl.num_rows:
         raise ValueError(f"{what}: corpus is empty — nothing to train on")
-    sample = np.stack(
-        [np.asarray(v, dtype=np.float64) for v in sample_pdf[vec_col]]
-    )
-    sample /= np.maximum(np.linalg.norm(sample, axis=1, keepdims=True), 1e-12)
-    return sample
+    sample, _ = _read_vectors(tbl.column(vec_col), op=what, col=vec_col)
+    return sample / np.maximum(np.linalg.norm(sample, axis=1, keepdims=True), 1e-12)
 
 
 def pq_train_codebooks(
@@ -1276,13 +1302,11 @@ def pq_encode(
     nearest codeword — ``m`` small ints instead of ``d`` floats (for
     64-d float64 and m=16 that is a 32× smaller neighbor index, the
     point of PQ at 100 TB). One scan, broadcast codebooks, all-subspace
-    argmins batched as numpy inside mapInPandas. ``normalize`` encodes
+    argmins batched as numpy inside mapInArrow. ``normalize`` encodes
     the L2-normalized vector so an inner-product ADC against a
     normalized query approximates COSINE. ``passthrough`` columns (e.g.
     an IVF ``list_id``) ride the same Arrow batch into the output — no
     join needed to re-attach them."""
-    import pandas as pd
-
     passthrough = passthrough or []
     m, ks, sub = codebooks.shape
     sc = df.sparkSession.sparkContext
@@ -1290,19 +1314,15 @@ def pq_encode(
 
     def op(batches):
         cb = b_cb.value
-        for batch in batches:
-            n = len(batch)
+        for rb in batches:
+            n = rb.num_rows
             if not n:
                 continue
-            M = np.stack([np.asarray(v, dtype=np.float64) for v in batch[vec_col]])
-            if M.shape[1] != m * sub:
-                # numpy slicing would SILENTLY ignore trailing dims when
-                # the vector is wider than the codebooks cover — wrong
-                # codes with no error; fail loudly instead
-                raise ValueError(
-                    f"pq_encode: vector dim {M.shape[1]} != codebook "
-                    f"coverage m*sub = {m}*{sub} = {m * sub}"
-                )
+            # the length check matters: numpy slicing would SILENTLY
+            # ignore dims past the codebooks' m*sub coverage
+            M, _ = _read_vectors(
+                rb.column(vec_col), m * sub, op="pq_encode", col=vec_col
+            )
             if normalize:
                 M = M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
             codes = np.empty((n, m), dtype=np.int32)
@@ -1314,20 +1334,21 @@ def pq_encode(
                     + (cb[s] * cb[s]).sum(axis=1)[None, :]
                 )
                 codes[:, s] = np.argmin(d2, axis=1)
-            out = {"pq_id": batch[id_col].to_numpy(), "codes": list(codes)}
-            for c in passthrough:
-                out[c] = batch[c].to_numpy()
-            yield pd.DataFrame(out)
+            yield pa.RecordBatch.from_arrays(
+                [rb.column(id_col), _write_vectors(codes)]
+                + [rb.column(c) for c in passthrough],
+                names=["pq_id", "codes", *passthrough],
+            )
 
     # id type follows the input column (documents carry string ids, the
     # embeddings table longs) — hardcoding long would make Arrow reject
-    # every non-long id at the mapInPandas boundary
+    # every non-long id at the mapInArrow boundary
     dtypes = dict(df.dtypes)
     extra = "".join(f", {c} {dtypes[c]}" for c in passthrough)
     scan = spread_partitions(
         df.select(F.col(id_col), F.col(vec_col), *[F.col(c) for c in passthrough])
     )
-    return scan.mapInPandas(op, f"pq_id {dtypes[id_col]}, codes array<int>{extra}")
+    return scan.mapInArrow(op, f"pq_id {dtypes[id_col]}, codes array<int>{extra}")
 
 
 def pq_cosine_topk(
@@ -1364,15 +1385,21 @@ def pq_cosine_topk(
     codes = pq_encode(corpus, cb, id_col, vec_col).withColumnRenamed(
         "pq_id", "neighbor_id"
     )
+    q_tbl = queries.select(F.col(id_col), F.col(vec_col)).toArrow()
+    Q, _ = _read_vectors(
+        q_tbl.column(vec_col), m * cb.shape[2], op="pq_cosine_topk", col=vec_col
+    )
     return _pq_adc_search(
-        codes, cb, queries, corpus, k=k, shortlist=shortlist,
-        id_col=id_col, vec_col=vec_col,
+        codes, cb, q_tbl.column(id_col).to_pylist(), Q, queries, corpus,
+        k=k, shortlist=shortlist, id_col=id_col, vec_col=vec_col,
     )
 
 
 def _pq_adc_search(
     codes: DataFrame,
     cb: np.ndarray,
+    q_ids: list,
+    Q: np.ndarray,
     queries: DataFrame,
     corpus: DataFrame | None,
     k: int,
@@ -1381,7 +1408,6 @@ def _pq_adc_search(
     vec_col: str,
     probe_map: dict | None = None,
     exclude_self: bool = True,
-    q_pdf=None,
 ) -> DataFrame:
     """ADC scoring + optional exact rerank over an already-encoded code
     table (``neighbor_id``, ``codes``) — shared by the inline
@@ -1394,13 +1420,10 @@ def _pq_adc_search(
     scan. ``exclude_self`` drops query_id == neighbor_id matches —
     right when queries ARE corpus rows, wrong when an external query
     id space coincidentally overlaps corpus ids (see pq_index_search).
-    ``q_pdf``: the queries already collected by the caller (the IVF
-    probe step needs the same frame) — passing it avoids a second
-    toPandas job AND the id-set drift a nondeterministic queries plan
-    could produce between two collects."""
-    if q_pdf is None:
-        q_pdf = queries.select(F.col(id_col), F.col(vec_col)).toPandas()
-    Q = np.stack([np.asarray(v, dtype=np.float64) for v in q_pdf[vec_col]])
+    ``q_ids``/``Q``: the queries' ids and raw vectors, collected once by
+    the caller (the IVF probe step needs the same rows) — one collect,
+    so a nondeterministic queries plan cannot drift the id set between
+    two."""
     Q = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-12)
     sub = cb.shape[2]
     luts = [
@@ -1409,7 +1432,6 @@ def _pq_adc_search(
     ]
     spark = queries.sparkSession
     q_id_type = dict(queries.dtypes)[id_col]
-    q_ids = q_pdf[id_col].tolist()
     if probe_map is None:
         q_frame = spark.createDataFrame(
             list(zip(q_ids, luts)),
@@ -1704,31 +1726,33 @@ def pq_index_search(
     ).withColumnRenamed("pq_id", "neighbor_id")
     id_col = id_col or meta["id_col"]
     # ONE collect serves both the coarse probe and the ADC LUTs — a
-    # second toPandas would duplicate the job and, on a
-    # nondeterministic queries plan, could return a different id set
-    # than the probe map was built from
-    q_pdf = queries.select(F.col(id_col), F.col(vec_col)).toPandas()
+    # second would duplicate the job and, on a nondeterministic queries
+    # plan, could return a different id set than the probe map was
+    # built from
+    q_tbl = queries.select(F.col(id_col), F.col(vec_col)).toArrow()
+    q_ids = q_tbl.column(id_col).to_pylist()
+    Q, _ = _read_vectors(
+        q_tbl.column(vec_col), cb.shape[0] * cb.shape[2],
+        op="pq_index_search", col=vec_col,
+    )
     probe_map = None
     if meta.get("n_lists"):
         coarse = np.asarray(meta["coarse_centroids"], dtype=np.float64)
-        Q = np.stack(
-            [np.asarray(v, dtype=np.float64) for v in q_pdf[vec_col]]
-        )
         Qn = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-12)
         order = np.argsort(-(Qn @ coarse.T), axis=1)[
             :, : min(n_probe, coarse.shape[0])
         ]
         probe_map = {
             qid: [int(l) for l in lists]
-            for qid, lists in zip(q_pdf[id_col].tolist(), order)
+            for qid, lists in zip(q_ids, order)
         }
         all_probed = sorted({l for ls in probe_map.values() for l in ls})
         # static IN filter -> partition pruning on the list_id dirs
         codes = codes.where(F.col("list_id").isin(all_probed))
     return _pq_adc_search(
-        codes, cb, queries, corpus, k=k, shortlist=shortlist,
+        codes, cb, q_ids, Q, queries, corpus, k=k, shortlist=shortlist,
         id_col=id_col, vec_col=vec_col, probe_map=probe_map,
-        exclude_self=exclude_self, q_pdf=q_pdf,
+        exclude_self=exclude_self,
     )
 
 
@@ -1755,7 +1779,7 @@ def semantic_dedup(
     exceeding ``max_cluster_size`` is SKIPPED, not densified (the same
     skew valve as the LSH bucket verify — a documented recall trade,
     never an OOM). Within-cluster detection is one bucket-local BLAS
-    matmul per cluster (applyInPandas) — only threshold-passing pairs
+    matmul per cluster (applyInArrow) — only threshold-passing pairs
     leave a task. By construction pairs that straddle a cluster
     boundary are missed — the SemDeDup approximation itself, measured
     against the global near-dup baseline in tests.
@@ -1766,8 +1790,6 @@ def semantic_dedup(
     already computed for the keep decision, returned so gates like
     q_llm_semantic_dedup_check never re-run the label-propagation loop).
     """
-    import pandas as pd
-
     from .dedup import dedup_clusters
 
     assignments, _cent, _history = kmeans_embeddings(
@@ -1778,25 +1800,9 @@ def semantic_dedup(
         F.col(id_col).alias("id"), "cluster"
     ).join(vecs, "id")
 
-    def cluster_op(pdf: pd.DataFrame) -> pd.DataFrame:
-        n = len(pdf)
-        empty = pd.DataFrame({"id_a": [], "id_b": [], "cos": []}).astype(
-            {"id_a": "int64", "id_b": "int64", "cos": "float64"}
-        )
-        if n < 2 or (max_cluster_size is not None and n > max_cluster_size):
-            return empty
-        ids = pdf["id"].to_numpy()
-        M = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["vec"]])
-        norms = np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
-        sims = (M / norms) @ (M / norms).T
-        keep = (sims >= threshold) & (ids[:, None] < ids[None, :])
-        r, c = np.nonzero(keep)
-        if not len(r):
-            return empty
-        return pd.DataFrame({"id_a": ids[r], "id_b": ids[c], "cos": sims[r, c]})
-
-    pairs = clustered.groupBy("cluster").applyInPandas(
-        cluster_op, "id_a long, id_b long, cos double"
+    pairs = clustered.groupBy("cluster").applyInArrow(
+        _bucket_pairs(threshold, max_cluster_size, "id", "semantic_dedup", vec_col),
+        _PAIRS_DDL,
     )
     pairs = pairs.localCheckpoint()
     clusters = dedup_clusters(pairs).localCheckpoint()
@@ -1846,7 +1852,7 @@ def prototypicality(
     ``list_cosine_similarity`` at 4 dp.
 
     ``method``: ``"literal"`` (the plan-literal folds above) or
-    ``"arrow"`` (r16): one ``mapInPandas`` over (id, vec) computes the
+    ``"arrow"`` (r16): one ``mapInArrow`` over (id, vec) computes the
     k UNROUNDED cosines per batch with the identical float64 operation
     sequence — dot and ‖v‖² accumulate in element order, the divisor
     is (‖v‖·‖c‖) exactly as the literal expression — and the 4-dp
@@ -1857,8 +1863,6 @@ def prototypicality(
     ~k·d interpreted-HOF lambda evaluations PER ROW at execution; the
     arrow path pays neither (the q_llm_jl_projection lesson at k=8).
     """
-    import math
-
     if method not in ("literal", "arrow"):
         raise ValueError(f"unknown method: {method}")
     n_lits = sum(len(c) for c in centroids)
@@ -1922,17 +1926,13 @@ def _prototypicality_arrow(
     — and yields them as k scalar columns. Rounding (4 dp), the
     greatest() argmax and the index tie-break remain JVM expressions
     over those scalars, identical to the literal path's tail, so the
-    whole operator is bit-equal to it. NULL contract preserved: a NULL
-    or wrong-length vector yields NULL cosines (the literal path's
-    zip_with/aggregate NULL propagation), a zero-norm vector NULL
+    whole operator is bit-equal to it. NULL contract preserved: a NULL,
+    wrong-length or NULL-element vector yields NULL cosines (the literal
+    path's zip_with/aggregate NULL propagation), a zero-norm vector NULL
     cosines (the ``when(norm_v > 0)`` guard), and a NaN ELEMENT in the
-    data a NaN cosine VALUE — the cosines cross as masked Float64
-    extension arrays, whose Arrow conversion keeps NaN distinct from
-    null (r17; a plain float column would coerce NaN → SQL NULL)."""
-    import math
-
-    import pandas as pd
-
+    data a NaN cosine VALUE — Spark's NaN > 0 is true, so the guard
+    passes it, and the cosines cross as explicitly masked Arrow arrays,
+    which keep NaN distinct from NULL."""
     C_rows = [[float(x) for x in c] for c in centroids]
     k = len(C_rows)
     if k == 0:
@@ -1950,51 +1950,32 @@ def _prototypicality_arrow(
     cos_names = [f"_cos{i}" for i in range(k)]
 
     def op(batches):
-        for batch in batches:
-            if not len(batch):
-                continue
-            vecs = batch[vec_col]
-            ok = vecs.map(
-                lambda v: v is not None and len(v) == dim
-            ).to_numpy()
-            out = {id_col: batch[id_col]}
-            cols = np.zeros((len(batch), k))
-            # NULL ≠ NaN: the literal path yields SQL NULL for a
-            # missing/wrong-length vector and for the when(norm>0)
-            # guard on an exact zero norm, but a NaN that ARRIVES in
-            # the data stays a NaN VALUE (Spark's NaN > 0 is true, so
-            # the guard passes it through) — track nullness separately
-            # and emit masked Float64 extension arrays, whose Arrow
-            # conversion keeps NaN a value distinct from null (r17,
-            # r16 advice: a plain float column's pandas→Arrow
-            # serialization coerces NaN to SQL NULL, which broke the
-            # bit-equality contract for NaN-bearing vectors)
-            null = np.ones(len(batch), dtype=bool)
-            if ok.any():
-                X = np.stack(
-                    [np.asarray(v, dtype=np.float64) for v in vecs[ok]]
-                )
-                dots = np.zeros((X.shape[0], k))
-                nsq = np.zeros(X.shape[0])
-                for i in range(dim):
-                    # literal-fold op order: s + (x_i * c_i), element
-                    # index ascending — NOT one dgemm, which could
-                    # re-associate the additions
-                    dots += X[:, i : i + 1] * C[:, i][None, :]
-                    nsq += X[:, i] * X[:, i]
-                nv = np.sqrt(nsq)
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    cos = dots / (nv[:, None] * norm_c[None, :])
-                rows = np.flatnonzero(ok)
-                cols[rows] = cos
-                null[rows] = nv == 0.0
-            for j, name in enumerate(cos_names):
-                out[name] = pd.arrays.FloatingArray(
-                    np.ascontiguousarray(cols[:, j]), null.copy()
-                )
-            yield pd.DataFrame(out)
+        for rb in batches:
+            X, ok = _read_vectors(rb.column(vec_col), dim)
+            dots = np.zeros((X.shape[0], k))
+            nsq = np.zeros(X.shape[0])
+            for i in range(dim):
+                # literal-fold op order: s + (x_i * c_i), element
+                # index ascending — NOT one dgemm, which could
+                # re-associate the additions
+                dots += X[:, i : i + 1] * C[:, i][None, :]
+                nsq += X[:, i] * X[:, i]
+            nv = np.sqrt(nsq)
+            with np.errstate(divide="ignore", invalid="ignore"):
+                cos = dots / (nv[:, None] * norm_c[None, :])
+            # one row per cosine column; NULL for invalid vectors and
+            # for the literal path's when(norm > 0) guard
+            cols = np.zeros((k, rb.num_rows))
+            rows = np.flatnonzero(ok)
+            cols[:, rows] = cos.T
+            null = ~ok
+            null[rows] = nv == 0.0
+            yield pa.RecordBatch.from_arrays(
+                [rb.column(id_col)] + [pa.array(c, mask=null) for c in cols],
+                names=[id_col, *cos_names],
+            )
 
-    scored = embs.select(F.col(id_col), F.col(vec_col)).mapInPandas(
+    scored = embs.select(F.col(id_col), F.col(vec_col)).mapInArrow(
         op,
         ", ".join(
             [f"`{id_col}` {id_type}"] + [f"{n} double" for n in cos_names]

@@ -75,14 +75,16 @@ def ledger_path(base: str) -> str:
     return os.path.join(base, LEDGER_FILE)
 
 
-def read_ledger(path: str, fs) -> list[int] | None:
-    """Read the batch ids a ledger file lists, creating nothing.
+def read_ledger(path: str, fs) -> list[int] | dict | None:
+    """Read a ledger's batch ids or another JSON marker, creating nothing.
 
+    The other markers are ``_compacted_as_of`` and ``_snapshot_horizon``.
     Unlike ``BatchLedger``, no directory is made. None when there is no
-    usable ledger at ``path``: the file is missing or does not parse (a
-    torn write). Any other read error propagates — a transient store
-    error read as "no ledger" would silently skip whatever the caller
-    guards with it."""
+    usable file at ``path``: it is missing or does not parse (a torn
+    write). Any other read error propagates — a transient store error
+    read as "no ledger" would silently skip whatever the caller guards
+    with it, and a marker read as empty would be rewritten without the
+    entries it held."""
     try:
         return json.loads(fs.read_text(path))
     except (FileNotFoundError, json.JSONDecodeError):

@@ -45,11 +45,12 @@ def snapshot_horizon(path: str, fs=None) -> int:
     """The first still-valid as-of batch id, as recorded by
     ``compact.expire_snapshots`` (0 = never expired). Checked at the
     table dir and one level up (route tables share warehouse-level
-    lifecycle files, exactly like the ledger)."""
-    import json
-
+    lifecycle files, exactly like the ledger). A missing or unparsable
+    file counts as absent; any other read error propagates
+    (``sink.read_ledger``)."""
     from ..compact import SNAPSHOT_HORIZON_FILE
     from ..fs import get_filesystem
+    from ..sink import read_ledger
 
     fs = fs or get_filesystem(path)
     candidates = [
@@ -57,10 +58,9 @@ def snapshot_horizon(path: str, fs=None) -> int:
         os.path.join(os.path.dirname(path.rstrip("/")), SNAPSHOT_HORIZON_FILE),
     ]
     for hp in candidates:
-        try:
-            return int(json.loads(fs.read_text(hp))["horizon"])
-        except Exception:
-            continue
+        doc = read_ledger(hp, fs)
+        if doc is not None:
+            return int(doc["horizon"])
     return 0
 
 
@@ -78,41 +78,33 @@ def compacted_as_of(path: str, fs=None) -> int:
     reconstructible history (−1). A legacy flat warehouse-scope value
     (pre-round-7 format) is honored for every table — the conservative
     direction (refuses some reconstructible reads, never serves a
-    wrong one) until the next compaction migrates the file."""
-    import json
-
+    wrong one) until the next compaction migrates the file. A missing
+    or unparsable marker counts as absent; any other read error
+    propagates (``sink.read_ledger``)."""
     from ..compact import COMPACTED_AS_OF_FILE
     from ..fs import get_filesystem
+    from ..sink import read_ledger
 
     fs = fs or get_filesystem(path)
     table = os.path.basename(path.rstrip("/"))
-    try:
-        doc = json.loads(
-            fs.read_text(os.path.join(path, COMPACTED_AS_OF_FILE))
-        )
+    doc = read_ledger(os.path.join(path, COMPACTED_AS_OF_FILE), fs)
+    if doc is not None:
         return int(doc["compacted_as_of"])
-    except Exception:
-        pass
-    try:
-        doc = json.loads(
-            fs.read_text(
-                os.path.join(
-                    os.path.dirname(path.rstrip("/")), COMPACTED_AS_OF_FILE
-                )
-            )
-        )
-        if "tables" in doc:
-            # A legacy flat warehouse-scope value may coexist with the
-            # per-table map (mixed-era warehouse: some tables compacted
-            # pre-migration). The flat value is the floor for EVERY
-            # table — conservative for never-since-compacted siblings.
-            return max(
-                int(doc["tables"].get(table, {}).get("compacted_as_of", -1)),
-                int(doc.get("compacted_as_of", -1)),
-            )
-        return int(doc["compacted_as_of"])  # legacy flat format
-    except Exception:
+    doc = read_ledger(
+        os.path.join(os.path.dirname(path.rstrip("/")), COMPACTED_AS_OF_FILE), fs
+    )
+    if doc is None:
         return -1
+    if "tables" in doc:
+        # A legacy flat warehouse-scope value may coexist with the
+        # per-table map (mixed-era warehouse: some tables compacted
+        # pre-migration). The flat value is the floor for EVERY
+        # table — conservative for never-since-compacted siblings.
+        return max(
+            int(doc["tables"].get(table, {}).get("compacted_as_of", -1)),
+            int(doc.get("compacted_as_of", -1)),
+        )
+    return int(doc["compacted_as_of"])  # legacy flat format
 
 
 def table_snapshots(path: str, fs=None) -> list[int]:

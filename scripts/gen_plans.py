@@ -32,7 +32,7 @@ NOTES = {
  "q_llm_bm25_search": "BM25: the query-term INSET filter sits inside the token-explode scan stage, so only matched tokens reach the (term, doc) aggregate; document frequency and corpus stats broadcast back; TakeOrderedAndProject caps the result without a global sort.",
  "q_rel_pagerank": "PageRank: 10 rounds of (broadcast dangling-mass 1-row agg, rank/deg contribution join, keyed sum), each round localCheckpoint()ed so round k's plan does not re-embed rounds 0..k-1; static edges and the node/degree base checkpoint once.",
  "q_rel_psi_value_drift": "PSI drift: two corpus scans collapse map-side into <=bins partial counts; the <=bins-row full-outer join and the broadcast totals row are the only post-scan work — nothing corpus-sized shuffles.",
- "q_llm_jl_projection": "JL projection (r16: Arrow path): one mapInPandas over (vec_id, embedding) — the sign matrix ships once in the serialized op, each batch accumulates the projection in input-dim order (bit-equal to the literal fold, pinned in tests), zero joins/shuffles at any corpus size. Replaced the 1024-plan-literal fold whose ~2.4s/run was py4j construction + Catalyst planning of the literal tree (and whose per-row cost was an interpreted-HOF fold) — the char-entropy/gopher-repetition lesson applied to the projection.",
+ "q_llm_jl_projection": "JL projection (r16: Arrow path): one mapInArrow over (vec_id, embedding) — the sign matrix ships once in the serialized op, each batch accumulates the projection in input-dim order (bit-equal to the literal fold, pinned in tests), zero joins/shuffles at any corpus size. Replaced the 1024-plan-literal fold whose ~2.4s/run was py4j construction + Catalyst planning of the literal tree (and whose per-row cost was an interpreted-HOF fold) — the char-entropy/gopher-repetition lesson applied to the projection.",
  "q_llm_weighted_sample": "A-ES weighted sampling: the ln(u)/w key is a scan-stage md5 expression; TakeOrderedAndProject keeps per-partition heaps of k, so the corpus never globally sorts and only k rows reach the driver side of the plan.",
  "q_llm_warc_roundtrip": "WARC connector: binaryFile distributes segment files, the record walk is one mapInPandas generator per file — the natural parallel grain of a crawl; no shuffle anywhere in the read path.",
  "q_llm_html_extract": "HTML extraction: page construction is a scan-stage concat; the HTMLParser tokenizer runs per Arrow batch in the same mapInPandas boundary as the multimodal codecs — one scan, no shuffle.",
@@ -41,7 +41,7 @@ NOTES = {
  "q_llm_span_dedup": "Span-level dedup: per-doc window arrays build in the scan stage (transform over sequence, no Python), ONE explode streams token windows into ONE groupBy on the span; the map-side partial collapses spans seen once per partition before the exchange, so shuffle volume tracks distinct-span count. Top-50 via TakeOrderedAndProject.",
  "q_llm_bpe_pairs": "Tokenizer pair counts: corpus tokens collapse to a word-frequency table first (two-phase aggregate - the corpus->vocab reduction), then ONLY distinct words explode into character pairs for the weighted pair aggregate. Both shuffles are vocab-bounded; corpus size only affects the first map side.",
  "q_llm_pq_topk": "PQ ANN: codebooks train on a bounded sample (driver numpy); one Arrow pass encodes the corpus to 16 ints/vector; ADC scores the code stream as a pure JVM zip_with against the broadcast query LUT frame (no Python, no vectors in the scored scan); only the 60-row-per-query shortlist re-attaches raw vectors for the exact rerank.",
- "q_llm_kmeans": "Distributed Lloyd's: per iteration, one mapInPandas scan (broadcast centroids, one BLAS matmul per batch) partial-aggregates per-cluster count/SSE/coordinate-sums IN the Python op, so each partition emits <=k rows and no input vector ever crosses Arrow back to the JVM; task width tracks data volume (~64k vectors/task), not core count — 4 iterations = 4 scans, the inherent Lloyd cost, with per-iteration fixed overhead bounded.",
+ "q_llm_kmeans": "Distributed Lloyd's: per iteration, one mapInArrow scan (broadcast centroids, one BLAS matmul per batch) partial-aggregates per-cluster count/SSE/coordinate-sums IN the Python op, so each partition emits <=k rows and no input vector ever crosses Arrow back to the JVM; task width tracks data volume (~64k vectors/task), not core count — 4 iterations = 4 scans, the inherent Lloyd cost, with per-iteration fixed overhead bounded.",
  "q_rel_recursive_cte": "WITH RECURSIVE month spine: the recursion materializes ~tens of rows; the per-month aggregate is the only corpus-sized work and joins the spine via broadcast. Calendar densification without a driver-side date loop.",
  "q_llm_quality_classifier": "Linear quality filter: the whole model (features + weighted logit) is one codegen'd scan-stage projection; the only exchange is the per-source aggregate of the keep flags.",
  "q_llm_prefix_dups": "Truncation dups: prefix md5 in the scan stage; one groupBy with map-side partials - singleton prefixes never cross the network.",

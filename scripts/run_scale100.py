@@ -61,7 +61,7 @@ KEEP = {
 
 # r17 one-round additions (r16 verdict tasks 4 and 6): these are not in
 # bench.SCALE_PROBE_OPS (the per-bench 10x probe stays as-is); they are
-# injected for THIS battery only. bigram_nll demonstrates the r16
+# passed to THIS battery only. bigram_nll demonstrates the r16
 # deleted corpus scan at the 100x point (executed scan passes 4 -> 3 at
 # identical shuffle was the sf0.1 evidence; the battery row pins the
 # wall/shuffle envelope). jl_projection and prototypicality pin the
@@ -184,16 +184,12 @@ def main() -> None:
         for k in ("t1", f"t{FACTOR}", "t_ratio")
     }
 
-    saved = dict(bench.SCALE_PROBE_OPS)
-    try:
-        bench.SCALE_PROBE_OPS.update(R17_EXTRA)
-        for k in list(bench.SCALE_PROBE_OPS):
-            if k not in KEEP:
-                del bench.SCALE_PROBE_OPS[k]
-        batteries = bench.bench_scale_probe(spark, SF, factor=FACTOR)
-    finally:
-        bench.SCALE_PROBE_OPS.clear()
-        bench.SCALE_PROBE_OPS.update(saved)
+    ops = {
+        op: table
+        for op, table in {**bench.SCALE_PROBE_OPS, **R17_EXTRA}.items()
+        if op in KEEP
+    }
+    batteries = bench.bench_scale_probe(spark, SF, factor=FACTOR, ops=ops)
 
     rnd = _upcoming_round()
     path = REPO / f"SCALE100_r{rnd:02d}.json"

@@ -206,6 +206,27 @@ def test_api_md_fresh():
     )
 
 
+def test_similarity_vectors_cross_one_arrow_boundary():
+    """operators/similarity.py converts vectors only through
+    ``_read_vectors``/``_write_vectors``, the helpers that own the
+    NULL/NaN policy: red here means a per-row ``np.stack`` or a pandas
+    boundary (whose float columns turn NaN into SQL NULL) came back."""
+    src = (
+        REPO
+        / "development_of_a_streaming_pipeline_to_ingest_dcache_billing_data_to_hive_hdfs_spark"
+        / "operators"
+        / "similarity.py"
+    ).read_text()
+    for banned in (
+        "np.stack([np.asarray(",
+        "mapInPandas",
+        "applyInPandas",
+        "toPandas",
+        "import pandas",
+    ):
+        assert banned not in src, f"similarity.py contains {banned!r}"
+
+
 def test_window_is_computed_and_contains_all_stale():
     """The window is derived from the artifacts (not hand-rotated): it
     must contain EVERY currently-stale query, with the stale set at the

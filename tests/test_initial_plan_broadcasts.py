@@ -412,12 +412,14 @@ def test_lsh_rerank_ships_vectors_only_on_distinct_corpus_side(spark):
     ids — never a per-pair (q_vec, c_vec) attach, whose channel volume
     is candidates × 2 × dim and drifts with memory pressure at scale.
 
-    Asserted on the initial plan: exactly one MapInPandas node; no
+    Asserted on the initial plan: exactly one MapInArrow node and no
+    MapInPandas; no
     q_vec column exists anywhere in the distributed plan (the query
     matrix rides the closure); the rerank input is deduplicated by a
     HashAggregate keyed on neighbor_id below the Python stage."""
     plan = _initial_plan(_lsh_case(spark))
-    assert plan.count("MapInPandas") == 1, plan
+    assert plan.count("MapInArrow") == 1, plan
+    assert "MapInPandas" not in plan, plan
     assert "q_vec" not in plan, plan
     # the distinct-candidate aggregate feeding the vector re-join
     agg_lines = [

@@ -195,6 +195,46 @@ def test_blocked_rerank_scores_one_row_per_query_candidate(spark):
             assert rows[(qid, i)] == ref[i, qi]
 
 
+def test_vector_boundary_nan_is_a_value_null_raises(spark):
+    """The one Arrow vector boundary's NULL/NaN policy on operators that
+    need every vector: a NaN element is a value (``cosine_pairs_blas``
+    gives NaN, exactly as ``COSINE_EXPR`` does, never SQL NULL), and a
+    NULL vector raises one ValueError naming the operator and the
+    column."""
+    import math
+
+    from development_of_a_streaming_pipeline_to_ingest_dcache_billing_data_to_hive_hdfs_spark.operators.similarity import (  # noqa: E501
+        COSINE_EXPR,
+        cosine_pairs_blas,
+        ivf_assign,
+        kmeans_embeddings,
+    )
+
+    pairs = spark.createDataFrame(
+        [(1, [float("nan"), 1.0], [1.0, 1.0]), (2, [1.0, 0.0], [2.0, 0.0])],
+        "id long, q_vec array<double>, c_vec array<double>",
+    )
+    got = {
+        r.id: (r.cos, r.expr)
+        for r in cosine_pairs_blas(pairs)
+        .withColumn("expr", F.expr(COSINE_EXPR.format(a="q_vec", b="c_vec")))
+        .collect()
+    }
+    assert got[1][0] is not None and math.isnan(got[1][0]), got
+    assert got[1][1] is not None and math.isnan(got[1][1]), got
+    assert got[2] == (1.0, 1.0)
+
+    vecs = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, None), (3, [0.0, 1.0])],
+        "vec_id long, embedding array<double>",
+    )
+    msg = r"column 'embedding' holds 1 NULL, NULL-element or wrong-length"
+    with pytest.raises(Exception, match="ValueError: ivf_assign: " + msg):
+        ivf_assign(vecs, np.eye(2)).collect()
+    with pytest.raises(ValueError, match="kmeans_embeddings: " + msg):
+        kmeans_embeddings(vecs, k=2, iters=1)
+
+
 def test_token_count_and_lang(spark):
     df = spark.createDataFrame(
         [(1, "The cat and the dog, it was fine."), (2, "   "), (3, "el la de que y en un")],

@@ -124,7 +124,8 @@ def test_arrow_path_is_bit_equal_to_literal_path(spark):
     assert lit == arw
     dim = len(cents[0])
     edge = spark.createDataFrame(
-        [(1, None), (2, [1.0, 2.0]), (3, [0.0] * dim)],
+        [(1, None), (2, [1.0, 2.0]), (3, [0.0] * dim),
+         (4, [1.0, None] + [2.0] * (dim - 2))],
         "vec_id long, embedding array<double>",
     )
     for m in ("literal", "arrow"):
@@ -132,7 +133,9 @@ def test_arrow_path_is_bit_equal_to_literal_path(spark):
             r.vec_id: (r.cluster, r.proto_cos)
             for r in prototypicality(edge, cents, method=m).collect()
         }
-        assert out == {1: (None, None), 2: (None, None), 3: (None, None)}
+        assert out == {
+            1: (None, None), 2: (None, None), 3: (None, None), 4: (None, None)
+        }
     # a NaN ELEMENT in the data is a VALUE, not a NULL (Spark's
     # NaN > 0 passes the norm guard) — r17, r16 advice: the arrow
     # path's cosines ride masked Float64 arrays so the pandas→Arrow

@@ -659,6 +659,28 @@ def test_snapshot_expiry_lifecycle(spark, tmp_path):
     # the horizon is monotonic: lowering it is refused
     with _pytest.raises(ValueError, match="monotonic"):
         expire_snapshots(warehouse, up_to_batch=1)
+    # ...also when the horizon read fails transiently: only a missing or
+    # unparsable file reads as "no horizon yet"
+    from development_of_a_streaming_pipeline_to_ingest_dcache_billing_data_to_hive_hdfs_spark.compact import (
+        SNAPSHOT_HORIZON_FILE,
+    )
+    from development_of_a_streaming_pipeline_to_ingest_dcache_billing_data_to_hive_hdfs_spark.fs import (
+        LocalFS,
+    )
+
+    class FlakyHorizonFS(LocalFS):
+        def read_text(self, p):
+            if os.path.basename(p) == SNAPSHOT_HORIZON_FILE:
+                raise OSError("transient horizon read error")
+            return super().read_text(p)
+
+    for read in (
+        lambda: expire_snapshots(warehouse, up_to_batch=1, fs=FlakyHorizonFS()),
+        lambda: snapshot_horizon(t, fs=FlakyHorizonFS()),
+    ):
+        with _pytest.raises(OSError, match="transient horizon read error"):
+            read()
+    assert snapshot_horizon(t) == 2
     # re-expiring at the current max advances it
     assert expire_snapshots(warehouse)["horizon"] == 3
     assert table_snapshots(t) == [3]
