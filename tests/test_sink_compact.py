@@ -128,37 +128,37 @@ def test_batch_commit_fs_calls_independent_of_table_history(spark, tmp_path):
     assert counts[0] == counts[1]
 
 
-@pytest.mark.parametrize("flaky_file", [LEDGER_FILE, COMPACTED_AS_OF_FILE])
-def test_compaction_raises_on_ledger_read_error(spark, tmp_path, flaky_file):
+def test_compaction_raises_on_ledger_read_error(spark, tmp_path):
     """A ledger or ``_compacted_as_of`` marker read error that is neither
     "missing" nor "unparsable" (an ``OSError``, as a transient HDFS
     failure raises) fails the compaction instead of silently skipping
     the marker — a marker left stale would let ``read_table_as_of``
     serve rows from after the requested snapshot — or rewriting it from
     an empty read, which would wipe a sibling table's entry."""
-    wh = tmp_path / "wh"
-    path = str(wh / "transfers")
-    sibling = str(wh / "requests")
-    write_partitioned_batch(_days(spark, 1), path, batch_id=0)
-    write_partitioned_batch(_days(spark, 1), sibling, batch_id=0)
-    BatchLedger(ledger_path(str(wh))).commit(0)
-    compact_partition(spark, sibling, "2024-03-01")
+    for flaky_file in (LEDGER_FILE, COMPACTED_AS_OF_FILE):
+        wh = tmp_path / flaky_file / "wh"
+        path = str(wh / "transfers")
+        sibling = str(wh / "requests")
+        write_partitioned_batch(_days(spark, 1), path, batch_id=0)
+        write_partitioned_batch(_days(spark, 1), sibling, batch_id=0)
+        BatchLedger(ledger_path(str(wh))).commit(0)
+        compact_partition(spark, sibling, "2024-03-01")
 
-    class FlakyLedgerFS(LocalFS):
-        def read_text(self, p):
-            if os.path.basename(p) == flaky_file:
-                raise OSError("transient ledger read error")
-            return super().read_text(p)
+        class FlakyLedgerFS(LocalFS):
+            def read_text(self, p):
+                if os.path.basename(p) == flaky_file:
+                    raise OSError("transient ledger read error")
+                return super().read_text(p)
 
-    with pytest.raises(OSError, match="transient ledger read error"):
-        compact_partition(spark, path, "2024-03-01", fs=FlakyLedgerFS())
-    assert compacted_as_of(path) == -1
-    assert compacted_as_of(sibling) == 0
-    if flaky_file == COMPACTED_AS_OF_FILE:
         with pytest.raises(OSError, match="transient ledger read error"):
-            compacted_as_of(sibling, fs=FlakyLedgerFS())
-    compact_partition(spark, path, "2024-03-01")  # healthy store
-    assert compacted_as_of(path) == 0
+            compact_partition(spark, path, "2024-03-01", fs=FlakyLedgerFS())
+        assert compacted_as_of(path) == -1
+        assert compacted_as_of(sibling) == 0
+        if flaky_file == COMPACTED_AS_OF_FILE:
+            with pytest.raises(OSError, match="transient ledger read error"):
+                compacted_as_of(sibling, fs=FlakyLedgerFS())
+        compact_partition(spark, path, "2024-03-01")  # healthy store
+        assert compacted_as_of(path) == 0
 
 
 def test_partition_policy():
