@@ -60,10 +60,21 @@ class LocalFS:
 
     def list_files_recursive(self, path: str) -> list[tuple[str, int]]:
         """(basename, size) for every file under path, any depth."""
+        return [(os.path.basename(r), n) for r, n, _ in self.file_stats(path)]
+
+    def file_stats(self, path: str) -> list[tuple[str, int, int]]:
+        """(path relative to ``path``, size, mtime) for every file under
+        path, any depth; a file path is its own one entry (named by its
+        basename), an absent path has none. mtime is in nanoseconds."""
+        if os.path.isfile(path):
+            st = os.stat(path)
+            return [(os.path.basename(path), st.st_size, st.st_mtime_ns)]
         out = []
         for root, _dirs, files in os.walk(path):
             for f in files:
-                out.append((f, os.path.getsize(os.path.join(root, f))))
+                st = os.stat(os.path.join(root, f))
+                rel = os.path.relpath(os.path.join(root, f), path)
+                out.append((rel, st.st_size, st.st_mtime_ns))
         return out
 
     def mkdirs(self, path: str) -> None:
@@ -170,14 +181,22 @@ class HadoopFS:
         ]
 
     def list_files_recursive(self, path: str) -> list[tuple[str, int]]:
+        return [(os.path.basename(r), n) for r, n, _ in self.file_stats(path)]
+
+    def file_stats(self, path: str) -> list[tuple[str, int, int]]:
+        """As ``LocalFS.file_stats``; mtime is in milliseconds (the
+        Hadoop FileStatus resolution)."""
         fs, p = self._fs(path), self._p(path)
         if not fs.exists(p):
             return []
+        root = fs.getFileStatus(p).getPath().toUri().getPath().rstrip("/")
         out = []
         it = fs.listFiles(p, True)
         while it.hasNext():
             st = it.next()
-            out.append((st.getPath().getName(), st.getLen()))
+            full = st.getPath().toUri().getPath()
+            rel = full[len(root) + 1:] if full != root else st.getPath().getName()
+            out.append((rel, st.getLen(), st.getModificationTime()))
         return out
 
     def mkdirs(self, path: str) -> None:

@@ -50,8 +50,8 @@ def clear_auto_strategy_cache() -> None:
 # nullif guards the zero-norm vector: under ANSI mode (Spark 4 default)
 # even DOUBLE division by zero throws DIVIDE_BY_ZERO, so one all-zeros
 # embedding would kill the whole job; null cosine instead drops the pair
-# from every threshold/rank downstream (the numpy paths guard the same
-# case with np.maximum(norm, 1e-12)).
+# from every threshold/rank downstream (the numpy paths emit the same
+# NULL through _cosines).
 COSINE_EXPR = (
     "aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0D, (s, v) -> s + v) / "
     "nullif(sqrt(aggregate({a}, 0D, (s, v) -> s + v * v)) * "
@@ -113,6 +113,14 @@ def _write_vectors(M: np.ndarray, ok: np.ndarray | None = None) -> pa.ListArray:
     return pa.ListArray.from_arrays(
         pa.array(offsets), pa.array(M.reshape(-1)), mask=pa.array(~ok)
     )
+
+
+def _cosines(dots: np.ndarray, norms: np.ndarray) -> pa.Array:
+    """``dots / norms`` as an Arrow double array, NULL where the norm
+    product is 0 — the zero-norm contract of ``COSINE_EXPR``'s
+    ``nullif``, so every cosine path ranks an all-zeros vector last."""
+    zero = norms == 0
+    return pa.array(dots / np.where(zero, 1.0, norms), mask=zero)
 
 
 def cosine_topk_bruteforce(
@@ -524,7 +532,8 @@ def cosine_pairs_blas(
     vectorized numpy row-wise products per Arrow batch — the rerank
     path for candidate sets (interpreted aggregate/zip_with cosines
     cost ~µs-per-element; this is ~100 ns per vector). A NaN element
-    gives a NaN ``cos``, as ``COSINE_EXPR`` does."""
+    gives a NaN ``cos`` and a zero-norm vector a NULL one, as
+    ``COSINE_EXPR`` does."""
     out_fields = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema)
 
     def op(batches):
@@ -538,7 +547,7 @@ def cosine_pairs_blas(
             dots = np.einsum("ij,ij->i", A, B)
             norms = np.linalg.norm(A, axis=1) * np.linalg.norm(B, axis=1)
             yield pa.RecordBatch.from_arrays(
-                rb.columns + [pa.array(dots / np.maximum(norms, 1e-12))],
+                rb.columns + [_cosines(dots, norms)],
                 names=rb.schema.names + ["cos"],
             )
 
@@ -580,14 +589,14 @@ def _blocked_rerank_scores(
                 rb.column("c_vec"), Q.shape[1], op="lsh_cosine_topk", col="c_vec"
             )
             norms = np.linalg.norm(C, axis=1)[:, None] * q_norms[None, :]
-            cos = (C @ Q.T) / np.maximum(norms, 1e-12)
-            n_c, n_q = cos.shape
+            dots = C @ Q.T
+            n_c, n_q = dots.shape
             nid = rb.column("neighbor_id")
             yield pa.RecordBatch.from_arrays(
                 [
                     pa.array(q_ids, type=nid.type).take(np.tile(np.arange(n_q), n_c)),
                     nid.take(np.repeat(np.arange(n_c), n_q)),
-                    pa.array(cos.ravel()),
+                    _cosines(dots.ravel(), norms.ravel()),
                 ],
                 names=["query_id", "neighbor_id", "cos"],
             )
@@ -643,8 +652,9 @@ def jl_project(
     matmul through ``mapInArrow`` instead (the ``ivf_assign`` shape).
 
     ``in_dim`` is probed from one row when not given (bounded collect).
-    Appends ``out_col`` as array<double>; rows whose vector is NULL or
-    wrong-length yield NULL (loud downstream, never silent truncation).
+    Appends ``out_col`` as array<double>; rows whose vector is NULL,
+    wrong-length or holds a NULL element yield NULL (loud downstream,
+    never silent truncation).
 
     ``method``: ``"literal"`` (plan-literal folds, JVM-only),
     ``"blas"`` (the matrix ships once in the serialized op and each
@@ -698,7 +708,10 @@ def jl_project(
             lambda s, v: s + v,
         )
         coords.append(dot * F.lit(inv_root))
-    proj = F.when(F.size(vec_col) == in_dim, F.array(*coords))
+    proj = F.when(
+        (F.size(vec_col) == in_dim) & ~F.exists(vec_col, lambda x: x.isNull()),
+        F.array(*coords),
+    )
     return df.withColumn(out_col, proj)
 
 
@@ -723,9 +736,7 @@ def _jl_project_blas(
     these shapes and keep the order deterministic). A NULL,
     wrong-length or NULL-element vector projects to NULL and a NaN
     element stays a NaN value (``_read_vectors``/``_write_vectors``),
-    so the NULL/wrong-length → NULL contract and NaN values match the
-    literal path. (The literal fold NULL-poisons every coordinate of a
-    NULL-element vector instead of the whole row.)"""
+    so the NULL-row contract and NaN values match the literal path."""
     S = np.asarray(jl_sign_matrix(in_dim, out_dim, salt), dtype=np.float64)
     inv_root = 1.0 / math.sqrt(out_dim)
     out_fields = ", ".join(
@@ -818,7 +829,7 @@ def cosine_topk_quantized(
                 [
                     rb.column("query_id").cast(pa.int64()),
                     rb.column("neighbor_id").cast(pa.int64()),
-                    pa.array(dots / np.maximum(norms, 1e-12)),
+                    _cosines(dots, norms),
                 ],
                 names=["query_id", "neighbor_id", "cos"],
             )

@@ -13,6 +13,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
@@ -25,12 +26,60 @@ TABLES = [
 NANOS_TS_COLUMNS: dict[str, list[str]] = {"events": ["ts"]}
 
 
+# The session confs that change what parquet schema inference returns
+# for the same files; part of every schema-cache key, so an entry
+# inferred under one setting never serves another.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+)
+
+# (path, inference confs, file signature) → inferred StructType; cleared
+# whole at 256 entries, like similarity's _AUTO_STRATEGY_CACHE.
+_SCHEMA_CACHE: dict[tuple, StructType] = {}
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers a schema once per file
+    set: the first read of a path infers it (one Spark job) and caches
+    the ``StructType``; later reads pass it to ``spark.read.schema`` and
+    start no job. The plan is the same either way (same FileScan, same
+    ReadSchema).
+
+    The key is the path, the session's inference confs and the
+    (relative name, size, mtime) of every file at or under the path, so
+    a rewritten file, an added file or a new partition dir is inferred
+    afresh. The signature is taken BEFORE the inference: a file set that
+    changes in between leaves its entry under a signature no later read
+    computes, never a stale schema under the new one."""
+    from ..fs import get_filesystem
+
+    key = (
+        path,
+        tuple(spark.conf.get(c) for c in _INFERENCE_CONFS),
+        tuple(sorted(get_filesystem(path, spark).file_stats(path))),
+    )
+    schema = _SCHEMA_CACHE.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    if len(_SCHEMA_CACHE) >= 256:
+        _SCHEMA_CACHE.clear()
+    _SCHEMA_CACHE[key] = df.schema
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = os.path.join(sf_dir, f"{name}.parquet")
     nanos_cols = NANOS_TS_COLUMNS.get(name, [])
     if nanos_cols:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     for c in nanos_cols:
         if dict(df.dtypes).get(c) == "bigint":
             df = df.withColumn(c, F.timestamp_micros(F.expr(f"{c} div 1000")))

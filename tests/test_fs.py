@@ -76,6 +76,26 @@ def test_fs_contract_parity(spark, tmp_path):
             fs.read_text(os.path.join(d, "nope.json"))
 
 
+def test_file_stats_lists_single_file_and_sees_rewrite(spark, tmp_path):
+    """The signature behind pinned-schema loads: a single-file path is
+    its own entry on both impls (``os.walk`` of a file yields nothing),
+    names are relative to the path, and a rewrite changes the entry."""
+    for fs, root in _impls(spark, tmp_path):
+        f = os.path.join(root, "t.parquet")
+        fs.mkdirs(os.path.join(root, "d", "p=1"))
+        fs.write_text_atomic(f, "abc")
+        fs.write_text_atomic(os.path.join(root, "d", "p=1", "x"), "xy")
+        [(name, size, mtime)] = fs.file_stats(f)
+        assert (name, size) == ("t.parquet", 3)
+        assert fs.list_files_recursive(f) == [("t.parquet", 3)]
+        assert [(n, s) for n, s, _ in fs.file_stats(os.path.join(root, "d"))] == [
+            (os.path.join("p=1", "x"), 2)
+        ]
+        assert fs.file_stats(os.path.join(root, "missing")) == []
+        fs.write_text_atomic(f, "abcd")
+        assert fs.file_stats(f) != [(name, size, mtime)]
+
+
 def test_ledger_on_hadoop_fs(spark, tmp_path):
     path = f"file://{tmp_path}/wh/_ledger.json"
     ledger = BatchLedger(path, fs=HadoopFS(spark))

@@ -111,13 +111,15 @@ def test_blas_path_matches_literal_path(spark):
             "ordered-accumulation contract is broken"
         )
     bad = spark.createDataFrame(
-        [(1, [1.0, 2.0]), (2, None)], "vec_id long, embedding array<double>"
+        [(1, [1.0, 2.0]), (2, None), (3, [1.0, None] + [2.0] * 62)],
+        "vec_id long, embedding array<double>",
     )
-    out = {
-        r.vec_id: r.proj
-        for r in jl_project(bad, 4, in_dim=64, method="blas").collect()
-    }
-    assert out[1] is None and out[2] is None
+    for m in ("literal", "blas"):
+        out = {
+            r.vec_id: r.proj
+            for r in jl_project(bad, 4, in_dim=64, method=m).collect()
+        }
+        assert out == {1: None, 2: None, 3: None}, m
     # a NaN ELEMENT projects to NaN VALUES on both paths (r17, r16
     # advice: the blas op emits an explicitly-masked Arrow ListArray,
     # so the NaN is not coerced to SQL NULL on the way back); list ==

@@ -235,6 +235,54 @@ def test_vector_boundary_nan_is_a_value_null_raises(spark):
         kmeans_embeddings(vecs, k=2, iters=1)
 
 
+def test_zero_norm_cosine_is_null_on_every_path(spark):
+    """An all-zeros vector has no cosine: ``cosine_pairs_blas`` gives
+    SQL NULL exactly as ``COSINE_EXPR``'s ``nullif`` does, so the IVF
+    rerank (scored by ``cosine_pairs_blas``) ranks it last like brute
+    force, never as a 0.0 neighbour above negative cosines."""
+    from development_of_a_streaming_pipeline_to_ingest_dcache_billing_data_to_hive_hdfs_spark.operators.similarity import (  # noqa: E501
+        COSINE_EXPR,
+        cosine_pairs_blas,
+        ivf_cosine_topk,
+    )
+
+    one = spark.createDataFrame(
+        [(1, [0.0, 0.0], [1.0, 1.0])],
+        "id long, q_vec array<double>, c_vec array<double>",
+    )
+    row = (
+        cosine_pairs_blas(one)
+        .withColumn("expr", F.expr(COSINE_EXPR.format(a="q_vec", b="c_vec")))
+        .collect()[0]
+    )
+    assert row.cos is None and row.expr is None, row
+
+    corpus = spark.createDataFrame(
+        [
+            (1, [1.0, 0.0]),
+            (2, [-1.0, 0.25]),
+            (3, [-1.0, -0.5]),
+            (4, [0.0, 0.0]),
+            (5, [0.5, 0.5]),
+        ],
+        "vec_id long, embedding array<double>",
+    )
+
+    def ranked(df):
+        return sorted(
+            (r.query_id, r.rank, r.neighbor_id, r.cos)
+            for r in df.select("query_id", "rank", "neighbor_id", "cos").collect()
+        )
+
+    brute = ranked(cosine_topk_bruteforce(corpus, corpus, k=4))
+    ivf = ranked(ivf_cosine_topk(corpus, corpus, k=4, n_lists=1, n_probe=1))
+    assert [r[:3] for r in ivf] == [r[:3] for r in brute]
+    for (*_, a), (*_, b) in zip(ivf, brute):
+        assert (a is None and b is None) or a == pytest.approx(b, abs=1e-12)
+    # query 1's neighbours: the zero vector last, below both negatives
+    assert [r[2:] for r in brute if r[0] == 1][-1] == (4, None)
+
+
 def test_token_count_and_lang(spark):
     df = spark.createDataFrame(
         [(1, "The cat and the dog, it was fine."), (2, "   "), (3, "el la de que y en un")],
