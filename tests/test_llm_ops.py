@@ -243,6 +243,7 @@ def test_zero_norm_cosine_is_null_on_every_path(spark):
     from development_of_a_streaming_pipeline_to_ingest_dcache_billing_data_to_hive_hdfs_spark.operators.similarity import (  # noqa: E501
         COSINE_EXPR,
         cosine_pairs_blas,
+        cosine_topk_quantized,
         ivf_cosine_topk,
     )
 
@@ -279,8 +280,12 @@ def test_zero_norm_cosine_is_null_on_every_path(spark):
     assert [r[:3] for r in ivf] == [r[:3] for r in brute]
     for (*_, a), (*_, b) in zip(ivf, brute):
         assert (a is None and b is None) or a == pytest.approx(b, abs=1e-12)
-    # query 1's neighbours: the zero vector last, below both negatives
+    # query 1's neighbours: the zero vector last, below both negatives,
+    # on the int8 path too
     assert [r[2:] for r in brute if r[0] == 1][-1] == (4, None)
+    quant = ranked(cosine_topk_quantized(corpus, corpus, k=4))
+    assert [r[2] for r in quant if r[0] == 1] == [r[2] for r in brute if r[0] == 1]
+    assert [r[3] for r in quant if r[0] == 1][-1] is None
 
 
 def test_token_count_and_lang(spark):
