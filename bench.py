@@ -764,7 +764,7 @@ def main() -> None:
         app_name="bench", master=f"local[{cpus}]", shuffle_partitions=int(cpus)
     )
     # Warm-up: run EVERY bench query once at the TARGET SF so codegen
-    # JIT, the Python-worker pool (mapInPandas forks 1 worker/core on
+    # JIT, the Python-worker pool (mapInArrow forks 1 worker/core on
     # first use, ~10 s), and the OS page cache for the input parquet
     # (cold VM disk reads dominate first touch: 26 s vs 3.4 s for the
     # same query) are all paid before timing — the timed numbers measure

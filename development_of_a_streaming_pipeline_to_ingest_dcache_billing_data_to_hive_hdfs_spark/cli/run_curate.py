@@ -5,7 +5,7 @@ of the ingestion story the operator modules implement piecewise
 and the front half whose output run_export ships back out as shards.
 
 One logical pass over the corpus: extraction and the token gate are
-scan-stage / mapInPandas work, exact dedup is the single shuffle (md5
+scan-stage / mapInArrow work, exact dedup is the single shuffle (md5
 fingerprint groupBy, min doc wins), and the write sizes files by rows
 (maxRecordsPerFile — no small-file storm, no repartition games). Stage
 counts (parsed / after-gate / written) cost one extra action each and

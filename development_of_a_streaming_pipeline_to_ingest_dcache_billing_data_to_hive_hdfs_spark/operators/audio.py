@@ -8,7 +8,7 @@ ubiquitous uncompressed format. Compressed formats (mp3/ogg/flac) stay
 honestly gated in multimodal.py.
 
 Like the image path, this is the *codec step* inside Arrow-batched
-``mapInPandas`` — embarrassingly parallel, no shuffle; a production
+``mapInArrow`` — embarrassingly parallel, no shuffle; a production
 deployment swaps in librosa/ffmpeg behind the same signatures.
 """
 

@@ -22,7 +22,7 @@ container writer + the independent JPEG encoder, frame-content checks
 included (frame k carries a distinct closed-form luma).
 
 Scale note: like the codecs, this is the per-row step inside
-Arrow-batched ``mapInPandas`` (multimodal.extract_features /
+Arrow-batched ``mapInArrow`` (multimodal.extract_features /
 sample_frames) — embarrassingly parallel, no shuffle.
 """
 

@@ -8,7 +8,7 @@ compress far below prose, and near-random noise doesn't compress at all
 
 Unlike the rest of the text operators this is NOT expressible as a JVM
 column expression — DEFLATE needs a real compressor — so it runs as an
-Arrow-batched ``mapInPandas`` over the scan: embarrassingly parallel,
+Arrow-batched ``mapInArrow`` over the scan: embarrassingly parallel,
 no shuffle, zlib is C-speed, and each batch stays columnar until the
 per-row compress call. The driver-facing correctness story is the
 invariant gate ``q_llm_compression_check`` (expected-empty): zlib has
@@ -22,9 +22,10 @@ from __future__ import annotations
 import zlib
 from collections.abc import Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 #: DEFLATE worst case is ~5 bytes per 65 535-byte stored block + 6 bytes
 #: of zlib header/adler trailer; +64 is a generous slack for tiny inputs.
@@ -44,7 +45,7 @@ def with_compression_signals(
     - ``zlib_roundtrip_ok`` decompress(compress(x)) == x, carried so the
       invariant gate can assert the codec contract without a second pass
 
-    All input columns pass through unchanged. One ``mapInPandas`` in the
+    All input columns pass through unchanged. One ``mapInArrow`` in the
     scan stage: no shuffle, output rows == input rows, so the operator
     composes with any downstream gate exactly like a column expression.
     """
@@ -58,13 +59,13 @@ def with_compression_signals(
         ]
     )
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+    def op(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
             raw_lens: list[int | None] = []
             clens: list[int | None] = []
             ratios: list[float | None] = []
             ok: list[bool | None] = []
-            for text in pdf[col]:
+            for text in rb.column(col).to_pylist():
                 if text is None or text == "":
                     raw_lens.append(None if text is None else 0)
                     clens.append(None)
@@ -77,14 +78,18 @@ def with_compression_signals(
                 clens.append(len(comp))
                 ratios.append(len(comp) / len(raw))
                 ok.append(zlib.decompress(comp) == raw)
-            out = pdf.copy()
-            out["utf8_len"] = pd.array(raw_lens, dtype="Int64")
-            out["zlib_len"] = pd.array(clens, dtype="Int64")
-            out["zlib_ratio"] = pd.array(ratios, dtype="float64")
-            out["zlib_roundtrip_ok"] = pd.array(ok, dtype="boolean")
-            yield out
+            yield pa.RecordBatch.from_arrays(
+                rb.columns
+                + [
+                    pa.array(raw_lens, pa.int64()),
+                    pa.array(clens, pa.int64()),
+                    pa.array(ratios, pa.float64()),
+                    pa.array(ok, pa.bool_()),
+                ],
+                names=out_schema.names,
+            )
 
-    return df.mapInPandas(op, out_schema)
+    return df.mapInArrow(op, out_schema)
 
 
 def compression_invariant_violations(
@@ -115,12 +120,14 @@ def compression_invariant_violations(
         ]
     )
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+    def op(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
             kinds: list[str] = []
             ids: list[int] = []
             details: list[float] = []
-            for doc_id, text in zip(pdf[id_col], pdf[col]):
+            for doc_id, text in zip(
+                rb.column(id_col).to_pylist(), rb.column(col).to_pylist()
+            ):
                 if text is None or text == "":
                     continue
                 raw = text.encode("utf-8")
@@ -139,12 +146,9 @@ def compression_invariant_violations(
                         kinds.append("repeat")
                         ids.append(doc_id)
                         details.append(float(len(rep)))
-            yield pd.DataFrame(
-                {
-                    "kind": pd.array(kinds, dtype="object"),
-                    id_col: pd.array(ids, dtype="Int64"),
-                    "detail": pd.array(details, dtype="float64"),
-                }
+            yield pa.RecordBatch.from_pydict(
+                {"kind": kinds, id_col: ids, "detail": details},
+                schema=to_arrow_schema(out_schema),
             )
 
-    return df.mapInPandas(op, out_schema)
+    return df.mapInArrow(op, out_schema)

@@ -5,7 +5,7 @@ Crawl's .wet files are exactly this transform applied at crawl scale).
 Parsing is stdlib ``html.parser.HTMLParser`` (a real tokenizer —
 attribute values containing '>' and comments containing tags do not
 confuse it the way a regex stripper does) inside Arrow-batched
-``mapInPandas``: no JVM expression exists for this, and per-batch
+``mapInArrow``: no JVM expression exists for this, and per-batch
 Python over a tokenizer is the engine's standard codec boundary (the
 multimodal decoders' shape). One scan, no shuffle.
 
@@ -35,6 +35,7 @@ from __future__ import annotations
 import re
 from html.parser import HTMLParser
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
 __all__ = ["html_to_text", "extract_text"]
@@ -97,16 +98,18 @@ def extract_text(
     df: DataFrame, html_col: str = "html", out_col: str = "text"
 ) -> DataFrame:
     """Append ``out_col`` = extracted text of ``html_col`` via
-    Arrow-batched ``mapInPandas`` — one corpus scan, no shuffle, the
+    Arrow-batched ``mapInArrow`` — one corpus scan, no shuffle, the
     codec-boundary shape shared with the multimodal decoders."""
     out_fields = ", ".join(
         f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema
     )
 
     def op(batches):
-        for batch in batches:
-            batch = batch.copy()
-            batch[out_col] = batch[html_col].map(html_to_text)
-            yield batch
+        for rb in batches:
+            text = [html_to_text(h) for h in rb.column(html_col).to_pylist()]
+            yield pa.RecordBatch.from_arrays(
+                rb.columns + [pa.array(text, pa.string())],
+                names=rb.schema.names + [out_col],
+            )
 
-    return df.mapInPandas(op, f"{out_fields}, `{out_col}` string")
+    return df.mapInArrow(op, f"{out_fields}, `{out_col}` string")

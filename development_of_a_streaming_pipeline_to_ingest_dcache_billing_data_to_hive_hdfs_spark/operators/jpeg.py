@@ -24,7 +24,7 @@ codecs: the test side implements the FORWARD direction from the spec,
 so a shared misreading cannot cancel out.
 
 Scale note: like the other codecs this is the per-row step inside
-Arrow-batched ``mapInPandas`` (embarrassingly parallel, no shuffle); a
+Arrow-batched ``mapInArrow`` (embarrassingly parallel, no shuffle); a
 production deployment swaps in libjpeg-turbo behind the same
 signature without touching the Spark plumbing.
 """

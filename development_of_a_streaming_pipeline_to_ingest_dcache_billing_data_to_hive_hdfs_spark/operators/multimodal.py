@@ -1,5 +1,5 @@
 """Multimodal column plumbing: image/audio/video as opaque binary columns
-with typed metadata, processed via Arrow-batched mapInPandas.
+with typed metadata, processed via Arrow-batched mapInArrow.
 
 The Spark-side architecture is real and tested — schema contracts, batch
 iteration, partition sizing. The codec step is REAL for PNG images: a
@@ -14,7 +14,7 @@ stand-in so the distributed plumbing is exercised regardless.
 At 100 TB: binary payloads dominate partition size, so media tables are
 repartitioned by target *bytes* (``media_repartition``), not row counts,
 before any decode pass; the decode itself is embarrassingly parallel
-mapInPandas with no shuffle.
+mapInArrow with no shuffle. A NULL payload crosses as an Arrow null.
 """
 
 from __future__ import annotations
@@ -23,10 +23,12 @@ import hashlib
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -143,7 +145,7 @@ def extract_features(
     media: DataFrame, fake: bool = True, on_error: str = "null"
 ) -> DataFrame:
     """media frame → per-item feature vectors via Arrow-batched
-    mapInPandas. No shuffle; each partition streams pandas batches.
+    mapInArrow. No shuffle; each partition streams Arrow batches.
 
     Executor-side error policy (``on_error``): the codecs' documented
     contract is ValueError for malformed bytes and NotImplementedError
@@ -165,22 +167,24 @@ def extract_features(
                 raise
             return None
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+    def op(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
+            payloads = rb.column("payload").to_pylist()
             feats = [
                 decode_or_null(p, k) if p is not None else None
-                for p, k in zip(pdf["payload"], pdf["kind"])
+                for p, k in zip(payloads, rb.column("kind").to_pylist())
             ]
-            yield pd.DataFrame(
+            yield pa.RecordBatch.from_pydict(
                 {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "n_bytes": pdf["payload"].map(lambda b: len(b) if b is not None else 0),
+                    "media_id": rb.column("media_id"),
+                    "kind": rb.column("kind"),
+                    "n_bytes": [len(p) if p is not None else 0 for p in payloads],
                     "features": feats,
-                }
+                },
+                schema=to_arrow_schema(FEATURES_SCHEMA),
             )
 
-    return media.mapInPandas(op, FEATURES_SCHEMA)
+    return media.mapInArrow(op, FEATURES_SCHEMA)
 
 
 RESIZED_SCHEMA = T.StructType(
@@ -214,7 +218,7 @@ def _fake_resize(payload: bytes, width: int, height: int) -> bytes:
 def resize_images(
     media: DataFrame, width: int, height: int, fake: bool = True
 ) -> DataFrame:
-    """Resize pass over an image table via Arrow-batched mapInPandas —
+    """Resize pass over an image table via Arrow-batched mapInArrow —
     same no-shuffle shape as extract_features. With ``fake=False`` PNG
     payloads are really resized (decode → nearest-neighbor resample →
     re-encode, all stdlib+numpy in png.py); non-PNG payloads raise, as
@@ -232,22 +236,24 @@ def resize_images(
 
     one = (lambda p: _fake_resize(p, width, height)) if fake else _real_resize
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
+    def op(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
+            n = rb.num_rows
+            yield pa.RecordBatch.from_pydict(
                 {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
+                    "media_id": rb.column("media_id"),
+                    "kind": rb.column("kind"),
                     "payload": [
                         one(p) if p is not None else None
-                        for p in pdf["payload"]
+                        for p in rb.column("payload").to_pylist()
                     ],
-                    "width": width,
-                    "height": height,
-                }
+                    "width": [width] * n,
+                    "height": [height] * n,
+                },
+                schema=to_arrow_schema(RESIZED_SCHEMA),
             )
 
-    return media.mapInPandas(op, RESIZED_SCHEMA)
+    return media.mapInArrow(op, RESIZED_SCHEMA)
 
 
 def sample_frames(
@@ -255,7 +261,7 @@ def sample_frames(
 ) -> DataFrame:
     """Frame sampling for video rows: one output row per sampled frame
     (media_id, frame_idx, ts_ms, payload). Row expansion happens inside
-    mapInPandas — no shuffle, output size = duration/every_ms per video.
+    mapInArrow — no shuffle, output size = duration/every_ms per video.
 
     ``fake=False`` extracts REAL frames from MJPEG-in-AVI payloads: the
     RIFF walk (avi.py) yields the container's JPEG frame chunks, one
@@ -266,12 +272,15 @@ def sample_frames(
     payload stubs, duration-driven counts)."""
     if not fake:
 
-        def real_op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        def real_op(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
             from .avi import avi_info, is_avi, iter_video_frames
 
-            for pdf in batches:
+            for rb in batches:
                 ids, idxs, tss, payloads = [], [], [], []
-                for mid, payload in zip(pdf["media_id"], pdf["payload"]):
+                for mid, payload in zip(
+                    rb.column("media_id").to_pylist(),
+                    rb.column("payload").to_pylist(),
+                ):
                     if payload is None:
                         continue
                     payload = bytes(payload)
@@ -295,53 +304,57 @@ def sample_frames(
                         tss.append(k * every_ms)
                         payloads.append(frames[fi])
                         k += 1
-                yield pd.DataFrame(
-                    {
-                        "media_id": pd.Series(ids, dtype="int64"),
-                        "frame_idx": pd.Series(idxs, dtype="int32"),
-                        "ts_ms": pd.Series(tss, dtype="int64"),
-                        "payload": pd.Series(payloads, dtype="object"),
-                    }
-                )
+                yield _frames_batch(ids, idxs, tss, payloads)
 
-        return media.mapInPandas(real_op, FRAMES_SCHEMA)
+        return media.mapInArrow(real_op, FRAMES_SCHEMA)
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+    def op(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
             # Vectorized row→frame expansion: frame counts, repeat
             # indices and per-frame timestamps all come from numpy index
-            # arithmetic (no iterrows). Only the per-OUTPUT-frame digest
-            # below is Python — that list comprehension stands exactly
-            # where the real frame decode (pyav) would, and is bounded
-            # by output volume, not input rows.
-            dur = pd.to_numeric(pdf["duration_ms"], errors="coerce")
-            keep = dur.notna() & pdf["payload"].notna()
-            sub = pdf.loc[keep]
-            n_frames = np.maximum(
-                1, (dur.loc[keep].to_numpy(dtype=np.int64) // every_ms)
+            # arithmetic (no per-row loop). Only the per-OUTPUT-frame
+            # digest below is Python — that list comprehension stands
+            # exactly where the real frame decode (pyav) would, and is
+            # bounded by output volume, not input rows.
+            sub = rb.filter(
+                pc.and_(
+                    pc.is_valid(rb.column("duration_ms")),
+                    pc.is_valid(rb.column("payload")),
+                )
             )
-            rep = np.repeat(np.arange(len(sub)), n_frames)
+            n_frames = np.maximum(
+                1,
+                sub.column("duration_ms").to_numpy(zero_copy_only=False).astype(np.int64)
+                // every_ms,
+            )
+            rep = np.repeat(np.arange(sub.num_rows), n_frames)
             ends = np.cumsum(n_frames)
             frame_idx = np.arange(int(ends[-1]) if len(ends) else 0) - np.repeat(
                 ends - n_frames, n_frames
             )
-            payloads_in = sub["payload"].to_numpy()
+            payloads_in = sub.column("payload").to_pylist()
             payloads = [
                 hashlib.sha256(
-                    bytes(payloads_in[r]) + int(i).to_bytes(4, "big")
+                    payloads_in[r] + int(i).to_bytes(4, "big")
                 ).digest()
                 for r, i in zip(rep, frame_idx)
             ]
-            yield pd.DataFrame(
-                {
-                    "media_id": sub["media_id"].to_numpy()[rep],
-                    "frame_idx": frame_idx.astype(np.int32),
-                    "ts_ms": frame_idx.astype(np.int64) * every_ms,
-                    "payload": payloads,
-                }
+            yield _frames_batch(
+                sub.column("media_id").to_numpy(zero_copy_only=False)[rep],
+                frame_idx,
+                frame_idx.astype(np.int64) * every_ms,
+                payloads,
             )
 
-    return media.mapInPandas(op, FRAMES_SCHEMA)
+    return media.mapInArrow(op, FRAMES_SCHEMA)
+
+
+def _frames_batch(ids, idxs, tss, payloads) -> pa.RecordBatch:
+    """One ``FRAMES_SCHEMA`` Arrow batch from its four columns."""
+    return pa.RecordBatch.from_pydict(
+        {"media_id": ids, "frame_idx": idxs, "ts_ms": tss, "payload": payloads},
+        schema=to_arrow_schema(FRAMES_SCHEMA),
+    )
 
 
 def media_repartition(

@@ -4,8 +4,8 @@ fingerprinting (zero-width chars, C0/C1 control chars, whitespace
 collapse).
 
 Spark has no built-in Unicode-normalization expression, so the form
-conversion is an Arrow-batched pandas UDF (the repo's sanctioned Python
-path — never row-at-a-time). It is still a SCAN-STAGE projection: no
+conversion is a scalar Arrow UDF (the repo's one Python-worker boundary
+— never row-at-a-time). It is still a SCAN-STAGE projection: no
 shuffle, no state, composable with any other column expression. The
 NFC form has a hard DuckDB oracle (``nfc_normalize`` — utf8proc vs
 CPython's unicodedata, both implementing UAX #15), driver-gated in
@@ -22,6 +22,7 @@ from __future__ import annotations
 import re
 import unicodedata
 
+import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -55,19 +56,21 @@ def normalize_text_col(
     if form not in _FORMS:
         raise ValueError(f"form must be one of {_FORMS}, got {form!r}")
 
-    # no pd.Series type hints: pandas stays a local import (module import
-    # is Spark-session-free) and the explicit returnType drives dispatch
+    def one(s: str) -> str:
+        t = unicodedata.normalize(form, s)
+        if strip_zero_width:
+            t = t.translate(_ZERO_WIDTH_TABLE)
+        if strip_controls:
+            t = _CONTROL_RE.sub("", t)
+        if collapse_whitespace:
+            t = _WS_RE.sub(" ", t).strip()
+        return t
+
+    # no type hints: the default scalar Arrow UDF (array in, array out)
     def _normalize(batch):
-        def one(s: str) -> str:
-            t = unicodedata.normalize(form, s)
-            if strip_zero_width:
-                t = t.translate(_ZERO_WIDTH_TABLE)
-            if strip_controls:
-                t = _CONTROL_RE.sub("", t)
-            if collapse_whitespace:
-                t = _WS_RE.sub(" ", t).strip()
-            return t
+        return pa.array(
+            [None if s is None else one(s) for s in batch.to_pylist()],
+            pa.string(),
+        )
 
-        return batch.map(one, na_action="ignore")
-
-    return F.pandas_udf(_normalize, "string")(F.col(col))
+    return F.arrow_udf(_normalize, "string")(F.col(col))

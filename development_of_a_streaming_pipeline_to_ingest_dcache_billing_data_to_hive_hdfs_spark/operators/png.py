@@ -10,7 +10,7 @@ chunk walking, inflate, per-scanline unfiltering (filters 0–4 per the
 PNG spec §6), and the reverse for encoding (filter 0 rows).
 
 Scale note: this codec is the *codec step* inside Arrow-batched
-``mapInPandas`` operators (multimodal.py) — embarrassingly parallel,
+``mapInArrow`` operators (multimodal.py) — embarrassingly parallel,
 no shuffle. A production deployment swaps ``decode_png``/``encode_png``
 for Pillow-SIMD/opencv behind the same signatures; the Spark-side
 plumbing does not change.

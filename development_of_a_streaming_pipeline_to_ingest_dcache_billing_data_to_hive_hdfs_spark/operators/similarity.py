@@ -632,7 +632,6 @@ def jl_project(
     out_col: str = "proj",
     salt: str = "jl-v1",
     in_dim: int | None = None,
-    method: str = "auto",
 ) -> DataFrame:
     """Random-projection dimensionality reduction (Johnson–Lindenstrauss):
     ``y[j] = (1/√out_dim) · Σ_i x[i]·s[i][j]`` with the portable ±1 sign
@@ -643,33 +642,25 @@ def jl_project(
     norms are preserved within the JL distortion bound, and E‖y‖² = ‖x‖²
     exactly for Rademacher signs.
 
-    The matrix embeds as PLAN LITERALS (the prototypicality pattern):
-    each output coordinate is one ordered ``zip_with``+``aggregate``
-    double fold, the whole operator ONE codegen'd scan-stage projection
-    — zero joins, shuffles, or Python at any corpus size. The same
-    plan-literal budget applies: past ~100k literals (e.g. 4096×64),
-    the expression tree is the bottleneck — batch a broadcast ndarray
-    matmul through ``mapInArrow`` instead (the ``ivf_assign`` shape).
+    S (in_dim × out_dim, UNSCALED ±1 signs) is built once on the driver
+    from the md5 signs and ships in the serialized operator (executors
+    get it once per task, not per row). Each Arrow batch accumulates
+    ``Y += X[:, i:1] * S[i, :]`` over the input dims IN ORDER and
+    multiplies by 1/√out_dim once at the end: products first, additions
+    in index order, scale applied to the finished sum — a fixed float
+    operation sequence (a single dgemm could re-associate the additions;
+    in_dim vectorized accumulations cost the same at these shapes and
+    keep the order deterministic), pinned bit-for-bit against a
+    pure-Python reference in tests/test_jl_projection.py.
 
     ``in_dim`` is probed from one row when not given (bounded collect).
     Appends ``out_col`` as array<double>; rows whose vector is NULL,
     wrong-length or holds a NULL element yield NULL (loud downstream,
-    never silent truncation).
-
-    ``method``: ``"literal"`` (plan-literal folds, JVM-only),
-    ``"blas"`` (the matrix ships once in the serialized op and each
-    Arrow batch projects with in_dim vectorized fused accumulations —
-    the bulk path), or ``"auto"`` (literal under the 100k budget, blas
-    above). The blas path accumulates in INPUT-DIM ORDER with the
-    unscaled ±1 signs and applies 1/√out_dim after the sum — the
-    identical float operation sequence as the literal fold, so the two
-    paths are BIT-EQUAL per element (pinned in
-    tests/test_jl_projection.py), not merely close.
+    never silent truncation), and a NaN element stays a NaN value
+    (``_read_vectors``/``_write_vectors``).
     """
     if out_dim <= 0:
         raise ValueError(f"out_dim must be positive: {out_dim}")
-    if method not in ("auto", "literal", "blas"):
-        raise ValueError(f"unknown method: {method}")
     if in_dim is None:
         # probe a NON-NULL row: size(NULL) is NULL and the first row may
         # be one of the NULL vectors the output contract tolerates
@@ -683,60 +674,6 @@ def jl_project(
                 "cannot probe in_dim of an empty (or all-NULL) DataFrame"
             )
         in_dim = probe.n
-    over_budget = in_dim * out_dim > 100_000
-    if method == "auto":
-        method = "blas" if over_budget else "literal"
-    if method == "literal" and over_budget:
-        raise ValueError(
-            f"{in_dim}x{out_dim} = {in_dim * out_dim} literals exceed the "
-            "plan-literal budget (100k); use method='blas' (broadcast "
-            "matmul) for projections this large"
-        )
-    if method == "blas":
-        return _jl_project_blas(
-            df, in_dim, out_dim, vec_col, out_col, salt
-        )
-    signs = jl_sign_matrix(in_dim, out_dim, salt)
-    inv_root = 1.0 / math.sqrt(out_dim)
-    vec = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    coords = []
-    for j in range(out_dim):
-        col_j = F.array(*[F.lit(signs[i][j]) for i in range(in_dim)])
-        dot = F.aggregate(
-            F.zip_with(vec, col_j, lambda a, b: a * b),
-            F.lit(0.0),
-            lambda s, v: s + v,
-        )
-        coords.append(dot * F.lit(inv_root))
-    proj = F.when(
-        (F.size(vec_col) == in_dim) & ~F.exists(vec_col, lambda x: x.isNull()),
-        F.array(*coords),
-    )
-    return df.withColumn(out_col, proj)
-
-
-def _jl_project_blas(
-    df: DataFrame,
-    in_dim: int,
-    out_dim: int,
-    vec_col: str,
-    out_col: str,
-    salt: str,
-) -> DataFrame:
-    """Bulk JL path: S (in_dim × out_dim, UNSCALED ±1 signs) is built
-    once on the driver from the same md5 signs and ships in the
-    serialized operator (executors get it once per task, not per row).
-    Each Arrow batch accumulates ``Y += X[:, i:1] * S[i, :]`` over the
-    input dims IN ORDER and multiplies by 1/√out_dim once at the end —
-    the exact float operation sequence of the literal path's
-    ``aggregate`` left fold (products first, additions in index order,
-    scale applied to the finished sum), so the two paths are BIT-EQUAL
-    per element, not merely close (a single dgemm could re-associate
-    the additions; in_dim vectorized accumulations cost the same at
-    these shapes and keep the order deterministic). A NULL,
-    wrong-length or NULL-element vector projects to NULL and a NaN
-    element stays a NaN value (``_read_vectors``/``_write_vectors``),
-    so the NULL-row contract and NaN values match the literal path."""
     S = np.asarray(jl_sign_matrix(in_dim, out_dim, salt), dtype=np.float64)
     inv_root = 1.0 / math.sqrt(out_dim)
     out_fields = ", ".join(
@@ -748,7 +685,7 @@ def _jl_project_blas(
             X, ok = _read_vectors(rb.column(vec_col), in_dim)
             Y = np.zeros((len(X), out_dim), dtype=np.float64)
             for i in range(in_dim):
-                # same op order as the literal fold: s + (a_i * b_ij)
+                # fixed op order: s + (a_i * b_ij), index ascending
                 Y += X[:, i : i + 1] * S[i, :]
             Y *= inv_root
             yield pa.RecordBatch.from_arrays(
@@ -1837,7 +1774,6 @@ def prototypicality(
     *,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    method: str = "literal",
 ) -> DataFrame:
     """Per-vector prototypicality: cosine similarity to the NEAREST of
     ``k`` given centroids, plus that centroid's index — the
@@ -1848,102 +1784,26 @@ def prototypicality(
     percentiles).
 
     ``centroids`` is a small in-memory sequence (k × d, e.g.
-    ``kmeans_embeddings``' ndarray) — k·d doubles ALWAYS fit in the
-    plan, so they are embedded as column literals and the whole
-    operator is ONE scan-stage projection: per-centroid cosines as
-    ordered double folds, argmax as a greatest/when chain with the
-    centroid INDEX as the deterministic tie-break on the 4-dp-rounded
-    score. Zero joins, zero shuffles, zero driver round trips at any
-    corpus size — unlike a crossJoin-against-centroids formulation,
-    which would shuffle k·N rows back through a groupBy(id).
+    ``kmeans_embeddings``' ndarray); it ships in the serialized operator.
+    One ``mapInArrow`` over (id, vec) computes the k UNROUNDED cosines
+    per batch — ``dot += x_i·c_i`` and ``n += x_i·x_i`` accumulate in
+    element order, the divisor is ``‖v‖·‖c‖`` with ‖c‖ from a plain
+    left-to-right Python sum — and yields them as k scalar columns. The
+    4-dp round, the greatest() argmax and the centroid-INDEX tie-break
+    stay JVM expressions over those scalars. Zero joins, zero shuffles,
+    zero driver round trips at any corpus size — unlike a
+    crossJoin-against-centroids formulation, which would shuffle k·N
+    rows back through a groupBy(id). The op order is pinned bit-for-bit
+    against a pure-Python reference in tests/test_prototypicality.py.
 
     Returns (``id_col``, ``cluster`` int, ``proto_cos`` double 4 dp).
-    Vectors are cast element-wise to double before any arithmetic, so
-    the fold matches the DuckDB oracle's double-list
-    ``list_cosine_similarity`` at 4 dp.
-
-    ``method``: ``"literal"`` (the plan-literal folds above) or
-    ``"arrow"`` (r16): one ``mapInArrow`` over (id, vec) computes the
-    k UNROUNDED cosines per batch with the identical float64 operation
-    sequence — dot and ‖v‖² accumulate in element order, the divisor
-    is (‖v‖·‖c‖) exactly as the literal expression — and the 4-dp
-    round, argmax and index tie-break stay JVM EXPRESSIONS over the k
-    scalar columns, so the two methods are BIT-EQUAL end to end
-    (pinned exactly in tests/test_prototypicality.py). The literal path pays
-    ~k·d py4j literal construction + a Catalyst tree in the plan and
-    ~k·d interpreted-HOF lambda evaluations PER ROW at execution; the
-    arrow path pays neither (the q_llm_jl_projection lesson at k=8).
+    Vectors widen element-wise to float64 before any arithmetic, so the
+    fold matches the DuckDB oracle's double-list
+    ``list_cosine_similarity`` at 4 dp. A NULL, wrong-length or
+    NULL-element vector yields NULL cosines, a zero-norm vector NULL
+    cosines, and a NaN ELEMENT a NaN cosine VALUE: the cosines cross as
+    explicitly masked Arrow arrays, which keep NaN distinct from NULL.
     """
-    if method not in ("literal", "arrow"):
-        raise ValueError(f"unknown method: {method}")
-    n_lits = sum(len(c) for c in centroids)
-    if method == "arrow":
-        return _prototypicality_arrow(embs, centroids, id_col, vec_col)
-    if n_lits > 100_000:
-        # plan-literal centroids stop being "metadata" around here: the
-        # expression tree itself becomes the bottleneck. Past the valve,
-        # assign with ivf_assign (broadcast ndarray + one BLAS matmul
-        # per Arrow batch) and compute the cosine in that path instead.
-        raise ValueError(
-            f"{len(centroids)} centroids x dim = {n_lits} literals "
-            "exceed the plan-literal budget (100k); use ivf_assign's "
-            "broadcast-matmul path for IVF-scale centroid sets"
-        )
-    vec = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    norm_v = F.sqrt(
-        F.aggregate(vec, F.lit(0.0), lambda s, v: s + v * v)
-    )
-    cos_r = []
-    for c in centroids:
-        c = [float(x) for x in c]
-        lit_arr = F.array(*[F.lit(x) for x in c])
-        dot = F.aggregate(
-            F.zip_with(vec, lit_arr, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda s, v: s + v,
-        )
-        # plain left-to-right double sum: the same fold order the
-        # engines use (fsum's exact summation would diverge in ulp)
-        norm_c = math.sqrt(sum(x * x for x in c))
-        if norm_c == 0.0:
-            raise ValueError("zero-norm centroid")
-        cos_r.append(
-            F.round(
-                F.when(norm_v > 0, dot / (norm_v * F.lit(norm_c))), 4
-            )
-        )
-    best = F.greatest(*cos_r) if len(cos_r) > 1 else cos_r[0]
-    cluster = F.lit(None).cast("int")
-    for i in reversed(range(len(cos_r))):
-        cluster = F.when(cos_r[i] == best, F.lit(i)).otherwise(cluster)
-    return embs.select(
-        F.col(id_col),
-        cluster.alias("cluster"),
-        best.alias("proto_cos"),
-    )
-
-
-def _prototypicality_arrow(
-    embs: DataFrame,
-    centroids,
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """Arrow twin of the literal prototypicality path: each batch
-    computes the k UNROUNDED cosines with the literal fold's exact
-    float64 operation sequence — ``dot += x_i·c_i`` and
-    ``n += x_i·x_i`` accumulate in element order, the divisor is
-    ``‖v‖·‖c‖`` with ‖c‖ from the same plain left-to-right Python sum
-    — and yields them as k scalar columns. Rounding (4 dp), the
-    greatest() argmax and the index tie-break remain JVM expressions
-    over those scalars, identical to the literal path's tail, so the
-    whole operator is bit-equal to it. NULL contract preserved: a NULL,
-    wrong-length or NULL-element vector yields NULL cosines (the literal
-    path's zip_with/aggregate NULL propagation), a zero-norm vector NULL
-    cosines (the ``when(norm_v > 0)`` guard), and a NaN ELEMENT in the
-    data a NaN cosine VALUE — Spark's NaN > 0 is true, so the guard
-    passes it, and the cosines cross as explicitly masked Arrow arrays,
-    which keep NaN distinct from NULL."""
     C_rows = [[float(x) for x in c] for c in centroids]
     k = len(C_rows)
     if k == 0:
@@ -1966,16 +1826,16 @@ def _prototypicality_arrow(
             dots = np.zeros((X.shape[0], k))
             nsq = np.zeros(X.shape[0])
             for i in range(dim):
-                # literal-fold op order: s + (x_i * c_i), element
-                # index ascending — NOT one dgemm, which could
-                # re-associate the additions
+                # fixed op order: s + (x_i * c_i), element index
+                # ascending — NOT one dgemm, which could re-associate
+                # the additions
                 dots += X[:, i : i + 1] * C[:, i][None, :]
                 nsq += X[:, i] * X[:, i]
             nv = np.sqrt(nsq)
             with np.errstate(divide="ignore", invalid="ignore"):
                 cos = dots / (nv[:, None] * norm_c[None, :])
             # one row per cosine column; NULL for invalid vectors and
-            # for the literal path's when(norm > 0) guard
+            # for zero-norm ones
             cols = np.zeros((k, rb.num_rows))
             rows = np.flatnonzero(ok)
             cols[:, rows] = cos.T

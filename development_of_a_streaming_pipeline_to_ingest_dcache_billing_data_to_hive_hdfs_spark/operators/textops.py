@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import re
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
@@ -974,24 +975,20 @@ def bpe_encode_words(
 
     The Python encode loop (inherently sequential per word: merges
     apply in rank order) runs ONLY over distinct words inside
-    mapInPandas — vocab-bounded, the same reduction as training — and
+    mapInArrow — vocab-bounded, the same reduction as training — and
     per-document tokenization becomes a plain join of the token stream
     against this (broadcastable) encoding table: no per-token Python
     anywhere at corpus scale.
 
     Output: (word, pieces array<string>, n_pieces)."""
-    import pandas as pd
-
     sc = docs.sparkSession.sparkContext
     b_ranks = sc.broadcast({pair: i for i, pair in enumerate(merges)})
 
     def op(batches):
         ranks = b_ranks.value
         for batch in batches:
-            if not len(batch):
-                continue
-            out_words, out_pieces = [], []
-            for w in batch["word"]:
+            out_pieces = []
+            for w in batch.column("word").to_pylist():
                 syms = list(w)
                 while len(syms) > 1:
                     best, best_rank = None, None
@@ -1002,16 +999,18 @@ def bpe_encode_words(
                     if best is None:
                         break
                     syms[best : best + 2] = [syms[best] + syms[best + 1]]
-                out_words.append(w)
                 out_pieces.append(syms)
-            yield pd.DataFrame({"word": out_words, "pieces": out_pieces})
+            yield pa.RecordBatch.from_arrays(
+                [batch.column("word"), pa.array(out_pieces, pa.list_(pa.string()))],
+                names=["word", "pieces"],
+            )
 
     from .dedup import spread_partitions
 
     words = spread_partitions(
         docs.select(F.explode(tokens_col(text_col)).alias("word")).distinct()
     )
-    enc = words.mapInPandas(op, "word string, pieces array<string>")
+    enc = words.mapInArrow(op, "word string, pieces array<string>")
     return enc.withColumn("n_pieces", F.size("pieces"))
 
 
@@ -1469,15 +1468,15 @@ def char_entropy_col(col: str = "text") -> Column:
     oracle-expressible where DEFLATE is not, so this one gets a hard
     DuckDB parity gate.
 
-    Arrow-vectorized scalar pandas_udf: still a scan-stage projection
+    Scalar Arrow UDF: still a scan-stage projection
     with NO explode and NO shuffle (the histogram never leaves the
     row), but the per-char work runs as one ``np.unique`` over the
     doc's codepoint array instead of interpreted higher-order-function
     lambdas — Spark's ``aggregate``/``transform`` are CodegenFallback
     and cost ~µs per ELEMENT, which made this the #2 bench query;
     measured 5.9× faster at sf0.1 (5.2 s → 0.89 s) with the identical
-    plan shape. The HOF run-length-fold formulation is kept as
-    ``_char_entropy_hof_col`` and pinned equal (≤1e-12) by
+    plan shape. The HOF run-length-fold formulation is kept as the test
+    witness ``_char_entropy_hof_col`` and pinned equal (≤1e-12) by
     tests/test_script_entropy.py.
 
     Oracle-parity argument, mirrored from the fold version it replaces:
@@ -1494,48 +1493,38 @@ def char_entropy_col(col: str = "text") -> Column:
     import math
 
     import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import DoubleType
 
+    def one(t):
+        if t is None or len(t) == 0:
+            return None
+        # explicit little-endian dtype: the bytes are utf-32-LE, so
+        # native-endian uint32 would byte-swap codepoints on a
+        # big-endian host and reorder np.unique's sorted fold,
+        # breaking the summation-order parity argument (r11 advice)
+        _, counts = np.unique(
+            np.frombuffer(t.encode("utf-32-le", "surrogatepass"), dtype="<u4"),
+            return_counts=True,
+        )
+        n = float(len(t))
+        tot = 0.0
+        for c in counts:  # left fold in sorted-codepoint order
+            p = c / n
+            tot += p * math.log2(p)
+        return -tot + 0.0
+
+    # no type hints: the default scalar Arrow UDF (array in, array out)
     def _entropy(texts):
-        out = np.empty(len(texts), dtype=object)
-        for i, t in enumerate(texts):
-            if t is None or len(t) == 0:
-                out[i] = None
-                continue
-            # explicit little-endian dtype: the bytes are utf-32-LE, so
-            # native-endian uint32 would byte-swap codepoints on a
-            # big-endian host and reorder np.unique's sorted fold,
-            # breaking the summation-order parity argument (r11 advice)
-            _, counts = np.unique(
-                np.frombuffer(
-                    t.encode("utf-32-le", "surrogatepass"), dtype="<u4"
-                ),
-                return_counts=True,
-            )
-            n = float(len(t))
-            tot = 0.0
-            for c in counts:  # left fold in sorted-codepoint order
-                p = c / n
-                tot += p * math.log2(p)
-            out[i] = -tot + 0.0
-        return pd.Series(out)
+        return pa.array([one(t) for t in texts.to_pylist()], pa.float64())
 
-    # runtime annotations: the module's `from __future__ import
-    # annotations` would stringify inline hints, which pandas_udf's
-    # Series->Series inference cannot resolve against module globals
-    _entropy.__annotations__ = {"texts": pd.Series, "return": pd.Series}
-    return pandas_udf(_entropy, DoubleType())(F.col(col))
+    return F.arrow_udf(_entropy, "double")(F.col(col))
 
 
 def _char_entropy_hof_col(col: str = "text") -> Column:
     """Pure-JVM higher-order-function twin of ``char_entropy_col``:
     one run-length fold over the sorted character array (equal chars
-    are contiguous after ``array_sort``), O(n log n) per doc. Retained
-    as the cross-implementation witness — the Arrow path must agree
-    with it to ≤1e-12 (tests/test_script_entropy.py) — and as the
-    fallback for environments where Python workers are unavailable.
+    are contiguous after ``array_sort``), O(n log n) per doc. No code
+    path selects it: it is the test witness the Arrow path must agree
+    with to ≤1e-12 (tests/test_script_entropy.py).
     """
     chars = F.split(F.col(col), "")
     n = F.size(chars).cast("double")
@@ -1929,7 +1918,7 @@ def with_gopher_repetition_flags(
     (tests/test_gopher_repetition.py pins both to a brute-force
     reference and to each other on corpus text).
 
-    Arrow-vectorized fast path: one scalar pandas_udf computes all 12
+    Arrow-vectorized fast path: one scalar Arrow UDF computes all 12
     flags per document from a single tokenization — token ids hashed
     once, each n-gram counted as an id tuple with char length taken
     from a prefix-sum (no per-gram string materialization; the lex-min
@@ -1954,9 +1943,7 @@ def with_gopher_repetition_flags(
     row-for-row, so a locale-divergent deployment fails loudly there
     rather than silently diverging from the oracle.
     """
-    import pandas as pd
     from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
 
     flag_names = (
         ["fail_dup_lines", "fail_dup_line_chars"]
@@ -2031,13 +2018,15 @@ def with_gopher_repetition_flags(
         flags.append(not any(flags))
         return tuple(flags)
 
+    # no type hints: the default scalar Arrow UDF (array in, array out)
     def _battery(texts):
-        return pd.DataFrame(
-            [_flags_one(t) for t in texts], columns=flag_names, dtype=object
+        rows = [_flags_one(t) for t in texts.to_pylist()]
+        cols = list(zip(*rows)) if rows else [()] * len(flag_names)
+        return pa.StructArray.from_arrays(
+            [pa.array(c, pa.bool_()) for c in cols], names=flag_names
         )
 
-    _battery.__annotations__ = {"texts": pd.Series, "return": pd.DataFrame}
-    struct = pandas_udf(_battery, schema)(F.col(col)).alias("_gflags")
+    struct = F.arrow_udf(_battery, schema)(F.col(col)).alias("_gflags")
     out = df.select("*", struct)
     return out.select(
         *df.columns, *[F.col(f"_gflags.{f}").alias(f) for f in flag_names]
@@ -2048,9 +2037,9 @@ def _with_gopher_repetition_flags_hof(
     df: DataFrame, col: str = "text"
 ) -> DataFrame:
     """Pure-JVM higher-order-function twin of
-    ``with_gopher_repetition_flags`` (the retained witness + fallback
-    for Python-worker-less environments). Appends boolean columns to
-    ``df``; every threshold is an integer cross-multiplication over
+    ``with_gopher_repetition_flags``, kept as the test witness the
+    Arrow path must equal; no code path selects it. Appends boolean
+    columns to ``df``; every threshold is an integer cross-multiplication over
     integer char counts (exact, engine-portable):
 
     - ``fail_dup_lines``       > 30% of lines repeat an earlier line

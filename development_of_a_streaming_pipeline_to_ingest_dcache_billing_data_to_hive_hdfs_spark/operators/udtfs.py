@@ -8,7 +8,7 @@ overlapping token windows (RAG / pretraining context prep).
 
 Scale note: UDTFs execute row-at-a-time in the Python worker — fine for
 a fan-out whose cost is dominated by output volume (as here), wrong for
-tight numeric loops (use Arrow-batched mapInPandas — see
+tight numeric loops (use Arrow-batched mapInArrow — see
 operators/multimodal.py). The chunk rule is also expressible in pure
 SQL (sequence + slice), which is exactly what the DuckDB oracle for
 q_llm_chunk_stats does — the UDTF exists to verify the API surface, not

@@ -2385,6 +2385,47 @@ def _doc_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _synth_media(
+    ids: DataFrame,
+    payload_of: Callable[[int], bytes],
+    *,
+    kind: str,
+    mime: str,
+    size: int,
+    duration_ms: int = 0,
+) -> DataFrame:
+    """A one-column ``media_id`` frame → MEDIA_SCHEMA rows synthesized
+    in-executor by one ``mapInArrow``: ``payload_of(media_id)`` is the
+    payload, and kind, mime, width = height = ``size`` and
+    ``duration_ms`` are constants."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from ..operators.multimodal import MEDIA_SCHEMA
+
+    schema = to_arrow_schema(MEDIA_SCHEMA)
+
+    def gen(batches):
+        import pyarrow as pa
+
+        for rb in batches:
+            n = rb.num_rows
+            mids = rb.column(0)
+            yield pa.RecordBatch.from_pydict(
+                {
+                    "media_id": mids,
+                    "kind": [kind] * n,
+                    "mime": [mime] * n,
+                    "payload": [payload_of(m) for m in mids.to_pylist()],
+                    "width": [size] * n,
+                    "height": [size] * n,
+                    "duration_ms": [duration_ms] * n,
+                },
+                schema=schema,
+            )
+
+    return ids.mapInArrow(gen, MEDIA_SCHEMA)
+
+
 @register_bench_only("q_llm_near_dup_pairs_blocked")
 def q_llm_near_dup_pairs_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The raw blocked (LSH-bucket + BLAS-verify, no-collect) near-dup
@@ -2403,7 +2444,7 @@ def q_llm_near_dup_pairs_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register_bench_only("q_llm_multimodal_features")
 def q_llm_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal plumbing as a first-class query: byte-targeted
-    repartition → Arrow-batched mapInPandas feature extraction with the
+    repartition → Arrow-batched mapInArrow feature extraction with the
     deterministic fake codec. Feature values are codec-specific by
     construction, so no SQL oracle; correctness is covered by
     q_llm_multimodal_check."""
@@ -2420,39 +2461,24 @@ def q_llm_png_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     at corpus scale, next to the fake-codec plumbing row above. The
     codec is the documented Python-boundary slow path; this row is what
     keeps that claim quantified round over round."""
-    from ..operators.multimodal import MEDIA_SCHEMA
 
-    def gen(batches):
+    def png_of(mid: int) -> bytes:
         import hashlib as _hl
 
         import numpy as _np
-        import pandas as _pd
 
         from ..operators.png import encode_png as _enc
 
-        for pdf in batches:
-            payloads = []
-            for mid in pdf["media_id"]:
-                seed = _hl.md5(int(mid).to_bytes(8, "big")).digest()
-                raw = (seed * (16 * 16 * 3 // len(seed) + 1))[: 16 * 16 * 3]
-                px = _np.frombuffer(raw, dtype=_np.uint8).reshape(16, 16, 3)
-                payloads.append(_enc(px))
-            yield _pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": "image",
-                    "mime": "image/png",
-                    "payload": payloads,
-                    "width": 16,
-                    "height": 16,
-                    "duration_ms": _np.zeros(len(pdf), dtype=_np.int64),
-                }
-            )
+        seed = _hl.md5(int(mid).to_bytes(8, "big")).digest()
+        raw = (seed * (16 * 16 * 3 // len(seed) + 1))[: 16 * 16 * 3]
+        return _enc(_np.frombuffer(raw, dtype=_np.uint8).reshape(16, 16, 3))
 
     docs = load_table(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("media_id")
     )
-    media = docs.repartition(8).mapInPandas(gen, MEDIA_SCHEMA)
+    media = _synth_media(
+        docs.repartition(8), png_of, kind="image", mime="image/png", size=16
+    )
     return extract_features(media, fake=False)
 
 
@@ -2531,7 +2557,7 @@ def q_llm_multimodal_check(spark: SparkSession, sf_dir: str) -> DataFrame:
       physical partitionings (3 vs 7 round-robin partitions) must agree
       row-for-row — catches any operator whose output depends on Arrow
       batch boundaries instead of row content;
-    - *byte accounting*: the mapInPandas-computed n_bytes must equal the
+    - *byte accounting*: the mapInArrow-computed n_bytes must equal the
       JVM-side length(payload) of the input row — catches row
       misalignment in the Python plumbing;
     - *shape*: exactly FEATURE_DIM features, exactly one output row per
@@ -2607,37 +2633,20 @@ def q_llm_multimodal_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # Real-codec leg: synth PNGs whose luma mean has a closed form the
     # JVM can compute without decoding, then decode them for real.
-    from ..operators.multimodal import MEDIA_SCHEMA
-
-    def _gen_png(batches):
+    def png_of(mid: int) -> bytes:
         import numpy as _np
-        import pandas as _pd
 
         from ..operators.png import encode_png as _enc
 
-        for pdf in batches:
-            payloads = []
-            for mid in pdf["media_id"]:
-                v = int(mid) % 200
-                col = (v + 7 * _np.arange(8, dtype=_np.int64)).astype(_np.uint8)
-                px = _np.repeat(col, 8 * 3).reshape(8, 8, 3)
-                payloads.append(_enc(px))
-            yield _pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": "image",
-                    "mime": "image/png",
-                    "payload": payloads,
-                    "width": 8,
-                    "height": 8,
-                    "duration_ms": _np.zeros(len(pdf), dtype=_np.int64),
-                }
-            )
+        v = int(mid) % 200
+        col = (v + 7 * _np.arange(8, dtype=_np.int64)).astype(_np.uint8)
+        return _enc(_np.repeat(col, 8 * 3).reshape(8, 8, 3))
 
     png_media = (
-        media.select("media_id")
-        .where(F.col("media_id") < 64)
-        .mapInPandas(_gen_png, MEDIA_SCHEMA)
+        _synth_media(
+            media.select("media_id").where(F.col("media_id") < 64),
+            png_of, kind="image", mime="image/png", size=8,
+        )
         .localCheckpoint()
     )
     real_a = extract_features(png_media.repartition(2), fake=False)
@@ -2683,71 +2692,54 @@ def q_llm_multimodal_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exercises the decoder's CLEAR handling on every payload; the
     # compressed/KwKwK/interlace paths are covered by the independent
     # encoder in tests/test_gif_codec.py.
-    def _gen_gif(batches):
+    def gif_of(mid: int) -> bytes:
         import struct as _st
 
         import numpy as _np
-        import pandas as _pd
 
-        def _tiny_gif(indices: _np.ndarray) -> bytes:
-            fh, fw = indices.shape
-            out = bytearray(b"GIF89a")
-            out += _st.pack("<HHBBB", fw, fh, 0x80 | 3, 0, 0)  # 16-color global
-            pal = _np.repeat(
-                (_np.arange(16, dtype=_np.uint8) * 16)[:, None], 3, axis=1
-            )
-            out += pal.tobytes()
-            out += b"\x2c" + _st.pack("<HHHHB", 0, 0, fw, fh, 0)
-            clear, eoi, width = 16, 17, 5
-            codes, budget = [clear], (1 << width) - 1 - eoi
-            for px in indices.ravel():
-                if budget == 0:
-                    codes.append(clear)
-                    budget = (1 << width) - 1 - eoi
-                codes.append(int(px))
-                budget -= 1
-            codes.append(eoi)
-            acc = nb = 0
-            data = bytearray()
-            for c in codes:
-                acc |= c << nb
-                nb += width
-                while nb >= 8:
-                    data.append(acc & 0xFF)
-                    acc >>= 8
-                    nb -= 8
-            if nb:
+        v = int(mid) % 8
+        indices = _np.repeat(v + _np.arange(8, dtype=_np.uint8), 8).reshape(8, 8)
+        fh, fw = indices.shape
+        out = bytearray(b"GIF89a")
+        out += _st.pack("<HHBBB", fw, fh, 0x80 | 3, 0, 0)  # 16-color global
+        pal = _np.repeat(
+            (_np.arange(16, dtype=_np.uint8) * 16)[:, None], 3, axis=1
+        )
+        out += pal.tobytes()
+        out += b"\x2c" + _st.pack("<HHHHB", 0, 0, fw, fh, 0)
+        clear, eoi, width = 16, 17, 5
+        codes, budget = [clear], (1 << width) - 1 - eoi
+        for px in indices.ravel():
+            if budget == 0:
+                codes.append(clear)
+                budget = (1 << width) - 1 - eoi
+            codes.append(int(px))
+            budget -= 1
+        codes.append(eoi)
+        acc = nb = 0
+        data = bytearray()
+        for c in codes:
+            acc |= c << nb
+            nb += width
+            while nb >= 8:
                 data.append(acc & 0xFF)
-            out.append(4)  # LZW min code size
-            for i in range(0, len(data), 255):
-                chunk = data[i : i + 255]
-                out.append(len(chunk))
-                out += chunk
-            out += b"\x00\x3b"
-            return bytes(out)
-
-        for pdf in batches:
-            payloads = []
-            for mid in pdf["media_id"]:
-                v = int(mid) % 8
-                idx = _np.repeat(v + _np.arange(8, dtype=_np.uint8), 8).reshape(8, 8)
-                payloads.append(_tiny_gif(idx))
-            yield _pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": "image",
-                    "mime": "image/gif",
-                    "payload": payloads,
-                    "width": 8,
-                    "height": 8,
-                    "duration_ms": _np.zeros(len(pdf), dtype=_np.int64),
-                }
-            )
+                acc >>= 8
+                nb -= 8
+        if nb:
+            data.append(acc & 0xFF)
+        out.append(4)  # LZW min code size
+        for i in range(0, len(data), 255):
+            chunk = data[i : i + 255]
+            out.append(len(chunk))
+            out += chunk
+        out += b"\x00\x3b"
+        return bytes(out)
 
     gif_media = (
-        media.select("media_id")
-        .where(F.col("media_id") < 48)
-        .mapInPandas(_gen_gif, MEDIA_SCHEMA)
+        _synth_media(
+            media.select("media_id").where(F.col("media_id") < 48),
+            gif_of, kind="image", mime="image/gif", size=8,
+        )
         .localCheckpoint()
     )
     gif_real = extract_features(gif_media, fake=False)
@@ -2792,82 +2784,68 @@ def q_llm_multimodal_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     # breadth is covered by the independent encoder in
     # tests/test_jpeg_codec.py; this leg proves the in-executor wiring
     # decodes real pixels.
-    def _gen_jpeg(batches):
+    def _write_bits(data: bytearray, acc_n, value, nbits):
+        acc, n = acc_n
+        acc = (acc << nbits) | (value & ((1 << nbits) - 1))
+        n += nbits
+        while n >= 8:
+            n -= 8
+            b = (acc >> n) & 0xFF
+            data.append(b)
+            if b == 0xFF:
+                data.append(0x00)
+        return acc & ((1 << n) - 1), n
+
+    def _seg(marker, payload):
         import struct as _st
 
-        import numpy as _np
-        import pandas as _pd
+        return bytes([0xFF, marker]) + _st.pack(">H", len(payload) + 2) + payload
 
-        def _write_bits(data: bytearray, acc_n, value, nbits):
-            acc, n = acc_n
-            acc = (acc << nbits) | (value & ((1 << nbits) - 1))
-            n += nbits
-            while n >= 8:
-                n -= 8
-                b = (acc >> n) & 0xFF
-                data.append(b)
-                if b == 0xFF:
-                    data.append(0x00)
-            return acc & ((1 << n) - 1), n
+    def _tiny_jpeg(v: int) -> bytes:
+        import struct as _st
 
-        def _seg(marker, payload):
-            return bytes([0xFF, marker]) + _st.pack(">H", len(payload) + 2) + payload
-
-        def _tiny_jpeg(v: int) -> bytes:
-            out = bytearray(b"\xff\xd8")
-            out += _seg(0xDB, bytes([0x00]) + bytes([1] * 64))
-            out += _seg(0xC0, _st.pack(">BHHB", 8, 16, 16, 1) + bytes([1, 0x11, 0]))
-            # DC: symbols 0..11 all at 5 bits; AC: only EOB, 2 bits
-            dc_counts = [0] * 16
-            dc_counts[4] = 12
-            ac_counts = [0] * 16
-            ac_counts[1] = 1
-            out += _seg(
-                0xC4,
-                bytes([0x00]) + bytes(dc_counts) + bytes(range(12))
-                + bytes([0x10]) + bytes(ac_counts) + bytes([0x00]),
+        out = bytearray(b"\xff\xd8")
+        out += _seg(0xDB, bytes([0x00]) + bytes([1] * 64))
+        out += _seg(0xC0, _st.pack(">BHHB", 8, 16, 16, 1) + bytes([1, 0x11, 0]))
+        # DC: symbols 0..11 all at 5 bits; AC: only EOB, 2 bits
+        dc_counts = [0] * 16
+        dc_counts[4] = 12
+        ac_counts = [0] * 16
+        ac_counts[1] = 1
+        out += _seg(
+            0xC4,
+            bytes([0x00]) + bytes(dc_counts) + bytes(range(12))
+            + bytes([0x10]) + bytes(ac_counts) + bytes([0x00]),
+        )
+        out += _seg(0xDA, bytes([1, 1, 0x00, 0, 63, 0]))
+        data = bytearray()
+        acc_n = (0, 0)
+        pred = 0
+        for blk in range(4):
+            dc = 8 * (v + 16 * blk - 128)
+            diff = dc - pred
+            pred = dc
+            mag = diff if diff >= 0 else -diff
+            s = mag.bit_length()
+            raw = diff if diff >= 0 else diff + (1 << s) - 1
+            acc_n = _write_bits(data, acc_n, s, 5)  # DC size symbol
+            if s:
+                acc_n = _write_bits(data, acc_n, raw, s)
+            acc_n = _write_bits(data, acc_n, 0, 2)  # EOB
+        if acc_n[1]:
+            acc_n = _write_bits(
+                data, acc_n, (1 << (8 - acc_n[1])) - 1, 8 - acc_n[1]
             )
-            out += _seg(0xDA, bytes([1, 1, 0x00, 0, 63, 0]))
-            data = bytearray()
-            acc_n = (0, 0)
-            pred = 0
-            for blk in range(4):
-                dc = 8 * (v + 16 * blk - 128)
-                diff = dc - pred
-                pred = dc
-                mag = diff if diff >= 0 else -diff
-                s = mag.bit_length()
-                raw = diff if diff >= 0 else diff + (1 << s) - 1
-                acc_n = _write_bits(data, acc_n, s, 5)  # DC size symbol
-                if s:
-                    acc_n = _write_bits(data, acc_n, raw, s)
-                acc_n = _write_bits(data, acc_n, 0, 2)  # EOB
-            if acc_n[1]:
-                acc_n = _write_bits(
-                    data, acc_n, (1 << (8 - acc_n[1])) - 1, 8 - acc_n[1]
-                )
-            out += bytes(data)
-            out += b"\xff\xd9"
-            return bytes(out)
-
-        for pdf in batches:
-            payloads = [_tiny_jpeg(int(mid) % 200) for mid in pdf["media_id"]]
-            yield _pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": "image",
-                    "mime": "image/jpeg",
-                    "payload": payloads,
-                    "width": 16,
-                    "height": 16,
-                    "duration_ms": _np.zeros(len(pdf), dtype=_np.int64),
-                }
-            )
+        out += bytes(data)
+        out += b"\xff\xd9"
+        return bytes(out)
 
     jpeg_media = (
-        media.select("media_id")
-        .where(F.col("media_id") < 48)
-        .mapInPandas(_gen_jpeg, MEDIA_SCHEMA)
+        _synth_media(
+            media.select("media_id").where(F.col("media_id") < 48),
+            lambda mid: _tiny_jpeg(int(mid) % 200),
+            kind="image", mime="image/jpeg", size=16,
+        )
         .localCheckpoint()
     )
     jpeg_real = extract_features(jpeg_media, fake=False)
@@ -2912,104 +2890,34 @@ def q_llm_multimodal_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     # word alignment, DHT-less frames, post-movi decoys) is covered by
     # the independent RIFF writer in tests/test_avi_codec.py; this leg
     # proves the in-executor wiring decodes real video frames.
-    def _gen_avi(batches):
+    def _tiny_avi(frames: list) -> bytes:
         import struct as _st
 
-        import numpy as _np
-        import pandas as _pd
+        def _ck(fcc, p):
+            b = fcc + _st.pack("<I", len(p)) + p
+            return b + (b"\x00" if len(p) & 1 else b"")
 
-        def _write_bits(data: bytearray, acc_n, value, nbits):
-            acc, n = acc_n
-            acc = (acc << nbits) | (value & ((1 << nbits) - 1))
-            n += nbits
-            while n >= 8:
-                n -= 8
-                b = (acc >> n) & 0xFF
-                data.append(b)
-                if b == 0xFF:
-                    data.append(0x00)
-            return acc & ((1 << n) - 1), n
+        def _ls(t, p):
+            return _ck(b"LIST", t + p)
 
-        def _seg(marker, payload):
-            return bytes([0xFF, marker]) + _st.pack(">H", len(payload) + 2) + payload
-
-        def _tiny_jpeg(v: int) -> bytes:
-            # identical construction to the JPEG leg: 16×16 gray, four
-            # flat 8×8 blocks v, v+16, v+32, v+48 — exact at unit quant
-            out = bytearray(b"\xff\xd8")
-            out += _seg(0xDB, bytes([0x00]) + bytes([1] * 64))
-            out += _seg(0xC0, _st.pack(">BHHB", 8, 16, 16, 1) + bytes([1, 0x11, 0]))
-            dc_counts = [0] * 16
-            dc_counts[4] = 12
-            ac_counts = [0] * 16
-            ac_counts[1] = 1
-            out += _seg(
-                0xC4,
-                bytes([0x00]) + bytes(dc_counts) + bytes(range(12))
-                + bytes([0x10]) + bytes(ac_counts) + bytes([0x00]),
-            )
-            out += _seg(0xDA, bytes([1, 1, 0x00, 0, 63, 0]))
-            data = bytearray()
-            acc_n = (0, 0)
-            pred = 0
-            for blk in range(4):
-                dc = 8 * (v + 16 * blk - 128)
-                diff = dc - pred
-                pred = dc
-                mag = diff if diff >= 0 else -diff
-                s = mag.bit_length()
-                raw = diff if diff >= 0 else diff + (1 << s) - 1
-                acc_n = _write_bits(data, acc_n, s, 5)
-                if s:
-                    acc_n = _write_bits(data, acc_n, raw, s)
-                acc_n = _write_bits(data, acc_n, 0, 2)
-            if acc_n[1]:
-                acc_n = _write_bits(
-                    data, acc_n, (1 << (8 - acc_n[1])) - 1, 8 - acc_n[1]
-                )
-            out += bytes(data)
-            out += b"\xff\xd9"
-            return bytes(out)
-
-        def _tiny_avi(frames: list) -> bytes:
-            def _ck(fcc, p):
-                b = fcc + _st.pack("<I", len(p)) + p
-                return b + (b"\x00" if len(p) & 1 else b"")
-
-            def _ls(t, p):
-                return _ck(b"LIST", t + p)
-
-            avih = _st.pack(
-                "<14I", 40000, 0, 0, 0, len(frames), 0, 1, 0, 16, 16, 0, 0, 0, 0
-            )
-            strh = b"vids" + b"MJPG" + bytes(48)
-            strl = _ls(b"strl", _ck(b"strh", strh) + _ck(b"strf", bytes(40)))
-            hdrl = _ls(b"hdrl", _ck(b"avih", avih) + strl)
-            movi = _ls(b"movi", b"".join(_ck(b"00dc", f) for f in frames))
-            body = b"AVI " + hdrl + movi
-            return b"RIFF" + _st.pack("<I", len(body)) + body
-
-        for pdf in batches:
-            payloads = [
-                _tiny_avi([_tiny_jpeg(int(mid) % 200), _tiny_jpeg(int(mid) % 200 + 60)])
-                for mid in pdf["media_id"]
-            ]
-            yield _pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": "video",
-                    "mime": "video/x-msvideo",
-                    "payload": payloads,
-                    "width": 16,
-                    "height": 16,
-                    "duration_ms": _np.full(len(pdf), 80, dtype=_np.int64),
-                }
-            )
+        avih = _st.pack(
+            "<14I", 40000, 0, 0, 0, len(frames), 0, 1, 0, 16, 16, 0, 0, 0, 0
+        )
+        strh = b"vids" + b"MJPG" + bytes(48)
+        strl = _ls(b"strl", _ck(b"strh", strh) + _ck(b"strf", bytes(40)))
+        hdrl = _ls(b"hdrl", _ck(b"avih", avih) + strl)
+        movi = _ls(b"movi", b"".join(_ck(b"00dc", f) for f in frames))
+        body = b"AVI " + hdrl + movi
+        return b"RIFF" + _st.pack("<I", len(body)) + body
 
     avi_media = (
-        media.select("media_id")
-        .where(F.col("media_id") < 32)
-        .mapInPandas(_gen_avi, MEDIA_SCHEMA)
+        _synth_media(
+            media.select("media_id").where(F.col("media_id") < 32),
+            lambda mid: _tiny_avi(
+                [_tiny_jpeg(int(mid) % 200), _tiny_jpeg(int(mid) % 200 + 60)]
+            ),
+            kind="video", mime="video/x-msvideo", size=16, duration_ms=80,
+        )
         .localCheckpoint()
     )
     avi_real = extract_features(avi_media, fake=False)
@@ -5395,7 +5303,7 @@ def q_llm_bpe_encode_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     the collected vocab-bounded word-frequency table, the production
     trainer shape) and apply them distributed
     (operators.textops.bpe_encode_words — Python only over DISTINCT
-    words in mapInPandas). Invariants that hold for any correct BPE:
+    words in mapInArrow). Invariants that hold for any correct BPE:
 
     - RECONSTRUCTION: concatenating a word's pieces reproduces the word
       exactly (merges only ever join adjacent symbols);
@@ -7296,8 +7204,8 @@ def q_llm_unicode_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     combining-mark codepoints (``chr()`` literals identical on both
     engines; the ß stays as a composed-passthrough control). Per-doc
     hard parity of changed flag, composed-codepoint delta, and md5 of
-    the normalized text pits CPython's unicodedata (Arrow-batched
-    pandas UDF — Spark has no normalization builtin) against DuckDB's
+    the normalized text pits CPython's unicodedata (scalar
+    Arrow UDF — Spark has no normalization builtin) against DuckDB's
     utf8proc ``nfc_normalize``, both implementing UAX #15. Scan-stage:
     one Arrow round trip fused into the corpus scan, no shuffle at any
     scale."""
@@ -7412,22 +7320,14 @@ def q_llm_prototypicality(spark: SparkSession, sf_dir: str) -> DataFrame:
     SSL-Prototypes data-pruning signal. Prototypes are the embeddings
     of vec_id 0–7 (deterministic on both engines; in production they
     come from kmeans_embeddings' centroids, whose k·d ndarray is this
-    same in-memory shape). The Spark side embeds them as PLAN LITERALS:
-    per-centroid cosines are ordered double folds and the argmax is a
-    greatest/when chain with index tie-break on the 4-dp score — one
-    scan-stage projection, zero joins/shuffles at any corpus size (a
-    crossJoin+groupBy formulation would shuffle k·N rows). The oracle
-    cross-joins the same 8 rows and picks the same argmax via
-    ROW_NUMBER over (rounded cos DESC, cid ASC); the bounded driver
-    collect is 8 rows of metadata scale.
-
-    r16: runs the operator's ``method="arrow"`` path — one mapInPandas
-    computes the 8 unrounded cosines per batch with the literal fold's
-    exact op order (bit-equal, pinned in tests/test_prototypicality.py); the
-    4-dp round + argmax stay JVM expressions. The literal path spent
-    ~1.3 s/run at sf0.1 on 512-literal py4j construction + Catalyst
-    planning and evaluated ~k·d interpreted-HOF lambdas per row — the
-    q_llm_jl_projection lesson at k=8."""
+    same in-memory shape). The Spark side ships them in one
+    ``mapInArrow`` that computes the 8 unrounded cosines per batch; the
+    4-dp round and the greatest/when argmax with index tie-break stay
+    JVM expressions — one scan-stage pass, zero joins/shuffles at any
+    corpus size (a crossJoin+groupBy formulation would shuffle k·N
+    rows). The oracle cross-joins the same 8 rows and picks the same
+    argmax via ROW_NUMBER over (rounded cos DESC, cid ASC); the bounded
+    driver collect is 8 rows of metadata scale."""
     from ..operators.similarity import prototypicality
 
     embs = load_table(spark, sf_dir, "embeddings")
@@ -7438,7 +7338,7 @@ def q_llm_prototypicality(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("embedding")
         .collect()
     ]
-    return prototypicality(embs, cents, method="arrow")
+    return prototypicality(embs, cents)
 
 
 @register(
@@ -7864,24 +7764,17 @@ def q_llm_jl_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     project once, block/store/shuffle 4x-shorter vectors, re-rank
     survivors on the originals.
 
-    Plan (r16): ONE Arrow mapInPandas over the two needed columns —
-    the sign matrix ships once in the serialized op and each batch
-    accumulates the projection with in_dim vectorized fused ops in
-    input order, BIT-EQUAL to the literal zip_with+aggregate fold
-    (pinned in tests/test_jl_projection.py). Zero joins/shuffles at
-    any corpus size, unchanged. The literal plan-literal path this
-    replaces spent ~2.4 s/run at sf0.1 building and planning its
-    64×16 = 1024-literal expression tree (~1.3 s py4j construction +
-    ~1.1 s analyze/optimize/codegen) against ~0.03 s of actual data
-    compute — per-row it was also an interpreted-HOF fold (~µs per
-    element; the char-entropy/gopher-repetition lesson), so the Arrow
-    path wins at every scale, not just on plan overhead."""
+    Plan: ONE ``mapInArrow`` over the two needed columns — the sign
+    matrix ships once in the serialized op and each batch accumulates
+    the projection with in_dim vectorized fused ops in input order
+    (pinned bit-for-bit in tests/test_jl_projection.py). Zero
+    joins/shuffles at any corpus size."""
     from ..operators.similarity import jl_project
 
     embs = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
-    proj = jl_project(embs, 16, in_dim=64, method="blas")
+    proj = jl_project(embs, 16, in_dim=64)
     return proj.select(
         "vec_id", F.posexplode("proj").alias("dim", "y0")
     ).select(
@@ -8162,7 +8055,7 @@ def q_llm_warc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Common Crawl member layout) with one 'conversion' record per
     document plus a warcinfo record and interleaved 'request' decoys,
     then read back through the full Spark path — binaryFile →
-    mapInPandas walker with the record-type filter dropping the decoys
+    mapInArrow walker with the record-type filter dropping the decoys
     inside the walker. Hard parity of every document's URI, content md5
     (byte-exact utf-8 payload fidelity, proven against DuckDB hashing
     the source text directly), and byte length. A parser that
@@ -8246,7 +8139,7 @@ def q_llm_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundaries, and reproduce the text byte-exactly — per-document
     md5 hard parity against DuckDB composing the expected extraction
     from the raw text. Page construction is a scan-stage concat;
-    extraction is the Arrow mapInPandas codec boundary; one scan, no
+    extraction is the mapInArrow codec boundary; one scan, no
     shuffle."""
     from ..operators.html import extract_text
 

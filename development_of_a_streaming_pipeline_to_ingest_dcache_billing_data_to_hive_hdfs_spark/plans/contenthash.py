@@ -26,7 +26,7 @@ instead walks the reference graph:
 - every package-internal FUNCTION the builder transitively references —
   through its ``__globals__``, through ``from ..x import y`` statements
   in its body (resolved by import to the actual object), through
-  wrappers (``functools``, ``lru_cache``, ``pandas_udf``-style ``.func``
+  wrappers (``functools``, ``lru_cache``, ``arrow_udf``-style ``.func``
   / ``__wrapped__``), and through classes (class source plus every
   method, plus internal bases) — contributes its own source;
 - package-internal plain-value globals a traversed function references

@@ -22,7 +22,7 @@ from pyspark.sql import SparkSession
 def _export_package_pythonpath() -> None:
     """Put this package's parent directory on ``PYTHONPATH`` so Python
     WORKERS resolve the package no matter the driver's cwd (r14: a
-    sweep launched from outside the repo failed every mapInPandas op
+    sweep launched from outside the repo failed every Python-worker op
     with ModuleNotFoundError — the driver found the package via
     sys.path, but forked workers inherit only PYTHONPATH, and 'import
     from cwd' had been doing the real work). Must run BEFORE the JVM

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -20,9 +21,10 @@ TABLES = [
     "orders", "lineitem", "events", "documents", "embeddings",
 ]
 
-# Tables whose parquet footers declare TIMESTAMP(NANOS), which the Spark
-# vectorized reader rejects (SPARK-40819). Read them as raw nanos longs
-# and convert to microsecond timestamps (Spark's native precision).
+# Tables whose parquet footers may declare TIMESTAMP(NANOS), which the
+# Spark vectorized reader rejects (SPARK-40819). Such a file is read as
+# raw nanos longs and converted to microsecond timestamps (Spark's
+# native precision); see load_table.
 NANOS_TS_COLUMNS: dict[str, list[str]] = {"events": ["ts"]}
 
 
@@ -75,11 +77,25 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """``<sf_dir>/<name>.parquet`` through :func:`read_parquet`.
+
+    A ``NANOS_TS_COLUMNS`` table is read under the session's own
+    ``nanosAsLong`` setting first; only when that inference fails with
+    ``PARQUET_TYPE_ILLEGAL`` (a footer that declares TIMESTAMP(NANOS))
+    is the conf set to true, the read repeated and the raw nanos longs
+    converted to microsecond timestamps. The flip then stays on the
+    session: Spark reads the conf again when the scan executes, so
+    restoring it would fail the query. A MICROS footer leaves the conf,
+    and so every schema-cache key, as it was."""
     path = os.path.join(sf_dir, f"{name}.parquet")
     nanos_cols = NANOS_TS_COLUMNS.get(name, [])
-    if nanos_cols:
+    try:
+        df = read_parquet(spark, path)
+    except AnalysisException as e:
+        if not nanos_cols or e.getCondition() != "PARQUET_TYPE_ILLEGAL":
+            raise
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = read_parquet(spark, path)
+        df = read_parquet(spark, path)
     for c in nanos_cols:
         if dict(df.dtypes).get(c) == "bigint":
             df = df.withColumn(c, F.timestamp_micros(F.expr(f"{c} div 1000")))

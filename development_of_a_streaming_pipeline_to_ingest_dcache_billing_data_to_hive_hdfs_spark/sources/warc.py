@@ -4,7 +4,7 @@ job is usually "read a few hundred TB of WARC").
 
 Execution shape: ``spark.read.format("binaryFile")`` distributes the
 FILES; each file's record walk is a pure-Python generator inside
-``mapInPandas``, so one file = one task and a 100 TB crawl parallelizes
+``mapInArrow``, so one file = one task and a 100 TB crawl parallelizes
 across its ~100k segment files with zero driver involvement. (WARC is a
 concatenated-record format with no splitpoints index — per-file is the
 natural parallel grain, matching how Common Crawl sizes segments to
@@ -33,6 +33,7 @@ from __future__ import annotations
 import zlib
 from typing import Iterator
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 __all__ = [
@@ -168,28 +169,33 @@ def read_warc(
     )
     # flush the walker every N records: a ~1 GB segment decompresses to
     # several GB — holding raw bytes + decompressed stream + EVERY
-    # record payload in one pandas frame simultaneously is an avoidable
+    # record payload in one Arrow batch simultaneously is an avoidable
     # peak-memory multiplier
     flush_every = 1024
 
-    def walk(batches):
-        import pandas as pd
+    schema = pa.schema(
+        [(c, pa.binary() if c == "content" else pa.string()) for c in cols]
+    )
 
+    def walk(batches):
         for batch in batches:
             rows: dict[str, list] = {k: [] for k in cols}
-            for p, blob in zip(batch["path"], batch["content"]):
-                for rec in parse_warc_bytes(bytes(blob), origin=p):
+            for p, blob in zip(
+                batch.column("path").to_pylist(),
+                batch.column("content").to_pylist(),
+            ):
+                for rec in parse_warc_bytes(blob, origin=p):
                     if wanted and rec["warc_type"].lower() not in wanted:
                         continue
                     rows["path"].append(p)
                     for k, v in rec.items():
                         rows[k].append(v)
                     if len(rows["path"]) >= flush_every:
-                        yield pd.DataFrame(rows)
+                        yield pa.RecordBatch.from_pydict(rows, schema=schema)
                         rows = {k: [] for k in cols}
-            yield pd.DataFrame(rows)
+            yield pa.RecordBatch.from_pydict(rows, schema=schema)
 
-    return files.select("path", "content").mapInPandas(walk, WARC_SCHEMA)
+    return files.select("path", "content").mapInArrow(walk, WARC_SCHEMA)
 
 
 def http_response_body(payload: bytes, origin: str = "<bytes>") -> bytes:
@@ -275,22 +281,25 @@ def decode_response_html(
     """Append ``out_col`` = the HTTP response BODY of ``content_col``
     decoded to text (utf-8, invalid bytes replaced — charset sniffing
     is deliberately out of scope; replacement keeps the pipeline moving
-    and the mojibake measurable). Arrow ``mapInPandas``, one scan."""
+    and the mojibake measurable). Arrow ``mapInArrow``, one scan."""
     out_fields = ", ".join(
         f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema
     )
 
     def op(batches):
-        for batch in batches:
-            batch = batch.copy()
-            batch[out_col] = batch[content_col].map(
-                lambda b: None
+        for rb in batches:
+            html = [
+                None
                 if b is None
-                else http_response_body(bytes(b)).decode("utf-8", "replace")
+                else http_response_body(b).decode("utf-8", "replace")
+                for b in rb.column(content_col).to_pylist()
+            ]
+            yield pa.RecordBatch.from_arrays(
+                rb.columns + [pa.array(html, pa.string())],
+                names=rb.schema.names + [out_col],
             )
-            yield batch
 
-    return df.mapInPandas(op, f"{out_fields}, `{out_col}` string")
+    return df.mapInArrow(op, f"{out_fields}, `{out_col}` string")
 
 
 def write_warc_bytes(records: list[dict]) -> bytes:

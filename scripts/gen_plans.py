@@ -34,9 +34,9 @@ NOTES = {
  "q_rel_psi_value_drift": "PSI drift: two corpus scans collapse map-side into <=bins partial counts; the <=bins-row full-outer join and the broadcast totals row are the only post-scan work — nothing corpus-sized shuffles.",
  "q_llm_jl_projection": "JL projection (r16: Arrow path): one mapInArrow over (vec_id, embedding) — the sign matrix ships once in the serialized op, each batch accumulates the projection in input-dim order (bit-equal to the literal fold, pinned in tests), zero joins/shuffles at any corpus size. Replaced the 1024-plan-literal fold whose ~2.4s/run was py4j construction + Catalyst planning of the literal tree (and whose per-row cost was an interpreted-HOF fold) — the char-entropy/gopher-repetition lesson applied to the projection.",
  "q_llm_weighted_sample": "A-ES weighted sampling: the ln(u)/w key is a scan-stage md5 expression; TakeOrderedAndProject keeps per-partition heaps of k, so the corpus never globally sorts and only k rows reach the driver side of the plan.",
- "q_llm_warc_roundtrip": "WARC connector: binaryFile distributes segment files, the record walk is one mapInPandas generator per file — the natural parallel grain of a crawl; no shuffle anywhere in the read path.",
- "q_llm_html_extract": "HTML extraction: page construction is a scan-stage concat; the HTMLParser tokenizer runs per Arrow batch in the same mapInPandas boundary as the multimodal codecs — one scan, no shuffle.",
- "q_llm_crawl_extract": "Composed crawl path: binaryFile distributes the segment file, and the record walk, HTTP envelope strip (de-chunk/gunzip), and tokenizer all run inside consecutive mapInPandas stages of ONE task chain — no shuffle until the presentation sort.",
+ "q_llm_warc_roundtrip": "WARC connector: binaryFile distributes segment files, the record walk is one mapInArrow generator per file — the natural parallel grain of a crawl; no shuffle anywhere in the read path.",
+ "q_llm_html_extract": "HTML extraction: page construction is a scan-stage concat; the HTMLParser tokenizer runs per Arrow batch in the same mapInArrow boundary as the multimodal codecs — one scan, no shuffle.",
+ "q_llm_crawl_extract": "Composed crawl path: binaryFile distributes the segment file, and the record walk, HTTP envelope strip (de-chunk/gunzip), and tokenizer all run inside consecutive mapInArrow stages of ONE task chain — no shuffle until the presentation sort.",
  "q_rel_skew_join_salted": "Skew-stress treatment: the (content-hash + row-offset) salt spreads the hot key over 32 (key, salt) buckets before the shuffle; the dim side replicates once per salt value. Same answer as the plain join; ~10% slower at sf0.1 where AQE already handles the skew - the operator is the AQE-unavailable escape hatch, and the bench pair documents that honestly.",
  "q_llm_span_dedup": "Span-level dedup: per-doc window arrays build in the scan stage (transform over sequence, no Python), ONE explode streams token windows into ONE groupBy on the span; the map-side partial collapses spans seen once per partition before the exchange, so shuffle volume tracks distinct-span count. Top-50 via TakeOrderedAndProject.",
  "q_llm_bpe_pairs": "Tokenizer pair counts: corpus tokens collapse to a word-frequency table first (two-phase aggregate - the corpus->vocab reduction), then ONLY distinct words explode into character pairs for the weighted pair aggregate. Both shuffles are vocab-bounded; corpus size only affects the first map side.",
@@ -54,10 +54,10 @@ NOTES = {
  "q_llm_unigram_nll": "Perplexity-proxy scoring: one explode, vocab-sized frequency groupBy, token-keyed probability join, per-doc aggregate — all two-phase with map-side partials; ln/div stay in codegen.",
  "q_billing_incremental_rollup_check": "Rollup maintenance gate (expected empty): fold-vs-recompute equality over an ingest/fold/compact/rebaseline lifecycle. The lifecycle runs EAGERLY inside the check (each step is its own execution), so the audited plan here is only the driver-built verdict frame; the fold side's plan property — the increment scan is batch-glob pruned, never a full-table rescan — is pinned by tests/test_rollup.py.",
  "q_llm_dedup_store_lifecycle_check": "Dedup-store lifecycle gate (expected empty): screening decisions before/after compact() reclaim, retention horizons, re-admission past the horizon. The lifecycle runs EAGERLY inside the check (store writes/rewrites are separate executions), so the audited plan here is only the driver-built verdict frame; the property that matters at scale — the BUCKETED store side of every screening join stays Exchange-free, including after the compact() rewrite-swap — is plan-walk-asserted INSIDE the gate itself (any Exchange on the store side emits a violation row) and in tests/test_near_dup_store.py.",
- "q_llm_gopher_repetition": "Gopher repetition battery: ONE Arrow-vectorized scalar pandas_udf computes all 12 flags per document (token-id n-gram counting with prefix-sum char lengths; the lex-min tie-break reconstructs strings only among max-count candidates) inside a single scan-stage projection — no explode, no shuffle; the only Exchange is the per-source failure-count aggregate (rows = sources, not docs). Lineage of the constant: distinct x filter O(m^2) 15.3 s -> JVM run-length folds O(m log m) 5.3-6.3 s -> Arrow 1.9 s at sf0.1 (interpreted HOF lambdas cost ~us per array element; the retained _with_gopher_repetition_flags_hof twin is pinned equal row-for-row). Every threshold is an integer cross-multiplication — exact, engine-portable. Embarrassingly parallel, no pairwise work anywhere.",
- "q_llm_char_entropy": "Character entropy: Arrow-vectorized scalar pandas_udf — np.unique codepoint histogram + explicit left fold in sorted-codepoint order, so the float summation order matches the DuckDB oracle's sorted-distinct fold exactly (per-term log2 is C libm on both sides; the JVM HOF twin it replaced, retained as _char_entropy_hof_col and pinned <=1e-12 equal, was 5.9x slower from interpreted lambda cost). The per-doc histogram never leaves its row: ZERO shuffles added to the corpus scan; the only Exchange is the 4-row per-source stats aggregate.",
+ "q_llm_gopher_repetition": "Gopher repetition battery: ONE scalar Arrow UDF computes all 12 flags per document (token-id n-gram counting with prefix-sum char lengths; the lex-min tie-break reconstructs strings only among max-count candidates) inside a single scan-stage projection — no explode, no shuffle; the only Exchange is the per-source failure-count aggregate (rows = sources, not docs). Lineage of the constant: distinct x filter O(m^2) 15.3 s -> JVM run-length folds O(m log m) 5.3-6.3 s -> Arrow 1.9 s at sf0.1 (interpreted HOF lambdas cost ~us per array element; the retained _with_gopher_repetition_flags_hof twin is pinned equal row-for-row). Every threshold is an integer cross-multiplication — exact, engine-portable. Embarrassingly parallel, no pairwise work anywhere.",
+ "q_llm_char_entropy": "Character entropy: scalar Arrow UDF — np.unique codepoint histogram + explicit left fold in sorted-codepoint order, so the float summation order matches the DuckDB oracle's sorted-distinct fold exactly (per-term log2 is C libm on both sides; the JVM HOF twin it replaced, retained as _char_entropy_hof_col and pinned <=1e-12 equal, was 5.9x slower from interpreted lambda cost). The per-doc histogram never leaves its row: ZERO shuffles added to the corpus scan; the only Exchange is the 4-row per-source stats aggregate.",
  "q_llm_bigram_nll": "Bigram-NLL perplexity proxy: one explode feeds the (w1,w2) pair stream; the bigram and unigram models are two model-sized two-phase groupBys (map-side partials — shuffle tracks VOCAB, not corpus), the 1-row vocab count broadcasts, and both model joins key on the pair/word columns before the per-doc mean aggregate (at sf0.1 AQE turns them into broadcasts — the measured 3 broadcasts; past the threshold they fall back to shuffle-hash on the model key). Nothing corpus-sized shuffles twice; model size bounds the join build sides.",
- "q_llm_multimodal_check": "Multimodal gate (expected empty): five real-codec legs (PNG/GIF/JPEG/MJPEG-AVI + fake-codec plumbing) all run as Arrow mapInPandas over localCheckpointed media — the only Exchanges are the explicit partition-invariance repartitions and the full-outer comparison joins on media_id; decode work never shuffles.",
+ "q_llm_multimodal_check": "Multimodal gate (expected empty): five real-codec legs (PNG/GIF/JPEG/MJPEG-AVI + fake-codec plumbing) all run as mapInArrow over localCheckpointed media — the only Exchanges are the explicit partition-invariance repartitions and the full-outer comparison joins on media_id; decode work never shuffles.",
 }
 
 def _git(*args: str) -> str:
@@ -261,7 +261,7 @@ GROWTH_NOTES = {
         " assigns rows at row-group granularity however many splits"
         " the scan requests — at 10x (more row groups) the probe"
         " spreads across cores and time is near-flat. The constant is"
-        " per-core Arrow-batch throughput of the r11 pandas_udf"
+        " per-core Arrow-batch throughput of the scalar Arrow UDF"
         " battery (3.3x below the JVM HOF folds it replaced),"
         " parallelized by row-group count at real corpus sizes — not"
         " a scale risk. Third point (factor=100): 100x data in 4.73x"
@@ -283,7 +283,7 @@ GROWTH_NOTES = {
         "expected wall growth = task WAVES, not data: the crawl path's"
         " parallel grain is FILE count (binaryFile hands whole .warc.gz"
         " archives to tasks; the record walk, HTTP envelope strip and"
-        " HTML tokenizer are consecutive mapInPandas stages of one task"
+        " HTML tokenizer are consecutive mapInArrow stages of one task"
         " chain), so this row uses its own file-grain probe — 8 archives"
         " at 1x vs 80 at 10x on 32 cores. The task-wave floor is"
         " ceil(80/32)=3, but the 10x row is NOISY by construction — a"

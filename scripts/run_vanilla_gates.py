@@ -111,7 +111,7 @@ def main() -> None:
     sys.path.insert(0, str(REPO))
     sys.path.insert(0, str(REPO / "tests"))
     os.chdir(tempfile.mkdtemp(prefix="vanilla_gates_"))
-    # Python WORKERS must import the package too (mapInPandas gates).
+    # Python WORKERS must import the package too (mapInArrow gates).
     # The factory-session suite gets this for free by running from the
     # repo cwd; after the chdir above the repo has to travel via
     # PYTHONPATH — an environment fact, not a session conf, so the

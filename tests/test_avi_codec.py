@@ -351,7 +351,8 @@ def test_sample_frames_real_mjpeg(spark):
     values = [20 * k for k in range(10)]
     payload = write_avi_ref(_flat_frames(values), 16, 16, us_per_frame=40000)
     media = spark.createDataFrame(
-        [(7, "video", "video/x-msvideo", payload, 16, 16, 400)],
+        [(7, "video", "video/x-msvideo", payload, 16, 16, 400),
+         (8, "video", "video/x-msvideo", None, 16, 16, 400)],
         "media_id long, kind string, mime string, payload binary, "
         "width int, height int, duration_ms long",
     )
@@ -359,6 +360,7 @@ def test_sample_frames_real_mjpeg(spark):
         sample_frames(media, every_ms=120, fake=False).collect(),
         key=lambda r: r.frame_idx,
     )
+    assert {r.media_id for r in rows} == {7}  # NULL payload: no frames
     assert [r.frame_idx for r in rows] == [0, 3, 6, 9]
     assert [r.ts_ms for r in rows] == [0, 120, 240, 360]
     for r in rows:

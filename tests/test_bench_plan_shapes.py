@@ -29,7 +29,7 @@ def _run(spark, name):
 
 def test_kmeans_is_exchange_free(spark):
     """The headline kmeans invariant: centroids ride a Python-side
-    broadcast, assignment is mapInPandas — NO plan-level exchange and
+    broadcast, assignment is mapInArrow — NO plan-level exchange and
     NO shuffle at any iteration count."""
     m = _run(spark, "q_llm_kmeans")
     assert m["n_exchanges"] == 0
@@ -61,7 +61,7 @@ def test_near_dup_blocked_avoids_broadcast_and_all_pairs(spark):
 
 
 def test_multimodal_features_single_byte_targeted_repartition(spark):
-    """extract_features itself is shuffle-free mapInPandas; the ONE
+    """extract_features itself is shuffle-free mapInArrow; the ONE
     exchange is the explicit byte-targeted media repartition."""
     m = _run(spark, "q_llm_multimodal_features")
     assert m["n_exchanges"] == 1

@@ -70,6 +70,9 @@ def test_passthrough_columns_and_row_count(spark):
 def test_invariant_gate_empty_on_corpus(spark):
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     assert compression_invariant_violations(docs).count() == 0
+    # a NULL text is skipped, not a violation
+    null_doc = spark.createDataFrame([(0, None)], "doc_id long, text string")
+    assert compression_invariant_violations(null_doc).count() == 0
 
 
 def test_deflate_bound_is_generous_for_tiny_inputs(spark):

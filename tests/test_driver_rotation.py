@@ -207,24 +207,43 @@ def test_api_md_fresh():
 
 
 def test_similarity_vectors_cross_one_arrow_boundary():
-    """operators/similarity.py converts vectors only through
-    ``_read_vectors``/``_write_vectors``, the helpers that own the
-    NULL/NaN policy: red here means a per-row ``np.stack`` or a pandas
-    boundary (whose float columns turn NaN into SQL NULL) came back."""
-    src = (
+    """Every Python-worker op in the package crosses as Arrow: no module
+    but ``streaming/stateful.py`` (``applyInPandasWithState`` has no
+    Arrow twin) names ``mapInPandas``, ``applyInPandas``,
+    ``pandas_udf`` or ``toPandas``, or imports pandas, whose float
+    columns turn NaN into SQL NULL. operators/similarity.py also
+    converts vectors only through ``_read_vectors``/``_write_vectors``,
+    the helpers that own the NULL/NaN policy: red there means a per-row
+    ``np.stack`` came back."""
+    import ast
+
+    pkg = (
         REPO
         / "development_of_a_streaming_pipeline_to_ingest_dcache_billing_data_to_hive_hdfs_spark"
-        / "operators"
-        / "similarity.py"
-    ).read_text()
-    for banned in (
-        "np.stack([np.asarray(",
-        "mapInPandas",
-        "applyInPandas",
-        "toPandas",
-        "import pandas",
-    ):
-        assert banned not in src, f"similarity.py contains {banned!r}"
+    )
+    banned = {"mapInPandas", "applyInPandas", "pandas_udf", "toPandas"}
+    hits = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        if rel == "streaming/stateful.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Import):
+                names = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom):
+                names = [node.module or ""] + [a.name for a in node.names]
+            elif isinstance(node, ast.Attribute):
+                names = [node.attr]
+            elif isinstance(node, ast.Name):
+                names = [node.id]
+            else:
+                continue
+            for n in names:
+                if n in banned or n.split(".")[0] == "pandas":
+                    hits.append(f"{rel}:{node.lineno} {n}")
+    assert not hits, hits
+    src = (pkg / "operators" / "similarity.py").read_text()
+    assert "np.stack([np.asarray(" not in src
 
 
 def test_window_is_computed_and_contains_all_stale():

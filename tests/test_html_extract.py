@@ -1,5 +1,5 @@
 """HTML→text extraction: drop rules, block boundaries, entities,
-malformed-HTML recovery, and the Spark mapInPandas path."""
+malformed-HTML recovery, and the Spark mapInArrow path."""
 
 from __future__ import annotations
 

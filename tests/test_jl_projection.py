@@ -1,6 +1,6 @@
 """Johnson–Lindenstrauss random projection: hand-checked math vs the
 portable sign matrix, JL distortion statistics on the real embeddings,
-NULL/shape guards, and the plan-literal budget."""
+NULL/shape guards, and bit-equality with a pure-Python reference."""
 
 from __future__ import annotations
 
@@ -79,60 +79,66 @@ def test_guards(spark):
     embs = spark.read.parquet(SF_EMB)
     with pytest.raises(ValueError, match="out_dim"):
         jl_project(embs, 0)
-    with pytest.raises(ValueError, match="plan-literal budget"):
-        jl_project(embs, 2000, in_dim=64, method="literal")
-    with pytest.raises(ValueError, match="unknown method"):
-        jl_project(embs, 4, method="numpy")
     empty = embs.where(F.lit(False))
     with pytest.raises(ValueError, match="empty"):
         jl_project(empty, 4)
 
 
+def _reference_projection(vec, out_dim, in_dim, salt="jl-v1"):
+    """Pure-Python JL projection with the operator's float op order:
+    per coordinate a left fold ``s + x_i * s_ij`` from 0.0 over the
+    input dims in index order, scaled by 1/√out_dim after the sum.
+    NULL, wrong-length or NULL-element vectors give None."""
+    if vec is None or len(vec) != in_dim or any(v is None for v in vec):
+        return None
+    signs = jl_sign_matrix(in_dim, out_dim, salt)
+    inv_root = 1.0 / math.sqrt(out_dim)
+    out = []
+    for j in range(out_dim):
+        acc = 0.0
+        for i in range(in_dim):
+            acc = acc + float(vec[i]) * signs[i][j]
+        out.append(acc * inv_root)
+    return out
+
+
 def test_blas_path_matches_literal_path(spark):
-    """method='blas' (what q_llm_jl_projection runs since r16, and what
-    'auto' dispatches to past 100k literals) is BIT-EQUAL to the
-    plan-literal folds: it accumulates in input-dim order with unscaled
-    ±1 signs and scales once after the sum — the identical float64
-    operation sequence, so exact equality, not a tolerance.
-    NULL/wrong-length contract holds in both."""
+    """The Arrow projection (what q_llm_jl_projection runs) is BIT-EQUAL
+    to the pure-Python left fold of ``_reference_projection``: it
+    accumulates in input-dim order with unscaled ±1 signs and scales
+    once after the sum — the identical float64 operation sequence, so
+    exact equality, not a tolerance. The edge rows pin the contract:
+    NULL, wrong-length and NULL-element vectors project to a NULL row,
+    a zero vector to zeros, and a NaN element to NaN VALUES."""
     embs = spark.read.parquet(SF_EMB).limit(50)
-    lit_rows = {
-        r.vec_id: r.proj
-        for r in jl_project(embs, 16, method="literal").collect()
-    }
-    blas_rows = {
-        r.vec_id: r.proj
-        for r in jl_project(embs, 16, method="blas").collect()
-    }
-    assert set(lit_rows) == set(blas_rows)
-    for k in lit_rows:
-        assert lit_rows[k] == blas_rows[k], (
-            f"vec {k}: blas path drifted from the literal fold — the "
-            "ordered-accumulation contract is broken"
+    rows = jl_project(embs, 16).select("embedding", "proj").collect()
+    assert len(rows) == 50
+    for r in rows:
+        assert r.proj == _reference_projection(r.embedding, 16, 64), (
+            "projection drifted from the ordered left fold — the "
+            "accumulation-order contract is broken"
         )
-    bad = spark.createDataFrame(
-        [(1, [1.0, 2.0]), (2, None), (3, [1.0, None] + [2.0] * 62)],
+    edge = spark.createDataFrame(
+        [(1, [1.0, 2.0]), (2, None), (3, [1.0, None] + [2.0] * 62),
+         (4, [0.0] * 64)],
         "vec_id long, embedding array<double>",
     )
-    for m in ("literal", "blas"):
-        out = {
-            r.vec_id: r.proj
-            for r in jl_project(bad, 4, in_dim=64, method=m).collect()
-        }
-        assert out == {1: None, 2: None, 3: None}, m
-    # a NaN ELEMENT projects to NaN VALUES on both paths (r17, r16
-    # advice: the blas op emits an explicitly-masked Arrow ListArray,
-    # so the NaN is not coerced to SQL NULL on the way back); list ==
-    # would call NaN != NaN, so check element-wise
+    out = {
+        r.vec_id: r.proj for r in jl_project(edge, 4, in_dim=64).collect()
+    }
+    assert out == {1: None, 2: None, 3: None, 4: [0.0] * 4}
+    # a NaN ELEMENT projects to NaN VALUES: the op emits an explicitly
+    # masked Arrow ListArray, so the NaN is not coerced to SQL NULL on
+    # the way back; list == would call NaN != NaN, so check element-wise
     nan_df = spark.createDataFrame(
         [(1, [float("nan"), 2.0, 3.0])], "vec_id long, embedding array<double>"
     )
-    for m in ("literal", "blas"):
-        row = jl_project(nan_df, 4, in_dim=3, method=m).collect()[0]
-        assert row.proj is not None and len(row.proj) == 4, m
-        assert all(math.isnan(v) for v in row.proj), (m, row.proj)
-    # auto dispatches to blas past the budget instead of raising
-    big = jl_project(embs, 2000, in_dim=64)  # 128k literals -> blas
+    row = jl_project(nan_df, 4, in_dim=3).collect()[0]
+    assert row.proj is not None and len(row.proj) == 4
+    assert all(math.isnan(v) for v in row.proj), row.proj
+    assert all(math.isnan(v) for v in _reference_projection(row.embedding, 4, 3))
+    # no size limit: 64 × 2000 signs project like any other shape
+    big = jl_project(embs, 2000, in_dim=64)
     row = big.limit(1).collect()[0]
     assert len(row.proj) == 2000
 

@@ -305,15 +305,19 @@ def test_token_count_and_lang(spark):
 
 def test_multimodal_feature_extraction(spark):
     data = [(i, "image", "image/png", bytes([i] * (100 + i)), 10, 10, None) for i in range(20)]
+    data.append((20, "image", "image/png", None, 10, 10, None))
     media = spark.createDataFrame(
         data, "media_id long, kind string, mime string, payload binary, width int, height int, duration_ms long"
     )
     media = media_repartition(media, target_bytes=500)
     feats = extract_features(media, fake=True)
     rows = feats.collect()
-    assert len(rows) == 20
-    assert all(len(r.features) == FEATURE_DIM for r in rows)
+    assert len(rows) == 21
     by_id = {r.media_id: r for r in rows}
+    # a NULL payload gives NULL features and 0 bytes
+    null_row = by_id.pop(20)
+    assert null_row.features is None and null_row.n_bytes == 0
+    assert all(len(r.features) == FEATURE_DIM for r in by_id.values())
     assert all(by_id[i].n_bytes == 100 + i for i in range(20))
     # determinism: same payload → same features
     again = {r.media_id: r.features for r in extract_features(media, fake=True).collect()}
@@ -347,7 +351,7 @@ def test_real_decode_png_and_non_png_gate():
 
 
 def test_extract_features_real_png_decode(spark):
-    """End-to-end real decode through the Arrow mapInPandas plumbing:
+    """End-to-end real decode through the mapInArrow plumbing:
     the feature vector for each media row must equal the local
     decode_image of the same payload (executor and driver run the same
     stdlib codec)."""
@@ -378,7 +382,7 @@ def test_extract_features_real_png_decode(spark):
 
 def test_extract_features_mixed_kinds_real_codecs(spark):
     """fake=False over a MIXED media frame: image rows take the PNG
-    codec, audio rows the WAV codec, inside one mapInPandas pass —
+    codec, audio rows the WAV codec, inside one mapInArrow pass —
     per-row dispatch on kind, verified against local decodes."""
     import io
     import wave as _wave
@@ -534,23 +538,26 @@ def test_multimodal_resize_and_frames(spark):
         (3, "video", "video/mp4", b"vid-one", None, None, 3500),
         (4, "video", "video/mp4", b"vid-two", None, None, 900),
         (5, "video", "video/mp4", None, None, None, 2000),
+        (6, "image", "image/png", None, 10, 10, None),
+        (7, "video", "video/mp4", b"vid-three", None, None, None),
     ]
     media = spark.createDataFrame(
         data, "media_id long, kind string, mime string, payload binary, width int, height int, duration_ms long"
     )
     resized = {r.media_id: r for r in resize_images(media.where("kind = 'image'"), 16, 16).collect()}
-    assert set(resized) == {1, 2}
+    assert set(resized) == {1, 2, 6}
+    assert resized.pop(6).payload is None  # NULL payload stays NULL
     assert all(r.width == 16 and r.height == 16 for r in resized.values())
     assert all(len(r.payload) == 16 * 16 * 3 for r in resized.values())
     # deterministic and content-dependent
-    again = {r.media_id: bytes(r.payload) for r in resize_images(media.where("kind = 'image'"), 16, 16).collect()}
+    again = {r.media_id: r.payload for r in resize_images(media.where("kind = 'image'"), 16, 16).collect()}
     assert again[1] == bytes(resized[1].payload) and again[1] != again[2]
 
     frames = sample_frames(media.where("kind = 'video'"), every_ms=1000).collect()
     by_id = {}
     for r in frames:
         by_id.setdefault(r.media_id, []).append(r)
-    assert set(by_id) == {3, 4}          # NULL payload row dropped
+    assert set(by_id) == {3, 4}          # NULL payload/duration rows dropped
     assert len(by_id[3]) == 3            # 3500ms // 1000
     assert len(by_id[4]) == 1            # min 1 frame
     assert sorted(r.ts_ms for r in by_id[3]) == [0, 1000, 2000]
@@ -560,7 +567,9 @@ def test_multimodal_resize_and_frames(spark):
     # PythonException whose message carries the original text
     import pytest as _pytest
     with _pytest.raises(Exception, match="non-PNG image resize"):
-        resize_images(media.where("kind = 'image'"), 8, 8, fake=False).collect()
+        resize_images(
+            media.where("kind = 'image' AND payload IS NOT NULL"), 8, 8, fake=False
+        ).collect()
 
 
 def test_multimodal_resize_real_png(spark):
@@ -1611,6 +1620,7 @@ def test_bpe_learn_and_encode(spark):
         [
             (0, "lowlow lowlow lowest lower low"),
             (1, "lowlow newest newest widest lowest"),
+            (2, None),  # a NULL text adds no word
         ],
         "doc_id long, text string",
     )
@@ -2371,7 +2381,7 @@ def test_extract_features_fuzz_corpus_fails_soft(spark):
     """Composes the codec fuzz with the Spark path (VERDICT r10 task 4):
     a media frame carrying valid seeds, bit-flipped mutants, truncations,
     and signature-bearing garbage for all five codecs goes through ONE
-    live ``extract_features(fake=False)`` mapInPandas pass. The contract
+    live ``extract_features(fake=False)`` mapInArrow pass. The contract
     under test is the executor-side error policy: malformed payloads
     must become ``features IS NULL`` rows — never a task failure — while
     valid payloads on the SAME partitions still decode. A future

@@ -4,6 +4,7 @@ nearest-centroid cosine, tie-break, degenerate vectors, plan shape."""
 from __future__ import annotations
 
 import math
+from decimal import ROUND_HALF_UP, Decimal
 
 import pytest
 from pyspark.sql import functions as F
@@ -85,24 +86,51 @@ def test_scan_stage_plan(spark):
     assert "Join" not in plan, plan
 
 
-def test_plan_literal_budget_valve(spark):
-    import pytest as _pytest
+def _round4(x):
+    """Spark's ``round(double, 4)``: HALF_UP on the shortest decimal
+    form of the double; NaN passes through."""
+    if math.isnan(x):
+        return x
+    return float(Decimal(repr(x)).quantize(Decimal("0.0001"), ROUND_HALF_UP))
 
-    df = spark.createDataFrame(
-        [(0, [1.0, 0.0])], "vec_id long, embedding array<float>"
-    )
-    big = [[1.0] * 101 for _ in range(1000)]  # 101k literals
-    with _pytest.raises(ValueError, match="plan-literal budget"):
-        prototypicality(df, big)
+
+def _reference_score(vec, cents):
+    """Pure-Python prototypicality with the operator's float op order:
+    ``dot`` and ``‖v‖²`` are left folds from 0.0 in element order, the
+    divisor is ``‖v‖·‖c‖``, then a 4-dp round and an argmax that ranks
+    NaN above every number (Spark's ordering) with the lower centroid
+    index winning ties. NULL, wrong-length, NULL-element and zero-norm
+    vectors give (None, None)."""
+    dim = len(cents[0])
+    if vec is None or len(vec) != dim or any(v is None for v in vec):
+        return (None, None)
+    x = [float(v) for v in vec]
+    nsq = 0.0
+    for v in x:
+        nsq = nsq + v * v
+    nv = math.sqrt(nsq)
+    if nv == 0.0:
+        return (None, None)
+    scores = []
+    for c in cents:
+        c = [float(v) for v in c]
+        dot = 0.0
+        for a, b in zip(x, c):
+            dot = dot + a * b
+        norm_c = math.sqrt(sum(v * v for v in c))
+        scores.append(_round4(dot / (nv * norm_c)))
+    best = max(scores, key=lambda v: (math.isnan(v), v))
+    same = (lambda v: math.isnan(v)) if math.isnan(best) else (lambda v: v == best)
+    return (next(i for i, v in enumerate(scores) if same(v)), best)
 
 
 def test_arrow_path_is_bit_equal_to_literal_path(spark):
-    """method='arrow' (what q_llm_prototypicality runs since r16) must
-    be BIT-EQUAL to the plan-literal folds: the Arrow op accumulates
+    """The Arrow scorer (what q_llm_prototypicality runs) is BIT-EQUAL
+    to the pure-Python fold of ``_reference_score``: the op accumulates
     dot and ||v||^2 in element order and leaves the 4-dp round + argmax
-    to the same JVM expressions, so exact equality on (cluster,
-    proto_cos) — not a tolerance. NULL (missing / wrong-length) and
-    zero-norm contracts must agree too."""
+    to JVM expressions, so exact equality on (cluster, proto_cos) — not
+    a tolerance. The edge rows pin the NULL contract: NULL,
+    wrong-length, zero-norm and NULL-element vectors score (NULL, NULL)."""
     embs = spark.read.parquet(
         "/root/testdata/sf0.001/embeddings.parquet"
     )
@@ -113,45 +141,33 @@ def test_arrow_path_is_bit_equal_to_literal_path(spark):
         .select("embedding")
         .collect()
     ]
-    lit = {
+    vecs = {r.vec_id: r.embedding for r in embs.collect()}
+    got = {
         r.vec_id: (r.cluster, r.proto_cos)
         for r in prototypicality(embs, cents).collect()
     }
-    arw = {
-        r.vec_id: (r.cluster, r.proto_cos)
-        for r in prototypicality(embs, cents, method="arrow").collect()
-    }
-    assert lit == arw
+    assert got == {k: _reference_score(v, cents) for k, v in vecs.items()}
     dim = len(cents[0])
     edge = spark.createDataFrame(
         [(1, None), (2, [1.0, 2.0]), (3, [0.0] * dim),
          (4, [1.0, None] + [2.0] * (dim - 2))],
         "vec_id long, embedding array<double>",
     )
-    for m in ("literal", "arrow"):
-        out = {
-            r.vec_id: (r.cluster, r.proto_cos)
-            for r in prototypicality(edge, cents, method=m).collect()
-        }
-        assert out == {
-            1: (None, None), 2: (None, None), 3: (None, None), 4: (None, None)
-        }
-    # a NaN ELEMENT in the data is a VALUE, not a NULL (Spark's
-    # NaN > 0 passes the norm guard) — r17, r16 advice: the arrow
-    # path's cosines ride masked Float64 arrays so the pandas→Arrow
-    # conversion cannot coerce the NaN to SQL NULL; both paths must
-    # agree exactly (note dict == would call NaN != NaN, so compare
-    # field-wise)
+    out = {
+        r.vec_id: (r.cluster, r.proto_cos)
+        for r in prototypicality(edge, cents).collect()
+    }
+    assert out == {
+        1: (None, None), 2: (None, None), 3: (None, None), 4: (None, None)
+    }
+    # a NaN ELEMENT in the data is a VALUE, not a NULL: the cosines
+    # ride masked Arrow arrays, so the NaN is not coerced to SQL NULL
+    # (dict == would call NaN != NaN, so compare field-wise)
     nan_vec = [float("nan")] + [2.0] * (dim - 1)
     nan_df = spark.createDataFrame(
         [(1, nan_vec)], "vec_id long, embedding array<double>"
     )
-    got = {
-        m: prototypicality(nan_df, cents, method=m).collect()[0]
-        for m in ("literal", "arrow")
-    }
-    for m, r in got.items():
-        assert r.proto_cos is not None and math.isnan(r.proto_cos), (m, r)
-    assert got["literal"].cluster == got["arrow"].cluster
-    with pytest.raises(ValueError, match="unknown method"):
-        prototypicality(edge, cents, method="numpy")
+    r = prototypicality(nan_df, cents).collect()[0]
+    ref_cluster, ref_cos = _reference_score(nan_vec, cents)
+    assert r.proto_cos is not None and math.isnan(r.proto_cos), r
+    assert math.isnan(ref_cos) and r.cluster == ref_cluster

@@ -2,7 +2,7 @@
 (r14): get_spark_session exports the package parent on PYTHONPATH
 before the JVM launches, because forked Python workers inherit only
 the JVM's environment — 'import from cwd' silently carried every
-mapInPandas op until a sweep launched from /tmp failed them all with
+Python-worker op until a sweep launched from /tmp failed them all with
 ModuleNotFoundError."""
 
 from __future__ import annotations
@@ -32,7 +32,7 @@ def test_export_prepends_package_parent(monkeypatch):
 
 def test_python_worker_resolves_package_from_foreign_cwd(tmp_path):
     """End-to-end regression: from a cwd OUTSIDE the repo, a fresh
-    session must run a package mapInPandas op on its workers. Runs in
+    session must run a package mapInArrow op on its workers. Runs in
     a subprocess so the parent suite's session (launched from the
     repo) cannot mask the worker-path behavior."""
     script = tmp_path / "drive_foreign_cwd.py"

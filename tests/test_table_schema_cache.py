@@ -47,8 +47,8 @@ def test_second_load_of_unchanged_table_starts_no_job(spark):
 
 
 def test_second_catalog_build_starts_no_job(spark):
-    # the catalog's first events load turns nanosAsLong on for the
-    # session, which keys every later load; start from that state
+    # the billing query loads events too; that load leaves nanosAsLong
+    # as it was, so it re-keys no later load
     load_table(spark, SF_DIR, "events")
     names = (
         "q_rel_q5_nation_volume",
@@ -111,6 +111,32 @@ def test_changed_directory_table_is_inferred_again(spark, tmp_path, uri):
         assert got.count() == 2
     finally:
         spark.conf.set("spark.sql.parquet.mergeSchema", merge)
+
+
+def test_events_load_flips_nanos_conf_only_for_a_nanos_footer(spark, tmp_path):
+    """The shipped events.ts is TIMESTAMP(MICROS): loading it leaves
+    nanosAsLong as it was, so a pinned lineitem entry keeps serving. A
+    TIMESTAMP(NANOS) footer turns the conf on and keeps it, and its
+    ``ts`` still loads as a microsecond timestamp."""
+    from pyspark.sql import functions as F
+
+    before = spark.conf.get(NANOS)
+    try:
+        spark.conf.set(NANOS, "false")
+        load_table(spark, SF_DIR, "lineitem")
+        load_table(spark, SF_DIR, "events")
+        assert spark.conf.get(NANOS) == "false"
+        assert _jobs(spark, lambda: load_table(spark, SF_DIR, "lineitem"))[1] == 0
+        _write(
+            str(tmp_path / "events.parquet"),
+            {"ts": pa.array([1_000_000_000_123], pa.timestamp("ns"))},
+        )
+        ev = load_table(spark, str(tmp_path), "events")
+        assert spark.conf.get(NANOS) == "true"
+        assert dict(ev.dtypes) == {"ts": "timestamp"}
+        assert ev.select(F.unix_micros("ts")).first()[0] == 1_000_000_000
+    finally:
+        spark.conf.set(NANOS, before)
 
 
 def test_entry_is_not_served_under_another_nanos_setting(spark, tmp_path):

@@ -1,7 +1,7 @@
 """WARC source connector vs an INDEPENDENT spec-direction record writer
 (built here, not with the module's own exporter): payload fidelity,
 type filtering, per-record gzip members, malformed rejection, and the
-Spark binaryFile → mapInPandas path."""
+Spark binaryFile → mapInArrow path."""
 
 from __future__ import annotations
 
