@@ -32,7 +32,7 @@ NOTES = {
  "q_llm_bm25_search": "BM25: the query-term INSET filter sits inside the token-explode scan stage, so only matched tokens reach the (term, doc) aggregate; document frequency and corpus stats broadcast back; TakeOrderedAndProject caps the result without a global sort.",
  "q_rel_pagerank": "PageRank: 10 rounds of (broadcast dangling-mass 1-row agg, rank/deg contribution join, keyed sum), each round localCheckpoint()ed so round k's plan does not re-embed rounds 0..k-1; static edges and the node/degree base checkpoint once.",
  "q_rel_psi_value_drift": "PSI drift: two corpus scans collapse map-side into <=bins partial counts; the <=bins-row full-outer join and the broadcast totals row are the only post-scan work — nothing corpus-sized shuffles.",
- "q_llm_jl_projection": "JL projection (r16: Arrow path): one mapInArrow over (vec_id, embedding) — the sign matrix ships once in the serialized op, each batch accumulates the projection in input-dim order (bit-equal to the literal fold, pinned in tests), zero joins/shuffles at any corpus size. Replaced the 1024-plan-literal fold whose ~2.4s/run was py4j construction + Catalyst planning of the literal tree (and whose per-row cost was an interpreted-HOF fold) — the char-entropy/gopher-repetition lesson applied to the projection.",
+ "q_llm_jl_projection": "JL projection (r16: Arrow path): one mapInArrow over (vec_id, embedding) — the sign matrix ships once in the serialized op, each batch accumulates the projection in input-dim order (bit-equal to a pure-Python fold in the same op order, pinned in tests), zero joins/shuffles at any corpus size. Replaced the 1024-plan-literal fold whose ~2.4s/run was py4j construction + Catalyst planning of the literal tree (and whose per-row cost was an interpreted-HOF fold) — the char-entropy/gopher-repetition lesson applied to the projection.",
  "q_llm_weighted_sample": "A-ES weighted sampling: the ln(u)/w key is a scan-stage md5 expression; TakeOrderedAndProject keeps per-partition heaps of k, so the corpus never globally sorts and only k rows reach the driver side of the plan.",
  "q_llm_warc_roundtrip": "WARC connector: binaryFile distributes segment files, the record walk is one mapInArrow generator per file — the natural parallel grain of a crawl; no shuffle anywhere in the read path.",
  "q_llm_html_extract": "HTML extraction: page construction is a scan-stage concat; the HTMLParser tokenizer runs per Arrow batch in the same mapInArrow boundary as the multimodal codecs — one scan, no shuffle.",
