@@ -50,7 +50,8 @@ deployment target is Hive-on-HDFS.
 
 At 100 TB: appends are partition-local (no shuffle); one pass per batch
 over the parsed frame per route, with the parsed batch persisted by the
-caller (streaming/pipeline.py) so the 4 route writes share one parse.
+caller (streaming/pipeline.py) so its 5 route writes, which it runs
+concurrently (one table and manifest each), share one parse.
 """
 
 from __future__ import annotations

@@ -296,18 +296,22 @@ def test_pipeline_maintains_sketch_store_at_ingest(spark, tmp_path):
 
 
 def test_pipeline_sketch_spec_names_unknown_route(spark, tmp_path):
+    import os
+
     import pytest as _pytest
 
-    from conftest import billing_record
     from development_of_a_streaming_pipeline_to_ingest_dcache_billing_data_to_hive_hdfs_spark.streaming.pipeline import (
+        ROUTES,
         BillingPipeline,
     )
 
     wh = str(tmp_path / "wh")
-    pipe = BillingPipeline(
-        source=None, warehouse_dir=wh,
-        sketch_specs={"nonsense": ("partition_date", "cellName", "t")},
-    )
-    batch = spark.createDataFrame([(billing_record("transfer"),)], ["value"])
     with _pytest.raises(ValueError, match="unknown route"):
-        pipe.process_batch(batch, 0)
+        BillingPipeline(
+            source=None, warehouse_dir=wh,
+            sketch_specs={"nonsense": ("partition_date", "cellName", "t")},
+        )
+    # refused at construction: no batch ran, so no route table exists
+    assert not any(
+        os.path.exists(os.path.join(wh, name)) for name in ROUTES
+    )

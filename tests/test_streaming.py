@@ -246,9 +246,11 @@ def test_stream_stream_interval_join(spark, tmp_path):
 
 
 def test_crash_after_partial_route_writes_no_duplicates(spark, tmp_path, monkeypatch):
-    """ADVICE crash window: die after 2 of 5 route writes, before the
-    ledger commit; the replayed batch must not duplicate the routes that
-    were already written (batch-scoped file names + pre-write cleanup)."""
+    """ADVICE crash window: 2 of 5 route writes land and 3 die, before
+    the ledger commit; the replayed batch must not duplicate the routes
+    that were already written (batch-scoped file names + pre-write
+    cleanup). The failure is keyed on the table, not on call order: the
+    route writes run concurrently."""
     from development_of_a_streaming_pipeline_to_ingest_dcache_billing_data_to_hive_hdfs_spark.streaming import (
         pipeline as pipeline_mod,
     )
@@ -265,11 +267,10 @@ def test_crash_after_partial_route_writes_no_duplicates(spark, tmp_path, monkeyp
     pipe = BillingPipeline(source=None, warehouse_dir=warehouse)
 
     real_write = pipeline_mod.write_partitioned_batch
-    calls = {"n": 0}
+    survivors = {pipe.table_path("transfers"), pipe.table_path("requests")}
 
     def dying_write(df, path, batch_id, fs=None):
-        calls["n"] += 1
-        if calls["n"] > 2:
+        if path not in survivors:
             raise RuntimeError("simulated crash mid-batch")
         real_write(df, path, batch_id, fs=fs)
 
