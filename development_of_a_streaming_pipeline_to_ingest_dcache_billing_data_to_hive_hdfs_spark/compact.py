@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from .fs import get_filesystem
 from .schema import DEFAULT_PARTITION_NAME, PARTITION_FIELD
+from .sink import compacted_prefix, resolve_table_ledger
 
 DEFAULT_TARGET_BYTES = 512 * 1024 * 1024
 
@@ -327,13 +328,21 @@ def compact_partition(
             f"parquet.bloom.filter.enabled#{c}", "true"
         ).option(f"parquet.bloom.filter.expected.ndv#{c}", str(bloom_ndv))
     writer.parquet(tmp)
+    # The compacted files hold state through the max committed batch M.
+    # Stamping M into their names before the swap makes it visible in
+    # the same rename as the data, so time-travel/change-feed reads
+    # below M fail fast from then on, whatever crashes later. A ledger
+    # read error propagates here, before anything is swapped; a table
+    # without a ledger (not an exactly-once warehouse) stays unstamped.
+    found = resolve_table_ledger(path, fs)
+    if found and found[1]:
+        prefix = compacted_prefix(max(found[1]))
+        for name, is_dir in fs.list_entries(tmp):
+            if not is_dir and not name.startswith(("_", ".")):
+                fs.rename(os.path.join(tmp, name), os.path.join(tmp, prefix + name))
     fs.rename(pdir, retired)
     fs.rename(tmp, pdir)
     fs.delete(retired, recursive=True)
-    # after the swap: compacted files now hold state up to the max
-    # committed batch — pin that fact so time-travel/change-feed reads
-    # below it fail fast instead of silently including newer rows
-    _record_compacted_as_of(path, fs)
     if file_stats_for:
         # after the swap: a crash leaves fresh stats or none, never
         # stats describing files that no longer exist (pruning fails
@@ -500,81 +509,6 @@ def compact_table(
 
 
 SNAPSHOT_HORIZON_FILE = "_snapshot_horizon.json"
-COMPACTED_AS_OF_FILE = "_compacted_as_of.json"
-
-
-def _record_compacted_as_of(path: str, fs) -> int | None:
-    """Record the max committed batch id at compaction time, beside the
-    table's exactly-once ledger.
-
-    Compaction rewrites batch-named files into anonymous ones, so after
-    it runs the compacted files hold state up to the batch that was
-    current AT THAT MOMENT. ``read_table_as_of`` includes compacted
-    files silently for ``batch_id >= horizon`` on the assumption that
-    compaction last ran at the horizon — an assumption a later
-    compaction WITHOUT ``expire_snapshots`` would silently break
-    (compacted files then hold newer state, and a pre-compaction
-    snapshot read would return rows from batches after the requested
-    point). This marker pins the assumption: snapshot/change-feed reads
-    below it fail fast instead of lying.
-
-    Monotonic max, written atomically, pure metadata. Tables without a
-    ledger (not an exactly-once warehouse) record nothing — their files
-    never carried batch names to begin with.
-
-    SCOPING: the marker describes ONE table's files. A table-local
-    ledger gets a table-local marker (flat ``compacted_as_of`` value).
-    Route tables share the warehouse-level ledger one dir up — there
-    the warehouse-level marker file records a PER-TABLE entry under
-    ``tables[<table dir name>]``, because compacting one route table
-    must not make ``compacted_as_of()`` refuse snapshot/change-feed
-    reads on a NEVER-compacted sibling whose batch-named files are
-    fully intact and perfectly reconstructible. (A flat warehouse-scope
-    value — the pre-round-7 format — did exactly that.)
-
-    A ledger or marker read error other than missing/unparsable
-    propagates (``sink.read_ledger``): skipping the marker on a
-    transient store error would leave it stale, and reading the marker
-    as empty would rewrite it without the siblings' entries."""
-    import json as _json
-
-    from .sink import read_ledger, resolve_table_ledger
-
-    found = resolve_table_ledger(path, fs)
-    if not found or not found[1]:
-        return None
-    base, committed = found
-    table_local = base == path.rstrip("/")
-    table = os.path.basename(path.rstrip("/"))
-    marker = os.path.join(base, COMPACTED_AS_OF_FILE)
-    doc = read_ledger(marker, fs) or {}  # {} = first compaction
-    if table_local:
-        prev = int(doc.get("compacted_as_of", -1))
-    else:
-        prev = max(
-            int(doc.get("tables", {}).get(table, {}).get("compacted_as_of", -1)),
-            # legacy flat warehouse-scope value: fold it into this
-            # table's entry (it was recorded by compacting SOME table
-            # here, monotonicity must survive the migration)
-            int(doc.get("compacted_as_of", -1)),
-        )
-    val = max(prev, max(int(b) for b in committed))
-    stamp = {
-        "compacted_as_of": val,
-        "recorded_at": dt.datetime.now(dt.timezone.utc).isoformat(),
-    }
-    if table_local:
-        doc = stamp
-    else:
-        # Keep any legacy flat warehouse-scope value IN PLACE: it was
-        # recorded by compacting SOME table here, so a sibling table
-        # compacted under the old format still needs it as its floor
-        # (the reader takes max(tables[t], flat)). Popping it would
-        # silently reset such siblings to -1 and let read_table_as_of
-        # serve rows from below their real compaction point.
-        doc.setdefault("tables", {})[table] = stamp
-    fs.write_text_atomic(marker, _json.dumps(doc, sort_keys=True))
-    return val
 
 
 def expire_snapshots(
@@ -586,10 +520,9 @@ def expire_snapshots(
     """Retention for TIME-TRAVEL state: declare every snapshot below a
     horizon expired, and drop the per-batch metadata that served it.
 
-    Compaction collapses batch-named files into anonymous compacted
-    ones, which makes old ``read_table_as_of`` points silently
-    unreconstructible — until now that surfaced as an incidental
-    "files have no batch name" failure. This operator makes the
+    Compaction collapses batch-named files into ``compacted<M>-`` ones,
+    which makes ``read_table_as_of`` points below M unreconstructible
+    (those reads fail on the stamp). This operator makes the
     lifecycle explicit: record ``horizon`` (the first still-valid as-of
     batch id) in ``_snapshot_horizon.json`` at the warehouse root, and
     delete ``_metrics/batch-<id>.json`` files below it (bounded

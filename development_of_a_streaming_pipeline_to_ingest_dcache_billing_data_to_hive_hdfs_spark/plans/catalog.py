@@ -6255,10 +6255,10 @@ def q_billing_change_feed_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     - ``asof_ne_prefix``: ``read_table_as_of(1)`` differs from batches
       0-1 (metadata-only snapshot off the batch-named layout);
     - ``asof_pre_marker_not_refused`` / ``changes_pre_marker_not_refused``:
-      after ``compact_table`` (which records ``_compacted_as_of``), a
-      snapshot or increment below the marker must FAIL LOUD — the
-      silent-wrong-data path the round-5 advisory flagged; a read that
-      succeeds is the violation;
+      after ``compact_table`` (which stamps the max committed batch
+      into the compacted files' names), a snapshot or increment below
+      that stamp must FAIL LOUD — the silent-wrong-data path the
+      round-5 advisory flagged; a read that succeeds is the violation;
     - ``asof_at_marker_ne_table``: the at-marker snapshot after
       compaction must still equal the full table (compaction rewrites
       layout, never content);
@@ -6285,8 +6285,8 @@ def q_billing_change_feed_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         table = f"{tmp}/events_route"
         # the production shape: files promote, THEN the ledger commits —
-        # the ledger is what lets compaction pin its _compacted_as_of
-        # marker to the max committed batch
+        # the ledger is what lets compaction stamp the max committed
+        # batch into its output's names
         ledger = BatchLedger(ledger_path(table))
         for b in range(3):
             write_partitioned_batch(

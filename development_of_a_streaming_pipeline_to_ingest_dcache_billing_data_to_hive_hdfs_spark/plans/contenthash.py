@@ -49,11 +49,10 @@ waits for the standing K-round staleness bound
 (tests/test_driver_rotation.py) instead of leading the next window; a
 false positive only means one wasted re-verification slot.
 
-``query_content_hash_v1`` preserves the scheme-1 algorithm bit-for-bit:
-scripts/gen_query_hashes.py uses it once to migrate QUERY_HASHES.json
-(a recorded scheme-1 hash that still matches the live scheme-1 hash
-proves the content is unchanged, so the query keeps its ``since_round``
-instead of being mass-restamped by the algorithm change itself).
+Scheme 3 hashes each function's source WITHOUT its docstrings (those
+of the function itself, its nested functions and, for a class, the
+class and its methods): a docstring edit changes no plan, so it
+requeues nothing. Comments still count.
 """
 
 from __future__ import annotations
@@ -70,13 +69,12 @@ from pathlib import Path
 _PKG_DIR = Path(__file__).resolve().parents[1]
 _PKG_NAME = _PKG_DIR.name
 
-SCHEME = 2
+SCHEME = 3
 
 __all__ = [
     "SCHEME",
     "query_content_hash",
     "query_content_parts",
-    "query_content_hash_v1",
 ]
 
 
@@ -200,9 +198,45 @@ def _code_names(code: types.CodeType) -> set[str]:
     return names
 
 
+@lru_cache(maxsize=4096)
+def _strip_docstrings(src: str) -> str:
+    """``src`` with the leading string statement of each module, class
+    and function body cut out, by its ``ast`` position, and the lines
+    that leaves blank dropped. The rest is the source as written (no
+    ``ast.unparse``), so the hash does not depend on the interpreter's
+    unparser. Source that does not parse is returned as is."""
+    # an indented method parses as the body of a dummy block, one line
+    # down; the column offsets are unchanged
+    shift = 1 if src[:1].isspace() else 0
+    try:
+        tree = ast.parse("if 1:\n" + src if shift else src)
+    except SyntaxError:
+        return src
+    spans = []
+    for node in ast.walk(tree):
+        body = getattr(node, "body", None)
+        if (
+            isinstance(node, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef))
+            and body
+            and isinstance(body[0], ast.Expr)
+            and isinstance(body[0].value, ast.Constant)
+            and isinstance(body[0].value.value, str)
+        ):
+            d = body[0]
+            spans.append(
+                (d.lineno - 1 - shift, d.col_offset, d.end_lineno - 1 - shift, d.end_col_offset)
+            )
+    # ast columns are UTF-8 byte offsets
+    lines = [ln.encode("utf-8") for ln in src.splitlines(keepends=True)]
+    for first, col, last, end_col in sorted(spans, reverse=True):
+        cut = lines[first][:col] + lines[last][end_col:]
+        lines[first : last + 1] = [cut] if cut.strip() else []
+    return b"".join(lines).decode("utf-8")
+
+
 def _fn_source(fn) -> str:
     try:
-        return inspect.getsource(fn)
+        return _strip_docstrings(inspect.getsource(fn))
     except (OSError, TypeError):
         # stable fallback — repr() embeds a memory address and would
         # make the hash differ between processes
@@ -629,80 +663,3 @@ def query_content_hash(fn, oracle: str | None) -> str:
     buf.append("\x00oracle\x00" + p["oracle"])
     buf.extend(f"{m}={h}" for m, h in sorted(p["files"].items()))
     return hashlib.md5("\n".join(buf).encode("utf-8", "replace")).hexdigest()
-
-
-# ---------------------------------------------------------------------------
-# Scheme 1 — retained bit-for-bit for QUERY_HASHES.json migration only
-# (see module docstring). Do not edit: its OUTPUT is the compatibility
-# contract, and tests/test_driver_rotation.py pins it against the r11
-# artifact's recorded values.
-# ---------------------------------------------------------------------------
-
-
-def _local_import_deps(fn, src: str) -> set[str]:
-    """Modules referenced by import statements INSIDE the builder body
-    (scheme-1 resolution: every ``from X import Y`` charges module X or
-    submodule X.Y at file granularity)."""
-    try:
-        tree = ast.parse(textwrap.dedent(src))
-    except SyntaxError:
-        return set()
-    mod = getattr(fn, "__module__", "") or ""
-    deps: set[str] = set()
-    for node in ast.walk(tree):
-        if isinstance(node, ast.Import):
-            deps.update(
-                a.name
-                for a in node.names
-                if a.name == _PKG_NAME or a.name.startswith(_PKG_NAME + ".")
-            )
-        elif isinstance(node, ast.ImportFrom):
-            deps.update(_resolve_import_from(mod, False, node))
-    return deps
-
-
-def query_content_hash_v1(fn, oracle: str | None) -> str:
-    """Scheme 1: builder + same-module helpers at function granularity,
-    the oracle SQL, and cross-module deps at FILE granularity."""
-    own_module = getattr(fn, "__module__", "") or ""
-    sources: list[str] = []
-    dep_mods: set[str] = set()
-    seen_fns: set[str] = set()
-    stack = [fn]
-    while stack:
-        f = stack.pop()
-        key = f"{getattr(f, '__module__', '?')}.{getattr(f, '__qualname__', '?')}"
-        if key in seen_fns:
-            continue
-        seen_fns.add(key)
-        src = _fn_source(f)
-        sources.append(f"# {key}\n{src}")
-        dep_mods |= _local_import_deps(f, src)
-        code = getattr(f, "__code__", None)
-        g = getattr(f, "__globals__", None)
-        if code is None or g is None:
-            continue
-        for name in sorted(_code_names(code)):
-            obj = g.get(name)
-            if obj is None:
-                continue
-            if isinstance(obj, types.ModuleType):
-                mod = getattr(obj, "__name__", "")
-                if mod == _PKG_NAME or mod.startswith(_PKG_NAME + "."):
-                    dep_mods.add(mod)
-                continue
-            mod = getattr(obj, "__module__", "") or ""
-            if mod != _PKG_NAME and not mod.startswith(_PKG_NAME + "."):
-                continue
-            if mod == own_module and isinstance(obj, types.FunctionType):
-                stack.append(obj)  # same-module helper: function granularity
-            else:
-                dep_mods.add(mod)
-    closure: set[str] = set()
-    for m in dep_mods:
-        closure |= _module_closure(m)
-    closure.discard(own_module)
-    parts = sources
-    parts.append("\x00oracle\x00" + (oracle or ""))
-    parts.extend(f"{m}={_module_file_hash(m)}" for m in sorted(closure))
-    return hashlib.md5("\n".join(parts).encode("utf-8", "replace")).hexdigest()

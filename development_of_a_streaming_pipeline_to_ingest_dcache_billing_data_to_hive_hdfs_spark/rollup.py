@@ -222,7 +222,7 @@ class IncrementalRollup:
         ``fold()`` raises when ``read_table_changes`` refuses an
         increment whose history compaction collapsed.
 
-        The marker M (``sources.tables.compacted_as_of``) is the
+        The stamp M (``sources.tables.compacted_as_of``) is the
         earliest faithful snapshot point, so the re-anchor is: snapshot
         read at M (compacted files + batch-named files ≤ M — pure
         metadata), full aggregate, install as the next version with

@@ -39,9 +39,10 @@ This module is the one owner of that on-disk layout: the ledger's name,
 format and two-level resolution (``read_ledger``,
 ``resolve_table_ledger``), the ``batch<id>-`` file names and the walk
 that groups a table's files by them (``batch_files``,
-``batch_id_column``), the manifests, and the per-batch metrics files
-(``batch_metrics_files``). Readers elsewhere call these and keep only
-their own filters.
+``batch_id_column``), the ``compacted<M>-`` names compaction gives its
+output (``compacted_prefix``, ``compaction_stamp``), the manifests and
+staging dirs, and the per-batch metrics files (``batch_metrics_files``).
+Readers elsewhere call these and keep only their own filters.
 
 All file operations route through the ``fs`` abstraction (fs.py), so
 the exactly-once protocol runs unchanged against bare local paths AND
@@ -79,13 +80,13 @@ def ledger_path(base: str) -> str:
 def read_ledger(path: str, fs) -> list[int] | dict | None:
     """Read a ledger's batch ids or another JSON marker, creating nothing.
 
-    The other markers are ``_compacted_as_of`` and ``_snapshot_horizon``.
-    Unlike ``BatchLedger``, no directory is made. None when there is no
-    usable file at ``path``: it is missing or does not parse (a torn
-    write). Any other read error propagates — a transient store error
-    read as "no ledger" would silently skip whatever the caller guards
-    with it, and a marker read as empty would be rewritten without the
-    entries it held."""
+    The other marker is ``_snapshot_horizon``. Unlike ``BatchLedger``,
+    no directory is made. None when there is no usable file at
+    ``path``: it is missing or does not parse (a torn write). Any other
+    read error propagates — a transient store error read as "no ledger"
+    would silently skip whatever the caller guards with it, and a
+    marker read as empty would be rewritten without the check it
+    feeds."""
     try:
         return json.loads(fs.read_text(path))
     except (FileNotFoundError, json.JSONDecodeError):
@@ -181,6 +182,29 @@ _BATCH_NAME = re.compile("^" + _batch_prefix(r"(\d+)"))
 BATCH_FILE_GLOB = _batch_prefix("*") + "*"
 
 
+def compacted_prefix(batch_id) -> str:
+    """The name prefix of a compaction's output files: ``batch_id`` is
+    the max committed batch when it ran, the batch those files hold
+    state through."""
+    return f"compacted{batch_id}-"
+
+
+_COMPACTED_NAME = re.compile("^" + compacted_prefix(r"(\d+)"))
+
+
+def compaction_stamp(files) -> int:
+    """The newest ``compacted<M>-`` stamp among ``files`` (paths or
+    names), −1 if none carries one."""
+    return max(
+        (
+            int(m.group(1))
+            for f in files
+            if (m := _COMPACTED_NAME.match(os.path.basename(f)))
+        ),
+        default=-1,
+    )
+
+
 def batch_id_column():
     """The ``_batch_id`` column: each row's batch id, from its file name.
 
@@ -200,7 +224,8 @@ def batch_files(path: str, fs) -> tuple[dict[int, list[str]], list[str]]:
     paths])``. Only partition dirs are listed; ``_``/``.`` names
     (staging dirs, manifests, compaction scratch) are skipped, as
     Spark's reader skips them. The un-named files are compaction
-    rewrites, which carry no batch id."""
+    rewrites, which carry no batch id (``compaction_stamp`` reads the
+    batch they hold state through from their names)."""
     named: dict[int, list[str]] = {}
     unnamed: list[str] = []
     for d, d_is_dir in fs.list_entries(path):
@@ -218,9 +243,24 @@ def batch_files(path: str, fs) -> tuple[dict[int, list[str]], list[str]]:
     return named, unnamed
 
 
+_STAGING_PREFIX = "._batch_staging_"
+_STAGING_NAME = re.compile(re.escape(_STAGING_PREFIX) + r"(\d+)")
+
+
 def batch_staging_dir(path: str, batch_id: int) -> str:
     """The hidden dir a batch's output lands in before promotion."""
-    return os.path.join(path, f"._batch_staging_{batch_id}")
+    return os.path.join(path, f"{_STAGING_PREFIX}{batch_id}")
+
+
+def batch_staging_ids(path: str, fs=None) -> set[int]:
+    """Ids of the batches that have a staging dir in the table at
+    ``path``: batches mid-write, or crashed before their cleanup."""
+    fs = fs or get_filesystem(path)
+    return {
+        int(m.group(1))
+        for name, is_dir in fs.list_entries(path)
+        if is_dir and (m := _STAGING_NAME.fullmatch(name))
+    }
 
 
 def batch_manifest_path(path: str, batch_id: int) -> str:
@@ -250,16 +290,24 @@ def cleanup_batch_files(path: str, batch_id: int, fs=None) -> int:
     return len(files)
 
 
-def batch_manifest_ids(path: str, fs=None) -> set[int]:
-    """Ids of the batches that have a manifest in the table at
-    ``path`` (empty if the table has no manifest dir)."""
+def batch_manifests(path: str, fs=None) -> tuple[set[int], list[str]]:
+    """The manifest dir of the table at ``path``, in one listing:
+    ``(ids of the batches with a manifest, paths of the other files)``.
+    The other files are temp files a crash inside a manifest's own
+    atomic write left (``.tmp-*`` locally, ``<id>.json.tmp`` on Hadoop
+    FS); their names carry no usable batch id. Both are empty if the
+    table has no manifest dir."""
     fs = fs or get_filesystem(path)
-    ids = set()
-    for name, is_dir in fs.list_entries(os.path.join(path, MANIFEST_DIR)):
-        m = re.fullmatch(r"(\d+)\.json", name)
-        if m and not is_dir:
+    mdir = os.path.join(path, MANIFEST_DIR)
+    ids, temps = set(), []
+    for name, is_dir in fs.list_entries(mdir):
+        if is_dir:
+            continue
+        if m := re.fullmatch(r"(\d+)\.json", name):
             ids.add(int(m.group(1)))
-    return ids
+        else:
+            temps.append(os.path.join(mdir, name))
+    return ids, temps
 
 
 def undo_batch_attempt(path: str, batch_id: int, fs=None) -> None:

@@ -130,46 +130,19 @@ def snapshot_horizon(path: str, fs=None) -> int:
 
 
 def compacted_as_of(path: str, fs=None) -> int:
-    """The max committed batch id at the LAST compaction of this table
-    (−1 = never compacted), as recorded by
-    ``compact._record_compacted_as_of``. Compacted files hold state up
-    to this batch, so snapshots strictly below it are unreconstructible
-    even when the snapshot horizon lags behind (a re-compaction without
-    ``expire_snapshots`` advances this marker but not the horizon).
-    Two-level resolution like ``snapshot_horizon``, but the
-    warehouse-level marker is PER-TABLE (``tables[<dir name>]``):
-    compaction of one route table is not evidence about a sibling's
-    files, so a sibling without an entry keeps its full
-    reconstructible history (−1). A legacy flat warehouse-scope value
-    (pre-round-7 format) is honored for every table — the conservative
-    direction (refuses some reconstructible reads, never serves a
-    wrong one) until the next compaction migrates the file. A missing
-    or unparsable marker counts as absent; any other read error
-    propagates (``sink.read_ledger``)."""
-    from ..compact import COMPACTED_AS_OF_FILE
+    """The batch this table's compacted files hold state through: the
+    newest ``compacted<M>-`` stamp compaction wrote into their names
+    (−1 = none, never compacted or compacted without a ledger). Snapshots
+    strictly below it are unreconstructible even when the snapshot
+    horizon lags behind (a re-compaction without ``expire_snapshots``
+    advances the stamp but not the horizon). The stamps are in the
+    table's own files, so compacting one route table says nothing about
+    a sibling's."""
     from ..fs import get_filesystem
-    from ..sink import read_ledger
+    from ..sink import batch_files, compaction_stamp
 
     fs = fs or get_filesystem(path)
-    table = os.path.basename(path.rstrip("/"))
-    doc = read_ledger(os.path.join(path, COMPACTED_AS_OF_FILE), fs)
-    if doc is not None:
-        return int(doc["compacted_as_of"])
-    doc = read_ledger(
-        os.path.join(os.path.dirname(path.rstrip("/")), COMPACTED_AS_OF_FILE), fs
-    )
-    if doc is None:
-        return -1
-    if "tables" in doc:
-        # A legacy flat warehouse-scope value may coexist with the
-        # per-table map (mixed-era warehouse: some tables compacted
-        # pre-migration). The flat value is the floor for EVERY
-        # table — conservative for never-since-compacted siblings.
-        return max(
-            int(doc["tables"].get(table, {}).get("compacted_as_of", -1)),
-            int(doc.get("compacted_as_of", -1)),
-        )
-    return int(doc["compacted_as_of"])  # legacy flat format
+    return compaction_stamp(batch_files(path, fs)[1])
 
 
 def table_snapshots(path: str, fs=None) -> list[int]:
@@ -211,7 +184,10 @@ def read_table_as_of(
 
     History exists until COMPACTION collapses it: a compacted partition's
     files carry no batch names, so a snapshot below the compaction
-    horizon is unrecoverable. The lifecycle is operator-driven via
+    point is unrecoverable. Their names carry that point instead
+    (``compacted<M>-``, the max committed batch when compaction ran),
+    and a snapshot below the newest M fails fast, whatever the horizon
+    says. The lifecycle is operator-driven via
     ``compact.expire_snapshots``, which records the horizon H (= max
     committed batch at expiry time):
 
@@ -222,11 +198,11 @@ def read_table_as_of(
       message; ``allow_compacted=True`` is the explicit opt-in for a
       best-effort read (compacted partitions at their full current
       state, batch-named files still filtered).
-    - no horizon recorded (H=0) but compacted files present — the
-      legacy incidental case: loud failure, same ``allow_compacted``
-      opt-in."""
+    - no horizon recorded (H=0) and no stamp, but compacted files
+      present (compacted without a ledger): loud failure, same
+      ``allow_compacted`` opt-in."""
     from ..fs import get_filesystem
-    from ..sink import batch_files
+    from ..sink import batch_files, compaction_stamp
 
     fs = fs or get_filesystem(path, spark)
     horizon = snapshot_horizon(path, fs=fs)
@@ -238,11 +214,12 @@ def read_table_as_of(
             "allow_compacted=True for a best-effort read (compacted "
             "partitions at their full current state)."
         )
-    cao = compacted_as_of(path, fs=fs)
+    named, compacted = batch_files(path, fs)
+    cao = compaction_stamp(compacted)
     if batch_id < cao and not allow_compacted:
         # the horizon can LAG the real unreconstructible boundary: a
         # re-compaction without expire_snapshots folds newer batches
-        # into the anonymous files, and silently including them here
+        # into the compacted files, and silently including them here
         # would return rows from after the requested snapshot
         raise ValueError(
             f"read_table_as_of: snapshot at batch {batch_id} predates the "
@@ -252,7 +229,6 @@ def read_table_as_of(
             "expire_snapshots after compacting to make this lifecycle "
             "explicit). Pass allow_compacted=True for a best-effort read."
         )
-    named, compacted = batch_files(path, fs)
     keep = [f for b, files in named.items() if b <= batch_id for f in files]
     if compacted and not allow_compacted and horizon == 0 and cao < 0:
         raise ValueError(
@@ -296,7 +272,7 @@ def read_table_changes(
     naming it. At 100 TB the cost is one directory listing plus the
     parquet scan of exactly the increment's files."""
     from ..fs import get_filesystem
-    from ..sink import batch_files, batch_id_column
+    from ..sink import batch_files, batch_id_column, compaction_stamp
 
     fs = fs or get_filesystem(path, spark)
     horizon = snapshot_horizon(path, fs=fs)
@@ -316,7 +292,8 @@ def read_table_changes(
             "with read_table_as_of at the horizon, then stream changes "
             "from there."
         )
-    cao = compacted_as_of(path, fs=fs)
+    named, compacted = batch_files(path, fs)
+    cao = compaction_stamp(compacted)
     if since_batch < cao:
         # a compaction that ran when batch `cao` was committed collapsed
         # the batch-named files of every batch THROUGH cao (including
@@ -332,7 +309,7 @@ def read_table_changes(
     # un-named (compacted) files are pre-horizon state, never an increment
     keep = [
         f
-        for b, files in batch_files(path, fs)[0].items()
+        for b, files in named.items()
         if b > since_batch and (until_batch is None or b <= until_batch)
         for f in files
     ]
@@ -364,7 +341,7 @@ def stream_table_changes(
     pipeline subscribes to Kafka — checkpointed progress, availableNow
     drains, backpressure via ``max_files_per_trigger``. The glob filter
     is what makes this SAFE under maintenance: compaction rewrites a
-    partition into anonymous ``part-*`` files, which the source never
+    partition into ``compacted<M>-part-*`` files, which the source never
     matches — so a nightly compaction cannot re-deliver rows the
     consumer already processed, and the removed batch files were
     already checkpointed as seen.

@@ -333,28 +333,35 @@ def remove_orphan_batches(
     pass True to clean everything.
 
     Deletes from the audit's own listing (one pass over each table, not
-    one per orphan id). Batch manifests (``sink.batch_manifest_ids``)
-    join the sweep: an uncommitted id with a manifest but no visible
-    files yet (a crash between the manifest write and the first promote
-    rename) counts as an orphan too, so it can be the protected latest
-    id, but it has no data file to count in the result; every removed id loses its staging dir, listed files and
+    one per orphan id). Batch manifests and staging dirs
+    (``sink.batch_manifests``, ``sink.batch_staging_ids``) join the
+    sweep: an uncommitted id with a manifest or a staging dir but no
+    visible file (a crash before the first promote rename, or before
+    the manifest write) counts as an orphan too, so it can be the
+    protected latest id, but it has no data file to count in the
+    result. Every removed id loses its staging dir, listed files and
     manifest (``sink.undo_batch_attempt``). Manifests of committed ids
     — stale ones a crash between a ledger commit and the manifest's
-    retirement left — are deleted. Not swept: a temp file a crash
-    inside the manifest's own atomic write left in ``_batch_manifests/``
-    (its name carries no usable batch id on every FS), and the staging
-    dir of a batch that crashed before writing its manifest and left no
-    promoted file."""
+    retirement left — are deleted. The temp files a crash inside a
+    manifest's own atomic write left carry no usable batch id, so they
+    are deleted only with ``include_latest=True``, when no batch can be
+    writing one."""
     from .fs import get_filesystem
-    from .sink import batch_manifest_ids, retire_batch_manifest, undo_batch_attempt
+    from .sink import (
+        batch_manifests,
+        batch_staging_ids,
+        retire_batch_manifest,
+        undo_batch_attempt,
+    )
 
     fs = fs or get_filesystem(warehouse_dir)
     removed: dict[str, dict[int, int]] = {}
     for table, tdir, committed, orphans in _scan_orphan_batches(
         warehouse_dir, fs
     ):
-        manifested = batch_manifest_ids(tdir, fs)
-        ids = sorted(set(orphans) | (manifested - committed))
+        manifested, temps = batch_manifests(tdir, fs)
+        started = manifested | batch_staging_ids(tdir, fs)
+        ids = sorted(set(orphans) | (started - committed))
         if not include_latest:
             ids = ids[:-1]
         for bid in ids:
@@ -365,6 +372,9 @@ def remove_orphan_batches(
                 removed.setdefault(table, {})[bid] = len(orphans[bid])
         for bid in manifested & committed:
             retire_batch_manifest(tdir, bid, fs=fs)
+        if include_latest:
+            for f in temps:
+                fs.delete(f)
     return removed
 
 

@@ -18,6 +18,9 @@ Run this at round end AFTER the last package-code commit (any later
 package edit re-drifts the live hashes and bench.py's
 _query_hashes_stale guard will flag it).
 
+A hash-scheme change (``plans.contenthash.SCHEME``) changes every hash,
+so it stamps every query once.
+
 ``--bootstrap-since N`` exists only for first-time generation: with no
 prior artifact every query would otherwise be stamped "new" and the
 whole rotation history would be discarded; bootstrapping records the
@@ -85,46 +88,6 @@ def merge_hashes(
     return hashes, changed
 
 
-def merge_hashes_migrated(
-    old: dict[str, dict],
-    live_new: dict[str, str],
-    live_old_scheme: dict[str, str],
-    default_since: int,
-) -> tuple[dict[str, dict], list[str]]:
-    """Scheme-migration merge (pure, unit-tested): when the hash
-    ALGORITHM changes, every new-scheme hash differs from the recorded
-    one by construction, and the plain merge would mass-restamp 163
-    queries as "edited" — discarding the whole verification history the
-    rotation exists to protect. Instead, a query whose recorded hash
-    still matches its live OLD-scheme hash is provably content-unchanged
-    (the old scheme is strictly coarser), so it keeps its since_round
-    and only its stored hash is rewritten to the new scheme.
-
-    Known limitation (r12 review): "strictly coarser" does not hold for
-    inputs only the NEW scheme sees (own-module constants, referenced
-    instance state). A query whose behavior changed ONLY through such an
-    input between its last green verdict and the migration keeps its
-    since_round with the new value baked into the rewritten hash — a
-    one-time blind window confined to the migration round itself, not a
-    standing gap (post-migration edits to those inputs requeue
-    normally). The r11→r12 migration's edit history was reviewed by
-    hand: every package edit in that window was function-level and
-    therefore old-scheme-visible."""
-    hashes: dict[str, dict] = {}
-    changed: list[str] = []
-    for q in sorted(live_new):
-        prev = old.get(q)
-        if prev and prev.get("hash") == live_old_scheme.get(q):
-            hashes[q] = {
-                "hash": live_new[q],
-                "since_round": int(prev["since_round"]),
-            }
-        else:
-            hashes[q] = {"hash": live_new[q], "since_round": default_since}
-            changed.append(q)
-    return hashes, changed
-
-
 def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("--bootstrap-since", type=int, default=None, metavar="N")
@@ -135,7 +98,6 @@ def main() -> int:
     )
     from development_of_a_streaming_pipeline_to_ingest_dcache_billing_data_to_hive_hdfs_spark.plans.contenthash import (  # noqa: E501
         SCHEME,
-        query_content_hash_v1,
     )
 
     out_path = REPO / "QUERY_HASHES.json"
@@ -144,7 +106,6 @@ def main() -> int:
     except (OSError, ValueError):
         old_data = {}
     old = old_data.get("hashes", {})
-    old_scheme = int(old_data.get("scheme", 1))
 
     rnd = upcoming_round()
     default_since = rnd
@@ -152,19 +113,7 @@ def main() -> int:
         default_since = args.bootstrap_since
 
     live = catalog._QUERY_HASHES
-    if old and old_scheme != SCHEME:
-        # hash-algorithm change: preserve since_round through the OLD
-        # scheme's judgment of "content unchanged" (see merge_hashes_migrated)
-        live_old = {
-            q: query_content_hash_v1(fn, catalog.ORACLES.get(q))
-            for q, fn in catalog.QUERIES.items()
-        }
-        hashes, changed = merge_hashes_migrated(
-            old, live, live_old, default_since
-        )
-        print(f"scheme migration: {old_scheme} -> {SCHEME}")
-    else:
-        hashes, changed = merge_hashes(old, live, default_since)
+    hashes, changed = merge_hashes(old, live, default_since)
     kept = len(hashes) - len(changed)
 
     head, dirty = git_state()

@@ -404,7 +404,6 @@ from development_of_a_streaming_pipeline_to_ingest_dcache_billing_data_to_hive_h
     _stable_repr,
     query_content_hash,
     query_content_parts,
-    query_content_hash_v1,
 )
 
 
@@ -485,34 +484,6 @@ def test_no_file_level_fallbacks_remain():
     assert not fallbacks, f"file-level fallbacks: {fallbacks}"
 
 
-def test_scheme_migration_preserves_history():
-    """merge_hashes_migrated: a recorded scheme-1 hash that still
-    matches the live scheme-1 hash keeps its since_round (the algorithm
-    change itself must not restamp 163 queries as edited); genuinely
-    edited content is stamped with the upcoming round."""
-    import importlib.util
-    from pathlib import Path
-
-    spec = importlib.util.spec_from_file_location(
-        "gen_query_hashes_mig",
-        Path(__file__).resolve().parent.parent / "scripts" / "gen_query_hashes.py",
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-
-    old = {
-        "kept": {"hash": "v1-kept", "since_round": 4},
-        "edited": {"hash": "v1-edited-old", "since_round": 7},
-    }
-    live_new = {"kept": "v2-kept", "edited": "v2-edited", "fresh": "v2-f"}
-    live_old = {"kept": "v1-kept", "edited": "v1-edited-NEW", "fresh": "v1-f"}
-    hashes, changed = mod.merge_hashes_migrated(old, live_new, live_old, 12)
-    assert hashes["kept"] == {"hash": "v2-kept", "since_round": 4}
-    assert hashes["edited"] == {"hash": "v2-edited", "since_round": 12}
-    assert hashes["fresh"] == {"hash": "v2-f", "since_round": 12}
-    assert changed == ["edited", "fresh"]
-
-
 def test_recorded_scheme_is_current():
     """QUERY_HASHES.json must be a scheme-SCHEME snapshot — a stale
     scheme means gen_query_hashes.py wasn't re-run after a hash
@@ -521,12 +492,52 @@ def test_recorded_scheme_is_current():
     assert int(data.get("scheme", 1)) == SCHEME
 
 
-def test_v1_retained_for_migration():
-    """The scheme-1 algorithm stays importable and deterministic — it
-    is the migration comparator for any FUTURE scheme bump too."""
-    q = "q_rel_distinct_stats"
-    assert query_content_hash_v1(QUERIES[q], ORACLES.get(q)) == \
-        query_content_hash_v1(QUERIES[q], ORACLES.get(q))
+def test_docstring_edits_do_not_change_the_hash(tmp_path, monkeypatch):
+    """Two builders that differ only in docstrings (their own, a nested
+    function's, a helper class's and its method's) hash equal; a code
+    edit in the helper's method still changes the hash. Each variant is
+    loaded from its own file under one package-internal module name, so
+    the walk follows the helper and the qualified keys match."""
+    import importlib.util
+    import sys
+
+    from development_of_a_streaming_pipeline_to_ingest_dcache_billing_data_to_hive_hdfs_spark.plans import (
+        contenthash,
+    )
+
+    template = '''
+class Helper:
+    """{0} class doc."""
+
+    def scale(self, x):
+        """{0} method doc,
+        over two lines."""
+        return x * {1}
+
+
+def builder(spark, sf_dir):
+    """{0} builder doc — with a non-ASCII dash."""
+    def inner(v):
+        """{0} inner doc."""
+        return v + 1
+
+    return inner(Helper().scale(2))
+'''
+
+    def load(i, doc, factor):
+        path = tmp_path / f"variant{i}.py"
+        path.write_text(template.format(doc, factor))
+        name = f"{contenthash._PKG_NAME}.docstring_probe"
+        spec = importlib.util.spec_from_file_location(name, path)
+        mod = importlib.util.module_from_spec(spec)
+        # inspect finds a class's source through its module
+        monkeypatch.setitem(sys.modules, name, mod)
+        spec.loader.exec_module(mod)
+        return query_content_hash(mod.builder, "SELECT 1")
+
+    base = load(0, "One", 3)
+    assert load(1, "Another wording of the", 3) == base
+    assert load(2, "One", 4) != base
 
 
 def test_rotation_artifact_matches_live_breakdown():

@@ -13,7 +13,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from development_of_a_streaming_pipeline_to_ingest_dcache_billing_data_to_hive_hdfs_spark.compact import (
-    COMPACTED_AS_OF_FILE,
     compact_partition,
     compact_table,
     list_partitions,
@@ -35,6 +34,7 @@ from development_of_a_streaming_pipeline_to_ingest_dcache_billing_data_to_hive_h
 )
 from development_of_a_streaming_pipeline_to_ingest_dcache_billing_data_to_hive_hdfs_spark.sources.tables import (
     compacted_as_of,
+    read_table_as_of,
 )
 
 from conftest import billing_record
@@ -128,37 +128,76 @@ def test_batch_commit_fs_calls_independent_of_table_history(spark, tmp_path):
     assert counts[0] == counts[1]
 
 
+def _data_names(path, partition):
+    pdir = os.path.join(path, f"partition_date={partition}")
+    return sorted(f for f in os.listdir(pdir) if not f.startswith(("_", ".")))
+
+
 def test_compaction_raises_on_ledger_read_error(spark, tmp_path):
-    """A ledger or ``_compacted_as_of`` marker read error that is neither
-    "missing" nor "unparsable" (an ``OSError``, as a transient HDFS
-    failure raises) fails the compaction instead of silently skipping
-    the marker — a marker left stale would let ``read_table_as_of``
-    serve rows from after the requested snapshot — or rewriting it from
-    an empty read, which would wipe a sibling table's entry."""
-    for flaky_file in (LEDGER_FILE, COMPACTED_AS_OF_FILE):
-        wh = tmp_path / flaky_file / "wh"
-        path = str(wh / "transfers")
-        sibling = str(wh / "requests")
-        write_partitioned_batch(_days(spark, 1), path, batch_id=0)
-        write_partitioned_batch(_days(spark, 1), sibling, batch_id=0)
-        BatchLedger(ledger_path(str(wh))).commit(0)
-        compact_partition(spark, sibling, "2024-03-01")
+    """A ledger read error that is neither "missing" nor "unparsable"
+    (an ``OSError``, as a transient HDFS failure raises) fails the
+    compaction before the swap instead of leaving its output unstamped:
+    unstamped compacted files would let ``read_table_as_of`` serve rows
+    from after the requested snapshot. The partition keeps its
+    batch-named files, and a sibling's stamp is untouched."""
+    wh = tmp_path / "wh"
+    path = str(wh / "transfers")
+    sibling = str(wh / "requests")
+    write_partitioned_batch(_days(spark, 1), path, batch_id=0)
+    write_partitioned_batch(_days(spark, 1), sibling, batch_id=0)
+    BatchLedger(ledger_path(str(wh))).commit(0)
+    compact_partition(spark, sibling, "2024-03-01")
+    before = _data_names(path, "2024-03-01")
 
-        class FlakyLedgerFS(LocalFS):
-            def read_text(self, p):
-                if os.path.basename(p) == flaky_file:
-                    raise OSError("transient ledger read error")
-                return super().read_text(p)
+    class FlakyLedgerFS(LocalFS):
+        def read_text(self, p):
+            if os.path.basename(p) == LEDGER_FILE:
+                raise OSError("transient ledger read error")
+            return super().read_text(p)
 
-        with pytest.raises(OSError, match="transient ledger read error"):
-            compact_partition(spark, path, "2024-03-01", fs=FlakyLedgerFS())
-        assert compacted_as_of(path) == -1
-        assert compacted_as_of(sibling) == 0
-        if flaky_file == COMPACTED_AS_OF_FILE:
-            with pytest.raises(OSError, match="transient ledger read error"):
-                compacted_as_of(sibling, fs=FlakyLedgerFS())
-        compact_partition(spark, path, "2024-03-01")  # healthy store
-        assert compacted_as_of(path) == 0
+    with pytest.raises(OSError, match="transient ledger read error"):
+        compact_partition(spark, path, "2024-03-01", fs=FlakyLedgerFS())
+    assert _data_names(path, "2024-03-01") == before
+    assert compacted_as_of(path) == -1
+    assert compacted_as_of(sibling) == 0
+    compact_partition(spark, path, "2024-03-01")  # healthy store
+    assert compacted_as_of(path) == 0
+
+
+def test_compacted_file_names_carry_the_batch(spark, tmp_path):
+    """Every data file a compaction writes is named
+    ``compacted<M>-<part file>``, M the max committed batch when it
+    ran; the side files Spark writes beside them keep their names."""
+    path = str(tmp_path / "transfers")
+    ledger = BatchLedger(ledger_path(path))
+    for b in range(3):
+        write_partitioned_batch(_days(spark, 1), path, batch_id=b)
+        ledger.commit(b)
+    compact_partition(spark, path, "2024-03-01", target_bytes=1)
+    names = _data_names(path, "2024-03-01")
+    assert len(names) == 3  # one per input file at a 1-byte target
+    assert all(n.startswith("compacted2-part-") for n in names), names
+    assert compacted_as_of(path) == 2
+    assert spark.read.parquet(path).count() == 3
+    assert not any(
+        n.startswith("._compact_") for n in os.listdir(path)
+    )  # the swap finished
+
+
+def test_compaction_without_ledger_leaves_names_unstamped(spark, tmp_path):
+    """A table with no ledger (not an exactly-once warehouse) has no
+    batch to stamp: its compacted files keep Spark's names, the derived
+    stamp reads −1 and an as-of read fails on the un-named files
+    unless ``allow_compacted``."""
+    path = str(tmp_path / "transfers")
+    for b in range(2):
+        write_partitioned_batch(_days(spark, 1), path, batch_id=b)
+    compact_partition(spark, path, "2024-03-01")
+    assert all(n.startswith("part-") for n in _data_names(path, "2024-03-01"))
+    assert compacted_as_of(path) == -1
+    with pytest.raises(ValueError, match="no batch name"):
+        read_table_as_of(spark, path, 1)
+    assert read_table_as_of(spark, path, 1, allow_compacted=True).count() == 2
 
 
 def test_partition_policy():

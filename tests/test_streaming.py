@@ -816,8 +816,8 @@ def test_recompaction_without_expiry_cannot_silently_lie(spark, tmp_path):
     unreconstructible boundary past the recorded horizon: compacted
     files then hold state through a newer batch, and a snapshot read
     between the horizon and that batch would silently include rows from
-    after the requested point. The _compacted_as_of marker (recorded at
-    every compaction) turns that into a loud failure, keeps the change
+    after the requested point. The stamp every compaction writes into
+    its files' names turns that into a loud failure, keeps the change
     feed honest, and stops table_snapshots advertising stale points."""
     import pytest as _pytest
 
@@ -881,8 +881,8 @@ def test_compacted_as_of_is_scoped_per_table(spark, tmp_path):
     """Compacting ONE route table must not make snapshot/change-feed
     reads refuse a NEVER-compacted sibling: the sibling's batch-named
     files are fully intact, so its history is perfectly
-    reconstructible. The shared warehouse-level marker records
-    per-table entries, not one warehouse-global refusal boundary."""
+    reconstructible. The compaction stamp lives in each table's own
+    file names, not in one warehouse-global refusal boundary."""
     from development_of_a_streaming_pipeline_to_ingest_dcache_billing_data_to_hive_hdfs_spark.compact import (
         compact_table,
     )
@@ -921,18 +921,79 @@ def test_compacted_as_of_is_scoped_per_table(spark, tmp_path):
         read_table_as_of(spark, transfers, 0)
 
 
-def test_legacy_flat_marker_survives_per_table_migration(spark, tmp_path):
-    """A pre-round-7 warehouse recorded ONE flat warehouse-scope
-    compacted_as_of covering every table compacted under that format.
-    The first post-upgrade compaction of any one table must NOT strip
-    that floor from its siblings: a sibling compacted under the old
-    format would otherwise resolve to -1 and read_table_as_of below
-    its real compaction point would silently serve wrong rows."""
-    import json
+def _ingest_one_transfer_per_batch(spark, pipe, days):
+    for b, day in enumerate(days):
+        batch = spark.createDataFrame(
+            [(billing_record("transfer", date=f"{day}T10:00:00.000+0000",
+                             cellName=f"pool-b{b}"),)],
+            ["value"],
+        )
+        pipe.process_batch(batch, b)
+
+
+def test_recompaction_crash_after_swap_cannot_silently_lie(spark, tmp_path):
+    """A re-compaction killed after both swap renames, before it deletes
+    the retired copy, has already made its stamp visible: it is in the
+    compacted files' names, swapped in by the same rename as the data.
+    Reads below it fail instead of serving the late batch's row as of
+    batch 2 (4 rows) or an empty increment after batch 2."""
+    import pytest as _pytest
 
     from development_of_a_streaming_pipeline_to_ingest_dcache_billing_data_to_hive_hdfs_spark.compact import (
-        COMPACTED_AS_OF_FILE,
+        compact_partition,
         compact_table,
+        expire_snapshots,
+    )
+    from development_of_a_streaming_pipeline_to_ingest_dcache_billing_data_to_hive_hdfs_spark.fs import (
+        LocalFS,
+    )
+    from development_of_a_streaming_pipeline_to_ingest_dcache_billing_data_to_hive_hdfs_spark.sources.tables import (
+        compacted_as_of,
+        read_table_as_of,
+        read_table_changes,
+    )
+
+    warehouse = str(tmp_path / "wh")
+    pipe = BillingPipeline(source=None, warehouse_dir=warehouse)
+    _ingest_one_transfer_per_batch(
+        spark, pipe, ["2024-03-01", "2024-03-02", "2024-03-03"]
+    )
+    t = pipe.table_path("transfers")
+    compact_table(spark, t)
+    expire_snapshots(warehouse)  # horizon 2
+    late = spark.createDataFrame(
+        [(billing_record("transfer", date="2024-03-02T12:00:00.000+0000",
+                         cellName="pool-b3"),)],
+        ["value"],
+    )
+    pipe.process_batch(late, 3)  # lands in the compacted day
+
+    class CrashBeforeRetiredDelete(LocalFS):
+        def delete(self, path, recursive=False):
+            if os.path.basename(path).startswith("._compact_old_"):
+                raise RuntimeError("killed after the swap")
+            super().delete(path, recursive)
+
+    with _pytest.raises(RuntimeError, match="killed after the swap"):
+        compact_partition(spark, t, "2024-03-02", fs=CrashBeforeRetiredDelete())
+    assert compacted_as_of(t) == 3
+    with _pytest.raises(ValueError, match="batch 3 was committed"):
+        read_table_as_of(spark, t, 2)
+    with _pytest.raises(ValueError, match="batch 3 was committed"):
+        read_table_changes(spark, t, since_batch=2)
+    assert read_table_as_of(spark, t, 3).count() == 4
+
+
+def test_expiring_the_newest_stamped_day_lowers_the_stamp(spark, tmp_path):
+    """The compaction point is derived from the files that exist: expiring
+    the day that carries the newest stamp lowers it, and the as-of read
+    at the lower stamp returns exactly the surviving batches' rows."""
+    import pytest as _pytest
+
+    from development_of_a_streaming_pipeline_to_ingest_dcache_billing_data_to_hive_hdfs_spark.compact import (
+        compact_partition,
+        compact_table,
+        expire_partitions,
     )
     from development_of_a_streaming_pipeline_to_ingest_dcache_billing_data_to_hive_hdfs_spark.sources.tables import (
         compacted_as_of,
@@ -941,41 +1002,26 @@ def test_legacy_flat_marker_survives_per_table_migration(spark, tmp_path):
 
     warehouse = str(tmp_path / "wh")
     pipe = BillingPipeline(source=None, warehouse_dir=warehouse)
-    for b in range(3):
-        batch = spark.createDataFrame(
-            [
-                (billing_record(
-                    "transfer", date=f"2024-03-0{b + 1}T10:00:00.000+0000"),),
-                (billing_record(
-                    "request", date=f"2024-03-0{b + 1}T11:00:00.000+0000"),),
-            ],
-            ["value"],
-        )
-        pipe.process_batch(batch, b)
-    transfers = pipe.table_path("transfers")
-    requests = pipe.table_path("requests")
+    _ingest_one_transfer_per_batch(
+        spark, pipe, ["2024-03-02", "2024-03-03", "2024-03-04"]
+    )
+    t = pipe.table_path("transfers")
+    compact_table(spark, t)  # stamp 2 on every day
+    late = spark.createDataFrame(
+        [(billing_record("transfer", date="2024-03-01T10:00:00.000+0000",
+                         cellName="pool-b3"),)],
+        ["value"],
+    )
+    pipe.process_batch(late, 3)  # a new oldest day
+    compact_partition(spark, t, "2024-03-01")  # stamp 3 on that day only
+    assert compacted_as_of(t) == 3
+    with _pytest.raises(ValueError, match="batch 3 was committed"):
+        read_table_as_of(spark, t, 2)
 
-    # simulate the legacy era: both tables were compacted when the
-    # marker was one flat warehouse-scope value (as of batch 1)
-    with open(f"{warehouse}/{COMPACTED_AS_OF_FILE}", "w") as f:
-        json.dump({"compacted_as_of": 1, "recorded_at": "2026-01-01"}, f)
-    assert compacted_as_of(transfers) == 1
-    assert compacted_as_of(requests) == 1
-
-    # first post-upgrade compaction migrates to the per-table format...
-    compact_table(spark, transfers)
-    assert compacted_as_of(transfers) == 2
-    with open(f"{warehouse}/{COMPACTED_AS_OF_FILE}") as f:
-        doc = json.load(f)
-    assert "tables" in doc  # migrated
-    # ...but the sibling keeps the legacy floor, not -1
-    assert compacted_as_of(requests) == 1
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="batch 1 was committed"):
-        read_table_as_of(spark, requests, 0)
-    # at/above the floor the sibling still reads fine
-    assert read_table_as_of(spark, requests, 1).count() == 2
+    assert expire_partitions(spark, t, before="2024-03-02") == ["2024-03-01"]
+    assert compacted_as_of(t) == 2
+    rows = read_table_as_of(spark, t, 2).select("cellName").collect()
+    assert sorted(r.cellName for r in rows) == ["pool-b0", "pool-b1", "pool-b2"]
 
 
 def test_stream_table_changes_subscribes_and_survives_compaction(spark, tmp_path):

@@ -313,6 +313,91 @@ def test_orphan_sweep_undoes_batches_crashed_before_first_promote(spark, tmp_pat
     assert spark.read.parquet(table).count() == 1
 
 
+def test_orphan_sweep_removes_staging_of_batches_crashed_before_manifest(spark, tmp_path):
+    """A batch that crashed while staging, before its manifest write,
+    leaves only its hidden staging dir. The sweep removes it under the
+    same latest-id protection as the other residue: below the newest
+    uncommitted id at once, the newest one with ``include_latest``."""
+    import os
+
+    import pytest
+
+    from development_of_a_streaming_pipeline_to_ingest_dcache_billing_data_to_hive_hdfs_spark.fs import (
+        LocalFS,
+    )
+    from development_of_a_streaming_pipeline_to_ingest_dcache_billing_data_to_hive_hdfs_spark.sink import (
+        BatchLedger,
+        batch_manifest_path,
+        batch_staging_dir,
+        write_partitioned_batch,
+    )
+    from development_of_a_streaming_pipeline_to_ingest_dcache_billing_data_to_hive_hdfs_spark.warehouse import (
+        remove_orphan_batches,
+    )
+
+    class NoManifestFS(LocalFS):
+        def write_text_atomic(self, *args, **kwargs):
+            raise RuntimeError("simulated crash before the manifest write")
+
+    wh = str(tmp_path / "wh")
+    table = os.path.join(wh, "transfers")
+    df = spark.createDataFrame([("2024-03-01", 1)], "partition_date string, v int")
+    write_partitioned_batch(df, table, batch_id=0)
+    BatchLedger(os.path.join(wh, "_ledger.json")).commit(0)
+    for b in (1, 2):
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            write_partitioned_batch(df, table, batch_id=b, fs=NoManifestFS())
+    staging = [batch_staging_dir(table, b) for b in (1, 2)]
+    assert all(os.path.isdir(d) for d in staging)
+    assert not any(os.path.exists(batch_manifest_path(table, b)) for b in (1, 2))
+
+    assert remove_orphan_batches(wh) == {}  # no data files were visible
+    assert [os.path.isdir(d) for d in staging] == [False, True]
+    assert remove_orphan_batches(wh, include_latest=True) == {}
+    assert not any(os.path.isdir(d) for d in staging)
+    assert spark.read.parquet(table).count() == 1
+
+
+def test_orphan_sweep_removes_manifest_temp_files_only_under_lock(spark, tmp_path):
+    """A crash inside a manifest's own atomic write leaves a temp file in
+    ``_batch_manifests/`` (``.tmp-*`` locally, ``<id>.json.tmp`` on
+    Hadoop FS) whose name carries no usable batch id. The sweep keeps
+    it by default, as it may belong to a batch writing right now, and
+    deletes it with ``include_latest``; manifests are untouched."""
+    import os
+
+    from development_of_a_streaming_pipeline_to_ingest_dcache_billing_data_to_hive_hdfs_spark.sink import (
+        MANIFEST_DIR,
+        BatchLedger,
+        batch_manifest_path,
+        write_partitioned_batch,
+    )
+    from development_of_a_streaming_pipeline_to_ingest_dcache_billing_data_to_hive_hdfs_spark.warehouse import (
+        remove_orphan_batches,
+    )
+
+    wh = str(tmp_path / "wh")
+    table = os.path.join(wh, "transfers")
+    df = spark.createDataFrame([("2024-03-01", 1)], "partition_date string, v int")
+    write_partitioned_batch(df, table, batch_id=0)
+    write_partitioned_batch(df, table, batch_id=1)  # uncommitted, protected
+    BatchLedger(os.path.join(wh, "_ledger.json")).commit(0)
+    temps = [
+        os.path.join(table, MANIFEST_DIR, n) for n in (".tmp-k2j4x9", "2.json.tmp")
+    ]
+    for t in temps:
+        with open(t, "w") as f:
+            f.write('["partition_date=2024-03-01/batch2-par')  # torn write
+
+    assert remove_orphan_batches(wh) == {}
+    assert all(os.path.exists(t) for t in temps)
+    assert os.path.exists(batch_manifest_path(table, 1))
+    assert remove_orphan_batches(wh, include_latest=True) == {"transfers": {1: 1}}
+    assert not any(os.path.exists(t) for t in temps)
+    assert os.listdir(os.path.join(table, MANIFEST_DIR)) == []
+    assert spark.read.parquet(table).count() == 1
+
+
 def test_orphan_audit_respects_table_local_ledger(spark, tmp_path):
     import os
 
