@@ -212,24 +212,17 @@ def _strip_docstrings(src: str) -> str:
         tree = ast.parse("if 1:\n" + src if shift else src)
     except SyntaxError:
         return src
-    spans = []
-    for node in ast.walk(tree):
-        body = getattr(node, "body", None)
-        if (
-            isinstance(node, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef))
-            and body
-            and isinstance(body[0], ast.Expr)
-            and isinstance(body[0].value, ast.Constant)
-            and isinstance(body[0].value.value, str)
-        ):
-            d = body[0]
-            spans.append(
-                (d.lineno - 1 - shift, d.col_offset, d.end_lineno - 1 - shift, d.end_col_offset)
-            )
+    docs = [
+        node.body[0]
+        for node in ast.walk(tree)
+        if isinstance(node, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef))
+        and ast.get_docstring(node, clean=False) is not None
+    ]
     # ast columns are UTF-8 byte offsets
     lines = [ln.encode("utf-8") for ln in src.splitlines(keepends=True)]
-    for first, col, last, end_col in sorted(spans, reverse=True):
-        cut = lines[first][:col] + lines[last][end_col:]
+    for d in sorted(docs, key=lambda d: d.lineno, reverse=True):
+        first, last = d.lineno - 1 - shift, d.end_lineno - 1 - shift
+        cut = lines[first][: d.col_offset] + lines[last][d.end_col_offset :]
         lines[first : last + 1] = [cut] if cut.strip() else []
     return b"".join(lines).decode("utf-8")
 
