@@ -337,9 +337,18 @@ def compact_partition(
     found = resolve_table_ledger(path, fs)
     if found and found[1]:
         prefix = compacted_prefix(max(found[1]))
-        for name, is_dir in fs.list_entries(tmp):
-            if not is_dir and not name.startswith(("_", ".")):
-                fs.rename(os.path.join(tmp, name), os.path.join(tmp, prefix + name))
+        entries = dict(fs.list_entries(tmp))
+        for name, is_dir in entries.items():
+            if is_dir or name.startswith(("_", ".")):
+                continue
+            # a local store's checksum file follows its data file's name
+            # (renamed first: Hadoop's checksummed rename moves it along)
+            if f".{name}.crc" in entries:
+                fs.rename(
+                    os.path.join(tmp, f".{name}.crc"),
+                    os.path.join(tmp, f".{prefix}{name}.crc"),
+                )
+            fs.rename(os.path.join(tmp, name), os.path.join(tmp, prefix + name))
     fs.rename(pdir, retired)
     fs.rename(tmp, pdir)
     fs.delete(retired, recursive=True)

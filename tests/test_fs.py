@@ -141,11 +141,15 @@ def test_write_batch_idempotent_on_hadoop_fs(spark, tmp_path):
 
 def test_compact_on_hadoop_fs(spark, tmp_path):
     """Compaction's two-rename swap through file:// URIs: row counts
-    unchanged, one file per partition afterwards."""
+    unchanged, one file per partition afterwards, named with the max
+    committed batch, and the local store's checksum file renamed with
+    it."""
     path = f"file://{tmp_path}/wh/transfers"
     fs = HadoopFS(spark)
+    ledger = BatchLedger(f"file://{tmp_path}/wh/_ledger.json", fs=fs)
     for b in range(4):
         write_partitioned_batch(_events(spark), path, batch_id=b, fs=fs)
+        ledger.commit(b)
     before = spark.read.parquet(path).count()
     result = compact_table(spark, path, fs=fs)
     assert set(result) == {"2024-03-01", "2024-03-02", "2024-03-03"}
@@ -159,6 +163,9 @@ def test_compact_on_hadoop_fs(spark, tmp_path):
             if not n.startswith(("_", "."))
         ]
         assert len(data_files) == 1, data_files
+        assert data_files[0].startswith("compacted3-part-"), data_files
+        local = os.listdir(tmp_path / "wh" / "transfers" / f"partition_date={p}")
+        assert f".{data_files[0]}.crc" in local, local
 
 
 def test_rename_refuses_existing_empty_dir_dst_on_both_impls(spark, tmp_path):

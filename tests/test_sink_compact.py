@@ -182,6 +182,10 @@ def test_compacted_file_names_carry_the_batch(spark, tmp_path):
     assert not any(
         n.startswith("._compact_") for n in os.listdir(path)
     )  # the swap finished
+    # the local store's checksum files follow the renamed data files
+    pdir = os.path.join(path, "partition_date=2024-03-01")
+    crcs = sorted(f for f in os.listdir(pdir) if f.endswith(".parquet.crc"))
+    assert crcs == [f".{n}.crc" for n in names]
 
 
 def test_compaction_without_ledger_leaves_names_unstamped(spark, tmp_path):
