@@ -921,8 +921,8 @@ def test_compacted_as_of_is_scoped_per_table(spark, tmp_path):
         read_table_as_of(spark, transfers, 0)
 
 
-def _ingest_one_transfer_per_batch(spark, pipe, days):
-    for b, day in enumerate(days):
+def _ingest_one_transfer_per_batch(spark, pipe, days, first=0):
+    for b, day in enumerate(days, start=first):
         batch = spark.createDataFrame(
             [(billing_record("transfer", date=f"{day}T10:00:00.000+0000",
                              cellName=f"pool-b{b}"),)],
@@ -961,12 +961,8 @@ def test_recompaction_crash_after_swap_cannot_silently_lie(spark, tmp_path):
     t = pipe.table_path("transfers")
     compact_table(spark, t)
     expire_snapshots(warehouse)  # horizon 2
-    late = spark.createDataFrame(
-        [(billing_record("transfer", date="2024-03-02T12:00:00.000+0000",
-                         cellName="pool-b3"),)],
-        ["value"],
-    )
-    pipe.process_batch(late, 3)  # lands in the compacted day
+    # batch 3 lands in a compacted day
+    _ingest_one_transfer_per_batch(spark, pipe, ["2024-03-02"], first=3)
 
     class CrashBeforeRetiredDelete(LocalFS):
         def delete(self, path, recursive=False):
@@ -1007,12 +1003,8 @@ def test_expiring_the_newest_stamped_day_lowers_the_stamp(spark, tmp_path):
     )
     t = pipe.table_path("transfers")
     compact_table(spark, t)  # stamp 2 on every day
-    late = spark.createDataFrame(
-        [(billing_record("transfer", date="2024-03-01T10:00:00.000+0000",
-                         cellName="pool-b3"),)],
-        ["value"],
-    )
-    pipe.process_batch(late, 3)  # a new oldest day
+    # batch 3 opens a new oldest day
+    _ingest_one_transfer_per_batch(spark, pipe, ["2024-03-01"], first=3)
     compact_partition(spark, t, "2024-03-01")  # stamp 3 on that day only
     assert compacted_as_of(t) == 3
     with _pytest.raises(ValueError, match="batch 3 was committed"):
