@@ -13,7 +13,7 @@ upgraded, per SURVEY §2.6 and §4:
 - **Size-targeted output, not 1 file**: the reference hard-codes
   ``repartition(1)`` (`:380`) — a full shuffle to one task, which at 100 TB
   is both a straggler and a >HDFS-block file. Here the file count is
-  ``ceil(partition_bytes / target_bytes)`` (default 512 MB) via
+  ``ceil(partition bytes / target_bytes)`` (default 512 MB) via
   ``coalesce`` — no shuffle at all.
 
 All file operations route through the ``fs`` abstraction (fs.py): the
@@ -31,7 +31,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .fs import get_filesystem
+from .fs import HIDDEN_PREFIXES, get_filesystem
 from .schema import DEFAULT_PARTITION_NAME, PARTITION_FIELD
 from .sink import compacted_prefix, resolve_table_ledger
 
@@ -147,13 +147,12 @@ def _partition_files(
     return [
         (name, size)
         for name, size in fs.list_files_recursive(pdir)
-        if not name.startswith(("_", "."))
+        if not name.startswith(HIDDEN_PREFIXES)
     ]
 
 
-def partition_bytes(path: str, partition: str, fs=None) -> int:
-    fs = fs or get_filesystem(path)
-    return sum(size for _n, size in _partition_files(fs, path, partition))
+_RETIRED_PREFIX = "._compact_old_"
+_SCRATCH_PREFIX = "._compact_new_"
 
 
 def recover_crashed_compactions(path: str, only: str | None = None, fs=None) -> list[str]:
@@ -162,24 +161,31 @@ def recover_crashed_compactions(path: str, only: str | None = None, fs=None) -> 
     completed but cleanup didn't (drop the retired copy); WITHOUT the
     partition it means the crash hit between the two renames (restore
     the original). Stale '._compact_new_P' scratch writes are dropped.
-    Returns the partition values that were restored."""
+    Returns the partition values that were restored.
+
+    ``only``: heal that one partition, probing its two scratch names
+    directly — the table root is not listed, so the cost does not grow
+    with the table's history."""
     fs = fs or get_filesystem(path)
+    if only is None:
+        names = [d for d, _is_dir in fs.list_entries(path)]
+    else:
+        names = [
+            d
+            for d in (_RETIRED_PREFIX + only, _SCRATCH_PREFIX + only)
+            if fs.exists(os.path.join(path, d))
+        ]
     restored = []
-    for d, _is_dir in fs.list_entries(path):
-        if d.startswith("._compact_old_"):
-            p = d[len("._compact_old_"):]
-            if only is not None and p != only:
-                continue
+    for d in names:
+        if d.startswith(_RETIRED_PREFIX):
+            p = d[len(_RETIRED_PREFIX):]
             pdir = os.path.join(path, f"{PARTITION_FIELD}={p}")
             if fs.is_dir(pdir):
                 fs.delete(os.path.join(path, d), recursive=True)
             else:
                 fs.rename(os.path.join(path, d), pdir)
                 restored.append(p)
-        elif d.startswith("._compact_new_"):
-            p = d[len("._compact_new_"):]
-            if only is not None and p != only:
-                continue
+        elif d.startswith(_SCRATCH_PREFIX):
             fs.delete(os.path.join(path, d), recursive=True)
     return restored
 
@@ -246,15 +252,14 @@ def compact_partition(
     # listing skips hidden dirs and list_partitions never sees them (a
     # scratch name starting with 'partition_date=' would be parsed as a
     # bogus partition value by any reader that lists the table).
-    tmp = os.path.join(path, f"._compact_new_{partition}")
-    retired = os.path.join(path, f"._compact_old_{partition}")
+    tmp = os.path.join(path, _SCRATCH_PREFIX + partition)
+    retired = os.path.join(path, _RETIRED_PREFIX + partition)
     recover_crashed_compactions(path, only=partition, fs=fs)
     import re as _re
 
+    files = _partition_files(fs, path, partition)
     bucketed = [
-        name
-        for name, _sz in _partition_files(fs, path, partition)
-        if _re.search(r"_\d{5}\.c\d{3}\.", name)
+        name for name, _sz in files if _re.search(r"_\d{5}\.c\d{3}\.", name)
     ]
     if bucketed and not allow_unbucket:
         raise ValueError(
@@ -266,11 +271,7 @@ def compact_partition(
             "preserves the layout), or pass allow_unbucket=True to "
             "deliberately flatten it."
         )
-    size = (
-        known_bytes
-        if known_bytes is not None
-        else partition_bytes(path, partition, fs=fs)
-    )
+    size = known_bytes if known_bytes is not None else sum(n for _f, n in files)
     n_files = max(1, math.ceil(size / target_bytes))
     # mergeSchema: after additive schema evolution
     # (warehouse.evolve_table_add_columns) a partition can mix pre- and
@@ -337,18 +338,11 @@ def compact_partition(
     found = resolve_table_ledger(path, fs)
     if found and found[1]:
         prefix = compacted_prefix(max(found[1]))
-        entries = dict(fs.list_entries(tmp))
-        for name, is_dir in entries.items():
-            if is_dir or name.startswith(("_", ".")):
-                continue
-            # a local store's checksum file follows its data file's name
-            # (renamed first: Hadoop's checksummed rename moves it along)
-            if f".{name}.crc" in entries:
-                fs.rename(
-                    os.path.join(tmp, f".{name}.crc"),
-                    os.path.join(tmp, f".{prefix}{name}.crc"),
-                )
-            fs.rename(os.path.join(tmp, name), os.path.join(tmp, prefix + name))
+        # a local store's checksum file follows its data file (both
+        # impls' rename moves it along)
+        for name, is_dir in fs.list_entries(tmp):
+            if not is_dir and not name.startswith(HIDDEN_PREFIXES):
+                fs.rename(os.path.join(tmp, name), os.path.join(tmp, prefix + name))
     fs.rename(pdir, retired)
     fs.rename(tmp, pdir)
     fs.delete(retired, recursive=True)
@@ -493,9 +487,8 @@ def compact_table(
     see whether the existing files are clustered)."""
     fs = fs or get_filesystem(path, spark)
     recover_crashed_compactions(path, fs=fs)
-    parts = partitions if partitions is not None else list_partitions(spark, path, fs=fs)
-    existing = set(list_partitions(spark, path, fs=fs))
-    parts = [p for p in parts if p in existing]
+    existing = list_partitions(spark, path, fs=fs)
+    parts = existing if partitions is None else [p for p in partitions if p in existing]
     known: dict[str, int] = {}
     if only_needed and not cluster_by and not zorder_by:
         stats = table_stats(spark, path, partitions=parts, fs=fs)

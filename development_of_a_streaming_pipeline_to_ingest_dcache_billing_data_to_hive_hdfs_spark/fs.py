@@ -9,7 +9,8 @@ OVERWRITE). This module makes the protocol actually runnable there: a
 minimal FS interface (exists / list / rename / delete / mkdirs /
 read / atomic-write) with two implementations —
 
-- ``LocalFS``: plain ``os`` / ``shutil``, for bare paths;
+- ``LocalFS``: plain ``os`` / ``shutil``, for bare paths, moving a
+  file's ``.crc`` checksum along with it as Hadoop does on ``file://``;
 - ``HadoopFS``: the JVM's ``org.apache.hadoop.fs.FileSystem`` resolved
   per-path through py4j, for any URI path (``hdfs://``, ``s3a://``,
   ``file://``, …). Whatever store the Hadoop conf can mount, the
@@ -19,6 +20,22 @@ Dispatch is by path shape (``get_filesystem``): a ``scheme://`` URI
 routes to Hadoop, a bare path to the local impl. Tests exercise the
 Hadoop impl through ``file://`` URIs — same code path as ``hdfs://``,
 no cluster needed.
+
+Cost model of ``HadoopFS``: every JVM call is one py4j round trip
+(≈0.1–0.3 ms locally); dropped JVM objects are released later from
+py4j's finalizer thread. The JVM classes and static methods used are
+resolved once per gateway (a ``jvm.org.apache.hadoop.fs.Path`` lookup
+alone costs one reflection round trip per name segment), the
+``FileSystem`` once per instance and store, and each argument's
+``Path`` once per operation. So ``exists``/``is_dir``/``mkdirs``/
+``delete`` cost 2 round trips, ``rename`` 4, ``read_text`` 5 and
+``write_text_atomic`` 7. A listing never iterates a JVM array from
+Python (two round trips per element, plus one per getter): the JVM
+renders the array as JSON text, fetched in pieces below the 8 KiB at
+which a py4j answer stalls ~40 ms. So ``list_entries`` and
+``list_nested_files`` (one ``globStatus`` over a table's partition
+dirs and their files) each cost about 14 round trips, plus one per
+~4000 characters of listing.
 
 Rename semantics (the protocol's load-bearing op): ``rename`` with
 ``overwrite=False`` requires the destination to be absent on both
@@ -33,11 +50,36 @@ so the window is safe (documented at the ledger).
 
 from __future__ import annotations
 
+import json
 import os
+import re
 import shutil
 import tempfile
+import weakref
 
 from pyspark.sql import SparkSession
+
+
+# names Spark's file listing skips: staging, manifests, scratch, checksums
+HIDDEN_PREFIXES = ("_", ".")
+
+
+def _checksum_file(path: str) -> str:
+    head, name = os.path.split(path)
+    return os.path.join(head, f".{name}.crc")
+
+
+def _follow_checksum(src: str, dst: str) -> None:
+    """After a file moved from ``src`` to ``dst``, move its
+    ``.<name>.crc`` checksum along, or drop a stale one at ``dst`` —
+    the rule of Hadoop's checksummed rename on ``file://``, so a file
+    keeps its verification (and never gets a wrong one) whichever impl
+    moved it."""
+    src_crc, dst_crc = _checksum_file(src), _checksum_file(dst)
+    if os.path.exists(src_crc):
+        os.replace(src_crc, dst_crc)
+    elif os.path.exists(dst_crc):
+        os.remove(dst_crc)
 
 
 class LocalFS:
@@ -53,10 +95,23 @@ class LocalFS:
         """(name, is_dir) for each direct child; [] if path is absent."""
         if not os.path.isdir(path):
             return []
-        return [
-            (d, os.path.isdir(os.path.join(path, d)))
-            for d in os.listdir(path)
-        ]
+        with os.scandir(path) as it:
+            return [(e.name, e.is_dir()) for e in it]
+
+    def list_nested_files(self, path: str) -> list[tuple[str, str]]:
+        """(dir, file) names of each file one level inside each
+        subdirectory of path — a table's partition dirs and their data
+        files. Names starting with ``_`` or ``.`` are skipped at both
+        levels, as Spark's reader skips them; [] if path is absent."""
+        out = []
+        for d, d_is_dir in self.list_entries(path):
+            if d_is_dir and not d.startswith(HIDDEN_PREFIXES):
+                out += [
+                    (d, f)
+                    for f, f_is_dir in self.list_entries(os.path.join(path, d))
+                    if not f_is_dir and not f.startswith(HIDDEN_PREFIXES)
+                ]
+        return out
 
     def list_files_recursive(self, path: str) -> list[tuple[str, int]]:
         """(basename, size) for every file under path, any depth."""
@@ -119,8 +174,9 @@ class LocalFS:
             except FileExistsError:
                 raise FileExistsError(f"rename target exists: {dst}")
             os.unlink(src)
-            return
-        os.replace(src, dst)
+        else:
+            os.replace(src, dst)
+        _follow_checksum(src, dst)
 
     def delete(self, path: str, recursive: bool = False) -> None:
         if os.path.isdir(path):
@@ -146,6 +202,45 @@ class LocalFS:
         with os.fdopen(fd, "w") as f:
             f.write(text)
         os.replace(tmp, path)
+        _follow_checksum(tmp, path)
+
+
+class _JvmHandles:
+    """The JVM classes and static methods ``HadoopFS`` calls, resolved
+    once per py4j gateway: each ``jvm.a.b.C`` lookup is one reflection
+    round trip per name segment."""
+
+    def __init__(self, jvm):
+        self.path = jvm.org.apache.hadoop.fs.Path
+        self.stat2paths = jvm.org.apache.hadoop.fs.FileUtil.stat2Paths
+        builder = jvm.org.apache.commons.lang3.builder
+        self.renderer = builder.ReflectionToStringBuilder
+        self.json_style = builder.ToStringStyle.JSON_STYLE
+
+
+# py4j writes an answer of 8 KiB or more in two pieces, and the second
+# waits ~40 ms for the delayed ACK of the first (Nagle's algorithm on
+# loopback): long answers are fetched in pieces below that size. py4j
+# escapes a backslash as two characters, hence half of 8 KiB.
+_ANSWER_CHARS = 4000
+# base64 on the wire: 4 characters per 3 bytes
+_ANSWER_BYTES = 6000
+
+# gateway client -> _JvmHandles. Module-level because HadoopFS instances
+# are short-lived (most callers make one per call); an entry dies with
+# its gateway.
+_HANDLES: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+_GLOB_SPECIAL = re.compile(r"([\\*?\[\]{}])")
+_SCHEME_AUTHORITY = re.compile(r"([^/:]+:)?(//[^/]*)?")
+
+
+def _glob_literal(path: str) -> str:
+    """``path`` as a Hadoop glob that matches only itself: the glob
+    characters of its path part escaped (scheme and authority are never
+    globbed)."""
+    head = _SCHEME_AUTHORITY.match(path).group(0)
+    return head + _GLOB_SPECIAL.sub(r"\\\1", path[len(head):])
 
 
 class HadoopFS:
@@ -155,30 +250,85 @@ class HadoopFS:
     and the Hadoop configuration (kerberos, defaultFS, s3a keys …)."""
 
     def __init__(self, spark: SparkSession):
-        self._jvm = spark._jvm
+        client = spark._jvm._gateway_client
+        if client not in _HANDLES:
+            _HANDLES[client] = _JvmHandles(spark._jvm)
+        self._jvm = _HANDLES[client]
         self._conf = spark._jsc.hadoopConfiguration()
+        # "scheme://authority" -> FileSystem, Hadoop's own cache key
+        self._stores: dict[str, object] = {}
 
     def _p(self, path: str):
-        return self._jvm.org.apache.hadoop.fs.Path(path)
+        return self._jvm.path(path)
 
-    def _fs(self, path: str):
-        return self._p(path).getFileSystem(self._conf)
+    def _resolve(self, path: str):
+        """(FileSystem serving ``path``, its ``Path``)."""
+        p = self._p(path)
+        key = _SCHEME_AUTHORITY.match(path).group(0).lower()
+        fs = self._stores.get(key)
+        if fs is None:
+            fs = self._stores[key] = p.getFileSystem(self._conf)
+        return fs, p
+
+    def _render(self, array) -> list[str]:
+        """The ``toString`` of each element of a JVM array, rendered
+        JVM-side as a JSON array of strings (ASCII: every other
+        character is escaped), so no character of a name can split an
+        element. Four calls, plus one per ``_ANSWER_CHARS`` of text."""
+        builder = self._jvm.renderer(array, self._jvm.json_style)
+        text = builder.reflectionAppendArray(array).getStringBuffer()
+        n = text.length()
+        json_text = "".join(
+            text.substring(i, min(i + _ANSWER_CHARS, n))
+            for i in range(0, n, _ANSWER_CHARS)
+        )
+        return json.loads(json_text[1:])  # after the builder's opening {
+
+    def _statuses(self, stats) -> list[tuple[str, bool]]:
+        """(path, is_dir) for each ``FileStatus`` of a JVM array, in
+        two calls whatever its length. The flag is read from each
+        status's ``toString`` (``…{path=<path>; isDirectory=<bool>; …``)
+        right after its exactly known path."""
+        out = []
+        for path, shown in zip(
+            self._render(self._jvm.stat2paths(stats)), self._render(stats)
+        ):
+            head = "{path=" + path + "; isDirectory="
+            at = shown.find("{")
+            if not shown.startswith(head, at):
+                raise OSError(f"unrecognized FileStatus rendering: {shown!r}")
+            out.append((path, shown.startswith("true", at + len(head))))
+        return out
 
     def exists(self, path: str) -> bool:
-        return self._fs(path).exists(self._p(path))
+        fs, p = self._resolve(path)
+        return fs.exists(p)
 
     def is_dir(self, path: str) -> bool:
-        fs, p = self._fs(path), self._p(path)
-        return fs.exists(p) and fs.getFileStatus(p).isDirectory()
+        fs, p = self._resolve(path)
+        return fs.isDirectory(p)  # false when absent
 
     def list_entries(self, path: str) -> list[tuple[str, bool]]:
-        fs, p = self._fs(path), self._p(path)
-        if not (fs.exists(p) and fs.getFileStatus(p).isDirectory()):
+        fs, p = self._resolve(path)
+        if not fs.isDirectory(p):
             return []
         return [
-            (st.getPath().getName(), st.isDirectory())
-            for st in fs.listStatus(p)
+            (full.rsplit("/", 1)[1], is_dir)
+            for full, is_dir in self._statuses(fs.listStatus(p))
         ]
+
+    def list_nested_files(self, path: str) -> list[tuple[str, str]]:
+        """As ``LocalFS.list_nested_files``: one glob over both levels,
+        whose ``[!_.]*`` components skip the hidden names."""
+        visible = "[!_.]*"  # a name not starting with HIDDEN_PREFIXES
+        pattern = f"{_glob_literal(path.rstrip('/'))}/{visible}/{visible}"
+        fs, p = self._resolve(pattern)
+        out = []
+        for full, is_dir in self._statuses(fs.globStatus(p)):
+            if not is_dir:
+                _root, d, f = full.rsplit("/", 2)
+                out.append((d, f))
+        return out
 
     def list_files_recursive(self, path: str) -> list[tuple[str, int]]:
         return [(os.path.basename(r), n) for r, n, _ in self.file_stats(path)]
@@ -186,7 +336,7 @@ class HadoopFS:
     def file_stats(self, path: str) -> list[tuple[str, int, int]]:
         """As ``LocalFS.file_stats``; mtime is in milliseconds (the
         Hadoop FileStatus resolution)."""
-        fs, p = self._fs(path), self._p(path)
+        fs, p = self._resolve(path)
         if not fs.exists(p):
             return []
         root = fs.getFileStatus(p).getPath().toUri().getPath().rstrip("/")
@@ -200,15 +350,22 @@ class HadoopFS:
         return out
 
     def mkdirs(self, path: str) -> None:
-        self._fs(path).mkdirs(self._p(path))
+        fs, p = self._resolve(path)
+        fs.mkdirs(p)
 
     def rename(self, src: str, dst: str, overwrite: bool = False) -> None:
-        fs = self._fs(src)
-        if overwrite and fs.exists(self._p(dst)):
+        fs, p_src = self._resolve(src)
+        self._rename(fs, p_src, src, dst, overwrite)
+
+    def _rename(self, fs, p_src, src: str, dst: str, overwrite: bool) -> None:
+        """``rename`` with ``src``'s FileSystem and Path already built."""
+        p_dst = self._p(dst)
+        if overwrite:
             # delete-then-rename: NOT atomic — callers must tolerate the
-            # dst-absent window (the ledger does; see module docstring)
-            fs.delete(self._p(dst), True)
-        elif not overwrite and fs.exists(self._p(dst)):
+            # dst-absent window (the ledger does; see module docstring).
+            # Deleting an absent dst is a no-op returning false.
+            fs.delete(p_dst, True)
+        elif fs.exists(p_dst):
             # Hadoop's rename does NOT uniformly fail on an existing dst:
             # when dst is a DIRECTORY it moves src INTO it (dst/srcName,
             # returns true) — the swap protocol's rename(tmp, pdir) would
@@ -217,32 +374,37 @@ class HadoopFS:
             # LocalFS; the residual check-then-act window is serialized
             # by the warehouse lock like the local impl's.
             raise FileExistsError(f"rename target exists: {dst}")
-        if not fs.rename(self._p(src), self._p(dst)):
+        if not fs.rename(p_src, p_dst):
             raise OSError(f"hadoop rename failed: {src} -> {dst}")
 
     def delete(self, path: str, recursive: bool = False) -> None:
-        self._fs(path).delete(self._p(path), recursive)
+        fs, p = self._resolve(path)
+        fs.delete(p, recursive)
 
     def read_text(self, path: str) -> str:
-        fs, p = self._fs(path), self._p(path)
+        fs, p = self._resolve(path)
+        # one probe: a missing file raised from open() would cost a
+        # Java exception's conversion, many more round trips
         if not fs.exists(p):
             raise FileNotFoundError(path)
         stream = fs.open(p)
         try:
-            return self._jvm.org.apache.commons.io.IOUtils.toString(
-                stream, "UTF-8"
-            )
+            chunks = [stream.readNBytes(_ANSWER_BYTES)]
+            while len(chunks[-1]) == _ANSWER_BYTES:
+                chunks.append(stream.readNBytes(_ANSWER_BYTES))
         finally:
             stream.close()
+        return b"".join(chunks).decode("utf-8")
 
     def write_text_atomic(self, path: str, text: str) -> None:
         tmp = path + ".tmp"
-        out = self._fs(tmp).create(self._p(tmp), True)
+        fs, p_tmp = self._resolve(tmp)
+        out = fs.create(p_tmp, True)
         try:
             out.write(bytearray(text.encode("utf-8")))
         finally:
             out.close()
-        self.rename(tmp, path, overwrite=True)
+        self._rename(fs, p_tmp, tmp, path, overwrite=True)
 
 
 def get_filesystem(path: str, spark: SparkSession | None = None):

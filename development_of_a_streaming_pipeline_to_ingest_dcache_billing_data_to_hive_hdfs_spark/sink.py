@@ -220,26 +220,21 @@ def batch_id_column():
 def batch_files(path: str, fs) -> tuple[dict[int, list[str]], list[str]]:
     """Group a table's promoted data files by the batch id in their names.
 
-    One walk, returning ``({batch id: [file paths]}, [un-named file
-    paths])``. Only partition dirs are listed; ``_``/``.`` names
-    (staging dirs, manifests, compaction scratch) are skipped, as
-    Spark's reader skips them. The un-named files are compaction
-    rewrites, which carry no batch id (``compaction_stamp`` reads the
-    batch they hold state through from their names)."""
+    One two-level listing (``fs.list_nested_files``: one ``globStatus``
+    on Hadoop FS), returning ``({batch id: [file paths]}, [un-named file
+    paths])``. Only partition dirs are read; ``_``/``.`` names (staging
+    dirs, manifests, compaction scratch) are skipped, as Spark's reader
+    skips them. The un-named files are compaction rewrites, which carry
+    no batch id (``compaction_stamp`` reads the batch they hold state
+    through from their names)."""
     named: dict[int, list[str]] = {}
     unnamed: list[str] = []
-    for d, d_is_dir in fs.list_entries(path):
-        if not d_is_dir or d.startswith(("_", ".")):
-            continue
-        pdir = os.path.join(path, d)
-        for f, f_is_dir in fs.list_entries(pdir):
-            if f_is_dir or f.startswith(("_", ".")):
-                continue
-            m = _BATCH_NAME.match(f)
-            if m is None:
-                unnamed.append(os.path.join(pdir, f))
-            else:
-                named.setdefault(int(m.group(1)), []).append(os.path.join(pdir, f))
+    for d, f in fs.list_nested_files(path):
+        m = _BATCH_NAME.match(f)
+        if m is None:
+            unnamed.append(os.path.join(path, d, f))
+        else:
+            named.setdefault(int(m.group(1)), []).append(os.path.join(path, d, f))
     return named, unnamed
 
 
@@ -383,13 +378,7 @@ def write_partitioned_batch(
     staging = batch_staging_dir(path, batch_id)
     df.write.mode("overwrite").partitionBy(partition_field).parquet(staging)
     prefix = _batch_prefix(batch_id)
-    staged = [
-        (d, f)
-        for d, d_is_dir in fs.list_entries(staging)
-        if d_is_dir  # skips _SUCCESS and friends
-        for f, f_is_dir in fs.list_entries(os.path.join(staging, d))
-        if not f_is_dir and not f.startswith(("_", "."))
-    ]
+    staged = fs.list_nested_files(staging)  # skips _SUCCESS and friends
     if staged:
         fs.write_text_atomic(
             batch_manifest_path(path, batch_id),

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import json
 import sys
+import threading
 from pathlib import Path
 
 import pytest
@@ -63,6 +64,31 @@ def spark():
     spark = get_spark_session(app_name="tests", master="local[4]", shuffle_partitions=4)
     yield spark
     spark.stop()
+
+
+class RoundTrips:
+    """Counts the py4j commands this thread sends through a session's
+    gateway while the block runs — each one Python→JVM round trip.
+    py4j releases dropped JVM objects from its own finalizer thread;
+    those commands are not counted."""
+
+    def __init__(self, spark):
+        self._client = spark._jvm._gateway_client
+        self.count = 0
+
+    def __enter__(self):
+        send, me = self._client.send_command, threading.get_ident()
+
+        def counting(*args, **kwargs):
+            if threading.get_ident() == me:
+                self.count += 1
+            return send(*args, **kwargs)
+
+        self._client.send_command = counting
+        return self
+
+    def __exit__(self, *exc):
+        del self._client.send_command
 
 
 def billing_record(msg_type: str = "transfer", date: str = "2024-03-01T10:00:00.000+0000", **over):

@@ -11,6 +11,8 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import RoundTrips
+
 from development_of_a_streaming_pipeline_to_ingest_dcache_billing_data_to_hive_hdfs_spark.compact import (
     compact_table,
     list_partitions,
@@ -94,6 +96,117 @@ def test_file_stats_lists_single_file_and_sees_rewrite(spark, tmp_path):
         assert fs.file_stats(os.path.join(root, "missing")) == []
         fs.write_text_atomic(f, "abcd")
         assert fs.file_stats(f) != [(name, size, mtime)]
+
+
+def test_list_nested_files_parity(spark, tmp_path):
+    """``list_nested_files`` gives the same (dir, file) pairs on both
+    impls: files one level inside the visible subdirectories only —
+    ``_``/``.`` names skipped at both levels, a directory inside a
+    partition not taken as a file, a file at the top not descended
+    into, and no character of a name (separators, quotes, newlines, a
+    fake ``isDirectory`` field) splitting an entry. The table path
+    itself carries glob characters, which must match only themselves."""
+    odd = 'a,b"c; isDirectory=true'
+    results = []
+    for fs, root in _impls(spark, tmp_path):
+        t = os.path.join(root, "t[1]{a,b}*?")
+        for rel in (
+            "p=1/batch0-part-0.parquet", f"p=1/{odd}", "p=1/n\nl é",
+            "p=1/_SUCCESS", "p=1/.hidden", "p=1/sub/deeper.parquet",
+            "p=2/part-0.parquet", "_batch_manifests/1.json",
+            "._batch_staging_3/p=1/x.parquet", ".tmp/p=1/x", "topfile",
+        ):
+            fs.mkdirs(os.path.dirname(os.path.join(t, rel)))
+            fs.write_text_atomic(os.path.join(t, rel), "x")
+        fs.mkdirs(os.path.join(t, "p=3"))  # an empty partition
+        results.append(sorted(fs.list_nested_files(t)))
+        assert fs.list_nested_files(os.path.join(root, "missing")) == []
+        assert dict(fs.list_entries(os.path.join(t, "p=1"))) == {
+            "batch0-part-0.parquet": False, odd: False, "n\nl é": False,
+            "_SUCCESS": False, ".hidden": False, "sub": True,
+        }
+    assert results[0] == results[1] == sorted([
+        ("p=1", "batch0-part-0.parquet"), ("p=1", odd), ("p=1", "n\nl é"),
+        ("p=2", "part-0.parquet"),
+    ])
+
+
+def test_hadoop_fs_round_trip_budget(spark, tmp_path):
+    """Each ``HadoopFS`` operation makes a few py4j round trips, and a
+    listing's count grows only with the text it returns, not by calls
+    per entry: no per-call class lookup, no duplicate probe, no
+    per-entry getter. A read longer than one py4j answer comes back
+    whole."""
+    fs, root = HadoopFS(spark), f"file://{tmp_path}"
+
+    def trips(op):
+        with RoundTrips(spark) as n:
+            op()
+        return n.count
+
+    fs.mkdirs(root)  # resolves the store once per instance
+    d = os.path.join(root, "d")
+    assert trips(lambda: fs.mkdirs(d)) <= 3
+    fs.write_text_atomic(os.path.join(d, "f.json"), "[1]")
+    assert trips(lambda: fs.read_text(os.path.join(d, "f.json"))) <= 6
+    assert trips(lambda: fs.rename(os.path.join(d, "f.json"), os.path.join(d, "g.json"))) <= 6
+    listing, nested = [], []
+    for n in (3, 30):
+        t = os.path.join(root, f"t{n}")
+        for i in range(n):
+            fs.write_text_atomic(os.path.join(t, f"p={i}", "part-0.parquet"), "x")
+        listing.append(trips(lambda: fs.list_entries(t)))
+        nested.append(trips(lambda: fs.list_nested_files(t)))
+        assert sorted(fs.list_nested_files(t)) == sorted(
+            (f"p={i}", "part-0.parquet") for i in range(n)
+        )
+    assert listing[0] <= 16 and listing[1] <= listing[0] + 4
+    assert nested[0] <= 16 and nested[1] <= nested[0] + 4
+    long = json.dumps(list(range(5000)))
+    fs.write_text_atomic(os.path.join(d, "long.json"), long)
+    assert fs.read_text(os.path.join(d, "long.json")) == long
+
+
+def test_rename_carries_checksum_on_both_impls(spark, tmp_path):
+    """A file's ``.<name>.crc`` follows it through ``rename`` on both
+    impls, and a local overwrite drops a stale checksum at the target:
+    a file Hadoop wrote, then replaced through the local impl, still
+    reads through ``file://``."""
+    for fs, root in _impls(spark, tmp_path):
+        fs.mkdirs(root)
+        src, dst = os.path.join(root, "f"), os.path.join(root, "g")
+        fs.write_text_atomic(src, "payload")
+        local = root.removeprefix("file://")
+        with open(os.path.join(local, ".f.crc"), "a"):
+            pass  # the local impl writes none of its own
+        fs.rename(src, dst)
+        assert ".g.crc" in os.listdir(local)
+        assert ".f.crc" not in os.listdir(local)
+    hadoop = HadoopFS(spark)
+    target = os.path.join(str(tmp_path), "h.json")
+    hadoop.write_text_atomic(f"file://{target}", "[1, 2, 3]")
+    assert os.path.exists(os.path.join(str(tmp_path), ".h.json.crc"))
+    LocalFS().write_text_atomic(target, "[4]")
+    assert hadoop.read_text(f"file://{target}") == "[4]"
+
+
+def test_bare_path_batch_files_are_checksummed(spark, tmp_path):
+    """A batch written to a bare local path keeps each data file's
+    checksum, so a flipped byte fails a ``file://`` read instead of
+    being served."""
+    path = str(tmp_path / "transfers")
+    write_partitioned_batch(_events(spark), path, batch_id=0)
+    pdir = os.path.join(path, "partition_date=2024-03-01")
+    names = os.listdir(pdir)
+    data = sorted(f for f in names if f.startswith("batch0-"))
+    assert data and all(f".{f}.crc" in names for f in data)
+    with open(os.path.join(pdir, data[0]), "r+b") as f:
+        f.seek(4)
+        byte = f.read(1)
+        f.seek(4)
+        f.write(bytes([byte[0] ^ 0xFF]))
+    with pytest.raises(Exception, match="Checksum"):
+        spark.read.parquet(f"file://{path}").collect()
 
 
 def test_ledger_on_hadoop_fs(spark, tmp_path):

@@ -23,7 +23,7 @@ from development_of_a_streaming_pipeline_to_ingest_dcache_billing_data_to_hive_h
 )
 from development_of_a_streaming_pipeline_to_ingest_dcache_billing_data_to_hive_hdfs_spark.route import route
 from development_of_a_streaming_pipeline_to_ingest_dcache_billing_data_to_hive_hdfs_spark import sink as sink_mod
-from development_of_a_streaming_pipeline_to_ingest_dcache_billing_data_to_hive_hdfs_spark.fs import LocalFS
+from development_of_a_streaming_pipeline_to_ingest_dcache_billing_data_to_hive_hdfs_spark.fs import HadoopFS, LocalFS
 from development_of_a_streaming_pipeline_to_ingest_dcache_billing_data_to_hive_hdfs_spark.sink import (
     LEDGER_FILE,
     MANIFEST_DIR,
@@ -37,7 +37,7 @@ from development_of_a_streaming_pipeline_to_ingest_dcache_billing_data_to_hive_h
     read_table_as_of,
 )
 
-from conftest import billing_record
+from conftest import RoundTrips, billing_record
 
 
 def test_write_partition_layout(spark, billing_batch, tmp_path):
@@ -115,8 +115,10 @@ class _CountingFS:
 def test_batch_commit_fs_calls_independent_of_table_history(spark, tmp_path):
     """One ``write_partitioned_batch`` (and its replay) of the same frame
     makes the same FS calls into a table with 5 day-partitions as into
-    one with 200: nothing lists the table's history."""
-    counts = []
+    one with 200: nothing lists the table's history. Through ``file://``
+    the same holds for its py4j round trips, which also count what each
+    call costs per entry it touches."""
+    counts, trips = [], []
     for n_days in (5, 200):
         path = str(tmp_path / f"t{n_days}")
         write_partitioned_batch(_days(spark, n_days), path, batch_id=0)
@@ -125,7 +127,38 @@ def test_batch_commit_fs_calls_independent_of_table_history(spark, tmp_path):
         write_partitioned_batch(_days(spark, 3), path, batch_id=1, fs=fs)
         assert spark.read.parquet(path).count() == n_days + 3
         counts.append(fs.calls)
+        uri, df = f"file://{path}", _days(spark, 3)
+        hadoop = HadoopFS(spark)
+        hadoop.exists(uri)  # resolves the store once per instance
+        with RoundTrips(spark) as n:
+            write_partitioned_batch(df, uri, batch_id=2, fs=hadoop)
+            write_partitioned_batch(df, uri, batch_id=2, fs=hadoop)
+        assert spark.read.parquet(path).count() == n_days + 6
+        trips.append(n.count)
     assert counts[0] == counts[1]
+    assert trips[0] == trips[1]
+
+
+def test_compaction_round_trips_independent_of_table_history(spark, tmp_path):
+    """``compact_partition`` through ``file://`` makes the same py4j
+    round trips in a table with 5 day-partitions as in one with 200: it
+    probes its partition's own scratch names instead of listing the
+    table root."""
+    trips = []
+    for n_days in (5, 200):
+        path = str(tmp_path / f"t{n_days}")
+        ledger = BatchLedger(ledger_path(path))
+        for b in range(2):
+            write_partitioned_batch(_days(spark, n_days), path, batch_id=b)
+            ledger.commit(b)
+        uri, fs = f"file://{path}", HadoopFS(spark)
+        fs.exists(uri)  # resolves the store once per instance
+        with RoundTrips(spark) as n:
+            compact_partition(spark, uri, "2024-03-01", fs=fs)
+        assert _data_names(path, "2024-03-01")[0].startswith("compacted1-")
+        assert spark.read.parquet(path).count() == 2 * n_days
+        trips.append(n.count)
+    assert trips[0] == trips[1]
 
 
 def _data_names(path, partition):
