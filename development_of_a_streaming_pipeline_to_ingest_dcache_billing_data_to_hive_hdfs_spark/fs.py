@@ -285,10 +285,10 @@ class HadoopFS:
         return json.loads(json_text[1:])  # after the builder's opening {
 
     def _statuses(self, stats) -> list[tuple[str, bool]]:
-        """(path, is_dir) for each ``FileStatus`` of a JVM array, in
-        two calls whatever its length. The flag is read from each
-        status's ``toString`` (``…{path=<path>; isDirectory=<bool>; …``)
-        right after its exactly known path."""
+        """(path, is_dir) for each ``FileStatus`` of a JVM array, from
+        two renderings whatever its length: the paths, and the statuses,
+        whose ``toString`` (``…{path=<path>; isDirectory=<bool>; …``)
+        carries the flag right after the exactly known path."""
         out = []
         for path, shown in zip(
             self._render(self._jvm.stat2paths(stats)), self._render(stats)
