@@ -213,9 +213,9 @@ class _JvmHandles:
     def __init__(self, jvm):
         self.path = jvm.org.apache.hadoop.fs.Path
         self.stat2paths = jvm.org.apache.hadoop.fs.FileUtil.stat2Paths
-        builder = jvm.org.apache.commons.lang3.builder
-        self.renderer = builder.ReflectionToStringBuilder
-        self.json_style = builder.ToStringStyle.JSON_STYLE
+        lang3 = jvm.org.apache.commons.lang3
+        self.renderer = lang3.builder.ReflectionToStringBuilder
+        self.json_style = lang3.builder.ToStringStyle.JSON_STYLE
 
 
 # py4j writes an answer of 8 KiB or more in two pieces, and the second
@@ -275,14 +275,14 @@ class HadoopFS:
         JVM-side as a JSON array of strings (ASCII: every other
         character is escaped), so no character of a name can split an
         element. Four calls, plus one per ``_ANSWER_CHARS`` of text."""
-        builder = self._jvm.renderer(array, self._jvm.json_style)
-        text = builder.reflectionAppendArray(array).getStringBuffer()
+        rendering = self._jvm.renderer(array, self._jvm.json_style)
+        text = rendering.reflectionAppendArray(array).getStringBuffer()
         n = text.length()
         json_text = "".join(
             text.substring(i, min(i + _ANSWER_CHARS, n))
             for i in range(0, n, _ANSWER_CHARS)
         )
-        return json.loads(json_text[1:])  # after the builder's opening {
+        return json.loads(json_text[1:])  # after the rendering's opening {
 
     def _statuses(self, stats) -> list[tuple[str, bool]]:
         """(path, is_dir) for each ``FileStatus`` of a JVM array, from
