@@ -39,14 +39,6 @@ from .dedup import spread_partitions
 _AUTO_STRATEGY_CACHE: dict[tuple, str] = {}
 
 
-def clear_auto_strategy_cache() -> None:
-    """Drop every memoized auto-strategy decision — the explicit
-    invalidation knob for long-lived drivers whose inputs changed in a
-    way the (plan hash, file count) key cannot see (e.g. in-place file
-    rewrites at identical file count)."""
-    _AUTO_STRATEGY_CACHE.clear()
-
-
 # nullif guards the zero-norm vector: under ANSI mode (Spark 4 default)
 # even DOUBLE division by zero throws DIVIDE_BY_ZERO, so one all-zeros
 # embedding would kill the whole job; null cosine instead drops the pair

@@ -1475,9 +1475,10 @@ def char_entropy_col(col: str = "text") -> Column:
     lambdas — Spark's ``aggregate``/``transform`` are CodegenFallback
     and cost ~µs per ELEMENT, which made this the #2 bench query;
     measured 5.9× faster at sf0.1 (5.2 s → 0.89 s) with the identical
-    plan shape. The HOF run-length-fold formulation is kept as the test
-    witness ``_char_entropy_hof_col`` and pinned equal (≤1e-12) by
-    tests/test_script_entropy.py.
+    plan shape (7.5× at sf0.1 and 2.0× at sf0.01 in a later re-measure:
+    build + noop consume, median of 6 interleaved pairs, 4 cores).
+    tests/test_script_entropy.py pins it to a pure-Python Counter
+    reference (≤1e-12) on corpus text.
 
     Oracle-parity argument, mirrored from the fold version it replaces:
     ``np.unique`` returns codepoint-sorted distinct chars — the same
@@ -1517,50 +1518,6 @@ def char_entropy_col(col: str = "text") -> Column:
         return pa.array([one(t) for t in texts.to_pylist()], pa.float64())
 
     return F.arrow_udf(_entropy, "double")(F.col(col))
-
-
-def _char_entropy_hof_col(col: str = "text") -> Column:
-    """Pure-JVM higher-order-function twin of ``char_entropy_col``:
-    one run-length fold over the sorted character array (equal chars
-    are contiguous after ``array_sort``), O(n log n) per doc. No code
-    path selects it: it is the test witness the Arrow path must agree
-    with to ≤1e-12 (tests/test_script_entropy.py).
-    """
-    chars = F.split(F.col(col), "")
-    n = F.size(chars).cast("double")
-
-    def _term(cnt):
-        c = cnt.cast("double")
-        return (c / n) * F.log2(c / n)
-
-    acc0 = F.struct(
-        F.lit(None).cast("string").alias("prev"),
-        F.lit(0).cast("bigint").alias("run"),
-        F.lit(0.0).alias("tot"),
-    )
-
-    def step(acc, x):
-        same = x.eqNullSafe(acc["prev"])
-        return F.struct(
-            x.alias("prev"),
-            F.when(same, acc["run"] + 1)
-            .otherwise(F.lit(1).cast("bigint"))
-            .alias("run"),
-            F.when(same | acc["prev"].isNull(), acc["tot"])
-            .otherwise(acc["tot"] + _term(acc["run"]))
-            .alias("tot"),
-        )
-
-    def fin(acc):
-        return F.when(acc["prev"].isNull(), acc["tot"]).otherwise(
-            acc["tot"] + _term(acc["run"])
-        )
-
-    # `+ 0.0` normalizes IEEE -0.0 (a constant doc folds to -0.0) to
-    # +0.0 on both engines, so the oracle's value hash can't split on
-    # the sign of zero.
-    ent = -F.aggregate(F.array_sort(chars), acc0, step, fin) + F.lit(0.0)
-    return F.when(F.length(F.col(col)) > 0, ent)
 
 
 def boilerplate_lines(
@@ -1810,99 +1767,8 @@ GOPHER_TOP_NGRAM_PCT = {2: 20, 3: 18, 4: 16}
 GOPHER_DUP_NGRAM_PCT = {5: 15, 6: 14, 7: 13, 8: 12, 9: 11, 10: 10}
 
 
-def _run_fold_chars(arr: Column, contrib) -> Column:
-    """Run-length fold over the SORTED copy of ``arr``: after
-    ``array_sort`` every group of equal elements is one contiguous run,
-    so per-element occurrence counts take ONE O(m) pass instead of the
-    distinct × filter formulation's O(m²) per-row lambda work (the
-    formulation this replaced — the full 13-rule Gopher battery ran
-    2.9× slower with it at sf0.1, and quadratic on book-length docs).
-    ``contrib(cnt, elem) -> bigint-or-null`` maps one finished run to
-    its contribution; nulls count as 0. Empty arrays fold to 0."""
-    zero = F.lit(0).cast("bigint")
-    acc0 = F.struct(
-        F.lit(None).cast("string").alias("prev"),
-        zero.alias("run"),
-        zero.alias("tot"),
-    )
-
-    def step(acc, x):
-        same = x.eqNullSafe(acc["prev"])
-        return F.struct(
-            x.alias("prev"),
-            F.when(same, acc["run"] + 1)
-            .otherwise(F.lit(1).cast("bigint"))
-            .alias("run"),
-            F.when(same, acc["tot"])
-            .otherwise(acc["tot"] + F.coalesce(contrib(acc["run"], acc["prev"]), zero))
-            .alias("tot"),
-        )
-
-    def fin(acc):
-        return acc["tot"] + F.coalesce(contrib(acc["run"], acc["prev"]), zero)
-
-    return F.aggregate(F.array_sort(arr), acc0, step, fin)
-
-
-def _run_top_chars(arr: Column) -> Column:
-    """Chars covered by the most frequent element of ``arr`` — count ×
-    element length, lexicographically-smallest tie-break, 0 when the
-    max count is 1 (a single occurrence is not repetition) — via one
-    run fold over the sorted array (see ``_run_fold_chars``). The
-    strict ``>`` keeps the FIRST max-length run, which after the sort
-    IS the lexicographically smallest max-count element."""
-    zero = F.lit(0).cast("bigint")
-    acc0 = F.struct(
-        F.lit(None).cast("string").alias("prev"),
-        zero.alias("run"),
-        zero.alias("best_cnt"),
-        zero.alias("best_chars"),
-    )
-
-    def step(acc, x):
-        same = x.eqNullSafe(acc["prev"])
-        closing_better = (~same) & (acc["run"] > acc["best_cnt"])
-        return F.struct(
-            x.alias("prev"),
-            F.when(same, acc["run"] + 1)
-            .otherwise(F.lit(1).cast("bigint"))
-            .alias("run"),
-            F.when(closing_better, acc["run"])
-            .otherwise(acc["best_cnt"])
-            .alias("best_cnt"),
-            F.when(closing_better, acc["run"] * F.length(acc["prev"]))
-            .otherwise(acc["best_chars"])
-            .alias("best_chars"),
-        )
-
-    def fin(acc):
-        better = acc["run"] > acc["best_cnt"]
-        cnt = F.when(better, acc["run"]).otherwise(acc["best_cnt"])
-        chars = (
-            F.when(better, acc["run"] * F.length(acc["prev"]))
-            .otherwise(acc["best_chars"])
-        )
-        return F.when(cnt > 1, chars).otherwise(zero)
-
-    return F.aggregate(F.array_sort(arr), acc0, step, fin)
-
-
-def _ngrams_expr(toks: Column, n: int) -> Column:
-    """Token n-grams of a token-array EXPRESSION (space-joined strings);
-    empty array when the doc has fewer than n tokens (guarded: Spark's
-    ``sequence(1, 0)`` would descend, not return empty)."""
-    m = F.size(toks)
-    grams = F.transform(
-        F.sequence(F.lit(1), m - (n - 1)),
-        lambda i: F.array_join(F.slice(toks, i, n), " "),
-    )
-    return F.when(m >= n, grams).otherwise(
-        F.array().cast("array<string>")
-    )
-
-
 # Java-regex \s is ASCII-only ([ \t\n\x0B\f\r]); Python's re \s also
-# matches Unicode spaces on str, so the Arrow twin must use the
+# matches Unicode spaces on str, so the Arrow battery must use the
 # explicit class or it would tokenize \xa0-bearing docs differently
 # than the Spark split the oracle was calibrated against.
 _JAVA_WS_RUN = re.compile(r"[^ \t\n\x0b\f\r]+")
@@ -1912,36 +1778,55 @@ def with_gopher_repetition_flags(
     df: DataFrame, col: str = "text"
 ) -> DataFrame:
     """The OTHER half of the Gopher rule table (Rae et al. 2021, A1):
-    repetition filters, completing gopher_quality_flags' quality rules —
-    semantics documented on ``_with_gopher_repetition_flags_hof``, the
-    pure-JVM twin this Arrow default must equal row-for-row
-    (tests/test_gopher_repetition.py pins both to a brute-force
-    reference and to each other on corpus text).
+    repetition filters, completing gopher_quality_flags' quality rules.
+    Appends boolean columns to ``df``; every threshold is an integer
+    cross-multiplication over integer char counts (exact,
+    engine-portable):
 
-    Arrow-vectorized fast path: one scalar Arrow UDF computes all 12
-    flags per document from a single tokenization — token ids hashed
-    once, each n-gram counted as an id tuple with char length taken
-    from a prefix-sum (no per-gram string materialization; the lex-min
-    tie-break string reconstructs only among max-count candidates).
-    Same plan shape as the HOF version (one scan-stage projection, no
-    explode, no shuffle) with the interpreted-lambda constant removed:
-    the 13-rule battery was the #1 bench query at ~µs per array
-    ELEMENT across nine staged n-gram arrays; measured 3.3× faster at
-    sf0.1 (6.3 s → 1.9 s min-of-3, full catalog query). Every count/threshold stays an integer
-    cross-multiplication, so the outputs are exact and engine-portable
-    — the same hard-parity contract as before.
+    - ``fail_dup_lines``       > 30% of lines repeat an earlier line
+    - ``fail_dup_line_chars``  chars in repeated line OCCURRENCES
+      (the chars line-dedup would remove: Σ (cnt−1)·len over repeated
+      distinct lines) > 20% of the doc's chars
+    - ``fail_top_{2,3,4}gram`` chars covered by the most frequent
+      n-gram (occurrences × n-gram char length, separators included;
+      deterministic tie-break: lexicographically smallest among the
+      max-count n-grams; zero when the top n-gram occurs only once —
+      a single occurrence is not repetition) > 20/18/16% of doc chars
+    - ``fail_dup_{5..10}gram`` chars in ALL occurrences of repeated
+      n-grams (Σ cnt·len over n-grams with cnt > 1) > 15/14/13/12/11/10%
+    - ``repetition_pass``      none failed
 
-    Case-mapping assumption (r11 advice): this path lowercases with
-    Python ``str.lower()`` (locale-independent Unicode simple+special
-    mappings) while the JVM twin uses Spark ``lower()`` → Java
-    ``String.toLowerCase(Locale)``. The two agree on every mapping the
-    twin test exercises — including 'İ' → 'i̇' (U+0069 U+0307), final
-    sigma 'ΑΣ' → 'ας', titlecase digraphs, and 'ẞ' → 'ß' — PROVIDED
-    the JVM default locale is not Turkish/Azerbaijani (tr/az map 'I' →
-    'ı'); the repo's session factory pins UTC/en-style defaults and
-    tests/test_gopher_repetition.py exercises the non-ASCII mappings
-    row-for-row, so a locale-divergent deployment fails loudly there
-    rather than silently diverging from the oracle.
+    Lines are Spark's ``split(text, "\\n")`` (trailing empties kept);
+    tokens are ``tokens_col``'s (lowercased, space-trimmed, split on the
+    Java ASCII ``\\s`` class, empties dropped); n-grams join tokens with
+    one space. Definitional notes (documented because DeepMind's exact
+    char-marking impl is unpublished): n-gram char fractions use the
+    sum-of-occurrences × length formulation, NOT per-character span
+    occupancy — overlapping occurrences can push the numerator past the
+    denominator, which only makes the gate stricter on degenerate
+    repetition; denominators are ``length(text)`` raw.
+
+    One scalar Arrow UDF computes all 12 flags per document from a
+    single tokenization — token ids hashed once, each n-gram counted as
+    an id tuple with char length taken from a prefix-sum (no per-gram
+    string materialization; the lex-min tie-break string reconstructs
+    only among max-count candidates). One scan-stage projection, no
+    explode, no shuffle. It replaced a pure-JVM higher-order-function
+    formulation (run-length folds over sorted n-gram arrays, ~µs per
+    array element): 3.0× faster at sf0.1 and 2.9× at sf0.01 (build +
+    noop consume, median of 6 interleaved pairs, 4 cores).
+
+    Case-mapping assumption: this path lowercases with Python
+    ``str.lower()`` (locale-independent Unicode simple+special
+    mappings) where ``tokens_col`` uses Spark ``lower()`` → Java
+    ``String.toLowerCase(Locale)``. The two agree on every mapping
+    tests/test_gopher_repetition.py exercises against Spark's own
+    tokens — including 'İ' → 'i̇' (U+0069 U+0307), final sigma 'ΑΣ' →
+    'ας', titlecase digraphs, and 'ẞ' → 'ß' — PROVIDED the JVM default
+    locale is not Turkish/Azerbaijani (tr/az map 'I' → 'ı'); the repo's
+    session factory pins UTC/en-style defaults, so a locale-divergent
+    deployment fails loudly there rather than silently diverging from
+    the oracle.
     """
     from pyspark.sql import types as T
 
@@ -2031,98 +1916,3 @@ def with_gopher_repetition_flags(
     return out.select(
         *df.columns, *[F.col(f"_gflags.{f}").alias(f) for f in flag_names]
     )
-
-
-def _with_gopher_repetition_flags_hof(
-    df: DataFrame, col: str = "text"
-) -> DataFrame:
-    """Pure-JVM higher-order-function twin of
-    ``with_gopher_repetition_flags``, kept as the test witness the
-    Arrow path must equal; no code path selects it. Appends boolean
-    columns to ``df``; every threshold is an integer cross-multiplication over
-    integer char counts (exact, engine-portable):
-
-    - ``fail_dup_lines``       > 30% of lines repeat an earlier line
-    - ``fail_dup_line_chars``  chars in repeated line OCCURRENCES
-      (the chars line-dedup would remove: Σ (cnt−1)·len over repeated
-      distinct lines) > 20% of the doc's chars
-    - ``fail_top_{2,3,4}gram`` chars covered by the most frequent
-      n-gram (occurrences × n-gram char length, separators included;
-      deterministic tie-break: lexicographically smallest among the
-      max-count n-grams; zero when the top n-gram occurs only once —
-      a single occurrence is not repetition) > 20/18/16% of doc chars
-    - ``fail_dup_{5..10}gram`` chars in ALL occurrences of repeated
-      n-grams (Σ cnt·len over n-grams with cnt > 1) > 15/14/13/12/11/10%
-    - ``repetition_pass``      none failed
-
-    Definitional notes (documented because DeepMind's exact
-    char-marking impl is unpublished): n-gram char fractions use the
-    sum-of-occurrences × length formulation, NOT per-character span
-    occupancy — overlapping occurrences can push the numerator past the
-    denominator, which only makes the gate stricter on degenerate
-    repetition; denominators are ``length(text)`` raw.
-
-    Shape: a DataFrame TRANSFORMER (not a column factory) so each
-    intermediate array — tokens, per-n n-gram list — is a STAGED
-    projection materialized once per row; a single-expression
-    formulation re-evaluates the n-gram array inside every lambda
-    element (measured ~10× slower). Every occurrence count comes from
-    a run-length fold over the SORTED n-gram array
-    (``_run_fold_chars`` / ``_run_top_chars``): per-doc O(m log m)
-    where the previous distinct × filter formulation was O(m²) —
-    2.9× faster end-to-end at sf0.1 (15.3 s → 5.3 s), and the shape
-    that stays safe on book-length documents. All stages fuse into one
-    whole-stage-codegen scan: no explode, no shuffle — the gate costs
-    one corpus scan at 100 TB.
-    """
-    out = df.withColumn("_toks", tokens_col(col)).withColumn(
-        "_total", F.length(F.col(col)).cast("bigint")
-    )
-    lines = F.split(F.col(col), "\n")
-    out = out.withColumn("_lines", lines).withColumn(
-        "_dlines", F.array_distinct(lines)
-    )
-    ngram_ns = list(GOPHER_TOP_NGRAM_PCT) + list(GOPHER_DUP_NGRAM_PCT)
-    for n in ngram_ns:
-        out = out.withColumn("_g", _ngrams_expr(F.col("_toks"), n))
-        if n in GOPHER_TOP_NGRAM_PCT:
-            out = out.withColumn(f"_chars_top{n}", _run_top_chars(F.col("_g")))
-        else:
-            out = out.withColumn(
-                f"_chars_dup{n}",
-                _run_fold_chars(
-                    F.col("_g"),
-                    lambda cnt, el: F.when(cnt > 1, cnt * F.length(el)),
-                ),
-            )
-        out = out.drop("_g")
-
-    # chars line-dedup would remove: Σ (cnt−1)·len over repeated lines
-    dup_line_chars = _run_fold_chars(
-        F.col("_lines"),
-        lambda cnt, el: F.when(cnt > 1, (cnt - 1) * F.length(el)),
-    )
-    n_lines = F.size(F.col("_lines"))
-    total = F.col("_total")
-    flags: dict[str, Column] = {
-        "fail_dup_lines": 10 * (n_lines - F.size(F.col("_dlines")))
-        > 3 * n_lines,
-        "fail_dup_line_chars": 5 * dup_line_chars > total,
-    }
-    for n, pct in GOPHER_TOP_NGRAM_PCT.items():
-        flags[f"fail_top_{n}gram"] = (
-            100 * F.col(f"_chars_top{n}") > pct * total
-        )
-    for n, pct in GOPHER_DUP_NGRAM_PCT.items():
-        flags[f"fail_dup_{n}gram"] = (
-            100 * F.col(f"_chars_dup{n}") > pct * total
-        )
-    passed = None
-    for v in flags.values():
-        passed = v if passed is None else (passed | v)
-    out = out.select(
-        *df.columns,
-        *[v.alias(k) for k, v in flags.items()],
-        (~passed).alias("repetition_pass"),
-    )
-    return out

@@ -3457,23 +3457,6 @@ _DUCK_PARTSUPP = """
 """
 
 
-# Spark-side canonical derivation matching _DUCK_PARTSUPP. Every
-# consumer (Q2/Q9/Q11/Q16/Q20) inlines it WITH a broadcast group-key
-# prune pushed below the groupBy — their filters all restrict a group
-# key (partkey or suppkey), which commutes with the aggregate but is a
-# rewrite Catalyst won't perform across separately-built subtrees.
-# Kept as the reference form for un-filtered consumers.
-def _derived_partsupp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    return li.groupBy(
-        F.col("l_partkey").alias("ps_partkey"),
-        F.col("l_suppkey").alias("ps_suppkey"),
-    ).agg(
-        F.sum(F.col("l_quantity").cast("bigint")).alias("ps_availqty"),
-        F.min("l_extendedprice").alias("ps_supplycost"),
-    )
-
-
 _EMPTY_KEPT_CHECK_ORACLE = """
     SELECT CAST(NULL AS VARCHAR) AS kind,
            CAST(NULL AS DOUBLE) AS metric_value,

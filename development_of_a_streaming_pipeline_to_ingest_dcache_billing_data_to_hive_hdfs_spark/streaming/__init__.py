@@ -2,6 +2,7 @@ from .pipeline import BillingPipeline
 from .windows import (
     dedup_within_watermark,
     interval_join,
+    running_totals_per_type,
     session_windows,
     tumbling_counts,
 )
@@ -10,6 +11,7 @@ __all__ = [
     "BillingPipeline",
     "dedup_within_watermark",
     "interval_join",
+    "running_totals_per_type",
     "session_windows",
     "tumbling_counts",
 ]

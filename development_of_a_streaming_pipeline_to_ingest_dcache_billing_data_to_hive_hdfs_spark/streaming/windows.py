@@ -1,5 +1,6 @@
-"""Event-time streaming operators the reference lacks (SURVEY §2.4):
-watermarked tumbling/sliding/session windows and in-stream dedup.
+"""Streaming operators the reference lacks (SURVEY §2.4):
+watermarked tumbling/sliding/session windows, in-stream dedup and
+per-key running totals.
 
 The reference handles late data only implicitly (partition_date derives
 from the event's own date, so late rows land in old partitions); it has no
@@ -72,6 +73,19 @@ def dedup_within_watermark(
     if df.isStreaming:
         return df.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(keys)
     return df.dropDuplicates(keys)
+
+
+def running_totals_per_type(parsed: DataFrame) -> DataFrame:
+    """Per-msgType running totals ``(msgType, n_total, bytes_total)``
+    across micro-batches; run the stream in update mode to emit each
+    changed key's totals per batch. A native aggregate: the state store
+    keeps one (count, sum) row per key, O(#distinct keys), and no Python
+    worker runs. A NULL ``fileSize`` adds 0.0; a NaN one is a value, so
+    its key's ``bytes_total`` reads NaN from then on."""
+    return parsed.groupBy("msgType").agg(
+        F.count("*").alias("n_total"),
+        F.sum(F.coalesce(F.col("fileSize"), F.lit(0.0))).alias("bytes_total"),
+    )
 
 
 def interval_join(

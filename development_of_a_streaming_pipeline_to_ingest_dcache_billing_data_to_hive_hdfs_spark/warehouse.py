@@ -74,14 +74,6 @@ def create_route_table(
     )
 
 
-def create_all_route_tables(
-    spark: SparkSession, names: dict[str, str], base_location: str | None = None
-) -> None:
-    for route, table in names.items():
-        loc = f"{base_location}/{table}" if base_location else None
-        create_route_table(spark, route, table, loc)
-
-
 def evolve_table_add_columns(
     spark: SparkSession, table: str, fields: list[T.StructField] | T.StructType
 ) -> T.StructType:

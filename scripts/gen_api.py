@@ -33,7 +33,6 @@ MODULES = [
     ("WARC source connector", f"{PKG}.sources.warc"),
     ("Streaming pipeline", f"{PKG}.streaming.pipeline"),
     ("Event-time windows", f"{PKG}.streaming.windows"),
-    ("Stateful streaming", f"{PKG}.streaming.stateful"),
     ("Streaming corpus builder", f"{PKG}.streaming.corpus"),
     ("Relational operators", f"{PKG}.operators.relational"),
     ("Deduplication", f"{PKG}.operators.dedup"),

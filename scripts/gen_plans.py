@@ -54,8 +54,8 @@ NOTES = {
  "q_llm_unigram_nll": "Perplexity-proxy scoring: one explode, vocab-sized frequency groupBy, token-keyed probability join, per-doc aggregate — all two-phase with map-side partials; ln/div stay in codegen.",
  "q_billing_incremental_rollup_check": "Rollup maintenance gate (expected empty): fold-vs-recompute equality over an ingest/fold/compact/rebaseline lifecycle. The lifecycle runs EAGERLY inside the check (each step is its own execution), so the audited plan here is only the driver-built verdict frame; the fold side's plan property — the increment scan is batch-glob pruned, never a full-table rescan — is pinned by tests/test_rollup.py.",
  "q_llm_dedup_store_lifecycle_check": "Dedup-store lifecycle gate (expected empty): screening decisions before/after compact() reclaim, retention horizons, re-admission past the horizon. The lifecycle runs EAGERLY inside the check (store writes/rewrites are separate executions), so the audited plan here is only the driver-built verdict frame; the property that matters at scale — the BUCKETED store side of every screening join stays Exchange-free, including after the compact() rewrite-swap — is plan-walk-asserted INSIDE the gate itself (any Exchange on the store side emits a violation row) and in tests/test_near_dup_store.py.",
- "q_llm_gopher_repetition": "Gopher repetition battery: ONE scalar Arrow UDF computes all 12 flags per document (token-id n-gram counting with prefix-sum char lengths; the lex-min tie-break reconstructs strings only among max-count candidates) inside a single scan-stage projection — no explode, no shuffle; the only Exchange is the per-source failure-count aggregate (rows = sources, not docs). Lineage of the constant: distinct x filter O(m^2) 15.3 s -> JVM run-length folds O(m log m) 5.3-6.3 s -> Arrow 1.9 s at sf0.1 (interpreted HOF lambdas cost ~us per array element; the retained _with_gopher_repetition_flags_hof twin is pinned equal row-for-row). Every threshold is an integer cross-multiplication — exact, engine-portable. Embarrassingly parallel, no pairwise work anywhere.",
- "q_llm_char_entropy": "Character entropy: scalar Arrow UDF — np.unique codepoint histogram + explicit left fold in sorted-codepoint order, so the float summation order matches the DuckDB oracle's sorted-distinct fold exactly (per-term log2 is C libm on both sides; the JVM HOF twin it replaced, retained as _char_entropy_hof_col and pinned <=1e-12 equal, was 5.9x slower from interpreted lambda cost). The per-doc histogram never leaves its row: ZERO shuffles added to the corpus scan; the only Exchange is the 4-row per-source stats aggregate.",
+ "q_llm_gopher_repetition": "Gopher repetition battery: ONE scalar Arrow UDF computes all 12 flags per document (token-id n-gram counting with prefix-sum char lengths; the lex-min tie-break reconstructs strings only among max-count candidates) inside a single scan-stage projection — no explode, no shuffle; the only Exchange is the per-source failure-count aggregate (rows = sources, not docs). Lineage of the constant: distinct x filter O(m^2) 15.3 s -> JVM run-length folds O(m log m) 5.3-6.3 s -> Arrow 1.9 s at sf0.1 (interpreted HOF lambdas cost ~us per array element; the JVM twin is retired, and tests/test_gopher_repetition.py pins the battery row-for-row to a pure-Python reference over Spark's own tokens). Every threshold is an integer cross-multiplication — exact, engine-portable. Embarrassingly parallel, no pairwise work anywhere.",
+ "q_llm_char_entropy": "Character entropy: scalar Arrow UDF — np.unique codepoint histogram + explicit left fold in sorted-codepoint order, so the float summation order matches the DuckDB oracle's sorted-distinct fold exactly (per-term log2 is C libm on both sides; the JVM HOF fold it replaced was 5.9x slower from interpreted lambda cost and is retired; tests/test_script_entropy.py pins the UDF exactly to a pure-Python sorted-codepoint fold). The per-doc histogram never leaves its row: ZERO shuffles added to the corpus scan; the only Exchange is the 4-row per-source stats aggregate.",
  "q_llm_bigram_nll": "Bigram-NLL perplexity proxy: one explode feeds the (w1,w2) pair stream; the bigram and unigram models are two model-sized two-phase groupBys (map-side partials — shuffle tracks VOCAB, not corpus), the 1-row vocab count broadcasts, and both model joins key on the pair/word columns before the per-doc mean aggregate (at sf0.1 AQE turns them into broadcasts — the measured 3 broadcasts; past the threshold they fall back to shuffle-hash on the model key). Nothing corpus-sized shuffles twice; model size bounds the join build sides.",
  "q_llm_multimodal_check": "Multimodal gate (expected empty): five real-codec legs (PNG/GIF/JPEG/MJPEG-AVI + fake-codec plumbing) all run as mapInArrow over localCheckpointed media — the only Exchanges are the explicit partition-invariance repartitions and the full-outer comparison joins on media_id; decode work never shuffles.",
 }

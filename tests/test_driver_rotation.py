@@ -208,10 +208,9 @@ def test_api_md_fresh():
 
 def test_similarity_vectors_cross_one_arrow_boundary():
     """Every Python-worker op in the package crosses as Arrow: no module
-    but ``streaming/stateful.py`` (``applyInPandasWithState`` has no
-    Arrow twin) names ``mapInPandas``, ``applyInPandas``,
-    ``pandas_udf`` or ``toPandas``, or imports pandas, whose float
-    columns turn NaN into SQL NULL. operators/similarity.py also
+    names ``mapInPandas``, ``applyInPandas``, ``applyInPandasWithState``,
+    ``transformWithStateInPandas``, ``pandas_udf`` or ``toPandas``, or
+    imports pandas, whose float columns turn NaN into SQL NULL. operators/similarity.py also
     converts vectors only through ``_read_vectors``/``_write_vectors``,
     the helpers that own the NULL/NaN policy: red there means a per-row
     ``np.stack`` came back."""
@@ -221,12 +220,13 @@ def test_similarity_vectors_cross_one_arrow_boundary():
         REPO
         / "development_of_a_streaming_pipeline_to_ingest_dcache_billing_data_to_hive_hdfs_spark"
     )
-    banned = {"mapInPandas", "applyInPandas", "pandas_udf", "toPandas"}
+    banned = {
+        "mapInPandas", "applyInPandas", "applyInPandasWithState",
+        "transformWithStateInPandas", "pandas_udf", "toPandas",
+    }
     hits = []
     for path in sorted(pkg.rglob("*.py")):
         rel = path.relative_to(pkg).as_posix()
-        if rel == "streaming/stateful.py":
-            continue
         for node in ast.walk(ast.parse(path.read_text())):
             if isinstance(node, ast.Import):
                 names = [a.name for a in node.names]

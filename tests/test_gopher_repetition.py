@@ -1,14 +1,18 @@
 """Gopher repetition rules (operators.textops.
 with_gopher_repetition_flags): constructed per-rule violations, guard
-semantics, plan shape."""
+semantics, plan shape, and row-for-row agreement with a pure-Python
+reference on corpus text."""
 
 from __future__ import annotations
+
+from collections import Counter
 
 from pyspark.sql import functions as F
 
 from development_of_a_streaming_pipeline_to_ingest_dcache_billing_data_to_hive_hdfs_spark.operators.textops import (
     GOPHER_DUP_NGRAM_PCT,
     GOPHER_TOP_NGRAM_PCT,
+    tokens_col,
     with_gopher_repetition_flags,
 )
 
@@ -98,87 +102,76 @@ def test_passthrough_columns_and_plan(spark):
     assert "Exchange" not in plan, plan
 
 
-def test_run_fold_helpers_match_python_reference(spark):
-    """Direct property check of the sorted run-length folds that
-    replaced the O(m²) distinct×filter counts: on random string
-    arrays, ``_run_fold_chars`` (dup-chars contribution) and
-    ``_run_top_chars`` must equal a plain-Python Counter reference —
-    including the lexicographic tie-break, the cnt>1 gates, and
-    empty/singleton arrays."""
-    import random
-    from collections import Counter
+def _ref_dup(arr):
+    """Chars in all occurrences of repeated elements: Σ cnt·len, cnt > 1."""
+    return sum(c * len(el) for el, c in Counter(arr).items() if c > 1)
 
-    from development_of_a_streaming_pipeline_to_ingest_dcache_billing_data_to_hive_hdfs_spark.operators.textops import (
-        _run_fold_chars,
-        _run_top_chars,
-    )
 
-    rng = random.Random(42)
-    vocab = ["a", "bb", "ccc", "dd x", "e", "ff", "über", ""]
-    arrays = [[]] + [
-        [rng.choice(vocab) for _ in range(rng.randrange(1, 30))]
-        for _ in range(40)
-    ]
+def _ref_extra(arr):
+    """Chars a dedup would remove: Σ (cnt−1)·len over repeated elements."""
+    return sum((c - 1) * len(el) for el, c in Counter(arr).items() if c > 1)
 
-    def ref_dup(arr):
-        return sum(c * len(el) for el, c in Counter(arr).items() if c > 1)
 
-    def ref_extra(arr):
-        return sum((c - 1) * len(el) for el, c in Counter(arr).items() if c > 1)
+def _ref_top(arr):
+    """Chars covered by the most frequent element (lexicographically
+    smallest on ties); 0 when no element occurs twice."""
+    if not arr:
+        return 0
+    cnt = Counter(arr)
+    maxc = max(cnt.values())
+    if maxc <= 1:
+        return 0
+    top = min(el for el, c in cnt.items() if c == maxc)
+    return maxc * len(top)
 
-    def ref_top(arr):
-        if not arr:
-            return 0
-        cnt = Counter(arr)
-        maxc = max(cnt.values())
-        if maxc <= 1:
-            return 0
-        top = min(el for el, c in cnt.items() if c == maxc)
-        return maxc * len(top)
 
-    df = spark.createDataFrame(
-        [(i, a) for i, a in enumerate(arrays)],
-        "id long, arr array<string>",
-    )
-    got = {
-        r["id"]: r
-        for r in df.select(
-            "id",
-            _run_fold_chars(
-                F.col("arr"), lambda c, el: F.when(c > 1, c * F.length(el))
-            ).alias("dup"),
-            _run_fold_chars(
-                F.col("arr"),
-                lambda c, el: F.when(c > 1, (c - 1) * F.length(el)),
-            ).alias("extra"),
-            _run_top_chars(F.col("arr")).alias("top"),
-        ).collect()
+def _ref_flags(text, toks, lines):
+    """The 12 repetition flags from Spark's own tokens and lines."""
+    if text is None:
+        return None
+    total = len(text)
+    flags = {
+        "fail_dup_lines": 10 * (len(lines) - len(set(lines))) > 3 * len(lines),
+        "fail_dup_line_chars": 5 * _ref_extra(lines) > total,
     }
-    for i, arr in enumerate(arrays):
-        assert got[i]["dup"] == ref_dup(arr), (i, arr)
-        assert got[i]["extra"] == ref_extra(arr), (i, arr)
-        assert got[i]["top"] == ref_top(arr), (i, arr)
+    for n, pct in {**GOPHER_TOP_NGRAM_PCT, **GOPHER_DUP_NGRAM_PCT}.items():
+        grams = [" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)]
+        if n in GOPHER_TOP_NGRAM_PCT:
+            flags[f"fail_top_{n}gram"] = 100 * _ref_top(grams) > pct * total
+        else:
+            flags[f"fail_dup_{n}gram"] = 100 * _ref_dup(grams) > pct * total
+    flags["repetition_pass"] = not any(flags.values())
+    return flags
 
 
-def test_arrow_battery_matches_hof_twin(spark):
-    """The Arrow default must equal the pure-JVM run-length-fold twin
-    row-for-row on real corpus text (plus crafted edge docs): the
-    outputs are exact integers/booleans, so ANY divergence is a
-    semantics bug — tokenization (Java ASCII \\s vs Python Unicode),
-    trim width, tie-breaks, or empty-doc handling."""
-    from development_of_a_streaming_pipeline_to_ingest_dcache_billing_data_to_hive_hdfs_spark.operators.textops import (
-        _with_gopher_repetition_flags_hof,
-    )
+def test_reference_counts_tie_break_and_gates():
+    """The Counter references themselves on crafted arrays: the
+    lexicographic tie-break, the cnt > 1 gates, empty/singleton input."""
+    assert _ref_top([]) == _ref_dup([]) == _ref_extra([]) == 0
+    assert _ref_top(["a"]) == _ref_dup(["a", "bb"]) == 0
+    # "bb" and "a" both occur twice: the lex-smallest ("a") wins the tie
+    assert _ref_top(["bb", "a", "bb", "a", "ccc"]) == 2
+    assert _ref_dup(["bb", "a", "bb", "a", "ccc"]) == 6
+    assert _ref_extra(["bb", "a", "bb", "a", "bb"]) == 5
 
+
+def test_battery_matches_python_reference(spark):
+    """Row for row on real corpus text plus crafted edge docs, the
+    battery must equal a pure-Python reference computed from Spark's
+    own ``tokens_col`` tokens and ``split(text, "\\n")`` lines, so JVM
+    lowercasing and Java's ASCII ``\\s`` are what it is checked against.
+    The outputs are exact booleans, so ANY divergence is a semantics
+    bug — tokenization, trim width, case mapping, tie-breaks, or
+    empty-doc handling."""
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     edge = spark.createDataFrame(
         [
             (100001, ""),
             (100002, None),
-            (100003, "  \t tab nbsp words \n\n line \n line \n"),
+            (100003, "  \t tab nbsp words \n\n line \n line \n"),
             (100004, "x y x y x y x y x y"),
-            # non-ASCII case mappings (r11 advice): the Arrow path
-            # lowercases with Python str.lower(), the twin with JVM
+            # non-ASCII case mappings: the battery lowercases with
+            # Python str.lower(), tokens_col with JVM
             # String.toLowerCase — these rows fail loudly if the two
             # ever diverge (e.g. a tr/az JVM default locale mapping
             # 'I' -> 'ı', or a Unicode-version skew in case tables)
@@ -187,19 +180,29 @@ def test_arrow_battery_matches_hof_twin(spark):
             (100007, "STRASSE ẞ ß strasse STRASSE ẞ"),
             (100008, "ǅungla ǄUNGLA ǆungla ǅungla LJ lj Ǆǅǆ"),
             (100009, "ⅫⅬ ⅻⅼ ⅫⅬ roman ﬁﬂ ﬁﬂ ligatures"),
+            # two bigrams tie at the max count: the short lex-smallest
+            # one stays under 20% of the chars, the long one would not
+            (100010, f"a a c {'b' * 30} {'b' * 30} d a a e {'b' * 30} {'b' * 30}"),
         ],
         "doc_id long, text string",
     )
     base = docs.select("doc_id", "text").unionByName(edge)
-    a = {
-        r["doc_id"]: r
-        for r in with_gopher_repetition_flags(base).collect()
+    out = with_gopher_repetition_flags(base)
+    flag_names = out.columns[len(base.columns):]
+    got = {r["doc_id"]: r.asDict() for r in out.collect()}
+    want = {
+        r["doc_id"]: _ref_flags(r["text"], r["toks"], r["lines"])
+        for r in base.select(
+            "doc_id", "text",
+            tokens_col("text").alias("toks"),
+            F.split(F.col("text"), "\n").alias("lines"),
+        ).collect()
     }
-    b = {
-        r["doc_id"]: r
-        for r in _with_gopher_repetition_flags_hof(base).collect()
-    }
-    assert set(a) == set(b) and len(a) > 4
-    for doc_id in a:
-        ra, rb = a[doc_id].asDict(), b[doc_id].asDict()
-        assert ra == rb, (doc_id, ra, rb)
+    assert set(got) == set(want) and len(got) > 10
+    assert any(w and not w["repetition_pass"] for w in want.values())
+    for doc_id, w in want.items():
+        g = {k: got[doc_id][k] for k in flag_names}
+        if w is None:
+            assert set(g.values()) == {None}, (doc_id, g)
+        else:
+            assert g == w, (doc_id, g, w)
