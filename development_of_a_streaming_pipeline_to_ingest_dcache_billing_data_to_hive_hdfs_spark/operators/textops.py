@@ -1477,8 +1477,8 @@ def char_entropy_col(col: str = "text") -> Column:
     measured 5.9× faster at sf0.1 (5.2 s → 0.89 s) with the identical
     plan shape (7.5× at sf0.1 and 2.0× at sf0.01 in a later re-measure:
     build + noop consume, median of 6 interleaved pairs, 4 cores).
-    tests/test_script_entropy.py pins it to a pure-Python Counter
-    reference (≤1e-12) on corpus text.
+    tests/test_script_entropy.py pins it exactly to a pure-Python
+    sorted-codepoint Counter fold on corpus text.
 
     Oracle-parity argument, mirrored from the fold version it replaces:
     ``np.unique`` returns codepoint-sorted distinct chars — the same
@@ -1824,9 +1824,9 @@ def with_gopher_repetition_flags(
     tokens — including 'İ' → 'i̇' (U+0069 U+0307), final sigma 'ΑΣ' →
     'ας', titlecase digraphs, and 'ẞ' → 'ß' — PROVIDED the JVM default
     locale is not Turkish/Azerbaijani (tr/az map 'I' → 'ı'); the repo's
-    session factory pins UTC/en-style defaults, so a locale-divergent
-    deployment fails loudly there rather than silently diverging from
-    the oracle.
+    session factory pins UTC/en-style defaults, and a locale-divergent
+    deployment fails that test loudly rather than silently diverging
+    from the oracle.
     """
     from pyspark.sql import types as T
 
