@@ -210,10 +210,10 @@ def test_similarity_vectors_cross_one_arrow_boundary():
     """Every Python-worker op in the package crosses as Arrow: no module
     names ``mapInPandas``, ``applyInPandas``, ``applyInPandasWithState``,
     ``transformWithStateInPandas``, ``pandas_udf`` or ``toPandas``, or
-    imports pandas, whose float columns turn NaN into SQL NULL. operators/similarity.py also
-    converts vectors only through ``_read_vectors``/``_write_vectors``,
-    the helpers that own the NULL/NaN policy: red there means a per-row
-    ``np.stack`` came back."""
+    imports pandas, whose float columns turn NaN into SQL NULL.
+    operators/similarity.py also converts vectors only through
+    ``_read_vectors``/``_write_vectors``, the helpers that own the
+    NULL/NaN policy: red there means a per-row ``np.stack`` came back."""
     import ast
 
     pkg = (
