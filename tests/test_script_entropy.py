@@ -175,3 +175,61 @@ def test_both_ops_are_scan_stage(spark):
     )
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan
+
+
+def _hof_entropy_col(col: str = "text"):
+    """Pure-JVM reference: one run-length fold (Spark ``aggregate``) over
+    the codepoint-sorted char array, where equal chars are contiguous —
+    the same sorted-order summation as the Arrow path, with Spark's own
+    ``log2``. Empty text is null; ``+ 0.0`` turns a -0.0 into +0.0."""
+    chars = F.split(F.col(col), "")
+    n = F.size(chars).cast("double")
+
+    def term(cnt):
+        p = cnt.cast("double") / n
+        return p * F.log2(p)
+
+    acc0 = F.struct(
+        F.lit(None).cast("string").alias("prev"),
+        F.lit(0).cast("bigint").alias("run"),
+        F.lit(0.0).alias("tot"),
+    )
+
+    def step(acc, x):
+        same = x.eqNullSafe(acc["prev"])
+        return F.struct(
+            x.alias("prev"),
+            F.when(same, acc["run"] + 1).otherwise(F.lit(1).cast("bigint")).alias("run"),
+            F.when(same | acc["prev"].isNull(), acc["tot"])
+            .otherwise(acc["tot"] + term(acc["run"]))
+            .alias("tot"),
+        )
+
+    def fin(acc):
+        return F.when(acc["prev"].isNull(), acc["tot"]).otherwise(
+            acc["tot"] + term(acc["run"])
+        )
+
+    ent = -F.aggregate(F.array_sort(chars), acc0, step, fin) + F.lit(0.0)
+    return F.when(F.length(F.col(col)) > 0, ent)
+
+
+def test_entropy_arrow_matches_hof_twin(spark):
+    """The Arrow (np.unique + left fold) entropy must agree with a
+    pure-JVM run-length fold to 1e-12 on real corpus text — same
+    sorted-order summation, per-term log2 from different libms (≤1 ulp
+    apart); a bigger gap means the histogram or the fold order drifted."""
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    rows = docs.select(
+        "doc_id",
+        char_entropy_col().alias("arrow"),
+        _hof_entropy_col().alias("hof"),
+    ).collect()
+    assert rows
+    for r in rows:
+        if r.arrow is None or r.hof is None:
+            assert r.arrow is None and r.hof is None, r
+            continue
+        assert abs(r.arrow - r.hof) <= 1e-12, (r.doc_id, r.arrow, r.hof)
+        if r.arrow == 0.0:
+            assert math.copysign(1.0, r.arrow) == 1.0, r.doc_id
