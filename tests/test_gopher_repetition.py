@@ -168,7 +168,8 @@ def test_battery_matches_python_reference(spark):
         [
             (100001, ""),
             (100002, None),
-            (100003, "  \t tab nbsp words \n\n line \n line \n"),
+            # U+00A0 is not in Java's ASCII \s: "tab\xa0" stays one token
+            (100003, "  \t tab\xa0 nbsp words \n\n line \n line \n"),
             (100004, "x y x y x y x y x y"),
             # non-ASCII case mappings: the battery lowercases with
             # Python str.lower(), tokens_col with JVM
@@ -183,6 +184,10 @@ def test_battery_matches_python_reference(spark):
             # two bigrams tie at the max count: the short lex-smallest
             # one stays under 20% of the chars, the long one would not
             (100010, f"a a c {'b' * 30} {'b' * 30} d a a e {'b' * 30} {'b' * 30}"),
+            # NBSP-joined words are ONE Java-\s token, so no rule fires;
+            # a Unicode-whitespace split would see 12 "spam" tokens and
+            # fail every top- and dup-n-gram rule
+            (100011, "\xa0".join(["spam"] * 12)),
         ],
         "doc_id long, text string",
     )
